@@ -658,8 +658,8 @@ def bench_engine_point_ops(spark, sf_dir: str) -> dict[str, list[float]]:
     """Point-read latency floor (round-8 verdict item #5): exists /
     get / list against a live THREE-part store whose parts hold
     disjoint key spans, so the manifest min/max skipping
-    (store.read_point) prunes every probe to one part before Spark
-    plans the scan. The store build is untimed substrate; each op is
+    (store.parts_for_keys) prunes every probe to one part before the
+    driver-side read. The store build is untimed substrate; each op is
     sampled three times and the sidecar keeps every sample. At 100 TB
     this is the row that catches an exists() regressing into an
     O(all-parts) scan — nothing timed it before round 8."""

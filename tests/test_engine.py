@@ -1622,3 +1622,165 @@ def test_surgical_delete_falls_back_below_byte_gate(engine, spark):
     assert deltas["chunk_store"] == -1
     assert eng.verify().count() == 0
     assert eng.get("k001") == rand_bytes(30_000, seed=101)
+
+
+# -- driver-side point reads ---------------------------------------------------
+
+
+def _several_parts(engine, batches=3, per=3):
+    """``batches`` write batches -> that many parts per table. Every
+    payload starts with one shared block, so dedup reuse reaches across
+    parts. Returns ``{object_key: bytes}``."""
+    shared = rand_bytes(12_000, seed=999)
+    objs = {}
+    for b in range(batches):
+        rows = {
+            f"mp{b}/{i}": shared + rand_bytes(15_000 + 4_000 * i, seed=300 + 10 * b + i)
+            for i in range(per)
+        }
+        engine.write_batch(
+            engine.spark.createDataFrame(
+                [(k, bytearray(v)) for k, v in rows.items()],
+                "object_key string, data binary",
+            )
+        )
+        objs.update(rows)
+    assert len(engine.store.live_parts("objects")) == batches
+    assert len(engine.store.live_parts("chunk_store")) == batches
+    return objs
+
+
+def _same_row(got, want):
+    assert got.__fields__ == want.__fields__
+    assert tuple(got) == tuple(want)
+    assert [type(v) for v in got] == [type(v) for v in want]
+
+
+def test_list_objects_rows_match_spark_collect(engine):
+    """Listing reads the objects parts on the driver; each row must
+    equal the Spark collect row field for field, created_utc included."""
+    objs = _several_parts(engine)
+    want = {r.id: r for r in engine.objects.collect()}
+    page = engine.list_objects(max_results=100)
+    assert [r.id for r in page.objects] == sorted(want)
+    assert page.next_index_start is None
+    for r in page.objects:
+        _same_row(r, want[r.id])
+    first = engine.list_objects(prefix="mp1/", max_results=2)
+    rest = engine.list_objects(prefix="mp1/", index_start=first.next_index_start)
+    keys = [r.object_key for r in first.objects + rest.objects]
+    assert keys == sorted(k for k in objs if k.startswith("mp1/"))
+    for r in first.objects + rest.objects:
+        _same_row(r, want[r.id])
+
+
+def test_get_metadata_rows_match_spark_collect(engine):
+    """get_metadata's object, map and chunk rows and get_chunk_metadata
+    equal what the Spark DataFrame APIs collect."""
+    objs = _several_parts(engine)
+    objects = {r.object_key: r for r in engine.objects.collect()}
+    chunks = {r.chunk_key: r for r in engine.chunks.collect()}
+    for key in ("mp0/0", "mp2/2"):
+        meta = engine.get_metadata(key)
+        obj = objects[key]
+        assert (meta.id, meta.object_key, meta.original_length, meta.comp_length,
+                meta.chunk_count, meta.created_utc) == tuple(obj)
+        assert type(meta.created_utc) is type(obj.created_utc)
+        want_map = engine.get_object_map(key).collect()
+        assert len(meta.object_map) == len(want_map) > 1
+        for got, want in zip(meta.object_map, want_map):
+            _same_row(got, want)
+        want_chunks = sorted(engine.get_chunks(key).collect(), key=lambda r: r.chunk_key)
+        got_chunks = sorted(meta.chunks, key=lambda r: r.chunk_key)
+        assert len(got_chunks) == len(want_chunks)
+        for got, want in zip(got_chunks, want_chunks):
+            _same_row(got, want)
+        assert meta.original_length == len(objs[key])
+    ck = meta.object_map[0].chunk_key
+    _same_row(engine.get_chunk_metadata(ck), chunks[ck])
+    assert engine.get_chunk_metadata("never-written") is None
+    with pytest.raises(ObjectNotFoundError):
+        engine.get_metadata("never-written")
+
+
+def test_point_reads_match_get_batch_reassembly(engine):
+    """get, get_range and the read stream equal the distributed
+    get_batch reassembly on a store with several parts."""
+    objs = _several_parts(engine)
+    batch = {r.object_key: bytes(r.data) for r in engine.get_batch(list(objs)).collect()}
+    assert batch == objs
+    for key, data in batch.items():
+        assert engine.get(key) == data
+        for off, ln in ((0, 1), (11_999, 2), (len(data) - 7, 100), (5_000, 20_000)):
+            assert engine.get_range(key, off, ln) == data[off : off + ln]
+        assert engine.get_range(key, len(data), 10) == b""
+        assert engine.get_stream(key).read() == data
+
+
+def test_point_verbs_run_no_spark_job(engine):
+    """exists (hit and miss), get, try_get, get_range, get_metadata,
+    the read stream and list_objects read on the driver: none of them
+    adds a job to the calling thread's job group."""
+    import uuid
+
+    objs = _several_parts(engine, batches=2)
+    key = "mp1/1"
+    sc = engine.spark.sparkContext
+    group = f"point-reads-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "driver-side point reads")
+    try:
+        assert engine.exists(key) and not engine.exists("never-written")
+        assert engine.get(key) == objs[key]
+        assert engine.try_get("never-written") is None
+        assert engine.get_range(key, 100, 5_000) == objs[key][100:5_100]
+        assert engine.get_metadata(key).original_length == len(objs[key])
+        assert engine.get_stream(key).read() == objs[key]
+        assert len(engine.list_objects(prefix="mp0/").objects) == 3
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        # the group does see jobs: a DataFrame API collected in it counts
+        engine.get_object_map(key).collect()
+        assert list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+@pytest.mark.parametrize("verb", ["repair", "recover"])
+def test_maintenance_raises_fix_thread_error_beside_commit_error(engine, monkeypatch, verb):
+    """A chunks fix commits from a pool thread while the chunk_store
+    phase runs. When both fail, both errors must surface: before, the
+    chunk_store error skipped the join and the pool's exit dropped the
+    fix thread's error. No ledger point may claim the failed pass."""
+    from watsondedupe_spark.keys import chunk_key
+
+    spark = engine.spark
+    engine.write("f1", rand_bytes(6000, seed=400))
+    # stale refcounts: the chunks fix is submitted to the pool
+    v, chunks, _ = engine.store.snapshot("chunks")
+    engine.store.commit(
+        "chunks", chunks.withColumn("ref_count", F.col("ref_count") + 1), expected_version=v
+    )
+    # an orphan payload: the chunk_store GC commits on the calling thread
+    orphan = b"fix-join-orphan"
+    engine.store.append(
+        "chunk_store",
+        spark.createDataFrame([(chunk_key(orphan), bytearray(orphan))], "chunk_key string, data binary"),
+    )
+    n_points = engine.checkpoints.count()
+
+    def failing_commit(name, *args, **kwargs):
+        raise RuntimeError(f"{name} commit failed")
+
+    with monkeypatch.context() as m:
+        m.setattr(engine.store, "commit", failing_commit)
+        with pytest.raises(RuntimeError) as info:
+            getattr(engine, verb)()
+    chain, e = [], info.value
+    while e is not None:
+        chain.append(str(e))
+        e = e.__context__
+    assert "chunks commit failed" in chain and "chunk_store commit failed" in chain
+    assert engine.checkpoints.count() == n_points
+    # nothing was committed and the op lock was released: a clean rerun heals
+    getattr(engine, verb)()
+    assert engine.verify().count() == 0

@@ -73,3 +73,27 @@ def test_chunk_spans_udtf_matches_expression_derivation(spark, sf_dir):
         for r in object_map_df(spark, sf_dir).collect()
     }
     assert via_udtf == via_expr
+
+
+def test_objects_original_length_is_map_length_sum(spark, sf_dir):
+    """ddp_coverage reads original_length and mapped_bytes off one
+    SUM(length) over object_map, which is only row-identical to the
+    join form while objects_df derives original_length the same way.
+    If objects_df ever gains an independent original_length source,
+    this fails instead of the query's coverage invariant turning
+    vacuous."""
+    from pyspark.sql import functions as F
+
+    from watsondedupe_spark.queries.dedupe_index import object_map_df, objects_df
+
+    mapped = object_map_df(spark, sf_dir).groupBy("object_key").agg(
+        F.sum("length").alias("mapped_bytes")
+    )
+    joined = objects_df(spark, sf_dir).join(mapped, "object_key", "full_outer")
+    n, bad = joined.agg(
+        F.count("*"),
+        F.sum(
+            F.when(~F.col("original_length").eqNullSafe(F.col("mapped_bytes")), 1).otherwise(0)
+        ),
+    ).collect()[0]
+    assert n > 0 and bad == 0

@@ -250,17 +250,61 @@ def test_read_point_prunes_to_matching_parts(spark, tmp_path, store_cls):
     assert st._prune_parts(state, {"id": [(99, 99)]}) == []
 
 
-def test_read_pruned_string_ranges(spark, tmp_path, store_cls):
+def test_read_arrow_reads_only_kept_parts(spark, tmp_path, store_cls, monkeypatch):
+    """The driver-side point read: a key probe reads only the parts
+    parts_for_keys keeps, projects and filters in Arrow, and returns
+    the INT96 timestamps at the microsecond precision Spark wrote."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.dataset as pads
+
+    st = store_cls(spark, str(tmp_path))
+    st.commit("objects", _df(spark, 0, 10))
+    st.append("objects", _df(spark, 10, 20))
+    st.append("objects", _df(spark, 20, 30))
+    third = st._state("objects")["parts"][2]
+    opened = []
+    real = pads.dataset
+
+    def spy(files, **kw):
+        opened.extend(files)
+        return real(files, **kw)
+
+    monkeypatch.setattr(pads, "dataset", spy)
+    got = st.read_arrow(
+        "objects", ["id", "object_key", "created_utc"], pc.field("id") == 25, col="id", values=[25]
+    )
+    assert opened and all(f.startswith(third + "/") for f in opened)
+    assert got.column_names == ["id", "object_key", "created_utc"]
+    assert got.column("id").to_pylist() == [25] and got.column("object_key").to_pylist() == ["25"]
+    assert got.schema.field("created_utc").type.unit == "us"
+    # a miss outside every span and an empty probe keep no part: nothing
+    # is read and the result is an empty table typed like the schema
+    opened.clear()
+    miss = st.read_arrow("objects", ["id"], col="id", values=[99])
+    assert miss.num_rows == 0 and miss.schema.field("id").type == pa.int64()
+    assert st.read_arrow("objects", col="id", values=[]).num_rows == 0
+    assert opened == []
+
+
+def test_read_arrow_string_ranges(spark, tmp_path, store_cls):
+    import pyarrow.compute as pc
+
     st = store_cls(spark, str(tmp_path))
     st.commit("objects", _df(spark, 100, 110))  # keys "100".."109"
     st.append("objects", _df(spark, 300, 310))  # keys "300".."309"
     state = st._state("objects")
     kept = st._prune_parts(state, {"object_key": [("30", "30￿")]})
     assert kept == [state["parts"][1]]
-    got = st.read_pruned(
-        "objects", {"object_key": [("30", "30￿")]}
-    ).filter("object_key like '30%'")
-    assert got.count() == 10
+    got = st.read_arrow(
+        "objects",
+        ["object_key"],
+        pc.starts_with(pc.field("object_key"), pattern="30"),
+        ranges={"object_key": [("30", "30￿")]},
+    )
+    assert got.num_rows == 10
+    # a range no span overlaps keeps no part: nothing is read
+    assert st.read_arrow("objects", ranges={"object_key": [("5", "6")]}).num_rows == 0
 
 
 def test_parts_without_stats_are_never_pruned(spark, tmp_path, store_cls):

@@ -27,9 +27,11 @@ Operator map (SURVEY.md §2.1):
 
 Scale posture (100 TB): the only shuffles in the write path are the
 groupBy(chunk_key) refcount aggregation and groupBy(object_key) object
-rollup — both keyed exactly on their join keys. Point reads broadcast
-the (tiny) filtered object_map side into the chunk_store join so the
-payload scan stays pushdown-pruned on chunk_key. With Delta/Iceberg the
+rollup — both keyed exactly on their join keys. Point verbs read the
+manifest-pruned parts on the driver and run no Spark job; the batched
+``get_batch`` broadcasts the (tiny) filtered object_map side into the
+chunk_store join so the payload scan stays pushdown-pruned on
+chunk_key. With Delta/Iceberg the
 ``IndexStore`` commits become MERGE INTO; no engine code changes.
 
 Deviations from the reference, by design (SURVEY.md §7.3): no lossy key
@@ -43,11 +45,15 @@ from __future__ import annotations
 
 import io
 from bisect import bisect_right
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampType
 
 from watsondedupe_spark.chunking import ChunkSettings, chunk_objects
 from watsondedupe_spark.keys import validate_object_key
@@ -88,6 +94,32 @@ def _prefix_successor(prefix: str) -> str | None:
             nxt = 0xE000 if last == 0xD7FF else last + 1
             return "".join(map(chr, cps)) + chr(nxt)
     return None
+
+
+_TIMESTAMP = TimestampType()
+
+
+def _arrow_rows(tbl: pa.Table) -> list[Row]:
+    """``tbl`` as the rows ``collect()`` would return: same field names
+    and order, same Python types. Timestamps convert through
+    ``TimestampType.fromInternal`` (naive local time, as PySpark
+    returns them) and binary comes back as ``bytearray``."""
+    cols = []
+    for c in tbl.columns:
+        if pa.types.is_timestamp(c.type):
+            micros = c.cast(pa.timestamp("us", c.type.tz)).cast(pa.int64()).to_pylist()
+            cols.append([_TIMESTAMP.fromInternal(m) for m in micros])
+        elif pa.types.is_binary(c.type):
+            cols.append([None if v is None else bytearray(v) for v in c.to_pylist()])
+        else:
+            cols.append(c.to_pylist())
+    names = tbl.column_names
+    rows = []
+    for vals in zip(*cols):
+        row = Row(*vals)
+        row.__fields__ = names  # how collect() names its rows
+        rows.append(row)
+    return rows
 
 
 def assign_ingest_ids(rolled: DataFrame, prev_max: int) -> DataFrame:
@@ -131,6 +163,34 @@ class SimulatedCrash(RuntimeError):
     partial state a process kill at that point would — no cleanup, no
     rollback. Tests and the graded crash-matrix scenario catch this,
     then drive :meth:`DedupeEngine.recover` over the wreckage."""
+
+
+@contextmanager
+def _fix_pool():
+    """``(pool, fixes)`` for maintenance fix commits that overlap the
+    caller's next phase. On exit EVERY submitted fix is joined and the
+    first failure re-raised — also when the body itself raised, in
+    which case the fix's error carries the body's as ``__context__``
+    and neither is lost (a bare pool exit joins the threads but drops
+    their exceptions). Further fix failures ride along as notes."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    fixes: list = []
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        try:
+            yield pool, fixes
+        finally:
+            failure = None
+            for f in fixes:
+                try:
+                    f.result()
+                except Exception as e:  # noqa: BLE001 — re-raised below
+                    if failure is None:
+                        failure = e
+                    else:
+                        failure.add_note(f"another overlapped fix also failed: {e!r}")
+            if failure is not None:
+                raise failure
 
 
 @dataclass(frozen=True)
@@ -788,28 +848,72 @@ class DedupeEngine:
 
     # -- point reads (O6-O11, O13-O15) ----------------------------------------
     #
-    # Every point read resolves through the manifest's min/max skip
-    # stats (IndexStore.read_point / read_pruned, round 8) AND the
-    # per-part Bloom sidecars (store.BLOOM_COLS, round 12): the part
-    # list is pruned BEFORE Spark plans the scan, so a probe opens only
-    # the parts whose recorded key span can contain it — and, where the
-    # spans are useless because the keys are uniform hashes
-    # (store.HASH_KEYED), only the parts whose bloom says the key may be
-    # PRESENT. At 100 TB an ``exists()`` that plans a scan over every
-    # part is an O(parts) stall; the manifest span check is the
-    # Delta/Iceberg data-skipping analogue of the reference's b-tree PK
-    # (SqliteProvider.cs:258-270), and the bloom miss is its b-tree-miss
-    # fast path: a lookup of an absent key plans no scan at all. The
-    # exact row filter is always applied on top: pruning shrinks the
-    # file list, never the semantics.
+    # Every point read first picks parts on the driver with the manifest
+    # min/max skip stats and the per-part Bloom sidecars
+    # (IndexStore.parts_for_keys): spans prune range-clustered keys, and
+    # where spans are useless because the keys are uniform hashes
+    # (store.HASH_KEYED) the bloom keeps only the parts where the key
+    # may be PRESENT — the Delta/Iceberg data-skipping analogue of the
+    # reference's b-tree PK (SqliteProvider.cs:258-270), with the bloom
+    # miss as its b-tree-miss fast path.
+    #
+    # The verbs that hand rows or bytes back to the caller (exists,
+    # get/try_get, get_range, get_metadata, get_chunk_metadata,
+    # list_objects and the read stream) then read the kept parts with
+    # ONE driver-side pyarrow read (IndexStore.read_arrow) and run no
+    # Spark job: their cost is footer and row-group I/O on the parts
+    # that can hold the key, not the per-job scheduling floor, and a
+    # pruned miss reads nothing at all. The APIs that return a
+    # DataFrame (get_object_map, get_chunks, map_for_position,
+    # get_batch) stay on Spark, because callers compose them; they plan
+    # a scan over the same pruned part list (IndexStore.read_point).
+    # The exact row filter is always applied on top: pruning shrinks
+    # the file list, never the semantics.
+
+    def _map_arrow(self, key: str, columns: list[str] | None = None, extra=None):
+        """One object's map rows as an Arrow table in address order —
+        optionally narrowed by an ``extra`` Arrow filter."""
+        flt = pc.field("object_key") == key
+        if extra is not None:
+            flt = flt & extra
+        return self.store.read_arrow(
+            "object_map", columns, flt, col="object_key", values=[key]
+        ).sort_by("address")
+
+    def _payloads(self, keys: list[str]) -> dict[str, bytes]:
+        """``chunk_key -> payload`` for ``keys``, read from only the
+        chunk_store parts whose Bloom sidecar may hold one of them."""
+        tbl = self.store.read_arrow(
+            "chunk_store",
+            ["chunk_key", "data"],
+            pc.field("chunk_key").isin(keys),
+            col="chunk_key",
+            values=keys,
+        )
+        return dict(zip(tbl.column("chunk_key").to_pylist(), tbl.column("data").to_pylist()))
+
+    def _point_rows(self, name: str, col: str, values: list) -> list:
+        """Every row of ``name`` whose ``col`` is in ``values``, as
+        ``collect()`` would return them."""
+        if not values:
+            return []
+        return _arrow_rows(
+            self.store.read_arrow(
+                name, None, pc.field(col).isin(values), col=col, values=values
+            )
+        )
 
     def exists(self, key: str) -> bool:
         """O11: key-existence probe (SqliteProvider.cs:258-270)."""
-        return bool(
-            self.store.read_point("objects", "object_key", [key], OBJECTS_SCHEMA)
-            .filter(F.col("object_key") == key)
-            .limit(1)
-            .take(1)
+        return (
+            self.store.read_arrow(
+                "objects",
+                ["object_key"],
+                pc.field("object_key") == key,
+                col="object_key",
+                values=[key],
+            ).num_rows
+            > 0
         )
 
     def get_object_map(self, key: str) -> DataFrame:
@@ -836,23 +940,18 @@ class DedupeEngine:
 
     def get_chunk_metadata(self, chunk_key: str):
         """O15: point lookup of one chunk row; None on miss."""
-        rows = (
-            self.store.read_point("chunks", "chunk_key", [chunk_key], CHUNKS_SCHEMA)
-            .filter(F.col("chunk_key") == chunk_key)
-            .take(1)
-        )
+        rows = self._point_rows("chunks", "chunk_key", [chunk_key])
         return rows[0] if rows else None
 
     def get_metadata(self, key: str) -> ObjectMetadata:
-        """O8: object row + ordered map + chunk list, no payloads."""
-        rows = (
-            self.store.read_point("objects", "object_key", [key], OBJECTS_SCHEMA)
-            .filter(F.col("object_key") == key)
-            .take(1)
-        )
+        """O8: object row + ordered map + chunk list, no payloads — the
+        rows :meth:`get_object_map` and :meth:`get_chunks` would
+        collect, read on the driver."""
+        rows = self._point_rows("objects", "object_key", [key])
         if not rows:
             raise ObjectNotFoundError(key)
         r = rows[0]
+        object_map = _arrow_rows(self._map_arrow(key))
         return ObjectMetadata(
             id=r.id,
             object_key=r.object_key,
@@ -860,20 +959,23 @@ class DedupeEngine:
             comp_length=r.comp_length,
             chunk_count=r.chunk_count,
             created_utc=r.created_utc,
-            object_map=self.get_object_map(key).collect(),
-            chunks=self.get_chunks(key).collect(),
+            object_map=object_map,
+            chunks=self._point_rows(
+                "chunks", "chunk_key", list(dict.fromkeys(m.chunk_key for m in object_map))
+            ),
         )
 
     def get(self, key: str) -> bytes:
         """O6: point lookup + reassembly (DedupeLibrary.cs:377-404).
 
-        Two-phase IN-list read: the (tiny) map for one object is
-        collected first, then the payload read prunes chunk_store to the
-        parts whose Bloom sidecar says they may contain one of those
-        chunk keys (spans cannot discriminate uniform hash keys —
-        store.BLOOM_COLS) and fetches each payload once. Reassembly walks the map in address order — a
-        chunk referenced at several addresses (dedup reuse) is fetched
-        once and concatenated at each site.
+        Two-phase IN-list read: the (tiny) map for one object is read
+        first, then the payload read keeps only the chunk_store parts
+        whose Bloom sidecar says they may contain one of those chunk
+        keys (spans cannot discriminate uniform hash keys —
+        store.BLOOM_COLS) and fetches each payload once. Reassembly
+        walks the map in address order — a chunk referenced at several
+        addresses (dedup reuse) is fetched once and concatenated at
+        each site.
 
         Existence still gates on the ``objects`` table — it commits
         strictly LAST (the logical commit point), so a crash that left
@@ -881,21 +983,11 @@ class DedupeEngine:
         """
         if not self.exists(key):
             raise ObjectNotFoundError(key)
-        map_rows = self.get_object_map(key).select("address", "chunk_key").collect()
-        if not map_rows:
+        order = self._map_arrow(key, ["address", "chunk_key"]).column("chunk_key").to_pylist()
+        if not order:
             raise ObjectNotFoundError(key)
-        keys = list({r.chunk_key for r in map_rows})
-        payloads = {
-            r.chunk_key: bytes(r.data)
-            for r in self.store.read_point(
-                "chunk_store", "chunk_key", keys, CHUNK_STORE_SCHEMA
-            )
-            .filter(F.col("chunk_key").isin(keys))
-            .collect()
-        }
-        return b"".join(
-            payloads[r.chunk_key] for r in sorted(map_rows, key=lambda r: r.address)
-        )
+        payloads = self._payloads(list(set(order)))
+        return b"".join(payloads[k] for k in order)
 
     def try_get(self, key: str) -> bytes | None:
         """O7: exception-free get (DedupeLibrary.cs:353-368)."""
@@ -960,32 +1052,22 @@ class DedupeEngine:
         """Ranged read: fetch only the chunks overlapping [offset, offset+length)."""
         if length <= 0:
             return b""
-        overlap_rows = (
-            self.store.read_point("object_map", "object_key", [key], OBJECT_MAP_SCHEMA)
-            .filter(
-                (F.col("object_key") == key)
-                & (F.col("address") < offset + length)
-                & (F.col("address") + F.col("length") > offset)
-            )
-            .select("address", "chunk_key")
-            .collect()
+        overlap = self._map_arrow(
+            key,
+            ["address", "chunk_key"],
+            (pc.field("address") < offset + length)
+            & (pc.field("address") + pc.field("length") > offset),
         )
-        if not overlap_rows:
+        if not overlap.num_rows:
             return b""
-        keys = list({r.chunk_key for r in overlap_rows})
-        payloads = {
-            r.chunk_key: bytes(r.data)
-            for r in self.store.read_point(
-                "chunk_store", "chunk_key", keys, CHUNK_STORE_SCHEMA
-            )
-            .filter(F.col("chunk_key").isin(keys))
-            .collect()
-        }
+        addresses = overlap.column("address").to_pylist()
+        keys = overlap.column("chunk_key").to_pylist()
+        payloads = self._payloads(list(set(keys)))
         buf = bytearray()
-        for r in sorted(overlap_rows, key=lambda r: r.address):
-            data = payloads[r.chunk_key]
-            start = max(0, offset - r.address)
-            end = min(len(data), offset + length - r.address)
+        for address, k in zip(addresses, keys):
+            data = payloads[k]
+            start = max(0, offset - address)
+            end = min(len(data), offset + length - address)
             buf += data[start:end]
         return bytes(buf)
 
@@ -1004,7 +1086,9 @@ class DedupeEngine:
     ) -> EnumerationResult:
         """Keyset-paginated, prefix-filtered enumeration
         (SqliteProvider.cs:203-247). ``id > index_start`` seek beats OFFSET
-        at scale; page capped at 100 like the reference."""
+        at scale; page capped at 100 like the reference. The page is
+        read on the driver (no Spark job) from the objects parts whose
+        id and key spans can hold it, and cut there by id."""
         n = max(1, min(max_results, MAX_LIST_RESULTS))
         ranges: dict[str, list[tuple]] = {"id": [(index_start + 1, None)]}
         if prefix:
@@ -1017,12 +1101,11 @@ class DedupeEngine:
             # parts out of listings (the reference's LIKE 'prefix%',
             # SqliteProvider.cs:203-247, has no such hole).
             ranges["object_key"] = [(prefix, _prefix_successor(prefix))]
-        df = self.store.read_pruned("objects", ranges, OBJECTS_SCHEMA).filter(
-            F.col("id") > index_start
-        )
+        flt = pc.field("id") > index_start
         if prefix:
-            df = df.filter(F.col("object_key").startswith(prefix))
-        page = df.orderBy("id").limit(n).collect()
+            flt = flt & pc.starts_with(pc.field("object_key"), pattern=prefix)
+        matches = self.store.read_arrow("objects", None, flt, ranges=ranges)
+        page = _arrow_rows(matches.sort_by("id").slice(0, n))
         next_start = page[-1].id if len(page) == n else None
         return EnumerationResult(objects=page, next_index_start=next_start)
 
@@ -1505,18 +1588,28 @@ class DedupeEngine:
 
     def repair(self) -> dict[str, int]:
         """Fix every :meth:`verify` violation class that is fixable
-        from the index itself, in one maintenance pass:
+        from the index itself, in ONE fused maintenance pass:
 
-        - :meth:`recover` first — prunes orphan map rows (uncommitted
+        - the recover work — prunes orphan map rows (uncommitted
           objects), rebuilds refcounts from the surviving map, and GCs
           payloads whose chunk row is gone (which also clears
           ``orphan_payload``);
-        - then the payload store is CANONICALIZED: among each
+        - CANONICALIZATION of the payload store: among each
           chunk_key's rows, only content that actually hashes to the
           key survives (dropping garbage/tampered rows —
           ``hash_mismatch`` and its ``length_drift``), and exactly one
           survivor is kept (``dup_payload``; hash-verified survivors
           are byte-identical, so the pick is content-deterministic).
+
+        The payload GC and the canonicalization come from one per-key
+        aggregate over chunk_store and land in one chunk_store rewrite;
+        :meth:`recover` is not called. So a pass that changed anything
+        records ONE ``repair`` point in the checkpoints ledger, and no
+        ``recover`` point for an intermediate post-GC state: a
+        :meth:`restore` or ``clone(at=)`` lands on the state before the
+        repair or after it, never between the GC and the
+        canonicalization. An error in any overlapped fix commit is
+        raised, also when the chunk_store phase failed first.
 
         A chunk whose ONLY payload row is corrupt cannot be healed from
         the index — its garbage row is dropped and the loss surfaces
@@ -1525,152 +1618,148 @@ class DedupeEngine:
         recover(); returns recover's per-table deltas plus the count of
         canonicalization-dropped payload rows.
         """
-        from concurrent.futures import ThreadPoolExecutor
-
         from watsondedupe_spark.keys import chunk_key_col
 
-        fixes: list = []
-        # lock OUTSIDE the pool (recover()'s contract): the pool exit
-        # joins in-flight fix threads before the lock releases
-        with self.store.op_lock(), ThreadPoolExecutor(max_workers=2) as pool:
-            deltas, rebuilt, committed_mc = self._recover_map_chunks(pool, fixes)
-            # FUSED chunk_store phase (r13 session 3, guide §1.2/§2.6):
-            # repair used to run recover()'s membership scan + GC
-            # rewrite and THEN a second sha-detection scan + a second
-            # canonicalization rewrite — two passes over the payload
-            # table and, with both damage classes present, two full
-            # rewrites of it inside one maintenance call. One per-key
-            # aggregate now computes BOTH: the sha/dup detection rides
-            # the same groupBy that the GC membership join annotates
-            # (_live from the rebuilt chunks), and a single commit
-            # applies both fixes. The scan also starts while the
-            # map/chunks fixes are still committing — it reads only the
-            # pinned chunk_store snapshot and the eagerly-checkpointed
-            # rebuild, never a table another thread is writing.
-            # null-safe mirror of verify(): a NULL-payload row must
-            # count as bad (and must NOT survive canonicalization)
-            # rather than vanishing from both filters as NULL.
-            v_cs, cstore, _ = self.store.snapshot("chunk_store", CHUNK_STORE_SCHEMA)
-            live_keys = rebuilt.select("chunk_key")
-            is_live = F.col("_live").isNotNull()
-            bad_pred = is_live & ((F.col("_n") > 1) | (F.col("_n_mismatch") > 0))
-            dead_pred = F.col("_live").isNull()
-            per_key = (
-                cstore.select(
-                    "chunk_key",
-                    chunk_key_col(F.col("data")).alias("_computed"),
+        # lock OUTSIDE the pool: the pool exit joins every in-flight fix
+        # thread (and re-raises its error) before the lock releases
+        with self.store.op_lock():
+            with _fix_pool() as (pool, fixes):
+                deltas, rebuilt, committed_mc = self._recover_map_chunks(pool, fixes)
+                # FUSED chunk_store phase (r13 session 3, guide §1.2/§2.6):
+                # repair used to run recover()'s membership scan + GC
+                # rewrite and THEN a second sha-detection scan + a second
+                # canonicalization rewrite — two passes over the payload
+                # table and, with both damage classes present, two full
+                # rewrites of it inside one maintenance call. One per-key
+                # aggregate now computes BOTH: the sha/dup detection rides
+                # the same groupBy that the GC membership join annotates
+                # (_live from the rebuilt chunks), and a single commit
+                # applies both fixes. The scan also starts while the
+                # map/chunks fixes are still committing — it reads only the
+                # pinned chunk_store snapshot and the eagerly-checkpointed
+                # rebuild, never a table another thread is writing.
+                # null-safe mirror of verify(): a NULL-payload row must
+                # count as bad (and must NOT survive canonicalization)
+                # rather than vanishing from both filters as NULL.
+                v_cs, cstore, _ = self.store.snapshot("chunk_store", CHUNK_STORE_SCHEMA)
+                live_keys = rebuilt.select("chunk_key")
+                is_live = F.col("_live").isNotNull()
+                bad_pred = is_live & ((F.col("_n") > 1) | (F.col("_n_mismatch") > 0))
+                dead_pred = F.col("_live").isNull()
+                per_key = (
+                    cstore.select(
+                        "chunk_key",
+                        chunk_key_col(F.col("data")).alias("_computed"),
+                    )
+                    .groupBy("chunk_key")
+                    .agg(
+                        F.count("*").alias("_n"),
+                        F.sum(
+                            F.when(
+                                ~F.col("_computed").eqNullSafe(F.col("chunk_key")), 1
+                            ).otherwise(0)
+                        ).alias("_n_mismatch"),
+                    )
+                    .join(live_keys.withColumn("_live", F.lit(1)), "chunk_key", "left")
+                    # lazy checkpoint, materialized by the aggregate below —
+                    # the damaged-path key collects then read per-key ROWS
+                    # (O(keys), no payload bytes) instead of re-running the
+                    # whole sha scan per action (the pre-fusion surgical
+                    # path re-hashed the entire table once per key collect)
+                    .localCheckpoint(eager=False)
                 )
-                .groupBy("chunk_key")
-                .agg(
-                    F.count("*").alias("_n"),
+                # detection numbers are scoped to LIVE keys — identical to
+                # the old post-GC detection by construction (GC removed
+                # exactly the dead keys' rows before the old scan ran)
+                agg_row = per_key.agg(
+                    F.sum("_n"),
+                    F.sum(F.when(is_live, F.col("_n")).otherwise(0)),
+                    F.sum(F.when(is_live, F.col("_n_mismatch")).otherwise(0)),
+                    F.sum(F.when(is_live, 1).otherwise(0)),
+                    F.sum(F.when(dead_pred, 1).otherwise(0)),
+                    F.sum(F.when(bad_pred, 1).otherwise(0)),
                     F.sum(
                         F.when(
-                            ~F.col("_computed").eqNullSafe(F.col("chunk_key")), 1
+                            is_live & (F.col("_n") > F.col("_n_mismatch")), 1
                         ).otherwise(0)
-                    ).alias("_n_mismatch"),
-                )
-                .join(live_keys.withColumn("_live", F.lit(1)), "chunk_key", "left")
-                # lazy checkpoint, materialized by the aggregate below —
-                # the damaged-path key collects then read per-key ROWS
-                # (O(keys), no payload bytes) instead of re-running the
-                # whole sha scan per action (the pre-fusion surgical
-                # path re-hashed the entire table once per key collect)
-                .localCheckpoint(eager=False)
-            )
-            # detection numbers are scoped to LIVE keys — identical to
-            # the old post-GC detection by construction (GC removed
-            # exactly the dead keys' rows before the old scan ran)
-            agg_row = per_key.agg(
-                F.sum("_n"),
-                F.sum(F.when(is_live, F.col("_n")).otherwise(0)),
-                F.sum(F.when(is_live, F.col("_n_mismatch")).otherwise(0)),
-                F.sum(F.when(is_live, 1).otherwise(0)),
-                F.sum(F.when(dead_pred, 1).otherwise(0)),
-                F.sum(F.when(bad_pred, 1).otherwise(0)),
-                F.sum(
-                    F.when(
-                        is_live & (F.col("_n") > F.col("_n_mismatch")), 1
-                    ).otherwise(0)
-                ),
-            ).collect()[0]
-            (
-                n_rows_all, n_rows, n_mismatch, n_keys,
-                n_dead_keys, n_bad_keys, n_good_keys,
-            ) = (int(x or 0) for x in agg_row)
-            n_dead = n_rows_all - n_rows
-            n_bad = n_mismatch + n_rows - n_keys
-            deltas["chunk_store"] = -n_dead
-            # n_good_keys IS the canonical live row count (canonicalize
-            # keeps exactly one hash-verified survivor per such key), so
-            # the post-rewrite delta needs no second table count; with
-            # nothing bad it equals n_rows and the delta is 0
-            deltas["chunk_store_canonicalized"] = n_good_keys - n_rows
-            if n_dead or n_bad:
-                good = chunk_key_col(F.col("data")).eqNullSafe(F.col("chunk_key"))
+                    ),
+                ).collect()[0]
+                (
+                    n_rows_all, n_rows, n_mismatch, n_keys,
+                    n_dead_keys, n_bad_keys, n_good_keys,
+                ) = (int(x or 0) for x in agg_row)
+                n_dead = n_rows_all - n_rows
+                n_bad = n_mismatch + n_rows - n_keys
+                deltas["chunk_store"] = -n_dead
+                # n_good_keys IS the canonical live row count (canonicalize
+                # keeps exactly one hash-verified survivor per such key), so
+                # the post-rewrite delta needs no second table count; with
+                # nothing bad it equals n_rows and the delta is 0
+                deltas["chunk_store_canonicalized"] = n_good_keys - n_rows
+                if n_dead or n_bad:
+                    good = chunk_key_col(F.col("data")).eqNullSafe(F.col("chunk_key"))
 
-                # r12 (guide §6): bounded damage must not rewrite the
-                # whole payload table at 100 TB. Select ONLY the live
-                # parts that may contain a doomed key (span + Bloom —
-                # no false negatives, so every row of every dead OR bad
-                # key lives in the selected subset, cross-part
-                # duplicates included) and fold just those through the
-                # combined GC+canonicalization layout. Healthy parts
-                # keep their bytes untouched. Widespread damage falls
-                # back to one full rewrite (still one, not two).
-                affected = dead_rows = None
-                live_parts = self.store.live_parts("chunk_store")
-                if (
-                    n_dead_keys + n_bad_keys <= self.REPAIR_SURGICAL_MAX_KEYS
-                    and self.store.parts_bytes(live_parts)
-                    >= self.SURGICAL_MIN_BYTES
-                ):
-                    doomed_rows = (
-                        per_key.filter(dead_pred | bad_pred)
-                        .select("chunk_key", dead_pred.alias("_dead"))
-                        .collect()
-                    )
-                    dead_rows = [r.chunk_key for r in doomed_rows if r._dead]
-                    affected = self.store.parts_for_keys(
-                        "chunk_store",
-                        "chunk_key",
-                        [r.chunk_key for r in doomed_rows],
-                    )
+                    # r12 (guide §6): bounded damage must not rewrite the
+                    # whole payload table at 100 TB. Select ONLY the live
+                    # parts that may contain a doomed key (span + Bloom —
+                    # no false negatives, so every row of every dead OR bad
+                    # key lives in the selected subset, cross-part
+                    # duplicates included) and fold just those through the
+                    # combined GC+canonicalization layout. Healthy parts
+                    # keep their bytes untouched. Widespread damage falls
+                    # back to one full rewrite (still one, not two).
+                    affected = dead_rows = None
+                    live_parts = self.store.live_parts("chunk_store")
+                    if (
+                        n_dead_keys + n_bad_keys <= self.REPAIR_SURGICAL_MAX_KEYS
+                        and self.store.parts_bytes(live_parts)
+                        >= self.SURGICAL_MIN_BYTES
+                    ):
+                        doomed_rows = (
+                            per_key.filter(dead_pred | bad_pred)
+                            .select("chunk_key", dead_pred.alias("_dead"))
+                            .collect()
+                        )
+                        dead_rows = [r.chunk_key for r in doomed_rows if r._dead]
+                        affected = self.store.parts_for_keys(
+                            "chunk_store",
+                            "chunk_key",
+                            [r.chunk_key for r in doomed_rows],
+                        )
 
-                def fused_layout(df: DataFrame) -> DataFrame:
-                    # dead keys: hash-consistent rows whose chunk is
-                    # gone — only the membership filter can drop them;
-                    # bad keys: filter to hash-verified rows, keep one
-                    # survivor (content-deterministic: verified
-                    # survivors are byte-identical). Healthy rows pass
-                    # both filters untouched.
-                    out = df
-                    if n_dead:
-                        if dead_rows is not None:
-                            dead_df = self.spark.createDataFrame(
-                                [(k,) for k in dead_rows], "chunk_key string"
-                            )
-                            out = out.join(
-                                F.broadcast(dead_df), "chunk_key", "left_anti"
-                            )
-                        else:
-                            out = out.join(live_keys, "chunk_key", "left_semi")
-                    if n_bad:
-                        out = out.filter(good).dropDuplicates(["chunk_key"])
-                    return out
+                    def fused_layout(df: DataFrame) -> DataFrame:
+                        # dead keys: hash-consistent rows whose chunk is
+                        # gone — only the membership filter can drop them;
+                        # bad keys: filter to hash-verified rows, keep one
+                        # survivor (content-deterministic: verified
+                        # survivors are byte-identical). Healthy rows pass
+                        # both filters untouched.
+                        out = df
+                        if n_dead:
+                            if dead_rows is not None:
+                                dead_df = self.spark.createDataFrame(
+                                    [(k,) for k in dead_rows], "chunk_key string"
+                                )
+                                out = out.join(
+                                    F.broadcast(dead_df), "chunk_key", "left_anti"
+                                )
+                            else:
+                                out = out.join(live_keys, "chunk_key", "left_semi")
+                        if n_bad:
+                            out = out.filter(good).dropDuplicates(["chunk_key"])
+                        return out
 
-                if affected is not None and len(affected) < len(live_parts):
-                    self.store.compact_parts(
-                        "chunk_store", affected, layout=fused_layout
-                    )
-                else:
-                    dead_rows = None  # full path: distributed semi-join
-                    self.store.commit(
-                        "chunk_store", fused_layout(cstore), expected_version=v_cs
-                    )
-            # every overlapped fix must land (and re-raise) before the
+                    if affected is not None and len(affected) < len(live_parts):
+                        self.store.compact_parts(
+                            "chunk_store", affected, layout=fused_layout
+                        )
+                    else:
+                        dead_rows = None  # full path: distributed semi-join
+                        self.store.commit(
+                            "chunk_store", fused_layout(cstore), expected_version=v_cs
+                        )
+            # every overlapped fix has landed (or raised) before the
             # ledger row claims the repaired state exists
-            for f in fixes:
-                f.result()
             if committed_mc or n_dead or n_bad:
                 self._record_checkpoint("repair")
         return deltas
@@ -2165,46 +2254,42 @@ class DedupeEngine:
         transactions (SqliteProvider.cs:29-30); this is the price/repair
         of four-way concurrent batched commits.
         """
-        from concurrent.futures import ThreadPoolExecutor
-
-        fixes: list = []
-        # lock OUTSIDE the pool: the pool's exit joins any in-flight fix
-        # thread BEFORE the op lock releases, even on an exception path
-        with self.store.op_lock(), ThreadPoolExecutor(max_workers=2) as pool:
-            deltas, rebuilt, committed = self._recover_map_chunks(pool, fixes)
-            # chunk_store: GC payloads whose chunk no longer exists.
-            # r13: dead/live counts come from one key-only aggregate
-            # over the membership join (two separate count() actions
-            # before); the payload-bearing `live` frame is only built
-            # when there is actually something to GC.
-            v_cs, cstore, _ = self.store.snapshot("chunk_store", CHUNK_STORE_SCHEMA)
-            live_keys = rebuilt.select("chunk_key")
-            n_cs_total, n_cs_live = (
-                cstore.select("chunk_key")
-                .join(live_keys.withColumn("_l", F.lit(1)), "chunk_key", "left")
-                .agg(F.count("*"), F.count("_l"))
-                .collect()[0]
-            )
-            n_dead = int(n_cs_total) - int(n_cs_live)
-            deltas["chunk_store"] = -n_dead
-            if n_dead:
-                # r12: same surgical shape for the payload GC — dead
-                # payloads are O(one crashed batch), the table is the
-                # 100 TB one; rewrite only the parts holding them
-                if not self._surgical_delete(
-                    "chunk_store",
-                    "chunk_key",
+        # lock OUTSIDE the pool: the pool's exit joins every in-flight
+        # fix thread BEFORE the op lock releases, even on an exception path
+        with self.store.op_lock():
+            with _fix_pool() as (pool, fixes):
+                deltas, rebuilt, committed = self._recover_map_chunks(pool, fixes)
+                # chunk_store: GC payloads whose chunk no longer exists.
+                # r13: dead/live counts come from one key-only aggregate
+                # over the membership join (two separate count() actions
+                # before); the payload-bearing `live` frame is only built
+                # when there is actually something to GC.
+                v_cs, cstore, _ = self.store.snapshot("chunk_store", CHUNK_STORE_SCHEMA)
+                live_keys = rebuilt.select("chunk_key")
+                n_cs_total, n_cs_live = (
                     cstore.select("chunk_key")
-                    .distinct()
-                    .join(rebuilt.select("chunk_key"), "chunk_key", "left_anti"),
-                ):
-                    live = cstore.join(live_keys, "chunk_key", "left_semi")
-                    self.store.commit("chunk_store", live, expected_version=v_cs)
-                committed = True
-            # every overlapped fix must land (and re-raise) before the
+                    .join(live_keys.withColumn("_l", F.lit(1)), "chunk_key", "left")
+                    .agg(F.count("*"), F.count("_l"))
+                    .collect()[0]
+                )
+                n_dead = int(n_cs_total) - int(n_cs_live)
+                deltas["chunk_store"] = -n_dead
+                if n_dead:
+                    # r12: same surgical shape for the payload GC — dead
+                    # payloads are O(one crashed batch), the table is the
+                    # 100 TB one; rewrite only the parts holding them
+                    if not self._surgical_delete(
+                        "chunk_store",
+                        "chunk_key",
+                        cstore.select("chunk_key")
+                        .distinct()
+                        .join(rebuilt.select("chunk_key"), "chunk_key", "left_anti"),
+                    ):
+                        live = cstore.join(live_keys, "chunk_key", "left_semi")
+                        self.store.commit("chunk_store", live, expected_version=v_cs)
+                    committed = True
+            # every overlapped fix has landed (or raised) before the
             # ledger row claims the repaired state exists
-            for f in fixes:
-                f.result()
             if committed:
                 # a clean pass changed nothing — the previous ledger row
                 # still describes this exact state; only a repair that
@@ -2260,13 +2345,11 @@ class DedupeReadStream(io.RawIOBase):
 
     def _fetch(self, chunk_key: str) -> bytes:
         if chunk_key != self._cached_key:
-            rows = (
-                self._engine.chunk_store.filter(F.col("chunk_key") == chunk_key).take(1)
-            )
-            if not rows:
+            data = self._engine._payloads([chunk_key]).get(chunk_key)
+            if data is None:
                 raise OSError(f"missing chunk payload {chunk_key}")
             self._cached_key = chunk_key
-            self._cached_data = bytes(rows[0].data)
+            self._cached_data = data
         return self._cached_data
 
     def read(self, size: int = -1) -> bytes:

@@ -381,7 +381,11 @@ def ddp_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # original_length == SUM(length) == mapped_bytes by the same
     # derivation both engines use. One om pass, one exchange, and the
     # join operator is gone; at 100 TB this halves the per-chunk
-    # substrate compute for the row. Oracle hash unchanged.
+    # substrate compute for the row. Oracle hash unchanged. The
+    # equivalence holds only while objects_df derives original_length
+    # as SUM(om.length): test_objects_original_length_is_map_length_sum
+    # fails if it ever gains an independent source, before the coverage
+    # invariant can turn vacuous.
     return (
         om.groupBy("object_key")
         .agg(

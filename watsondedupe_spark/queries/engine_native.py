@@ -3195,8 +3195,8 @@ FROM sel
     "payload), exists hit + miss, ranged read vs the payload slice, "
     "metadata accounting, keyset list page — and the round-8 claim "
     "itself: every point lookup PRUNES the part list to exactly one "
-    "part via the manifest min/max spans before Spark plans a scan "
-    "(store.read_point; the b-tree-PK analogue of "
+    "part via the manifest min/max spans before any read "
+    "(store.parts_for_keys; the b-tree-PK analogue of "
     "SqliteProvider.cs:258-270).",
 )
 def engine_point_reads(spark: SparkSession, sf_dir: str) -> DataFrame:

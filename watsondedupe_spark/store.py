@@ -335,22 +335,6 @@ class IndexStore:
                 kept.append(p)
         return kept
 
-    def read_pruned(
-        self,
-        name: str,
-        col_ranges: dict[str, list[tuple]],
-        schema: StructType | None = None,
-    ) -> DataFrame:
-        """Current snapshot of ``name`` scanning only the parts whose
-        manifest min/max spans overlap ``col_ranges`` (``{col: [(lo,
-        hi), ...]}``; ``None`` bounds are open). The caller still applies
-        the exact row filter — pruning only shrinks the file list."""
-        state = self._state(name)
-        parts = self._prune_parts(state, col_ranges)
-        if not parts:
-            return self.spark.createDataFrame([], schema or TABLE_SCHEMAS[name])
-        return self.spark.read.parquet(*parts)
-
     def _file_span(self, fpath: str, col: str):
         """``[lo, hi]`` of ``col`` across one parquet FILE's row groups
         from its footer (driver-side, cached — parts are immutable), or
@@ -412,7 +396,7 @@ class IndexStore:
         shard's files BEFORE the scan is planned. Files without
         trustworthy stats are always kept, and the caller still applies
         the exact row predicate — pruning only shrinks the file list,
-        exactly like :meth:`read_pruned`."""
+        exactly like :meth:`read_point`."""
         state = self._state(name)
         keep: list[str] = []
         for part in state.get("parts", []):
@@ -442,7 +426,7 @@ class IndexStore:
     #: (table, column) pairs whose keys are uniform cryptographic hashes
     #: (urlsafe-b64 SHA-256): any non-trivial part's span covers
     #: essentially the whole keyspace, so min/max SPAN pruning never
-    #: skips a part there — read_point skips the per-part span test for
+    #: skips a part there — parts_for_keys skips the per-part span test for
     #: these (round-9 advice) and relies on the Bloom sidecars instead,
     #: which prune on membership rather than order (round 12).
     HASH_KEYED: frozenset = frozenset({("chunks", "chunk_key"), ("chunk_store", "chunk_key")})
@@ -553,60 +537,33 @@ class IndexStore:
         values: list,
         schema: StructType | None = None,
     ) -> DataFrame:
-        """Point-lookup form of :meth:`read_pruned`: keep only parts
-        that can contain one of ``values``, by two independent
-        witnesses — min/max SPANS (the probe set is sorted once and
-        each part span is tested with a bisect: O(parts x log |values|),
-        not O(parts x |values|) — a 100k-key batch probe against a
-        many-part store stays driver-cheap), then Bloom sidecars
-        (:meth:`_bloom_prune`), which prune on MEMBERSHIP and so still
-        work on the hash-keyed tables whose spans cover the whole
-        keyspace (:attr:`HASH_KEYED` skips the useless span test there).
-        """
-        state = self._state(name)
-        if (name, col) in self.HASH_KEYED:
-            parts = list(state["parts"])
-            vals = list(values) if values else []
-        else:
-            import bisect
-
-            stats = state.get("stats", {})
-            try:
-                vals = sorted(values)
-            except TypeError:  # mixed/unorderable probe types: no pruning
-                vals = None
-            if vals:
-                kept = []
-                for p in state["parts"]:
-                    span = (stats.get(os.path.basename(p)) or {}).get(col)
-                    if span is None:
-                        kept.append(p)  # no stats: cannot prune
-                        continue
-                    plo, phi = span
-                    # smallest probe >= the part's low bound; a hit iff
-                    # it also sits at or below the part's high bound
-                    i = bisect.bisect_left(vals, plo)
-                    if i < len(vals) and vals[i] <= phi:
-                        kept.append(p)
-                parts = kept
-            else:
-                parts = [] if vals is not None else state["parts"]
-        if parts and vals and self.BLOOM_COLS.get(name) == col:
-            parts = self._bloom_prune(name, col, parts, vals)
+        """Current snapshot of ``name`` for the APIs that return a
+        DataFrame (``get_object_map``, ``get_chunks``,
+        ``map_for_position``, ``get_batch``): Spark plans a scan over
+        only the parts :meth:`parts_for_keys` keeps. An empty
+        ``values`` asks for nothing and gets an empty typed frame. The
+        engine's driver-returning point verbs do not plan a scan at all
+        — they read the same pruned parts with :meth:`read_arrow`."""
+        parts = self.parts_for_keys(name, col, values) if values else []
         if not parts:
             return self.spark.createDataFrame([], schema or TABLE_SCHEMAS[name])
         return self.spark.read.parquet(*parts)
 
     def parts_for_keys(self, name: str, col: str, values: list) -> list[str]:
         """Live parts that MAY contain any of ``values`` in ``col`` —
-        the part-selection half of :meth:`read_point`, exposed for
-        surgical part rewrites (``repair()`` canonicalization): both
-        witnesses apply (min/max spans unless the table is
-        :attr:`HASH_KEYED`, then Bloom sidecars), parts without
-        stats/sidecars are always kept, and false positives only widen
-        the rewrite — never a correctness gate. An empty ``values``
-        keeps every part (the caller is asking about nothing; the safe
-        answer is "anywhere")."""
+        the one part-selection primitive behind :meth:`read_point`,
+        :meth:`read_arrow` and surgical part rewrites (``repair()``
+        canonicalization). Two independent witnesses apply: min/max
+        SPANS (the probe set is sorted once and each part span is
+        tested with a bisect: O(parts x log |values|), so a 100k-key
+        batch probe against a many-part store stays driver-cheap),
+        skipped on the :attr:`HASH_KEYED` tables whose spans cover the
+        whole keyspace, then Bloom sidecars (:meth:`_bloom_prune`),
+        which prune on MEMBERSHIP. Parts without stats/sidecars are
+        always kept and false positives only widen the read — never a
+        correctness gate. An empty ``values`` keeps every part (the
+        caller is asking about nothing; the safe answer is
+        "anywhere")."""
         state = self._state(name)
         parts = list(state.get("parts", []))
         if not parts or not values:
@@ -614,7 +571,7 @@ class IndexStore:
         vals: list | None
         try:
             vals = sorted(values)
-        except TypeError:
+        except TypeError:  # mixed/unorderable probe types: no span pruning
             vals = None
         if vals and (name, col) not in self.HASH_KEYED:
             import bisect
@@ -624,9 +581,11 @@ class IndexStore:
             for p in parts:
                 span = (stats.get(os.path.basename(p)) or {}).get(col)
                 if span is None:
-                    kept.append(p)
+                    kept.append(p)  # no stats: cannot prune
                     continue
                 plo, phi = span
+                # smallest probe >= the part's low bound; a hit iff it
+                # also sits at or below the part's high bound
                 i = bisect.bisect_left(vals, plo)
                 if i < len(vals) and vals[i] <= phi:
                     kept.append(p)
@@ -634,6 +593,63 @@ class IndexStore:
         if parts and self.BLOOM_COLS.get(name) == col:
             parts = self._bloom_prune(name, col, parts, list(values))
         return parts
+
+    def read_arrow(
+        self,
+        name: str,
+        columns: list[str] | None = None,
+        filter=None,
+        *,
+        col: str | None = None,
+        values: list | None = None,
+        ranges: dict[str, list[tuple]] | None = None,
+    ):
+        """Rows of ``name`` as a ``pyarrow.Table`` read on the driver —
+        no Spark job. Parts are chosen like the Spark readers choose
+        them: by key probe (``col``/``values`` through
+        :meth:`parts_for_keys`; an empty ``values`` reads nothing) or by
+        span ranges (``ranges`` through :meth:`_prune_parts`: a part is
+        kept when, for each column, any ``(lo, hi)`` range overlaps its
+        span; ``None`` bounds are open). One ``pyarrow.dataset`` read
+        over the kept parts' ``*.parquet`` files (the dataset takes
+        files, not part dirs, and the dirs also hold Spark's marker
+        files and the Bloom sidecars) then projects ``columns``
+        (default: every column, in file order) and applies the Arrow
+        ``filter`` expression, which parquet row-group statistics also
+        push down. When no part is kept, nothing is read and the result
+        is an empty table typed from :data:`TABLE_SCHEMAS`. INT96
+        timestamps come back as ``timestamp[us]``, the precision Spark
+        wrote them at.
+
+        This is the reference's single indexed SQLite query
+        (SqliteProvider.cs:203-270) as file skipping plus one columnar
+        read: a point verb pays footer and row-group I/O on the parts
+        that can hold its key, not the per-job scheduling floor of a
+        Spark action."""
+        import pyarrow.dataset as pads
+
+        if col is not None:
+            parts = self.parts_for_keys(name, col, values) if values else []
+        else:
+            parts = self._prune_parts(self._state(name), ranges)
+        files = [
+            os.path.join(p, f)
+            for p in parts
+            for f in sorted(os.listdir(p))
+            if f.endswith(".parquet")
+        ]
+        if not files:
+            import pyarrow as pa
+            from pyspark.sql.pandas.types import to_arrow_schema
+
+            schema = to_arrow_schema(TABLE_SCHEMAS[name])
+            if columns is not None:
+                schema = pa.schema([schema.field(c) for c in columns])
+            return schema.empty_table()
+        fmt = pads.ParquetFileFormat(
+            read_options=pads.ParquetReadOptions(coerce_int96_timestamp_unit="us")
+        )
+        return pads.dataset(files, format=fmt).to_table(columns=columns, filter=filter)
 
     def read_version(self, name: str, version: int) -> DataFrame:
         """Snapshot of ``name`` as of ``version`` — Delta-style time
