@@ -1784,3 +1784,60 @@ def test_maintenance_raises_fix_thread_error_beside_commit_error(engine, monkeyp
     # nothing was committed and the op lock was released: a clean rerun heals
     getattr(engine, verb)()
     assert engine.verify().count() == 0
+
+
+def _raised_texts(exc) -> str:
+    return " | ".join([str(exc)] + list(getattr(exc, "__notes__", [])))
+
+
+def test_write_batch_surfaces_every_failed_table_commit(engine, monkeypatch):
+    """Two of an ingest's overlapped table commits fail: the raised error
+    carries the other one in its notes instead of dropping it."""
+    orig = engine.store.append
+
+    def failing_append(name, *args, **kwargs):
+        if name in ("object_map", "chunk_store"):
+            raise RuntimeError(f"{name} append failed")
+        return orig(name, *args, **kwargs)
+
+    monkeypatch.setattr(engine.store, "append", failing_append)
+    with pytest.raises(RuntimeError) as info:
+        engine.write("k", rand_bytes(6000, seed=410))
+    text = _raised_texts(info.value)
+    assert "object_map append failed" in text and "chunk_store append failed" in text
+
+
+def test_optimize_surfaces_every_failed_table_compaction(engine, monkeypatch):
+    """Two of optimize()'s overlapped per-table compactions fail: both
+    errors surface."""
+    engine.write("k", rand_bytes(6000, seed=411))
+
+    def failing_compact(name, *args, **kwargs):
+        if name in ("objects", "chunks"):
+            raise RuntimeError(f"{name} compaction failed")
+        return 0
+
+    monkeypatch.setattr(engine.store, "compact_parts", failing_compact)
+    with pytest.raises(RuntimeError) as info:
+        engine.optimize()
+    text = _raised_texts(info.value)
+    assert "objects compaction failed" in text and "chunks compaction failed" in text
+
+
+def test_repair_drops_null_chunk_key_row_on_surgical_gate(engine):
+    """A planted chunk_store row with a NULL chunk_key is dead (no chunk
+    can reference it). With the surgical gate open, repair() removes it
+    and its chunk_store delta equals the change in row count."""
+    spark = engine.spark
+    engine.SURGICAL_MIN_BYTES = 0
+    engine.write("k", rand_bytes(6000, seed=412))
+    engine.store.append(
+        "chunk_store",
+        spark.createDataFrame([(None, bytearray(b"null-key"))], "chunk_key string, data binary"),
+    )
+    before = engine.store.read("chunk_store").count()
+    deltas = engine.repair()
+    after = engine.store.read("chunk_store")
+    assert after.filter(F.col("chunk_key").isNull()).count() == 0
+    assert deltas["chunk_store"] == after.count() - before == -1
+    assert engine.get("k") == rand_bytes(6000, seed=412)

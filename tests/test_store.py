@@ -111,7 +111,7 @@ def test_cas_commit_refuses_stale_version(spark, tmp_path, store_cls):
         st.commit("t", df, expected_version=v)
     # the refused part must not leak into the table or onto disk
     assert st.current_version("t") == 2
-    st._gc("t")
+    st.vacuum("t")
     live = {p.split("/")[-1] for p in st._state("t")["parts"]}
     import os
 
@@ -397,9 +397,104 @@ def test_read_key_range_keeps_statless_files(spark, tmp_path, store_cls):
     for part in state["parts"]:
         for f in _os.listdir(part):
             if f.endswith(".parquet"):
-                st._file_span_cache[_os.path.join(part, f)] = None
+                st._footer_cache[_os.path.join(part, f)] = None
     # with untrusted stats the files are kept, so all rows come back
     assert (
         st.read_key_range("objects", "object_key", "900", None).count()
         == st.read("objects").count()
     )
+
+
+def test_read_key_range_span_cache_is_per_column(spark, tmp_path, store_cls):
+    """Footer spans are cached per file AND column: a string-column
+    range read must not leave a span that a later integer-column range
+    read on the same files compares against."""
+    from pyspark.sql import functions as F
+
+    st = store_cls(spark, str(tmp_path))
+    df = spark.range(200).selectExpr(
+        "cast(id as long) as id",
+        "lpad(cast(id as string), 3, '0') as object_key",
+        "cast(id as long) as original_length",
+        "cast(id as long) as comp_length",
+        "cast(1 as long) as chunk_count",
+        "timestamp'2024-01-01' as created_utc",
+    )
+    st.commit("objects", df.repartitionByRange(4, F.col("object_key")))
+    st.read_key_range("objects", "object_key", "050", "100").count()
+    got = st.read_key_range("objects", "id", 50, 100).filter(
+        (F.col("id") >= 50) & (F.col("id") < 100)
+    )
+    assert got.count() == 50
+
+
+# -- the manifest flip behind every write verb --------------------------------
+
+
+def test_attach_part_at_max_parts_folds_staged_rows(spark, tmp_path, store_cls):
+    """Attaching to a full part list folds the staged rows in: one live
+    part holding every row, with its skip stats, and no staged dir left."""
+    import os as _os
+
+    st = store_cls(spark, str(tmp_path))
+    st.max_parts = 3
+    for i in range(3):
+        st.append("objects", _df(spark, i * 10, i * 10 + 10))
+    path = st.stage_part("objects", _df(spark, 30, 35), 4)
+    st.attach_part("objects", path, meta_merge={"max_id": 34})
+    state = st._state("objects")
+    assert len(state["parts"]) == 1
+    assert sorted(r.id for r in st.read("objects").collect()) == list(range(35))
+    assert state["stats"][_os.path.basename(state["parts"][0])]["id"] == [0, 34]
+    assert state["meta"] == {"max_id": 34}
+    assert not _os.path.exists(path)
+
+
+def test_compact_parts_refuses_retired_part(spark, tmp_path, store_cls):
+    """A compaction whose input part was retired by another writer is
+    refused, and its rewritten part never stays on disk."""
+    import os as _os
+
+    st = store_cls(spark, str(tmp_path))
+    st.commit("objects", _df(spark, 0, 10))
+    st.append("objects", _df(spark, 10, 20))
+    parts = st.live_parts("objects")
+    st.commit("objects", _df(spark, 0, 5))  # retires both parts
+    tdir = st._table_dir("objects")
+    before = {e for e in _os.listdir(tdir) if e.startswith("p")}
+    v = st.current_version("objects")
+    with pytest.raises(ConcurrentWriteError):
+        st.compact_parts("objects", parts)
+    assert st.current_version("objects") == v
+    assert {e for e in _os.listdir(tdir) if e.startswith("p")} == before
+    assert st.read("objects").count() == 5
+
+
+def test_restore_version_brings_back_skip_stats(spark, tmp_path, store_cls):
+    """A metadata-only rollback restores the old version's skip stats
+    with its part list, so point probes still prune."""
+    st = store_cls(spark, str(tmp_path))
+    st.commit("objects", _df(spark, 0, 10))
+    st.append("objects", _df(spark, 10, 20))
+    st.append("objects", _df(spark, 20, 30))  # v3
+    old = st._state("objects")
+    st.commit("objects", _df(spark, 100, 110))  # v4 replaces everything
+    assert st.restore_version("objects", 3) == 5
+    state = st._state("objects")
+    assert state["parts"] == old["parts"]
+    assert state["stats"] == old["stats"]
+    assert st.parts_for_keys("objects", "id", [25]) == [old["parts"][2]]
+    assert st.read("objects").count() == 30
+
+
+def test_update_meta_leaves_parts_and_stats(spark, tmp_path, store_cls):
+    st = store_cls(spark, str(tmp_path))
+    st.commit("objects", _df(spark, 0, 10), meta={"max_id": 9})
+    st.append("objects", _df(spark, 10, 20))
+    old = st._state("objects")
+    assert st.update_meta("objects", lambda m: {**m, "note": 1}) == {"max_id": 9, "note": 1}
+    state = st._state("objects")
+    assert state["version"] == old["version"] + 1
+    assert state["parts"] == old["parts"]
+    assert state["stats"] == old["stats"]
+    assert state["meta"] == {"max_id": 9, "note": 1}

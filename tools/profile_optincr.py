@@ -70,7 +70,7 @@ def main() -> int:
         return orig
 
     for m in ("compact_parts", "_write_part", "_write_bloom", "_part_stats",
-              "parts_bytes", "_gc"):
+              "parts_bytes", "_flip", "vacuum"):
         timed(store_mod.IndexStore, m)
 
     spark.read.parquet(f"{sf_dir}/documents.parquet").count()

@@ -166,17 +166,19 @@ class SimulatedCrash(RuntimeError):
 
 
 @contextmanager
-def _fix_pool():
-    """``(pool, fixes)`` for maintenance fix commits that overlap the
-    caller's next phase. On exit EVERY submitted fix is joined and the
-    first failure re-raised — also when the body itself raised, in
-    which case the fix's error carries the body's as ``__context__``
-    and neither is lost (a bare pool exit joins the threads but drops
-    their exceptions). Further fix failures ride along as notes."""
-    from concurrent.futures import ThreadPoolExecutor
+def _fix_pool(workers: int = 2):
+    """``(pool, fixes)``: the engine's one driver-thread pool, for
+    commits that overlap each other or the caller's next phase. On
+    exit EVERY future appended to ``fixes`` is joined and the first
+    failure (in submission order) re-raised — also when the body itself
+    raised, in which case the fix's error carries the body's as
+    ``__context__`` and neither is lost (a bare pool exit joins the
+    threads but drops their exceptions). Further fix failures ride
+    along as notes."""
+    from concurrent import futures
 
     fixes: list = []
-    with ThreadPoolExecutor(max_workers=2) as pool:
+    with futures.ThreadPoolExecutor(max_workers=workers) as pool:
         try:
             yield pool, fixes
         finally:
@@ -720,8 +722,6 @@ class DedupeEngine:
                     raise SimulatedCrash(name)
             raise ValueError(f"unknown crash point: {crash_after!r}")
 
-        from concurrent.futures import ThreadPoolExecutor
-
         def stage_objects():
             # the EXPENSIVE half of the objects commit (id assignment +
             # parquet part write) overlaps the other three commits; only
@@ -731,14 +731,13 @@ class DedupeEngine:
             v, new_objects, prev_max = derive_objects()
             return v, prev_max, self.store.stage_part("objects", new_objects, v + 1)
 
-        with ThreadPoolExecutor(max_workers=4) as pool:
+        # every thread is joined before any error is raised; a second
+        # failed commit rides along as a note on the first
+        with _fix_pool(4) as (pool, fixes):
             staged = pool.submit(stage_objects)
-            futures = [
-                pool.submit(fn) for fn in (write_map, write_chunks, write_payloads)
-            ]
-            for f in futures:
-                f.result()  # re-raise the first failure
-            v, prev_max, path = staged.result()
+            fixes.append(staged)
+            fixes += [pool.submit(fn) for fn in (write_map, write_chunks, write_payloads)]
+        v, prev_max, path = staged.result()
         # the logical commit point, strictly after the other three (see
         # the commit-order invariant in the docstring)
         try:
@@ -1896,21 +1895,15 @@ class DedupeEngine:
         # pass, whose cost is dominated by four serial small-fold fixed
         # floors — the scale gate's incr/full seconds fraction tracks
         # O(append bytes) more honestly once the fixed floors overlap.
-        from concurrent.futures import ThreadPoolExecutor
-
         tables = [
             (name, cluster_key[name])
             for name in ("objects", "object_map", "chunks", "chunk_store")
             if self.store.exists(name)
         ]
         if tables:
-            with ThreadPoolExecutor(max_workers=len(tables)) as pool:
-                futures = {
-                    name: pool.submit(compact_one, name, key)
-                    for name, key in tables
-                }
-                for name, fut in futures.items():
-                    out[name] = fut.result()
+            with _fix_pool(len(tables)) as (pool, fixes):
+                fixes += [pool.submit(compact_one, name, key) for name, key in tables]
+            out = {name: f.result() for (name, _), f in zip(tables, fixes)}
         if any(out.values()) and all(
             self.store.exists(t)
             for t in ("objects", "object_map", "chunks", "chunk_store")

@@ -46,6 +46,18 @@ shape — the batched analogue of the reference's writer mutexes):
   keeps unconditional last-writer-wins replace for single-writer
   callers.
 
+All of this is one primitive. Every write verb (``commit``, ``append``,
+``attach_part``, ``compact_parts``, ``restore_version``,
+``update_meta``) is a thin wrapper over the private ``IndexStore._flip``:
+the verb stages its part (if any) outside the lock, and the flip reads
+the part's footer stats, then inside the critical section reads the
+fresh manifest and asks the verb's ``build`` for the next part list and
+meta. ``build`` is where the verb's rule lives: append rebases, a CAS
+verb checks the version, a compaction checks its inputs are still live.
+A refusal raises :class:`ConcurrentWriteError` and deletes the staged
+part. Otherwise the flip keeps skip stats for live parts only, bumps
+the version, writes the manifest, and runs GC if it retired any parts.
+
 Two interchangeable backends prove the swap point (the reference's
 ``DbProvider`` pluggability, src/DedupeLibrary/Database/DbProvider.cs:10,
 proven externally against MySQL in src/Test.External/Program.cs:188):
@@ -75,6 +87,59 @@ class ConcurrentWriteError(RuntimeError):
     snapshot version. Re-read, re-derive, retry."""
 
 
+def _check_version(name: str, found: int, expected: int | None) -> None:
+    """The CAS test: refuse when the table is no longer at the
+    caller's ``expected`` version (``None`` never refuses)."""
+    if expected is not None and found != expected:
+        raise ConcurrentWriteError(
+            f"{name}: expected version {expected}, "
+            f"found {found} — another writer committed first"
+        )
+
+
+@contextmanager
+def _flock(path: str):
+    """Exclusive ``fcntl.flock`` on ``path``: between processes AND
+    between threads of one process (each entry opens its own file
+    description)."""
+    import fcntl
+
+    fd = os.open(path, os.O_CREAT | os.O_RDWR)
+    try:
+        fcntl.flock(fd, fcntl.LOCK_EX)
+        yield
+    finally:
+        fcntl.flock(fd, fcntl.LOCK_UN)
+        os.close(fd)
+
+
+def _column_span(md, ci: int | None) -> list | None:
+    """``[lo, hi]`` of column ``ci`` over every row group of one parquet
+    footer ``md``, or None when any row group's stats can't be trusted
+    (or the column is absent, or there is no row group)."""
+    if ci is None:
+        return None
+    span = None
+    for rg in range(md.num_row_groups):
+        st = md.row_group(rg).column(ci).statistics
+        if st is None or not st.has_min_max:
+            return None
+        lo, hi = st.min, st.max
+        if isinstance(lo, bytes):
+            # strict decode only: a lossy ("replace") decode of
+            # truncated/invalid UTF-8 stats is NOT order-preserving
+            # (U+FFFD can sort a truncated max BELOW real values), so
+            # an undecodable bound makes the span untrusted
+            try:
+                lo, hi = lo.decode("utf-8"), hi.decode("utf-8")
+            except UnicodeDecodeError:
+                return None
+        if not isinstance(lo, (str, int, float)):
+            return None
+        span = [lo, hi] if span is None else [min(span[0], lo), max(span[1], hi)]
+    return span
+
+
 class IndexStore:
     """Parquet-backed table store with atomic manifest commits.
 
@@ -89,7 +154,8 @@ class IndexStore:
     max_parts = 16
     #: how many historical manifest versions stay readable (time travel)
     retain_versions = 8
-    #: bounded optimistic retries for internal read-modify-write (fold)
+    #: bounded optimistic retries for internal read-modify-writes
+    #: (the append fold, compact)
     cas_retries = 6
     #: GC spares unreferenced part dirs younger than this: a concurrent
     #: writer's part is WRITTEN before its manifest flip, so for a
@@ -113,8 +179,9 @@ class IndexStore:
         # parsed Bloom sidecars keyed by (part basename, col): parts
         # are immutable once published, so the cache never invalidates
         self._bloom_cache: dict = {}
-        # per-file footer key spans (read_key_range): immutable too
-        self._file_span_cache: dict = {}
+        # per-file footer spans by column (:meth:`_file_spans`): files
+        # are immutable too
+        self._footer_cache: dict = {}
         os.makedirs(root, exist_ok=True)
 
     # -- backend primitives (the only parts a new backend overrides) --------
@@ -130,21 +197,11 @@ class IndexStore:
 
     @contextmanager
     def _transact(self, name: str):
-        """Per-table critical section for manifest flips. flock on a
-        lock file: exclusive between processes AND between threads of
-        one process (each entry opens its own file description)."""
-        import fcntl
-
+        """Per-table critical section for manifest flips: an flock on
+        the table's ``_LOCK`` file."""
         os.makedirs(self._table_dir(name), exist_ok=True)
-        fd = os.open(
-            os.path.join(self._table_dir(name), "_LOCK"), os.O_CREAT | os.O_RDWR
-        )
-        try:
-            fcntl.flock(fd, fcntl.LOCK_EX)
+        with _flock(os.path.join(self._table_dir(name), "_LOCK")):
             yield
-        finally:
-            fcntl.flock(fd, fcntl.LOCK_UN)
-            os.close(fd)
 
     def _state(self, name: str) -> dict:
         try:
@@ -198,17 +255,26 @@ class IndexStore:
     def current_version(self, name: str) -> int:
         return self._state(name)["version"]
 
-    def _new_part_path(self, name: str, version_hint: int) -> str:
-        """Collision-free part dir name: version hint for operator
-        legibility + uuid suffix so racing writers never share a path."""
-        return os.path.join(
-            self._table_dir(name), f"p{version_hint:08d}_{uuid.uuid4().hex[:8]}"
-        )
+    def _retained(self, name: str, version: int) -> dict:
+        """Manifest state of retained ``version``; ValueError once it
+        has expired."""
+        state = self._state_version(name, version)
+        if state is None:
+            raise ValueError(
+                f"version {version} of {name} is not retained "
+                f"(have {self.versions(name)})"
+            )
+        return state
 
-    def _df_for(self, state: dict, name: str, schema: StructType | None) -> DataFrame:
-        if not state["parts"]:
+    def _df_for(
+        self, name: str, paths: list[str], schema: StructType | None = None
+    ) -> DataFrame:
+        """One parquet read over ``paths`` (part dirs or files), or an
+        empty frame typed ``schema`` (default: the table schema) when
+        there is nothing to read."""
+        if not paths:
             return self.spark.createDataFrame([], schema or TABLE_SCHEMAS[name])
-        return self.spark.read.parquet(*state["parts"])
+        return self.spark.read.parquet(*paths)
 
     # -- manifest-level data skipping (round 8) ------------------------------
 
@@ -227,86 +293,63 @@ class IndexStore:
         "chunk_store": ["chunk_key"],
     }
 
+    @staticmethod
+    def _part_files(part: str) -> list[str]:
+        """A part dir's parquet files, sorted — the dir also holds
+        Spark's marker files and the Bloom sidecars."""
+        return sorted(
+            os.path.join(part, f) for f in os.listdir(part) if f.endswith(".parquet")
+        )
+
+    def _file_spans(self, fpath: str, cols: list[str]) -> dict:
+        """``{col: [lo, hi]}`` of ``cols`` across one parquet FILE's row
+        groups, read from its footer on the driver (no Spark job —
+        pyarrow reads only metadata). A column maps to None when its
+        stats can't be trusted (missing footer stats, unexpected types,
+        no row group): a file is then never pruned on it. Cached per
+        file and column, since files are immutable; a cached None for
+        the whole file means its footer could not be read. Parquet's
+        truncated string statistics stay safe here — a truncated min is
+        a lower bound and a truncated max an upper bound, so the span
+        can only widen."""
+        cache = self._footer_cache
+        spans = cache.get(fpath, {})
+        todo = [c for c in cols if spans is not None and c not in spans]
+        if todo:
+            try:
+                import pyarrow.parquet as pq
+
+                md = pq.ParquetFile(fpath).metadata
+                index = {md.schema.column(i).path: i for i in range(md.num_columns)}
+                spans = {**spans, **{c: _column_span(md, index.get(c)) for c in todo}}
+            except Exception:  # noqa: BLE001 — stats are an optimization only
+                spans = None
+            if len(cache) >= 65536:
+                cache.clear()
+            cache[fpath] = spans
+        return {c: None if spans is None else spans[c] for c in cols}
+
     def _part_stats(self, name: str, path: str) -> dict | None:
-        """Driver-side min/max of the skip columns across one part dir's
-        parquet footers (no Spark job — pyarrow reads only metadata).
-        Returns None when stats can't be trusted for every file (missing
-        footer stats, unexpected types): the part is then never pruned.
-        Parquet's truncated string statistics stay safe here — a
-        truncated min is a lower bound and a truncated max an upper
-        bound, so the span can only widen."""
+        """Min/max of the table's skip columns across one part dir's
+        parquet files, or None when stats can't be trusted for every
+        file: the part is then never pruned."""
         cols = self.SKIP_STATS_COLS.get(name)
         if not cols:
             return None
-        import pyarrow.parquet as pq
-
-        spans: dict[str, list] = {}
         try:
-            files = [f for f in os.listdir(path) if f.endswith(".parquet")]
-            if not files:
-                return None
-            for fn in files:
-                md = pq.ParquetFile(os.path.join(path, fn)).metadata
-                for rg in range(md.num_row_groups):
-                    row_group = md.row_group(rg)
-                    for ci in range(row_group.num_columns):
-                        col = row_group.column(ci)
-                        cname = col.path_in_schema
-                        if cname not in cols:
-                            continue
-                        st = col.statistics
-                        if st is None or not st.has_min_max:
-                            return None
-                        lo, hi = st.min, st.max
-                        if isinstance(lo, bytes):
-                            # strict decode only: a lossy ("replace")
-                            # decode of truncated/invalid UTF-8 stats is
-                            # NOT order-preserving (U+FFFD can sort a
-                            # truncated max BELOW real values), so any
-                            # undecodable bound makes the whole part's
-                            # stats untrusted — kept, never pruned
-                            try:
-                                lo, hi = lo.decode("utf-8"), hi.decode("utf-8")
-                            except UnicodeDecodeError:
-                                return None
-                        if not isinstance(lo, (str, int, float)):
-                            return None
-                        cur = spans.get(cname)
-                        if cur is None:
-                            spans[cname] = [lo, hi]
-                        else:
-                            cur[0], cur[1] = min(cur[0], lo), max(cur[1], hi)
-        except Exception:  # noqa: BLE001 — stats are an optimization only
+            files = self._part_files(path)
+        except OSError:
             return None
-        # every skip column must be covered, else a probe on the missing
-        # column would wrongly prune this part
-        return spans if set(spans) == set(cols) else None
-
-    _STATS_UNSET = object()
-
-    def _attach_stats(
-        self, name: str, state: dict, path: str, precomputed=_STATS_UNSET
-    ) -> dict:
-        """New manifest state with ``path``'s skip stats recorded and
-        stale entries (retired parts) dropped. ``precomputed`` lets
-        callers do the footer read OUTSIDE their critical section
-        (``None`` there means "stats untrusted — never prune this part")."""
-        live = {os.path.basename(p) for p in state["parts"]}
-        stats = {
-            k: v for k, v in state.get("stats", {}).items() if k in live
-        }
-        ps = (
-            self._part_stats(name, path)
-            if precomputed is self._STATS_UNSET
-            else precomputed
-        )
-        if ps is not None:
-            stats[os.path.basename(path)] = ps
-        if stats:
-            state["stats"] = stats
-        else:
-            state.pop("stats", None)
-        return state
+        stats: dict[str, list] = {}
+        for fpath in files:
+            for col, span in self._file_spans(fpath, cols).items():
+                # every skip column must be covered, else a probe on the
+                # missing column would wrongly prune this part
+                if span is None:
+                    return None
+                cur = stats.get(col, span)
+                stats[col] = [min(cur[0], span[0]), max(cur[1], span[1])]
+        return stats or None
 
     def _prune_parts(
         self, state: dict, col_ranges: dict[str, list[tuple]]
@@ -335,48 +378,6 @@ class IndexStore:
                 kept.append(p)
         return kept
 
-    def _file_span(self, fpath: str, col: str):
-        """``[lo, hi]`` of ``col`` across one parquet FILE's row groups
-        from its footer (driver-side, cached — parts are immutable), or
-        None when the stats can't be trusted (file is then never
-        pruned). Same strict-decode posture as :meth:`_part_stats`."""
-        cache = self._file_span_cache
-        hit = cache.get(fpath, self._STATS_UNSET)
-        if hit is not self._STATS_UNSET:
-            return hit
-        span = None
-        try:
-            import pyarrow.parquet as pq
-
-            md = pq.ParquetFile(fpath).metadata
-            for rg in range(md.num_row_groups):
-                row_group = md.row_group(rg)
-                for ci in range(row_group.num_columns):
-                    c = row_group.column(ci)
-                    if c.path_in_schema != col:
-                        continue
-                    st = c.statistics
-                    if st is None or not st.has_min_max:
-                        span = None
-                        raise StopIteration
-                    lo, hi = st.min, st.max
-                    if isinstance(lo, bytes):
-                        lo, hi = lo.decode("utf-8"), hi.decode("utf-8")
-                    if not isinstance(lo, (str, int, float)):
-                        span = None
-                        raise StopIteration
-                    span = (
-                        (lo, hi)
-                        if span is None
-                        else (min(span[0], lo), max(span[1], hi))
-                    )
-        except Exception:  # noqa: BLE001 — stats are an optimization only
-            span = None
-        if len(cache) >= 65536:
-            cache.clear()
-        cache[fpath] = span
-        return span
-
     def read_key_range(
         self,
         name: str,
@@ -397,31 +398,22 @@ class IndexStore:
         trustworthy stats are always kept, and the caller still applies
         the exact row predicate — pruning only shrinks the file list,
         exactly like :meth:`read_point`."""
-        state = self._state(name)
         keep: list[str] = []
-        for part in state.get("parts", []):
+        for part in self.live_parts(name):
             try:
-                files = sorted(
-                    os.path.join(part, f)
-                    for f in os.listdir(part)
-                    if f.endswith(".parquet")
-                )
+                files = self._part_files(part)
             except OSError:
                 keep.append(part)  # unreadable listing: scan whole part
                 continue
             for fpath in files:
-                span = self._file_span(fpath, col)
-                if span is None:
+                span = self._file_spans(fpath, [col])[col]
+                if span is None or (
+                    (lo is None or lo <= span[1]) and (hi is None or hi > span[0])
+                ):
                     keep.append(fpath)
-                    continue
-                flo, fhi = span
-                if (lo is None or lo <= fhi) and (hi is None or hi > flo):
-                    keep.append(fpath)
-        if not keep:
-            return self.spark.createDataFrame([], schema or TABLE_SCHEMAS[name])
-        # plain read like _df_for — same inferred schema as the unpruned
+        # plain read like read() — same inferred schema as the unpruned
         # snapshot, so downstream plans are type-identical
-        return self.spark.read.parquet(*keep)
+        return self._df_for(name, keep, schema)
 
     #: (table, column) pairs whose keys are uniform cryptographic hashes
     #: (urlsafe-b64 SHA-256): any non-trivial part's span covers
@@ -447,12 +439,20 @@ class IndexStore:
         "chunk_store": "chunk_key",
     }
 
-    def _write_part(self, name: str, df: DataFrame, path: str) -> None:
+    def _write_part(self, name: str, df: DataFrame, version_hint: int) -> str:
         """Write ``df`` as an immutable part dir plus its Bloom sidecar
-        — the single choke point every part-creating commit path goes
-        through, so no part can miss its sidecar by omission."""
+        and return its path — the single choke point every
+        part-creating write path goes through, so no part can miss its
+        sidecar by omission. The dir name is collision-free: the
+        version hint for operator legibility plus a uuid suffix, so
+        racing writers never share a path."""
+        os.makedirs(self._table_dir(name), exist_ok=True)
+        path = os.path.join(
+            self._table_dir(name), f"p{version_hint:08d}_{uuid.uuid4().hex[:8]}"
+        )
         df.write.mode("overwrite").parquet(path)
         self._write_bloom(name, path)
+        return path
 
     def _write_bloom(self, name: str, path: str) -> None:
         """Build ``{path}/_BLOOM.{col}`` from the part's key column — a
@@ -544,10 +544,9 @@ class IndexStore:
         ``values`` asks for nothing and gets an empty typed frame. The
         engine's driver-returning point verbs do not plan a scan at all
         — they read the same pruned parts with :meth:`read_arrow`."""
-        parts = self.parts_for_keys(name, col, values) if values else []
-        if not parts:
-            return self.spark.createDataFrame([], schema or TABLE_SCHEMAS[name])
-        return self.spark.read.parquet(*parts)
+        return self._df_for(
+            name, self.parts_for_keys(name, col, values) if values else [], schema
+        )
 
     def parts_for_keys(self, name: str, col: str, values: list) -> list[str]:
         """Live parts that MAY contain any of ``values`` in ``col`` —
@@ -632,12 +631,7 @@ class IndexStore:
             parts = self.parts_for_keys(name, col, values) if values else []
         else:
             parts = self._prune_parts(self._state(name), ranges)
-        files = [
-            os.path.join(p, f)
-            for p in parts
-            for f in sorted(os.listdir(p))
-            if f.endswith(".parquet")
-        ]
+        files = [f for p in parts for f in self._part_files(p)]
         if not files:
             import pyarrow as pa
             from pyspark.sql.pandas.types import to_arrow_schema
@@ -654,61 +648,32 @@ class IndexStore:
     def read_version(self, name: str, version: int) -> DataFrame:
         """Snapshot of ``name`` as of ``version`` — Delta-style time
         travel over the retained manifest history."""
-        state = self._state_version(name, version)
-        if state is None:
-            raise ValueError(
-                f"version {version} of {name} is not retained "
-                f"(have {self.versions(name)})"
-            )
-        return self._df_for(state, name, None)
+        return self._df_for(name, self._retained(name, version)["parts"])
 
     def table_bytes(self, name: str) -> int:
         """On-disk bytes of the table's LIVE parts — a driver-side walk
         of the manifest's part dirs (manifest-metadata scale, no Spark
         job). Used to size compaction layouts (file count = bytes /
         target) without an extra data pass."""
-        total = 0
-        for part in self._state(name).get("parts", []):
-            for dirpath, _, files in os.walk(part):
-                for f in files:
-                    try:
-                        total += os.path.getsize(os.path.join(dirpath, f))
-                    except OSError:
-                        pass
-        return total
+        return self.parts_bytes(self.live_parts(name))
 
     def version_meta(self, name: str, version: int) -> dict:
         """The caller-carried table meta AS OF retained ``version`` —
         the historical counterpart of :meth:`table_meta` (e.g. the
         objects high-water mark at a consistency point). Raises like
         :meth:`read_version` when the version has expired."""
-        state = self._state_version(name, version)
-        if state is None:
-            raise ValueError(
-                f"version {version} of {name} is not retained "
-                f"(have {self.versions(name)})"
-            )
-        return state.get("meta", {})
-
-    def _gc(self, name: str) -> None:
-        """Remove part dirs unreachable from the current manifest AND
-        every retained historical manifest, SPARING dirs younger than
-        :attr:`gc_grace_seconds` — those may be a concurrent writer's
-        part mid-write (parts are written before the manifest flip
-        publishes them). Crashed writers leave at worst an orphan dir
-        that ages out; never a dangling reference; and retention keeps
-        concurrent readers' parts live."""
-        self.vacuum(name)
+        return self._retained(name, version).get("meta", {})
 
     def vacuum(self, name: str, grace_seconds: float | None = None) -> dict:
-        """Explicit orphan-part removal with stats — the Delta VACUUM
-        analogue. GC normally piggybacks on commits (:meth:`_gc`), so a
-        QUIET table never reclaims a crashed writer's orphan dirs; this
-        runs the same retention-protected sweep on demand and reports
-        what it removed. A part is removed only when it is unreachable
-        from the current manifest AND every retained historical
-        manifest (concurrent readers of any retained version stay
-        safe), and only when older than ``grace_seconds`` (default
+        """Orphan-part removal with stats — the Delta VACUUM analogue.
+        Every flip that retires parts runs it (see :meth:`_flip`), so
+        crashed writers leave at worst an orphan dir that ages out,
+        never a dangling reference; a QUIET table never flips, so this
+        is also the on-demand sweep for its crash orphans. A part is
+        removed only when it is unreachable from the current manifest
+        AND every retained historical manifest (concurrent readers of
+        any retained version stay safe), and only when older than
+        ``grace_seconds`` (default
         :attr:`gc_grace_seconds`) — an in-flight concurrent writer's
         part is written BEFORE its manifest flip publishes it, so a
         younger unreferenced dir is indistinguishable from one.
@@ -743,6 +708,94 @@ class IndexStore:
             removed += 1
         return {"parts_removed": removed, "mb_reclaimed": round(freed / 1e6, 3)}
 
+    # -- the manifest flip ----------------------------------------------------
+
+    def _flip(self, name: str, build, staged: str | None = None) -> dict:
+        """The one manifest flip behind every write verb; returns the
+        state it wrote.
+
+        ``staged`` is the part the verb wrote outside the lock (if any):
+        its footer stats are read here, before the lock — the part is
+        immutable once written, so the flip stays a pure pointer update.
+        Inside :meth:`_transact`, ``build(fresh)`` derives
+        ``{"parts", "meta"}`` (plus ``"stats"`` to carry instead of the
+        fresh manifest's) from the fresh state, or raises
+        :class:`ConcurrentWriteError` to refuse — the staged part is
+        then deleted. Skip stats are kept for live parts only, the
+        version is bumped and the state written. A flip that retired
+        parts runs GC (:meth:`vacuum`)."""
+        staged_stats = self._part_stats(name, staged) if staged else None
+        with self._transact(name):
+            fresh = self._state(name)
+            try:
+                nxt = build(fresh)
+            except ConcurrentWriteError:
+                if staged:
+                    shutil.rmtree(staged, ignore_errors=True)
+                raise
+            live = {os.path.basename(p) for p in nxt["parts"]}
+            carried = nxt.get("stats", fresh.get("stats", {}))
+            stats = {k: v for k, v in carried.items() if k in live}
+            if staged_stats is not None:
+                stats[os.path.basename(staged)] = staged_stats
+            state = {
+                "version": fresh["version"] + 1,
+                "parts": nxt["parts"],
+                "meta": nxt["meta"],
+            }
+            if stats:
+                state["stats"] = stats
+            self._write_state(name, state)
+        if set(fresh["parts"]) - set(nxt["parts"]):
+            self.vacuum(name)
+        return state
+
+    @staticmethod
+    def _put(name, path, meta, expected_version, meta_merge=None, *, replace=False):
+        """``build`` for a flip that publishes ``path``: after the live
+        parts (append — a rebase on the fresh manifest) or instead of
+        them (``replace``). ``meta=None`` carries the fresh meta,
+        ``meta_merge`` merges keys into it, and ``expected_version`` arms
+        the CAS check."""
+
+        def build(fresh):
+            _check_version(name, fresh["version"], expected_version)
+            new_meta = fresh.get("meta", {}) if meta is None else meta
+            if meta_merge:
+                new_meta = {**new_meta, **meta_merge}
+            parts = [] if replace else fresh["parts"]
+            return {"parts": parts + [path], "meta": new_meta}
+
+        return build
+
+    def _retry(self, attempt):
+        """``attempt()`` until its flip wins, at most :attr:`cas_retries`
+        times; the last lost race is raised."""
+        for i in range(self.cas_retries):
+            try:
+                return attempt()
+            except ConcurrentWriteError:
+                if i == self.cas_retries - 1:
+                    raise
+
+    def _fold(self, name, df, meta=None, expected_version=None, meta_merge=None) -> int:
+        """Append ``df`` to a full part list by folding every live part
+        and ``df`` into one new part (bounded read fan-in), as a full
+        replace under CAS: a concurrent flip between the snapshot read
+        and ours must not be overwritten by the folded union, so the
+        fold re-derives from the fresh snapshot and retries — unless the
+        caller armed ``expected_version``, which makes any lost race
+        its error."""
+
+        def attempt():
+            v, cur, _ = self.snapshot(name, df.schema)
+            _check_version(name, v, expected_version)
+            path = self._write_part(name, cur.unionByName(df), v + 1)
+            build = self._put(name, path, meta, v, meta_merge, replace=True)
+            return self._flip(name, build, staged=path)["version"]
+
+        return attempt() if expected_version is not None else self._retry(attempt)
+
     # -- contract -----------------------------------------------------------
 
     @contextmanager
@@ -775,8 +828,6 @@ class IndexStore:
         cross-process exclusion and same-thread reentrancy (see
         :meth:`~watsondedupe_spark.engine.DedupeEngine.create`).
         """
-        import fcntl
-
         depth = getattr(self._op_tls, "depth", None)
         if depth is None:
             depth = self._op_tls.depth = {}
@@ -787,26 +838,19 @@ class IndexStore:
             finally:
                 depth[name] -= 1
             return
-        fd = os.open(
-            os.path.join(self.root, f"_OPLOCK.{name}"), os.O_CREAT | os.O_RDWR
-        )
-        try:
-            fcntl.flock(fd, fcntl.LOCK_EX)
+        with _flock(os.path.join(self.root, f"_OPLOCK.{name}")):
             depth[name] = 1
             try:
                 yield
             finally:
                 depth[name] = 0
-        finally:
-            fcntl.flock(fd, fcntl.LOCK_UN)
-            os.close(fd)
 
     def exists(self, name: str) -> bool:
         return self.current_version(name) > 0
 
     def read(self, name: str, schema: StructType | None = None) -> DataFrame:
         """Current snapshot of ``name``; empty (typed) DataFrame if absent."""
-        return self._df_for(self._state(name), name, schema)
+        return self._df_for(name, self.live_parts(name), schema)
 
     def snapshot(self, name: str, schema: StructType | None = None):
         """``(version, DataFrame, meta)`` resolved from ONE manifest
@@ -814,7 +858,8 @@ class IndexStore:
         the new state from the DataFrame/meta, then
         ``commit(..., expected_version=version)``."""
         state = self._state(name)
-        return state["version"], self._df_for(state, name, schema), state.get("meta", {})
+        df = self._df_for(name, state["parts"], schema)
+        return state["version"], df, state.get("meta", {})
 
     def table_meta(self, name: str) -> dict:
         """Caller-provided table statistics carried in the manifest (the
@@ -828,29 +873,18 @@ class IndexStore:
         rollback that rewrote the payload table would be a day-long
         job; this is one manifest write. History is preserved, so the
         rollback is itself undoable while retained, and the historical
-        parts stay GC-protected because :meth:`_gc` spares anything
+        parts stay GC-protected because :meth:`vacuum` spares anything
         reachable from ANY retained manifest. Returns the new version.
         """
-        hist = self._state_version(name, version)
-        if hist is None:
-            raise ValueError(
-                f"version {version} of {name} is not retained "
-                f"(have {self.versions(name)})"
-            )
-        with self._transact(name):
-            state = self._state(name)
-            new = {
-                **state,
-                "version": state["version"] + 1,
-                "parts": hist.get("parts", []),
+        hist = self._retained(name, version)
+        return self._flip(
+            name,
+            lambda fresh: {
+                "parts": hist["parts"],
                 "meta": hist.get("meta", {}),
-            }
-            if hist.get("stats"):
-                new["stats"] = hist["stats"]
-            else:
-                new.pop("stats", None)
-            self._write_state(name, new)
-            return new["version"]
+                "stats": hist.get("stats", {}),
+            },
+        )["version"]
 
     def update_meta(self, name: str, fn) -> dict:
         """Transactional METADATA-ONLY update: ``meta = fn(meta)``
@@ -860,22 +894,14 @@ class IndexStore:
         affordable: a 1-row parquet append would put a full Spark
         job on every ingest's fixed-cost floor, and the engine's
         small-batch path is fixed-cost-dominated by design. Works on
-        both backends (built purely on the _state/_write_state/
-        _transact override points)."""
-        os.makedirs(self._table_dir(name), exist_ok=True)
-        with self._transact(name):
-            state = self._state(name)
-            new_meta = fn(dict(state.get("meta") or {}))
-            self._write_state(
-                name,
-                {
-                    **state,
-                    "version": state["version"] + 1,
-                    "parts": state.get("parts", []),
-                    "meta": new_meta,
-                },
-            )
-        return new_meta
+        both backends (one :meth:`_flip`)."""
+        return self._flip(
+            name,
+            lambda fresh: {
+                "parts": fresh["parts"],
+                "meta": fn(dict(fresh.get("meta") or {})),
+            },
+        )["meta"]
 
     def commit(
         self,
@@ -894,34 +920,11 @@ class IndexStore:
         re-derives from a fresh :meth:`snapshot` and retries. ``None``
         keeps unconditional last-writer-wins replace.
         """
-        os.makedirs(self._table_dir(name), exist_ok=True)
         hint = (expected_version if expected_version is not None
                 else self.current_version(name)) + 1
-        path = self._new_part_path(name, hint)
-        self._write_part(name, df, path)
-        with self._transact(name):
-            state = self._state(name)
-            if expected_version is not None and state["version"] != expected_version:
-                shutil.rmtree(path, ignore_errors=True)
-                raise ConcurrentWriteError(
-                    f"{name}: expected version {expected_version}, "
-                    f"found {state['version']} — another writer committed first"
-                )
-            new = state["version"] + 1
-            self._write_state(
-                name,
-                self._attach_stats(
-                    name,
-                    {
-                        "version": new,
-                        "parts": [path],
-                        "meta": state.get("meta", {}) if meta is None else meta,
-                    },
-                    path,
-                ),
-            )
-        self._gc(name)
-        return new
+        path = self._write_part(name, df, hint)
+        build = self._put(name, path, meta, expected_version, replace=True)
+        return self._flip(name, build, staged=path)["version"]
 
     def append(
         self,
@@ -951,165 +954,59 @@ class IndexStore:
         """
         state = self._state(name)
         if len(state["parts"]) >= self.max_parts:
-            # fold under CAS: a concurrent commit between our snapshot
-            # read and the flip must not be overwritten by the folded
-            # union — retry from the fresh snapshot
-            last_err: ConcurrentWriteError | None = None
-            for _ in range(self.cas_retries):
-                v, cur, cur_meta = self.snapshot(name, df.schema)
-                if expected_version is not None and v != expected_version:
-                    raise ConcurrentWriteError(
-                        f"{name}: expected version {expected_version}, found {v}"
-                    )
-                try:
-                    folded_meta = cur_meta if meta is None else meta
-                    if meta_merge:
-                        folded_meta = {**folded_meta, **meta_merge}
-                    return self.commit(
-                        name,
-                        cur.unionByName(df),
-                        meta=folded_meta,
-                        expected_version=v,
-                    )
-                except ConcurrentWriteError as e:
-                    if expected_version is not None:
-                        raise
-                    last_err = e
-            raise last_err  # contended beyond the retry budget
-        os.makedirs(self._table_dir(name), exist_ok=True)
-        path = self._new_part_path(name, state["version"] + 1)
-        self._write_part(name, df, path)
-        with self._transact(name):
-            fresh = self._state(name)  # REBASE: another append may have landed
-            if expected_version is not None and fresh["version"] != expected_version:
-                shutil.rmtree(path, ignore_errors=True)
-                raise ConcurrentWriteError(
-                    f"{name}: expected version {expected_version}, "
-                    f"found {fresh['version']} — another writer committed first"
-                )
-            new = fresh["version"] + 1
-            new_meta = fresh.get("meta", {}) if meta is None else meta
-            if meta_merge:
-                new_meta = {**new_meta, **meta_merge}
-            self._write_state(
-                name,
-                self._attach_stats(
-                    name,
-                    {
-                        "version": new,
-                        "parts": fresh["parts"] + [path],
-                        "meta": new_meta,
-                        **(
-                            {"stats": fresh["stats"]}
-                            if fresh.get("stats")
-                            else {}
-                        ),
-                    },
-                    path,
-                ),
-            )
-        return new
+            return self._fold(name, df, meta, expected_version, meta_merge)
+        path = self._write_part(name, df, state["version"] + 1)
+        build = self._put(name, path, meta, expected_version, meta_merge)
+        return self._flip(name, build, staged=path)["version"]
 
     def stage_part(self, name: str, df: DataFrame, version_hint: int) -> str:
         """Write ``df`` as an UNPUBLISHED part dir and return its path —
         the expensive half of an append (the Spark write job), split out
         so it can overlap other work; nothing references the part until
         :meth:`attach_part` flips it into the manifest. A crash between
-        stage and attach leaves an invisible orphan dir that
-        :meth:`_gc` ages out (the same guarantee in-flight concurrent
-        appends already rely on). This is the Delta/Iceberg commit
-        shape: optimistic data-file write, serialized metadata flip."""
-        os.makedirs(self._table_dir(name), exist_ok=True)
-        path = self._new_part_path(name, version_hint)
-        self._write_part(name, df, path)
-        return path
+        stage and attach leaves an invisible orphan dir that GC
+        (:meth:`vacuum`) ages out (the same guarantee in-flight
+        concurrent appends already rely on). This is the Delta/Iceberg
+        commit shape: optimistic data-file write, serialized metadata
+        flip."""
+        return self._write_part(name, df, version_hint)
 
     def attach_part(
         self,
         name: str,
         path: str,
-        meta: dict | None = None,
         expected_version: int | None = None,
         meta_merge: dict | None = None,
     ) -> int:
         """Publish a staged part: the manifest-flip half of an append —
         no Spark job, just the transactional pointer update (plus the
-        bounded fold when the part list is full, which re-reads the
-        staged rows through the regular :meth:`append`). CAS semantics
-        match :meth:`append`: on conflict the staged part is discarded
-        and :class:`ConcurrentWriteError` raised — the caller re-derives
-        its rows from a fresh snapshot (staged ids/absence sets are
-        snapshot-derived and stale after a conflicting commit).
-        ``meta``/``meta_merge`` as in :meth:`append`."""
-        state = self._state(name)
-        if len(state["parts"]) >= self.max_parts:
-            df = self.spark.read.parquet(path).localCheckpoint(eager=True)
+        bounded fold of :meth:`append` when the part list is full, which
+        reads the staged rows and then deletes the staged dir). CAS
+        semantics match :meth:`append`: on conflict the staged part is
+        discarded and :class:`ConcurrentWriteError` raised — the caller
+        re-derives its rows from a fresh snapshot (staged ids/absence
+        sets are snapshot-derived and stale after a conflicting commit).
+        ``meta_merge`` as in :meth:`append`."""
+        if len(self.live_parts(name)) >= self.max_parts:
             try:
-                return self.append(
+                return self._fold(
                     name,
-                    df,
-                    meta=meta,
+                    self.spark.read.parquet(path),
                     expected_version=expected_version,
                     meta_merge=meta_merge,
                 )
             finally:
                 shutil.rmtree(path, ignore_errors=True)
-        # footer stats read OUTSIDE the critical section (the part is
-        # immutable once staged); the flip stays a pure pointer update
-        part_stats = self._part_stats(name, path)
-        with self._transact(name):
-            fresh = self._state(name)  # REBASE: another append may have landed
-            if expected_version is not None and fresh["version"] != expected_version:
-                shutil.rmtree(path, ignore_errors=True)
-                raise ConcurrentWriteError(
-                    f"{name}: expected version {expected_version}, "
-                    f"found {fresh['version']} — another writer committed first"
-                )
-            new = fresh["version"] + 1
-            new_meta = fresh.get("meta", {}) if meta is None else meta
-            if meta_merge:
-                new_meta = {**new_meta, **meta_merge}
-            self._write_state(
-                name,
-                self._attach_stats(
-                    name,
-                    {
-                        "version": new,
-                        "parts": fresh["parts"] + [path],
-                        "meta": new_meta,
-                        **(
-                            {"stats": fresh["stats"]}
-                            if fresh.get("stats")
-                            else {}
-                        ),
-                    },
-                    path,
-                    precomputed=part_stats,
-                ),
-            )
-        return new
+        build = self._put(name, path, None, expected_version, meta_merge)
+        return self._flip(name, build, staged=path)["version"]
 
-    def compact(self, name: str, layout=None) -> int:
+    def compact(self, name: str) -> int:
         """Fold all live parts into one (the OPTIMIZE analogue); no-op on
-        an absent table. CAS-retried so compaction never swallows a
-        concurrent writer's commit.
-
-        ``layout`` is an optional DataFrame->DataFrame reshaping applied
-        before the rewrite (e.g. range-clustering by key so key-range
-        predicates prune row groups afterwards); it must be a pure
-        re-layout — same rows, any order/partitioning."""
+        an absent table. Retried on a lost race so compaction never
+        swallows a concurrent writer's commit."""
         if not self.exists(name):
             return 0
-        last_err: ConcurrentWriteError | None = None
-        for _ in range(self.cas_retries):
-            v, cur, cur_meta = self.snapshot(name)
-            if layout is not None:
-                cur = layout(cur)
-            try:
-                return self.commit(name, cur, meta=cur_meta, expected_version=v)
-            except ConcurrentWriteError as e:
-                last_err = e
-        raise last_err
+        return self._retry(lambda: self.compact_parts(name, self.live_parts(name)))
 
     def live_parts(self, name: str) -> list[str]:
         """Current manifest's part paths (one manifest read, no Spark
@@ -1145,10 +1042,12 @@ class IndexStore:
         part is discarded and the caller re-derives its subset from a
         fresh manifest (rewriting retired rows would resurrect them).
 
-        ``layout`` as in :meth:`compact` for compaction callers; unlike
-        :meth:`compact` it MAY drop rows when the caller's contract is a
-        rewrite-with-cleanup (``engine.repair()`` canonicalizes corrupt
-        payload rows out of exactly the affected parts this way).
+        ``layout`` is an optional DataFrame->DataFrame reshaping applied
+        before the rewrite (e.g. range-clustering by key so key-range
+        predicates prune row groups afterwards). It MAY drop rows when
+        the caller's contract is a rewrite-with-cleanup
+        (``engine.repair()`` canonicalizes corrupt payload rows out of
+        exactly the affected parts this way).
         ``meta_fn(meta, new_parts,
         new_part)`` lets the caller update carried table meta (e.g. the
         clustered-parts watermark) in the SAME manifest flip — no extra
@@ -1160,15 +1059,11 @@ class IndexStore:
         df = self.spark.read.parquet(*parts)
         if layout is not None:
             df = layout(df)
-        path = self._new_part_path(name, self.current_version(name) + 1)
-        self._write_part(name, df, path)
-        # footer stats outside the critical section (part is immutable)
-        part_stats = self._part_stats(name, path)
-        with self._transact(name):
-            fresh = self._state(name)
+        path = self._write_part(name, df, self.current_version(name) + 1)
+
+        def build(fresh):
             missing = sorted(todo - set(fresh["parts"]))
             if missing:
-                shutil.rmtree(path, ignore_errors=True)
                 raise ConcurrentWriteError(
                     f"{name}: parts retired under compaction "
                     f"(another writer committed first): {missing}"
@@ -1177,27 +1072,9 @@ class IndexStore:
             meta = dict(fresh.get("meta", {}))
             if meta_fn is not None:
                 meta = meta_fn(meta, new_parts, path)
-            new = fresh["version"] + 1
-            self._write_state(
-                name,
-                self._attach_stats(
-                    name,
-                    {
-                        "version": new,
-                        "parts": new_parts,
-                        "meta": meta,
-                        **(
-                            {"stats": fresh["stats"]}
-                            if fresh.get("stats")
-                            else {}
-                        ),
-                    },
-                    path,
-                    precomputed=part_stats,
-                ),
-            )
-        self._gc(name)
-        return new
+            return {"parts": new_parts, "meta": meta}
+
+        return self._flip(name, build, staged=path)["version"]
 
 
 class SqliteIndexStore(IndexStore):
