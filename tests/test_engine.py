@@ -333,9 +333,10 @@ def test_write_or_replace_batch_replaces_and_preserves_shared_chunks(spark, tmp_
 
 def test_replace_batch_10k_keys_stays_distributed(spark, tmp_path, monkeypatch):
     """A bulk replace must never materialize the existing-key set on the
-    driver: write_or_replace_batch hands delete_batch a DataFrame (the
-    join path), and the GC set comes back as a DataFrame too. Refcount
-    and GC semantics must match the list path exactly."""
+    driver: write_or_replace_batch hands the commit sequence a DataFrame
+    of doomed keys (the join path), and the GC set comes back as a
+    DataFrame too. Refcount and GC semantics must match the list path
+    exactly."""
     from pyspark.sql import DataFrame as SparkDataFrame
     from pyspark.sql import functions as F
 
@@ -351,13 +352,13 @@ def test_replace_batch_10k_keys_stays_distributed(spark, tmp_path, monkeypatch):
     assert eng.write_batch(batch1) == n
 
     seen: dict[str, type] = {}
-    orig = DedupeEngine.delete_batch
+    orig = DedupeEngine._commit_mutation
 
-    def spy(self, keys):
-        seen["keys_type"] = type(keys)
-        return orig(self, keys)
+    def spy(self, doomed=None, batch=None):
+        seen["keys_type"] = type(doomed)
+        return orig(self, doomed, batch)
 
-    monkeypatch.setattr(DedupeEngine, "delete_batch", spy)
+    monkeypatch.setattr(DedupeEngine, "_commit_mutation", spy)
 
     # replace every key with new content (all old single-chunk payloads
     # become garbage), plus one brand-new key
@@ -486,8 +487,8 @@ def test_incremental_views_across_versions(spark, tmp_path):
 
 def test_op_lock_reentrant_same_thread(spark, tmp_path):
     """The composite-op lock is reentrant per thread (round-6 advice):
-    nested acquisition must not deadlock — it is what lets
-    write_or_replace hold one critical section across delete+write."""
+    nested acquisition must not deadlock — it is what lets a caller
+    hold one critical section across several engine verbs."""
     from watsondedupe_spark.store import IndexStore
 
     store = IndexStore(spark, str(tmp_path / "reent"))
@@ -518,8 +519,8 @@ def test_op_lock_reentrant_same_thread(spark, tmp_path):
 
 def test_write_or_replace_batch_atomic_and_correct(engine, spark):
     """Batched O5 replaces existing keys and ingests new ones in one
-    composite critical section (the delete+write phases share the
-    reentrant op_lock — no DuplicateKeyError window)."""
+    composite critical section (one op_lock hold — no DuplicateKeyError
+    window)."""
     df1 = spark.createDataFrame(
         [("r1", bytearray(b"one" * 1000)), ("r2", bytearray(b"two" * 1000))],
         "object_key string, data binary",
@@ -1025,7 +1026,7 @@ def test_verify_consistent_mode_suppresses_torn_reads(engine):
     """verify(consistent=True) (round 10): a scrub racing a live ingest
     must not page on a torn cross-table interleaving. Simulate the torn
     state with raw store surgery (a chunks row committed whose payload
-    has not landed yet — exactly mid-_commit_ingest): the current-state
+    has not landed yet — exactly mid-_commit_mutation): the current-state
     scan reports it, the ledger-cut scan stays clean because the cut
     predates the tear; after the next composite op records a new point,
     consistent mode sees the (healed) real state again."""
@@ -1841,3 +1842,125 @@ def test_repair_drops_null_chunk_key_row_on_surgical_gate(engine):
     assert after.filter(F.col("chunk_key").isNull()).count() == 0
     assert deltas["chunk_store"] == after.count() - before == -1
     assert engine.get("k") == rand_bytes(6000, seed=412)
+
+
+# -- the mutation commit floor -------------------------------------------------
+
+_INDEX_TABLES = ("objects", "object_map", "chunks", "chunk_store")
+
+
+def _aligned_pair():
+    """Three payloads that share an aligned 40 KB prefix (whole chunks
+    under the small-file profile) and differ after it: ``a``, a new
+    version of ``a``, and ``b``."""
+    shared = rand_bytes(40_000, seed=501)
+    return (
+        shared + rand_bytes(30_000, seed=502),
+        shared + rand_bytes(30_000, seed=503),
+        shared + rand_bytes(30_000, seed=504),
+    )
+
+
+def _rows(spark, items):
+    return spark.createDataFrame(
+        [(k, bytearray(v)) for k, v in items], "object_key string, data binary"
+    )
+
+
+@pytest.mark.parametrize("table", _INDEX_TABLES)
+@pytest.mark.parametrize("verb", ["delete", "replace"])
+def test_crash_mid_delete_or_replace_never_strands_a_live_key(
+    engine, monkeypatch, verb, table
+):
+    """A crash right after any table commit of delete_batch or
+    write_or_replace_batch, then recover(): the index verifies clean,
+    the untouched key is byte-identical, and the target key is absent,
+    old or new — never present but unreadable (a delete that dropped
+    chunks rows before the objects row let recover() GC the payloads of
+    a key that still existed)."""
+    from watsondedupe_spark.store import IndexStore
+
+    old_a, new_a, b = _aligned_pair()
+    engine.write_batch(_rows(engine.spark, [("a", old_a), ("b", b)]))
+
+    class Crash(RuntimeError):
+        pass
+
+    commit = IndexStore.commit
+
+    def crashing_commit(self, name, *args, **kwargs):
+        version = commit(self, name, *args, **kwargs)
+        if name == table:
+            raise Crash(name)
+        return version
+
+    monkeypatch.setattr(IndexStore, "commit", crashing_commit)
+    with pytest.raises(Crash):
+        if verb == "delete":
+            engine.delete_batch(["a"])
+        else:
+            engine.write_or_replace_batch(_rows(engine.spark, [("a", new_a)]))
+    monkeypatch.undo()
+
+    engine.recover()
+    assert engine.verify().count() == 0
+    assert engine.get("b") == b
+    allowed = (old_a,) if verb == "delete" else (old_a, new_a)
+    if engine.exists("a"):
+        assert engine.get("a") in allowed
+    else:
+        assert engine.try_get("a") is None
+    assert engine.recover() == {"object_map": 0, "chunks": 0, "chunk_store": 0}
+
+
+def test_mutations_flip_each_table_once(engine, monkeypatch):
+    """A 2-key replace reads and commits each index table once: six
+    manifest flips (objects out, object_map, chunks, chunk_store,
+    objects in, the ledger), not a delete's five plus an ingest's
+    five. A delete stays at five."""
+    from watsondedupe_spark.store import IndexStore
+
+    old_a, new_a, b = _aligned_pair()
+    engine.write_batch(_rows(engine.spark, [("a", old_a), ("b", b)]))
+    flips: list[str] = []
+    flip = IndexStore._flip
+
+    def counting_flip(self, name, *args, **kwargs):
+        flips.append(name)
+        return flip(self, name, *args, **kwargs)
+
+    monkeypatch.setattr(IndexStore, "_flip", counting_flip)
+    engine.write_or_replace_batch(_rows(engine.spark, [("a", new_a), ("b", old_a)]))
+    assert len(flips) <= 6, flips
+    assert engine.get("a") == new_a and engine.get("b") == old_a
+
+    flips.clear()
+    engine.delete_batch(["a", "b"])
+    assert len(flips) <= 5, flips
+    assert not engine.exists("a") and not engine.exists("b")
+    monkeypatch.undo()
+    assert engine.verify().count() == 0
+
+
+def test_index_snapshots_plan_no_spark_job(engine):
+    """read() and snapshot() of the four index tables pin the declared
+    schema instead of inferring it, so resolving a snapshot plans no
+    Spark job; the pinned schema is the one inference would find."""
+    import uuid
+
+    _several_parts(engine, batches=2, per=2)
+    sc = engine.spark.sparkContext
+    group = f"snapshots-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "index snapshots")
+    try:
+        frames = {}
+        for name in _INDEX_TABLES:
+            frames[name] = engine.store.read(name)
+            assert engine.store.snapshot(name)[1].schema == frames[name].schema
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    for name, df in frames.items():
+        parts = engine.store.live_parts(name)
+        assert df.schema == engine.spark.read.parquet(*parts).schema, name

@@ -51,7 +51,7 @@ from datetime import datetime, timezone
 
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampType
 
@@ -80,6 +80,12 @@ CAS_RETRIES = 6
 # contract as the distributed form), so a point-delete of a huge object
 # can never be abused into a driver-side million-key materialization
 GC_RETURN_CAP = 10_000
+
+# a payload GC broadcasts its dead-key set up to this many keys (~6 MB
+# of SHA-256 keys); a larger set shuffle-joins the payload table
+GC_BROADCAST_KEYS = 100_000
+
+
 def _prefix_successor(prefix: str) -> str | None:
     """Smallest string strictly greater than EVERY string that starts
     with ``prefix``: increment the last code point, carrying when it is
@@ -158,7 +164,7 @@ class ObjectNotFoundError(KeyError):
 
 class SimulatedCrash(RuntimeError):
     """Crash-injection marker for the recovery matrix: raised by
-    ``_commit_ingest`` right after the table named in
+    ``_commit_mutation`` (ingest) right after the table named in
     ``engine._crash_after`` commits, leaving the index in exactly the
     partial state a process kill at that point would — no cleanup, no
     rollback. Tests and the graded crash-matrix scenario catch this,
@@ -193,6 +199,17 @@ def _fix_pool(workers: int = 2):
                         failure.add_note(f"another overlapped fix also failed: {e!r}")
             if failure is not None:
                 raise failure
+
+
+def _pin(df: DataFrame) -> tuple[DataFrame, int]:
+    """``(df eagerly local-checkpointed, its row count)``. The count is
+    an :class:`~pyspark.sql.Observation` of the checkpoint job itself,
+    so learning whether a pinned key set is empty costs no second job.
+    Callers only compare it with zero: a re-run task can re-report its
+    rows, but no finished task's rows go unreported."""
+    obs = Observation()
+    pinned = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+    return pinned, int(obs.get["n"])
 
 
 @dataclass(frozen=True)
@@ -341,11 +358,11 @@ class DedupeEngine:
         :meth:`open` autodetects which backend wrote an index.
 
         Contract note for custom backends: ``op_lock`` must provide
-        cross-process exclusion AND same-thread reentrancy — the engine
-        nests acquisitions (write_or_replace holds one critical section
-        across its delete and write phases, each of which locks itself).
-        A non-reentrant implementation deadlocks silently; subclassing
-        :class:`IndexStore` inherits the correct behavior."""
+        cross-process exclusion AND same-thread reentrancy — a caller
+        may hold ``store.op_lock()`` around several engine verbs, each of
+        which locks itself. A non-reentrant implementation deadlocks
+        silently; subclassing :class:`IndexStore` inherits the correct
+        behavior."""
         settings = settings or ChunkSettings()
         store = store_cls(spark, root)
         if store.exists("config"):
@@ -393,8 +410,7 @@ class DedupeEngine:
     def write_or_replace(self, key: str, data: bytes, created_utc: datetime | None = None) -> None:
         """O5: delete-if-exists then write (DedupeLibrary.cs:301-318);
         single-object convenience over :meth:`write_or_replace_batch`
-        (which makes the delete+write phases one atomic critical
-        section)."""
+        (one critical section, one commit per table)."""
         validate_object_key(key)
         if not data:
             raise ValueError("content must be at least one byte (DedupeLibrary.cs:155)")
@@ -406,38 +422,47 @@ class DedupeEngine:
     def write_or_replace_batch(
         self, objects_df: DataFrame, created_utc: datetime | None = None
     ) -> int:
-        """Batched O5: delete any batch keys that already exist (cascading,
-        with refcount decrement + GC), then ingest the whole batch — the
-        set form of :meth:`write_or_replace`, so re-ingesting a corpus
-        slice is one delete merge + one write pass instead of per-key
-        round trips.
+        """Batched O5: replace the batch keys that already exist and
+        ingest the rest — the set form of :meth:`write_or_replace`. The
+        reference deletes and re-writes under one mutex
+        (DedupeLibrary.cs:301-318); here the replace is ONE pass of
+        :meth:`_commit_mutation` with the existing keys as its doomed
+        set, so every table is read and committed once: the old
+        ``objects`` rows leave first, ``object_map`` becomes survivors ∪
+        new rows, ``chunks`` takes one merge of increments − decrements
+        (a chunk the old and new versions share keeps its refcount and
+        its payload instead of being GC'd and re-inserted), ``chunk_store``
+        drops the dead payloads and adds the absent new ones, and the
+        new ``objects`` rows land last.
 
-        The existing-key set stays DISTRIBUTED end to end: it is a
-        semi-join DataFrame handed straight to :meth:`delete_batch`'s
-        join path, never a collected Python list — a 100x-scale
-        re-ingest where most of the batch already exists would otherwise
-        materialize millions of keys on the driver. The only driver
-        round trip is a 1-row existence probe.
+        The existing-key set stays DISTRIBUTED end to end: a pinned
+        semi-join DataFrame handed straight to the commit sequence, never
+        a collected Python list — a 100x-scale re-ingest where most of
+        the batch already exists would otherwise materialize millions of
+        keys on the driver. Whether it is empty is read off the pin's
+        own job.
 
-        Atomicity matches :meth:`write_batch`'s shape exactly: the
-        expensive chunker pass and per-object rollup run OUTSIDE the
+        The expensive chunker pass and per-object rollup run OUTSIDE the
         composite-op lock (shared :meth:`_prepare_batch`); only the
-        existence probe, the cascading delete of the doomed keys, and
-        the four table commits sit inside the (reentrant) critical
-        section — so a batch replace is atomic against concurrent
-        writers without serializing them behind its chunking work.
+        existence probe and the table commits sit inside it — so a batch
+        replace is atomic against concurrent writers without serializing
+        them behind its chunking work. A crash mid-replace can leave a
+        replaced key absent (its old rows gone, its new ones not yet
+        landed) plus orphan rows that :meth:`recover` prunes; it never
+        leaves a key present but unreadable.
         """
         created_utc = created_utc or datetime.now(timezone.utc)
         chunk_rows, rolled, n_keys, total_bytes = self._prepare_batch(objects_df)
         try:
             with self.store.op_lock():
-                existing = rolled.select("object_key").join(
-                    self.objects, "object_key", "left_semi"
+                existing, n_existing = _pin(
+                    rolled.select("object_key").join(
+                        self.objects, "object_key", "left_semi"
+                    )
                 )
-                if existing.head(1):
-                    self.delete_batch(existing)
-                self._commit_ingest(
-                    chunk_rows, rolled, created_utc, n_keys, total_bytes
+                self._commit_mutation(
+                    existing if n_existing else None,
+                    (chunk_rows, rolled, created_utc, n_keys, total_bytes),
                 )
         finally:
             chunk_rows.unpersist()
@@ -523,151 +548,229 @@ class DedupeEngine:
                         raise DuplicateKeyError(
                             f"keys already exist: {[r.object_key for r in existing]}"
                         )
-                self._commit_ingest(
-                    chunk_rows, rolled, created_utc, n_keys, total_bytes
+                self._commit_mutation(
+                    batch=(chunk_rows, rolled, created_utc, n_keys, total_bytes)
                 )
         finally:
             chunk_rows.unpersist()
         return n_keys
 
-    def _commit_ingest(
-        self,
-        chunk_rows: DataFrame,
-        rolled: DataFrame,
-        created_utc: datetime,
-        n_objects: int,
-        total_bytes: int = 0,
-    ) -> None:
-        """Write the four index tables from the cached chunk rows plus
-        the pre-materialized per-object rollup (``rolled``: object_key,
-        original_length, chunk_count — computed once in write_batch).
+    def _commit_mutation(
+        self, doomed: "list[str] | DataFrame | None" = None, batch: tuple | None = None
+    ) -> DataFrame | None:
+        """The one commit sequence behind every mutation: the ``doomed``
+        keys (a Python list, or a 1-column ``object_key`` DataFrame)
+        leave the index and ``batch`` — ``(chunk_rows, rolled,
+        created_utc, n_objects, total_bytes)``: the cached chunk rows and
+        per-object rollup of :meth:`_prepare_batch` — enters it. A
+        delete passes only ``doomed``, an ingest only ``batch``, a
+        replace both. Returns the pinned set of GC'd chunk keys when keys
+        were doomed, else None. Caller holds the composite-op lock.
 
-        The writes touch four DIFFERENT tables whose inputs are all
-        derived from the (already materialized) chunk cache, so
-        object_map/chunks/chunk_store run CONCURRENTLY from driver
-        threads — Spark schedules jobs from multiple threads freely, and
-        the manifest flips are per-table files. On a cluster this
-        overlaps three small commits' scheduling and I/O latencies
-        instead of paying them in sequence.
+        Every table is read once and committed once, each commit a CAS
+        read-modify-write re-derived from a fresh snapshot on conflict:
 
-        COMMIT-ORDER INVARIANT (round-7): ``objects`` commits LAST,
-        strictly after the other three have landed. The ``objects`` row
-        is the LOGICAL commit point — reads resolve keys through it —
-        so sequencing it last guarantees a reader can never observe a
-        key whose map/refcounts/payloads are incomplete, no matter where
-        a crash lands. There is still no cross-table transaction: a
-        process dying before the objects commit leaves orphan
-        map/chunks/payload rows for keys that observably do not exist;
-        :meth:`recover` prunes those three tables back into consistency
-        (and ONLY those three — with objects last it never needs to
-        touch ``objects`` itself). A crash after the objects commit
-        loses nothing: the ingest is complete. The graded crash matrix
-        (engine_crash_matrix) drives every one of these states through
-        the real write path via ``_crash_after``.
+        1. ``objects`` loses the doomed rows — the LOGICAL delete — while
+           the doomed map rows' per-chunk decrements are pinned (the map
+           commit below would otherwise pull them out from under a
+           retried merge);
+        2. then, overlapped on driver threads:
 
-        Output files are sized by the batch's total bytes (~64 MB
-        targets): a small batch writes a handful of files instead of one
-        tiny file per partition — task-launch overhead dominates small
-        appends — while a large batch keeps full write parallelism (the
-        coalesce target caps at the cache's partition count).
+           * ``object_map`` = survivors ∪ new rows (a plain append for an
+             ingest);
+           * ``chunks`` = ONE refcount merge of increments − decrements,
+             pinning the chunks that fall below one reference; then
+             ``chunk_store`` = (store − those payloads) ∪ the absent new
+             payloads in one commit, or a plain append when nothing died
+             (an ingest's payload append does not wait for the merge);
+           * the new ``objects`` rows are staged as a part;
+        3. the staged ``objects`` part is attached.
+
+        COMMIT-ORDER INVARIANT: the ``objects`` row is the logical commit
+        point — reads resolve keys through it — so rows leave ``objects``
+        FIRST and enter it LAST. A reader can never observe a key whose
+        map/refcounts/payloads are incomplete or already torn down, no
+        matter where a crash lands. There is still no cross-table
+        transaction: a process dying between the two ``objects`` commits
+        leaves map/chunks/payload rows that belong to no live key (a
+        replaced key then reads as absent), which is exactly the shape
+        :meth:`recover` prunes — it never needs to touch ``objects``. A
+        crash after the last ``objects`` commit loses nothing. The graded
+        crash matrix (engine_crash_matrix) drives the ingest states
+        through ``_crash_after``, which runs the commits sequentially in
+        a fixed order.
+
+        The composite-op lock is what makes the payload GC safe: without
+        it, an ingest racing this GC could see a dying payload present,
+        skip inserting it, and lose it to the GC — a cross-table anomaly
+        no per-table CAS can exclude. The GC also re-filters its dead
+        set against the live chunks table, as defense in depth for
+        writers that bypass the lock.
+
+        An ingest's output files are sized by the batch's total bytes
+        (~64 MB targets): a small batch writes a handful of files instead
+        of one tiny file per partition — task-launch overhead dominates
+        small appends — while a large batch keeps full write parallelism
+        (the coalesce target caps at the cache's partition count).
         """
-        nparts = chunk_rows.rdd.getNumPartitions()
-        target = (
-            max(1, min(nparts, -(-total_bytes // (64 << 20)))) if total_bytes else nparts
-        )
+        holder: dict = {}
+        if doomed is None:
+            doomed_of = survivors_of = None
+        elif isinstance(doomed, DataFrame):
+            # bulk form: every key-set operation is a semi/anti JOIN
+            def doomed_of(df):
+                return df.join(doomed, "object_key", "left_semi")
+
+            def survivors_of(df):
+                return df.join(doomed, "object_key", "left_anti")
+        else:
+            # point form: ``isin`` pushes the key filter into every scan
+            key_col = F.col("object_key").isin(doomed)
+
+            def doomed_of(df):
+                return df.filter(key_col)
+
+            def survivors_of(df):
+                return df.filter(~key_col)
 
         def _sized(df: DataFrame) -> DataFrame:
             return df.coalesce(target) if target < nparts else df
 
-        def write_map():
-            # 1. object_map rows are exactly the chunker output minus payload.
-            new_map = chunk_rows.select("object_key", "chunk_key", "length", "position", "address")
-            self.store.append("object_map", _sized(new_map))
-
-        def write_chunks():
-            # 2. refcount merge (O17): aggregate increments per chunk_key
-            # FIRST so the merge is one row per key — the batched form of
-            # the reference's mutex-serialized upsert (SqliteProvider.cs:463-484).
-            # The merge is a read-modify-write, so it commits under CAS:
-            # a concurrent writer's increments can never be overwritten —
-            # the loser re-merges against the fresh table and retries.
+        nparts = target = 0  # a delete's table rewrites keep their layout
+        if batch is not None:
+            chunk_rows, rolled, created_utc, n_objects, total_bytes = batch
+            nparts = chunk_rows.rdd.getNumPartitions()
+            target = (
+                max(1, min(nparts, -(-total_bytes // (64 << 20))))
+                if total_bytes
+                else nparts
+            )
+            # object_map rows are exactly the chunker output minus payload
+            new_map = _sized(
+                chunk_rows.select("object_key", "chunk_key", "length", "position", "address")
+            )
+            # refcount increments aggregate per chunk_key FIRST so the
+            # merge is one row per key — the batched form of the
+            # reference's mutex-serialized upsert (SqliteProvider.cs:463-484)
             increments = chunk_rows.groupBy("chunk_key").agg(
                 F.count("*").alias("inc"), F.first("length").alias("new_length")
             )
+            new_payloads = chunk_rows.dropDuplicates(["chunk_key"])
+
+        def remove_objects():
+            def attempt():
+                v, objs, _ = self.store.snapshot("objects", OBJECTS_SCHEMA)
+                self.store.commit("objects", survivors_of(objs), expected_version=v)
+
+            self._cas(attempt)
+
+        def pin_decrements():
+            _, omap, _ = self.store.snapshot("object_map", OBJECT_MAP_SCHEMA)
+            holder["dec"], _ = _pin(
+                doomed_of(omap).groupBy("chunk_key").agg(F.count("*").alias("dec"))
+            )
+
+        def write_map():
+            if doomed is None:
+                self.store.append("object_map", new_map)
+                return
 
             def attempt():
-                v, chunks, _ = self.store.snapshot("chunks", CHUNKS_SCHEMA)
-                if v == 0:
+                v, omap, _ = self.store.snapshot("object_map", OBJECT_MAP_SCHEMA)
+                rows = survivors_of(omap)
+                if batch is not None:
+                    rows = rows.unionByName(new_map)
+                self.store.commit("object_map", rows, expected_version=v)
+
+            self._cas(attempt)
+
+        def write_chunks():
+            # the refcount merge (O17/O18) is a read-modify-write, so it
+            # commits under CAS: a concurrent writer's increments can
+            # never be overwritten — the loser re-merges against the
+            # fresh table and retries
+            def attempt():
+                v, merged, _ = self.store.snapshot("chunks", CHUNKS_SCHEMA)
+                if batch is not None and v == 0:
                     # first-load fast path: nothing to merge with, the
                     # increments ARE the table — skips the outer join's
-                    # second shuffle side entirely (bulk initial loads are
-                    # the common case at scale)
+                    # second shuffle side entirely
                     merged = increments.select(
                         "chunk_key",
                         F.col("new_length").cast("int").alias("length"),
                         F.col("inc").cast("long").alias("ref_count"),
                     )
-                else:
-                    merged = (
-                        chunks.join(increments, "chunk_key", "full_outer")
-                        .select(
-                            "chunk_key",
-                            F.coalesce("length", "new_length").cast("int").alias("length"),
-                            (F.coalesce(F.col("ref_count"), F.lit(0)) + F.coalesce(F.col("inc"), F.lit(0)))
-                            .cast("long")
-                            .alias("ref_count"),
-                        )
+                elif batch is not None:
+                    merged = merged.join(increments, "chunk_key", "full_outer").select(
+                        "chunk_key",
+                        F.coalesce("length", "new_length").cast("int").alias("length"),
+                        (F.coalesce(F.col("ref_count"), F.lit(0)) + F.coalesce(F.col("inc"), F.lit(0)))
+                        .cast("long")
+                        .alias("ref_count"),
                     )
+                if doomed is not None:
+                    merged = merged.join(holder["dec"], "chunk_key", "left").select(
+                        "chunk_key",
+                        "length",
+                        (F.col("ref_count") - F.coalesce(F.col("dec"), F.lit(0))).alias("ref_count"),
+                    )
+                    # the pin fixes the GC set before the commits flip
+                    # manifests under it AND lets the payload GC and the
+                    # caller reuse one materialization; a RETRY drops the
+                    # previous attempt's pin first so contended mutations
+                    # don't hold abandoned copies of a (possibly huge) GC
+                    # set in executor storage for the session's lifetime
+                    prev = holder.pop("gc", None)
+                    if prev is not None:
+                        try:
+                            prev.unpersist()
+                        except Exception:
+                            pass  # best-effort; ContextCleaner reclaims eventually
+                    holder["gc"], holder["n_dead"] = _pin(
+                        merged.filter(F.col("ref_count") < 1).select("chunk_key")
+                    )
+                    merged = merged.filter(F.col("ref_count") >= 1)
                 self.store.commit("chunks", _sized(merged), expected_version=v)
 
             self._cas(attempt)
 
         def write_payloads():
-            # 3. chunk_store insert-if-absent (content-addressed storage is
-            # the physical dedup: same key => stored once, DedupeLibrary.cs:628).
-            # The absence set is derived from a snapshot, so the append is
-            # CAS-guarded too: without it, two batches sharing a chunk key
-            # could both see it absent and store the payload twice —
-            # duplicate rows that a reassembly join would then duplicate.
-            new_rows = chunk_rows.dropDuplicates(["chunk_key"])
+            # content-addressed storage is the physical dedup (same key =>
+            # stored once, DedupeLibrary.cs:628): new payloads are
+            # inserted if absent, dead ones GC'd — one CAS-guarded
+            # commit, since both sets derive from a snapshot (two batches
+            # sharing a chunk key could otherwise both see it absent and
+            # store it twice)
+            n_dead = holder.get("n_dead", 0)
+            if batch is None and not n_dead:
+                return
 
             def attempt():
                 v, cs, _ = self.store.snapshot("chunk_store", CHUNK_STORE_SCHEMA)
-                absent = new_rows
-                if v > 0:  # first load: nothing absent
-                    absent = absent.join(
-                        cs.select("chunk_key"), "chunk_key", "left_anti"
-                    )
-                self.store.append(
+                rows = None
+                if batch is not None:
+                    absent = new_payloads
+                    if v > 0:  # first load: nothing absent
+                        absent = absent.join(cs.select("chunk_key"), "chunk_key", "left_anti")
+                    rows = _sized(absent.select("chunk_key", F.col("chunk_data").alias("data")))
+                if not n_dead:
+                    self.store.append("chunk_store", rows, expected_version=v)
+                    return
+                # anti-join, not isin(<collected list>): a mass delete can
+                # GC millions of chunks. Re-filter against the LIVE chunks
+                # table (the merge above has committed): a chunk revived
+                # by a writer that bypassed the op lock keeps its payload.
+                dead = holder["gc"].join(self.chunks.select("chunk_key"), "chunk_key", "left_anti")
+                if n_dead <= GC_BROADCAST_KEYS:
+                    # the pin's size estimate is the merge join's (a
+                    # product of both sides); its measured count says
+                    # the set is small, so the payload scan stays a
+                    # broadcast anti-join instead of shuffling the store
+                    dead = F.broadcast(dead)
+                kept = cs.join(dead, "chunk_key", "left_anti")
+                self.store.commit(
                     "chunk_store",
-                    _sized(absent.select("chunk_key", F.col("chunk_data").alias("data"))),
-                    expected_version=v,
-                )
-
-            self._cas(attempt)
-
-        def write_objects():
-            # 4. objects rows: the shared per-object rollup (already
-            # checkpointed — no second shuffle over the chunk cache) +
-            # ingest-sequence ids. comp_length preserves the reference
-            # quirk: sum of chunk lengths (DedupeLibrary.cs:233), which
-            # equals original_length since chunks tile the object.
-            # the ingest-sequence high-water mark rides in the manifest
-            # (Delta table-properties style), so steady-state batches skip
-            # the max(id) scan job; first write on a pre-meta index falls
-            # back to the aggregate once. CAS-guarded: two concurrent
-            # batches reading the same max_id would otherwise assign
-            # COLLIDING id ranges — the loser rebases on the winner's
-            # high-water mark and re-derives its ids.
-            def attempt():
-                v, new_objects, prev_max = derive_objects()
-                # meta_merge, not meta: a replace here would wipe
-                # clustered_parts and turn the next incremental
-                # optimize() into a full objects refold (r12)
-                self.store.append(
-                    "objects",
-                    new_objects,
-                    meta_merge={"max_id": prev_max + n_objects},
+                    kept if rows is None else kept.unionByName(rows),
                     expected_version=v,
                 )
 
@@ -675,7 +778,7 @@ class DedupeEngine:
 
         def derive_objects():
             """Snapshot-derived objects rows: (version, rows, prev_max).
-            Shared by the sequential append path and the staged path."""
+            Shared by the staged path and the append fallback."""
             v, objs, meta = self.store.snapshot("objects", OBJECTS_SCHEMA)
             prev_max = meta.get("max_id")
             if prev_max is None:
@@ -683,12 +786,14 @@ class DedupeEngine:
                 # max(id) fallback exists for pre-meta LEGACY indexes,
                 # and running it against a fresh store's empty frame
                 # cost one pointless Spark job on every first ingest
-                # (r13 — the integrity-scan/ingest rows each pay it)
                 prev_max = (
                     0 if v == 0 else objs.agg(F.max("id")).collect()[0][0] or 0
                 )
-            # deterministic intra-batch sequence, assigned distributed
-            # (two-phase prefix scan — no single-task global window)
+            # the shared per-object rollup (already checkpointed — no
+            # second shuffle over the chunk cache) + ingest-sequence ids,
+            # assigned distributed (two-phase prefix scan — no
+            # single-task global window). comp_length preserves the
+            # reference quirk: sum of chunk lengths (DedupeLibrary.cs:233)
             new_objects = (
                 assign_ingest_ids(
                     rolled.select(
@@ -704,11 +809,44 @@ class DedupeEngine:
             )
             return v, new_objects, int(prev_max)
 
+        def write_objects():
+            # the ingest-sequence high-water mark rides in the manifest
+            # (Delta table-properties style), so steady-state batches skip
+            # the max(id) scan job. CAS-guarded: two concurrent batches
+            # reading the same max_id would otherwise assign COLLIDING id
+            # ranges — the loser rebases on the winner's high-water mark.
+            # meta_merge, not meta: a replace here would wipe
+            # clustered_parts and turn the next incremental optimize()
+            # into a full objects refold (r12)
+            def attempt():
+                v, new_objects, prev_max = derive_objects()
+                self.store.append(
+                    "objects",
+                    new_objects,
+                    meta_merge={"max_id": prev_max + n_objects},
+                    expected_version=v,
+                )
+
+            self._cas(attempt)
+
+        def stage_objects():
+            # the EXPENSIVE half of the objects commit (id assignment +
+            # parquet part write) overlaps the other commits; only the
+            # manifest FLIP — no Spark job — waits for them
+            v, new_objects, prev_max = derive_objects()
+            return v, prev_max, self.store.stage_part("objects", new_objects, v + 1)
+
+        if doomed is not None:
+            # 1. out of objects first; the decrement pin reads only the
+            # map, which nothing has touched yet
+            with _fix_pool() as (pool, fixes):
+                fixes += [pool.submit(remove_objects), pool.submit(pin_decrements)]
+
         crash_after = getattr(self, "_crash_after", None)
-        if crash_after is not None:
+        if crash_after is not None and batch is not None:
             # crash-matrix path: commits run SEQUENTIALLY in a fixed
             # order so "died right after table X committed" is a
-            # deterministic, reproducible state (the concurrent path
+            # deterministic, reproducible state (the overlapped path
             # would leave the other tables' outcomes racy). Raises
             # SimulatedCrash with no cleanup — exactly a process kill.
             for name, fn in (
@@ -722,37 +860,38 @@ class DedupeEngine:
                     raise SimulatedCrash(name)
             raise ValueError(f"unknown crash point: {crash_after!r}")
 
-        def stage_objects():
-            # the EXPENSIVE half of the objects commit (id assignment +
-            # parquet part write) overlaps the other three commits; only
-            # the manifest FLIP — no Spark job — waits for them, so the
-            # commit-order invariant costs one pointer update of
-            # latency, not a serialized fourth table write.
-            v, new_objects, prev_max = derive_objects()
-            return v, prev_max, self.store.stage_part("objects", new_objects, v + 1)
+        def chunks_then_payloads():
+            write_chunks()
+            write_payloads()
 
-        # every thread is joined before any error is raised; a second
+        # 2. every thread is joined before any error is raised; a second
         # failed commit rides along as a note on the first
+        steps = [write_map] + (
+            [write_chunks, write_payloads] if doomed is None else [chunks_then_payloads]
+        )
         with _fix_pool(4) as (pool, fixes):
-            staged = pool.submit(stage_objects)
-            fixes.append(staged)
-            fixes += [pool.submit(fn) for fn in (write_map, write_chunks, write_payloads)]
-        v, prev_max, path = staged.result()
-        # the logical commit point, strictly after the other three (see
-        # the commit-order invariant in the docstring)
-        try:
-            self.store.attach_part(
-                "objects",
-                path,
-                meta_merge={"max_id": prev_max + n_objects},
-                expected_version=v,
-            )
-        except ConcurrentWriteError:
-            # another writer advanced objects between stage and attach
-            # (attach discarded our staged part): the staged ids are
-            # stale — re-derive and append under the ordinary CAS loop
-            write_objects()
-        self._record_checkpoint("ingest")
+            if batch is not None:
+                staged = pool.submit(stage_objects)
+                fixes.append(staged)
+            fixes += [pool.submit(fn) for fn in steps]
+        if batch is not None:
+            # 3. into objects last (see the commit-order invariant)
+            v, prev_max, path = staged.result()
+            try:
+                self.store.attach_part(
+                    "objects",
+                    path,
+                    meta_merge={"max_id": prev_max + n_objects},
+                    expected_version=v,
+                )
+            except ConcurrentWriteError:
+                # another writer advanced objects between stage and attach
+                # (attach discarded our staged part): the staged ids are
+                # stale — re-derive and append under the ordinary CAS loop
+                write_objects()
+        op = "ingest" if doomed is None else "delete" if batch is None else "replace"
+        self._record_checkpoint(op)
+        return holder.get("gc")
 
     # a restore can only reach points whose parquet parts are still in
     # the per-table retention window (~8 versions), so the ledger keeps
@@ -1124,7 +1263,8 @@ class DedupeEngine:
         The decrement MERGE aggregates per chunk_key first (the batched
         form of SqliteProvider.cs:533-556); chunks reaching ref_count < 1
         are dropped and their payloads deleted from chunk_store — the
-        anti-join GC of SURVEY §3.3.
+        anti-join GC of SURVEY §3.3. The commits are
+        :meth:`_commit_mutation`'s, with ``objects`` first.
 
         ``keys`` is either a Python list (point deletes: ``isin`` pushes
         the key filter into every table scan, and the GC'd chunk keys
@@ -1137,124 +1277,22 @@ class DedupeEngine:
         the GC set comes back as a DataFrame — nothing key-shaped ever
         materializes on the driver, which is what a millions-of-keys
         replace at 100 TB requires).
+
+        ``localCheckpoint`` pins a DataFrame key set before the table
+        commits flip manifests under it (the store retains old parts for
+        8 versions, but a returned lazy plan must not depend on that
+        window); the GC set is pinned the same way.
         """
         if isinstance(keys, DataFrame):
-            return self._delete_batch_distributed(keys)
-        key_col = F.col("object_key").isin(keys)
+            keys = keys.select("object_key").distinct().localCheckpoint(eager=True)
         with self.store.op_lock():
-            gc_set = self._delete_commits(
-                doomed_map_of=lambda omap: omap.filter(key_col),
-                survivors_of=lambda df: df.filter(~key_col),
-            )
+            gc_set = self._commit_mutation(keys)
+        if isinstance(keys, DataFrame):
+            return gc_set
         head = gc_set.take(GC_RETURN_CAP + 1)
         if len(head) > GC_RETURN_CAP:
             return gc_set
         return [r.chunk_key for r in head]
-
-    def _delete_commits(self, doomed_map_of, survivors_of) -> DataFrame:
-        """Shared cascade for both delete forms: refcount decrement merge,
-        survivor commits on all four tables, payload GC. Returns the GC'd
-        chunk-key set (checkpointed).
-
-        Every table commit is a CAS read-modify-write (re-derived from a
-        fresh snapshot on conflict), so concurrent write/delete sessions
-        serialize PER TABLE with no lost updates. The whole cascade also
-        holds the per-index composite-op lock: without it, a payload GC
-        here could race a concurrent ingest reviving the same chunk
-        (the writer's payload pass sees the payload present and skips
-        inserting; our GC then deletes it after the writer's refcount
-        commit ordering slips) — a cross-table anomaly no per-table CAS
-        can exclude. The payload-GC commit additionally re-filters
-        against the live chunks table as defense in depth for writers
-        that bypass the lock.
-        """
-        holder: dict = {}
-
-        def chunks_attempt():
-            # decrements derive from the CURRENT object_map (re-read per
-            # attempt — a concurrent ingest may have appended map rows)
-            _, omap, _ = self.store.snapshot("object_map", OBJECT_MAP_SCHEMA)
-            decrements = (
-                doomed_map_of(omap).groupBy("chunk_key").agg(F.count("*").alias("dec"))
-            )
-            v, chunks, _ = self.store.snapshot("chunks", CHUNKS_SCHEMA)
-            merged = chunks.join(decrements, "chunk_key", "left").select(
-                "chunk_key",
-                "length",
-                (F.col("ref_count") - F.coalesce(F.col("dec"), F.lit(0))).alias("ref_count"),
-            )
-            # checkpoint pins the GC set before the commits flip
-            # manifests under it AND lets the take / anti-join / return
-            # reuse one materialization; a RETRY drops the previous
-            # attempt's checkpoint first so contended deletes don't pin
-            # abandoned copies of a (possibly huge) GC set in executor
-            # storage for the session's lifetime
-            prev = holder.pop("gc", None)
-            if prev is not None:
-                try:
-                    prev.unpersist()
-                except Exception:
-                    pass  # best-effort; ContextCleaner reclaims eventually
-            holder["gc"] = (
-                merged.filter(F.col("ref_count") < 1)
-                .select("chunk_key")
-                .localCheckpoint(eager=True)
-            )
-            self.store.commit(
-                "chunks", merged.filter(F.col("ref_count") >= 1), expected_version=v
-            )
-
-        self._cas(chunks_attempt)
-        gc_set = holder["gc"]
-
-        def map_attempt():
-            v, omap, _ = self.store.snapshot("object_map", OBJECT_MAP_SCHEMA)
-            self.store.commit("object_map", survivors_of(omap), expected_version=v)
-
-        def objects_attempt():
-            v, objs, _ = self.store.snapshot("objects", OBJECTS_SCHEMA)
-            self.store.commit("objects", survivors_of(objs), expected_version=v)
-
-        self._cas(map_attempt)
-        self._cas(objects_attempt)
-
-        if gc_set.head(1):
-
-            def payload_attempt():
-                v, cs, _ = self.store.snapshot("chunk_store", CHUNK_STORE_SCHEMA)
-                # anti-join, not isin(<collected list>): a mass delete can
-                # GC millions of chunks, and a literal list that size would
-                # blow the driver/plan — the distributed set difference
-                # doesn't. Re-filter against the LIVE chunks table: a chunk
-                # revived by a concurrent ingest (refcount back >= 1) must
-                # keep its payload.
-                dead = gc_set.join(self.chunks.select("chunk_key"), "chunk_key", "left_anti")
-                self.store.commit(
-                    "chunk_store",
-                    cs.join(dead, "chunk_key", "left_anti"),
-                    expected_version=v,
-                )
-
-            self._cas(payload_attempt)
-        self._record_checkpoint("delete")
-        return gc_set
-
-    def _delete_batch_distributed(self, keys_df: DataFrame) -> DataFrame:
-        """Join-based :meth:`delete_batch`: the key set and the GC set
-        stay DataFrames end to end.
-
-        ``localCheckpoint`` pins the key set before the table commits
-        flip manifests under it (the store retains old parts for 8
-        versions, but a returned lazy plan must not depend on that
-        window); :meth:`_delete_commits` checkpoints the GC set the same
-        way. The only driver round trips are 1-row probes.
-        """
-        keys_df = keys_df.select("object_key").distinct().localCheckpoint(eager=True)
-        with self.store.op_lock():
-            return self._delete_commits(
-                doomed_map_of=lambda omap: omap.join(keys_df, "object_key", "left_semi"),
-                survivors_of=lambda df: df.join(keys_df, "object_key", "left_anti"),
-            )
 
     # -- stats (O20/O21) ----------------------------------------------------------
 
@@ -1890,7 +1928,7 @@ class DedupeEngine:
         # r12 (guide §2.6 — overlap independent jobs): the four tables'
         # compactions are independent per-table CAS commits; running
         # them from driver threads overlaps their Spark jobs and
-        # manifest I/O exactly like _commit_ingest's concurrent table
+        # manifest I/O exactly like _commit_mutation's concurrent table
         # writes. This matters most for the INCREMENTAL quiet-window
         # pass, whose cost is dominated by four serial small-fold fixed
         # floors — the scale gate's incr/full seconds fraction tracks
@@ -2219,13 +2257,16 @@ class DedupeEngine:
         return deltas, rebuilt, committed
 
     def recover(self) -> dict[str, int]:
-        """Repair a partially-committed ingest after a crash.
+        """Repair a partially-committed ingest, delete or replace after
+        a crash.
 
-        ``_commit_ingest`` commits four tables concurrently with no
-        cross-table transaction; a process dying mid-ingest can leave
-        object_map/chunks/chunk_store updated for keys that never made
-        it into ``objects`` (the logical commit point — an object does
-        not EXIST until its objects row lands). This maintenance scan,
+        :meth:`_commit_mutation` commits the four tables with no
+        cross-table transaction, but always in one order: rows leave
+        ``objects`` (the logical commit point — an object does not EXIST
+        without its objects row) FIRST and enter it LAST. So a process
+        dying mid-ingest, mid-delete or mid-replace leaves one shape
+        only: object_map/chunks/chunk_store rows for keys that are not
+        (or no longer) in ``objects``. This maintenance scan,
         run under the composite-op lock during a quiet window (or on
         open-after-crash), makes the other three tables consistent with
         ``objects`` again:
@@ -2245,7 +2286,10 @@ class DedupeEngine:
         running recover() again; the pass is idempotent. No reference
         analogue: the reference's SQLite writes are single-connection
         transactions (SqliteProvider.cs:29-30); this is the price/repair
-        of four-way concurrent batched commits.
+        of four-way concurrent batched commits. The rebuild keeps only
+        chunks rows that still exist, which is sound because of the
+        commit order: a live key's chunks rows are never dropped before
+        its objects row is.
         """
         # lock OUTSIDE the pool: the pool's exit joins every in-flight
         # fix thread BEFORE the op lock releases, even on an exception path

@@ -332,14 +332,16 @@ FROM ranked, n
     _ENGINE_REPLACE_SQL,
     doc="O5 + O18/O19 graded through the REAL engine: ingest the corpus, "
     "then write_or_replace_batch a deterministic 1-in-3 slice at a "
-    "different inflation — one atomic composite section covering the "
-    "cascading delete (refcount decrement merge, payload GC) and the "
-    "re-ingest. The invariant read-back proves the cascade surgical: "
+    "different inflation — one composite section that reads and commits "
+    "each table once: the old objects rows leave first, one refcount "
+    "merge of increments minus decrements, payload GC plus insert in "
+    "one commit, the new objects rows last. The invariant read-back "
+    "proves the cascade surgical: "
     "kept objects keep ids/payloads/refcounts, replaced objects "
     "reassemble to the NEW payload md5 with fresh ids past the "
     "preserved high-water mark, and no stale chunk or payload survives "
     "anywhere the witness columns look (engine.py write_or_replace_"
-    "batch/_delete_commits; DedupeLibrary.cs:301-318).",
+    "batch/_commit_mutation; DedupeLibrary.cs:301-318).",
 )
 def engine_replace_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from watsondedupe_spark.store import IndexStore
@@ -494,7 +496,7 @@ def _crash_matrix_scenario(spark: SparkSession, sf_dir: str, store_cls) -> DataF
     "unique chunk + payload all under test), and the post-objects crash "
     "must be a COMPLETE ingest (zero repairs, victims readable) since "
     "objects commits strictly last as the logical commit point "
-    "(engine.py _commit_ingest; the reference's non-atomic write path "
+    "(engine.py _commit_mutation; the reference's non-atomic write path "
     "DedupeLibrary.cs:237-247 is the bug class this ordering beats).",
 )
 def engine_crash_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -794,7 +796,7 @@ def engine_integrity_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         # r13 (guide §2.6): the clean-scan count is a READ-ONLY job over
         # the pinned pre-plant snapshot, so its collect can span the
         # victim lookup AND the fault plants (different tables,
-        # per-table CAS — the exact concurrency _commit_ingest already
+        # per-table CAS — the exact concurrency _commit_mutation already
         # relies on): the frame is built before anything commits, and
         # the plants' appends cannot touch the parts it reads.
         before_df = counts_frame()
@@ -1671,7 +1673,7 @@ def _verify_consistent_live_scenario(
     - every pinned objects count equals the odds + a batch-prefix sum
       (the ledger only ever names real serial states, never a torn mix);
     - the planted-tear contrast AFTER the race: a chunks row with no
-      payload (exactly the mid-_commit_ingest shape) is seen by the
+      payload (exactly the mid-_commit_mutation shape) is seen by the
       default scan but invisible to the consistent scan pinned at the
       pre-tear cut — then healed, and the final full scan is clean.
     """
@@ -1803,7 +1805,7 @@ sp.stop()
 
         eng = DedupeEngine.open(spark, root)
         # planted-tear contrast: a chunks row whose payload never landed
-        # (the exact mid-_commit_ingest shape), appended OUTSIDE any
+        # (the exact mid-_commit_mutation shape), appended OUTSIDE any
         # composite op so no ledger row names it
         eng.store.append(
             "chunks",
@@ -2043,7 +2045,7 @@ sp.stop()
     "against a payload the deleter then removes). The merged end state "
     "must equal the serial closed forms: odds + new objects with exact "
     "invariants and byte-identical reassembly, evens gone, ids "
-    "collision-free (engine.py _delete_commits / store.py op_lock).",
+    "collision-free (engine.py _commit_mutation / store.py op_lock).",
 )
 def engine_concurrent_write_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     from watsondedupe_spark.store import IndexStore

@@ -173,8 +173,8 @@ class IndexStore:
         # per-thread reentrancy depth for op_lock, keyed by lock name:
         # flock is NOT reentrant (a second acquisition from the same
         # thread opens a new file description and blocks forever), so
-        # composite ops that nest — write_or_replace holding the lock
-        # across its delete+write phases — ride the outer acquisition
+        # nested holds — a caller locking around several engine verbs,
+        # each of which locks itself — ride the outer acquisition
         self._op_tls = threading.local()
         # parsed Bloom sidecars keyed by (part basename, col): parts
         # are immutable once published, so the cache never invalidates
@@ -271,10 +271,16 @@ class IndexStore:
     ) -> DataFrame:
         """One parquet read over ``paths`` (part dirs or files), or an
         empty frame typed ``schema`` (default: the table schema) when
-        there is nothing to read."""
+        there is nothing to read. A table with a registered schema
+        (:data:`TABLE_SCHEMAS`) is read with it pinned: an inferring
+        read plans a Spark job over a footer just to learn the schema
+        the engine already declares, and every snapshot would pay it.
+        Any other table infers."""
         if not paths:
             return self.spark.createDataFrame([], schema or TABLE_SCHEMAS[name])
-        return self.spark.read.parquet(*paths)
+        pinned = TABLE_SCHEMAS.get(name)
+        reader = self.spark.read if pinned is None else self.spark.read.schema(pinned)
+        return reader.parquet(*paths)
 
     # -- manifest-level data skipping (round 8) ------------------------------
 
@@ -411,7 +417,7 @@ class IndexStore:
                     (lo is None or lo <= span[1]) and (hi is None or hi > span[0])
                 ):
                     keep.append(fpath)
-        # plain read like read() — same inferred schema as the unpruned
+        # plain read like read() — same pinned schema as the unpruned
         # snapshot, so downstream plans are type-identical
         return self._df_for(name, keep, schema)
 
@@ -805,8 +811,8 @@ class IndexStore:
         cross-thread on one host; both backends share it).
 
         The per-table CAS above guarantees no table-level lost updates,
-        but a composite operation (ingest = 4 table commits, delete =
-        4 commits + payload GC) has no cross-table transaction, so two
+        but a composite operation (an ingest, delete or replace is one
+        commit per table) has no cross-table transaction, so two
         composite ops interleaving can produce cross-table anomalies
         (double-ingest of one key passing both pre-checks; a payload GC
         racing a revival). Engine write/delete paths therefore hold
@@ -819,9 +825,9 @@ class IndexStore:
 
         REENTRANT per thread (per store instance): a thread already
         holding the lock re-enters immediately instead of deadlocking on
-        a second flock, which is what lets ``write_or_replace`` hold one
-        critical section across its delete and write phases while each
-        phase takes the lock itself. Reentrancy is tracked on THIS
+        a second flock, which is what lets a caller hold one critical
+        section across several engine verbs while each verb takes the
+        lock itself. Reentrancy is tracked on THIS
         instance — a second store object on the same root still blocks
         (it is a different writer as far as the protocol is concerned).
         Custom ``store_cls`` backends must preserve both properties:
@@ -991,7 +997,7 @@ class IndexStore:
             try:
                 return self._fold(
                     name,
-                    self.spark.read.parquet(path),
+                    self._df_for(name, [path]),
                     expected_version=expected_version,
                     meta_merge=meta_merge,
                 )
@@ -1056,7 +1062,7 @@ class IndexStore:
         if not self.exists(name) or not parts:
             return 0
         todo = set(parts)
-        df = self.spark.read.parquet(*parts)
+        df = self._df_for(name, parts)
         if layout is not None:
             df = layout(df)
         path = self._write_part(name, df, self.current_version(name) + 1)
