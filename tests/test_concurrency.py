@@ -135,10 +135,12 @@ def test_sqlite_engine_reopens_via_autodetect(spark, tmp_path):
 
 
 def _hammer_manifest(args):
-    """Child-process worker: N increments of table 't' through the
-    store's critical section + state primitives (no Spark needed at the
-    manifest layer). Each increment appends a fake part entry, so lost
-    updates are visible as missing entries or version gaps."""
+    """Child-process worker: N increments through the store's one
+    catalog flip (no Spark needed at the manifest layer). Each
+    increment appends a fake part entry to table 't'; every odd one
+    appends to 't' and 'u' in the SAME flip. Lost updates show as
+    missing entries or version gaps, a torn two-table flip as a 'u'
+    entry without its 't' twin."""
     backend, root, worker, n = args
     import sys
 
@@ -146,62 +148,31 @@ def _hammer_manifest(args):
     from watsondedupe_spark.store import IndexStore, SqliteIndexStore
 
     cls = IndexStore if backend == "file" else SqliteIndexStore
-    st = cls.__new__(cls)  # no SparkSession: state primitives only
-    st.root = root
-    if backend == "sqlite":
-        import threading
+    st = cls(None, root)  # no SparkSession: the catalog flip only
+    st.retain_versions = 10_000
 
-        st._db_path = root + "/_manifest.db"
-        st._tls = threading.local()
+    def entry(name, part):
+        return name, lambda fresh, _: {"parts": fresh["parts"] + [part], "meta": {}}, None
+
     for i in range(n):
-        with st._transact("t"):
-            state = st._state("t")
-            st._write_state(
-                "t",
-                {
-                    "version": state["version"] + 1,
-                    "parts": state["parts"] + [f"{root}/t/p_{worker}_{i}"],
-                    "meta": state.get("meta", {}),
-                },
-            )
+        names = ("t", "u") if i % 2 else ("t",)
+        st._flip([entry(t, f"{root}/{t}/p_{worker}_{i}") for t in names])
     return worker
 
 
 @pytest.mark.parametrize("backend", ["file", "sqlite"])
 def test_cross_process_critical_section_no_lost_updates(tmp_path, backend):
-    """The critical section must serialize across PROCESSES (flock /
+    """The catalog flip must serialize across PROCESSES (flock /
     SQLite BEGIN IMMEDIATE), not just threads: 4 processes x 20
-    read-modify-write increments on one table must lose nothing and
-    leave a gapless version sequence."""
+    read-modify-write increments lose nothing and leave a gapless
+    version sequence, and every two-table increment lands whole."""
     import multiprocessing as mp
-    import os
 
     from watsondedupe_spark.store import IndexStore, SqliteIndexStore
 
     root = str(tmp_path / "xp")
-    os.makedirs(root + "/t", exist_ok=True)
     cls = IndexStore if backend == "file" else SqliteIndexStore
-    st = cls.__new__(cls)
-    st.root = root
-    if backend == "sqlite":
-        import sqlite3
-        import threading
-
-        st._db_path = root + "/_manifest.db"
-        st._tls = threading.local()
-        con = sqlite3.connect(st._db_path)
-        con.execute(
-            "CREATE TABLE IF NOT EXISTS manifests (name TEXT NOT NULL,"
-            " version INTEGER NOT NULL, state TEXT NOT NULL,"
-            " PRIMARY KEY (name, version))"
-        )
-        con.execute(
-            "CREATE TABLE IF NOT EXISTS current (name TEXT PRIMARY KEY,"
-            " version INTEGER NOT NULL)"
-        )
-        con.commit()
-        con.close()
-    st.retain_versions = 10_000  # keep every version for the audit
+    st = cls(None, root)
 
     workers, per = 4, 20
     ctx = mp.get_context("spawn")  # no JVM/fd inheritance from pytest
@@ -210,14 +181,18 @@ def test_cross_process_critical_section_no_lost_updates(tmp_path, backend):
             _hammer_manifest, [(backend, root, w, per) for w in range(workers)]
         )
     assert sorted(done) == list(range(workers))
-    final = st._state("t")
-    assert final["version"] == workers * per, "lost increment (version)"
-    assert len(final["parts"]) == workers * per, "lost part entry"
-    assert len(set(final["parts"])) == workers * per
-    # every worker's every entry survived the interleaving
+    t, u = st._state("t"), st._state("u")
+    assert t["version"] == workers * per, "lost increment (version)"
+    assert u["version"] == workers * per // 2, "lost two-table increment"
+    assert len(set(t["parts"])) == len(t["parts"]) == workers * per
+    assert len(set(u["parts"])) == len(u["parts"]) == workers * per // 2
+    # every worker's every entry survived the interleaving, and each
+    # two-table increment landed in both tables
     for w in range(workers):
         for i in range(per):
-            assert f"{root}/t/p_{w}_{i}" in final["parts"]
+            assert f"{root}/t/p_{w}_{i}" in t["parts"]
+            assert (f"{root}/u/p_{w}_{i}" in u["parts"]) == bool(i % 2)
+    assert st.versions("t") == list(range(1, workers * per + 1))
 
 
 @pytest.mark.parametrize("backend", ["file", "sqlite"])

@@ -622,22 +622,25 @@ def test_recover_is_resumable_after_partial_repair(engine, spark):
     assert engine.recover() == {"object_map": 0, "chunks": -0, "chunk_store": -0}
 
 
+_CLEAN = {"object_map": 0, "chunks": 0, "chunk_store": 0}
+
+
 @pytest.mark.parametrize("crash_point", ["object_map", "chunks", "chunk_store", "objects"])
 def test_crash_matrix_real_write_path(engine, spark, crash_point):
-    """Round-7 crash matrix: crash-inject the REAL write path after each
-    of the four table commits (``_crash_after`` forces the deterministic
-    sequential commit order) and assert the exact repair semantics per
-    point. The commit-order invariant — objects commits LAST — makes the
-    post-objects crash a complete ingest (zero repairs) and guarantees a
-    reader can never observe a key with missing map/chunks/payloads.
-    Runs on both backends via the engine fixture."""
-    from watsondedupe_spark.engine import SimulatedCrash
+    """Crash-inject the REAL write path right after each table's part is
+    staged (the store's fault hook, ``IndexStore._crash_after``): one
+    catalog flip publishes all four tables, so every such crash leaves
+    no table version moved, no victim visible and nothing for
+    ``recover()`` to repair. Runs on both backends via the engine
+    fixture."""
+    from watsondedupe_spark.store import SimulatedCrash
 
     base = b"crash matrix shared payload " * 200
     engine.write("base", base)
     n_base_map = engine.get_object_map("base").count()
     n_base_chunks = engine.chunks.count()
     n_base_store = engine.chunk_store.count()
+    before = engine.store._catalog()
 
     victims = spark.createDataFrame(
         [
@@ -646,46 +649,18 @@ def test_crash_matrix_real_write_path(engine, spark, crash_point):
         ],
         "object_key string, data binary",
     )
-    engine._crash_after = crash_point
-    try:
-        with pytest.raises(SimulatedCrash):
-            engine.write_batch(victims)
-    finally:
-        engine._crash_after = None
+    with pytest.raises(SimulatedCrash), engine.store._crash_after(crash_point):
+        engine.write_batch(victims)
 
-    if crash_point == "objects":
-        # past the logical commit point: the ingest is complete
-        assert engine.recover() == {"object_map": 0, "chunks": 0, "chunk_store": 0}
-        assert engine.get("vic_dup") == base
-        assert engine.get("vic_uniq") == b"unique victim bytes/" * 400
-        # shared chunks were deduped, refcounts doubled on base's chunks
-        assert engine.chunks.filter(F.col("ref_count") == 2).count() == n_base_map
-        return
-
-    # pre-objects crash: victims must not exist observably even BEFORE
-    # repair (reads resolve through objects — the invariant's payoff)
+    assert engine.store._catalog() == before
     assert not engine.exists("vic_dup") and not engine.exists("vic_uniq")
-
-    deltas = engine.recover()
-    n_vic_map = deltas["object_map"]
-    assert n_vic_map < 0  # map committed first in every pre-objects state
-    if crash_point == "object_map":
-        # only the map landed: no chunk/payload wreckage to prune
-        assert deltas["chunks"] == 0 and deltas["chunk_store"] == 0
-    elif crash_point == "chunks":
-        # unique victim chunks entered the chunks table; payloads did not
-        assert deltas["chunks"] < 0 and deltas["chunk_store"] == 0
-    else:  # chunk_store
-        assert deltas["chunks"] < 0 and deltas["chunk_store"] < 0
-
-    # wreckage fully gone: tables back at base cardinality, refcounts
-    # rebuilt to exactly the map-derived truth, survivor readable
+    assert engine.recover() == _CLEAN
     assert engine.object_map.count() == n_base_map
     assert engine.chunks.count() == n_base_chunks
     assert engine.chunk_store.count() == n_base_store
     assert engine.chunks.filter(F.col("ref_count") != 1).count() == 0
     assert engine.get("base") == base
-    assert engine.recover() == {"object_map": 0, "chunks": 0, "chunk_store": 0}
+    assert engine.verify().count() == 0
 
 
 def test_point_reads_prune_parts_at_plan_level(spark, tmp_path):
@@ -1463,10 +1438,14 @@ def test_clone_at_without_max_id_fails_loudly(spark, tmp_path):
     ids of objects deleted before the point."""
     engine = DedupeEngine.create(spark, str(tmp_path / "idx"), SMALL)
     engine.write("a", b"payload a " * 300)
-    engine.store.update_meta(
-        "objects", lambda m: {k: v for k, v in m.items() if k != "max_id"}
+    engine.store._flip(
+        [
+            engine.store.meta_entry(
+                "objects", lambda m, _: {k: v for k, v in m.items() if k != "max_id"}
+            ),
+            engine._checkpoint_entry("test"),
+        ]
     )
-    engine._record_checkpoint("test")
     seq = int(engine.store.table_meta("checkpoints")["rows"][-1]["seq"])
     with pytest.raises(ValueError, match="max_id"):
         engine.clone(str(tmp_path / "c"), at=seq)
@@ -1748,7 +1727,7 @@ def test_point_verbs_run_no_spark_job(engine):
 
 @pytest.mark.parametrize("verb", ["repair", "recover"])
 def test_maintenance_raises_fix_thread_error_beside_commit_error(engine, monkeypatch, verb):
-    """A chunks fix commits from a pool thread while the chunk_store
+    """A chunks fix stages from a pool thread while the chunk_store
     phase runs. When both fail, both errors must surface: before, the
     chunk_store error skipped the join and the pool's exit dropped the
     fix thread's error. No ledger point may claim the failed pass."""
@@ -1773,7 +1752,7 @@ def test_maintenance_raises_fix_thread_error_beside_commit_error(engine, monkeyp
         raise RuntimeError(f"{name} commit failed")
 
     with monkeypatch.context() as m:
-        m.setattr(engine.store, "commit", failing_commit)
+        m.setattr(engine.store, "commit_entry", failing_commit)
         with pytest.raises(RuntimeError) as info:
             getattr(engine, verb)()
     chain, e = [], info.value
@@ -1792,16 +1771,16 @@ def _raised_texts(exc) -> str:
 
 
 def test_write_batch_surfaces_every_failed_table_commit(engine, monkeypatch):
-    """Two of an ingest's overlapped table commits fail: the raised error
+    """Two of an ingest's overlapped table stages fail: the raised error
     carries the other one in its notes instead of dropping it."""
-    orig = engine.store.append
+    orig = engine.store.append_entry
 
     def failing_append(name, *args, **kwargs):
         if name in ("object_map", "chunk_store"):
             raise RuntimeError(f"{name} append failed")
         return orig(name, *args, **kwargs)
 
-    monkeypatch.setattr(engine.store, "append", failing_append)
+    monkeypatch.setattr(engine.store, "append_entry", failing_append)
     with pytest.raises(RuntimeError) as info:
         engine.write("k", rand_bytes(6000, seed=410))
     text = _raised_texts(info.value)
@@ -1816,9 +1795,9 @@ def test_optimize_surfaces_every_failed_table_compaction(engine, monkeypatch):
     def failing_compact(name, *args, **kwargs):
         if name in ("objects", "chunks"):
             raise RuntimeError(f"{name} compaction failed")
-        return 0
+        return None
 
-    monkeypatch.setattr(engine.store, "compact_parts", failing_compact)
+    monkeypatch.setattr(engine.store, "compaction_entry", failing_compact)
     with pytest.raises(RuntimeError) as info:
         engine.optimize()
     text = _raised_texts(info.value)
@@ -1869,75 +1848,75 @@ def _rows(spark, items):
 
 @pytest.mark.parametrize("table", _INDEX_TABLES)
 @pytest.mark.parametrize("verb", ["delete", "replace"])
-def test_crash_mid_delete_or_replace_never_strands_a_live_key(
-    engine, monkeypatch, verb, table
-):
-    """A crash right after any table commit of delete_batch or
-    write_or_replace_batch, then recover(): the index verifies clean,
-    the untouched key is byte-identical, and the target key is absent,
-    old or new — never present but unreadable (a delete that dropped
-    chunks rows before the objects row let recover() GC the payloads of
-    a key that still existed)."""
-    from watsondedupe_spark.store import IndexStore
+def test_crash_mid_delete_or_replace_never_strands_a_live_key(engine, verb, table):
+    """A crash right after any table's part of delete_batch or
+    write_or_replace_batch is staged (the store's fault hook): the
+    index verifies clean, recover() finds nothing, the untouched key is
+    byte-identical, and the target key still reads its OLD bytes — a
+    replaced key is never absent (the per-table commits this replaced
+    lost it)."""
+    from watsondedupe_spark.store import SimulatedCrash
 
     old_a, new_a, b = _aligned_pair()
     engine.write_batch(_rows(engine.spark, [("a", old_a), ("b", b)]))
-
-    class Crash(RuntimeError):
-        pass
-
-    commit = IndexStore.commit
-
-    def crashing_commit(self, name, *args, **kwargs):
-        version = commit(self, name, *args, **kwargs)
-        if name == table:
-            raise Crash(name)
-        return version
-
-    monkeypatch.setattr(IndexStore, "commit", crashing_commit)
-    with pytest.raises(Crash):
+    with pytest.raises(SimulatedCrash), engine.store._crash_after(table):
         if verb == "delete":
             engine.delete_batch(["a"])
         else:
             engine.write_or_replace_batch(_rows(engine.spark, [("a", new_a)]))
-    monkeypatch.undo()
 
-    engine.recover()
+    assert engine.recover() == _CLEAN
     assert engine.verify().count() == 0
     assert engine.get("b") == b
-    allowed = (old_a,) if verb == "delete" else (old_a, new_a)
-    if engine.exists("a"):
-        assert engine.get("a") in allowed
-    else:
-        assert engine.try_get("a") is None
-    assert engine.recover() == {"object_map": 0, "chunks": 0, "chunk_store": 0}
+    assert engine.get("a") == old_a
 
 
 def test_mutations_flip_each_table_once(engine, monkeypatch):
-    """A 2-key replace reads and commits each index table once: six
-    manifest flips (objects out, object_map, chunks, chunk_store,
-    objects in, the ledger), not a delete's five plus an ingest's
-    five. A delete stays at five."""
+    """Every composite op is ONE catalog flip, its ledger row included:
+    write_batch, write_or_replace_batch, delete_batch, restore, clone,
+    optimize (when it compacts) and repair/recover (when they fix)."""
     from watsondedupe_spark.store import IndexStore
 
     old_a, new_a, b = _aligned_pair()
-    engine.write_batch(_rows(engine.spark, [("a", old_a), ("b", b)]))
-    flips: list[str] = []
+    spark = engine.spark
+    flips: list[list[str]] = []
     flip = IndexStore._flip
 
-    def counting_flip(self, name, *args, **kwargs):
-        flips.append(name)
-        return flip(self, name, *args, **kwargs)
+    def counting_flip(self, entries):
+        flips.append(sorted(e[0] for e in entries if e))
+        return flip(self, entries)
 
     monkeypatch.setattr(IndexStore, "_flip", counting_flip)
-    engine.write_or_replace_batch(_rows(engine.spark, [("a", new_a), ("b", old_a)]))
-    assert len(flips) <= 6, flips
-    assert engine.get("a") == new_a and engine.get("b") == old_a
 
-    flips.clear()
-    engine.delete_batch(["a", "b"])
-    assert len(flips) <= 5, flips
+    def one_flip(fn, *args, **kwargs):
+        flips.clear()
+        out = fn(*args, **kwargs)
+        assert len(flips) == 1, flips
+        return out, flips[0]
+
+    _, tables = one_flip(engine.write_batch, _rows(spark, [("a", old_a), ("b", b)]))
+    assert tables == sorted(_INDEX_TABLES + ("checkpoints",))
+    point = int(engine.checkpoints.orderBy(F.desc("seq")).first().seq)
+    one_flip(engine.write_or_replace_batch, _rows(spark, [("a", new_a), ("b", old_a)]))
+    assert engine.get("a") == new_a and engine.get("b") == old_a
+    one_flip(engine.delete_batch, ["a", "b"])
     assert not engine.exists("a") and not engine.exists("b")
+    one_flip(engine.restore, at=point)
+    assert engine.get("a") == old_a
+    _, tables = one_flip(engine.optimize)
+    assert "checkpoints" in tables
+    one_flip(engine.clone, str(engine.store.root) + "_clone")
+    v, chunks, _ = engine.store.snapshot("chunks")
+    engine.store.commit(
+        "chunks", chunks.withColumn("ref_count", F.col("ref_count") + 1), expected_version=v
+    )
+    _, tables = one_flip(engine.recover)
+    assert tables == ["checkpoints", "chunks"]
+    engine.store.append(
+        "chunk_store",
+        spark.createDataFrame([("junk", bytearray(b"junk"))], "chunk_key string, data binary"),
+    )
+    one_flip(engine.repair)
     monkeypatch.undo()
     assert engine.verify().count() == 0
 
@@ -1964,3 +1943,166 @@ def test_index_snapshots_plan_no_spark_job(engine):
     for name, df in frames.items():
         parts = engine.store.live_parts(name)
         assert df.schema == engine.spark.read.parquet(*parts).schema, name
+
+
+# -- one catalog flip per composite op: crash coverage ---------------------------
+
+
+def _ledger_names_current(engine) -> bool:
+    """Whether the newest ledger row names exactly the current table
+    versions."""
+    row = engine.store.table_meta("checkpoints")["rows"][-1]
+    catalog = engine.store._catalog()
+    return all(row[f"{t}_v"] == catalog[t] for t in _INDEX_TABLES)
+
+
+def _violations(engine) -> list:
+    return sorted(tuple(r) for r in engine.verify().collect())
+
+
+def _crash_walk(engine, run, check_before, check_after) -> int:
+    """Crash ``run`` after its 1st, 2nd, ... staged part and finally
+    right after its flip (the store's fault hook at ``"any"``). After
+    every pre-flip crash no table version has moved and
+    ``check_before`` holds; after the flip crash ``check_after`` holds.
+    Either way ``recover()`` finds nothing and ``verify()`` reports what
+    it reported before the op (or nothing, after it). The newest ledger
+    row names the current versions after the flip, and before it
+    whenever it did before the op (damage planted outside the engine
+    moves a table without a ledger row). Returns the number of crash
+    points."""
+    from watsondedupe_spark.store import SimulatedCrash
+
+    catalog = engine.store._catalog()
+    violations = _violations(engine)
+    named = _ledger_names_current(engine)
+    for n in range(1, 20):
+        with pytest.raises(SimulatedCrash) as crash, engine.store._crash_after("any", n):
+            run()
+        assert engine.recover() == _CLEAN, n
+        if "flip" not in str(crash.value):
+            assert engine.store._catalog() == catalog, n
+            assert _violations(engine) == violations, n
+            assert _ledger_names_current(engine) == named, n
+            check_before()
+            continue
+        assert _violations(engine) == [], n
+        assert _ledger_names_current(engine), n
+        check_after()
+        return n
+    raise AssertionError("the op never reached its flip")
+
+
+@pytest.mark.parametrize(
+    "verb",
+    ["write_batch", "write_or_replace_batch", "delete_batch", "restore", "optimize", "repair", "clone"],
+)
+def test_composite_verb_crash_shows_before_or_after_state(engine, verb):
+    """Every composite verb, crashed at every fault point on both
+    backends, leaves its before-state or its after-state: no torn
+    tables, nothing for recover() to repair, the untouched key ``b``
+    byte-identical."""
+    from watsondedupe_spark.store import open_store
+
+    spark = engine.spark
+    old_a, new_a, b = _aligned_pair()
+    c = rand_bytes(9000, seed=505)
+    engine.write_batch(_rows(spark, [("a", old_a), ("b", b)]))
+
+    def reads(**want):
+        assert engine.get("b") == b
+        for key, data in want.items():
+            assert engine.try_get(key) == data, key
+
+    if verb == "write_batch":
+        run = lambda: engine.write_batch(_rows(spark, [("c", c)]))
+        before, after = (lambda: reads(a=old_a, c=None)), (lambda: reads(a=old_a, c=c))
+    elif verb == "write_or_replace_batch":
+        run = lambda: engine.write_or_replace_batch(_rows(spark, [("a", new_a)]))
+        before, after = (lambda: reads(a=old_a)), (lambda: reads(a=new_a))
+    elif verb == "delete_batch":
+        run = lambda: engine.delete_batch(["a"])
+        before, after = (lambda: reads(a=old_a)), (lambda: reads(a=None))
+    elif verb == "restore":
+        point = int(engine.checkpoints.orderBy(F.desc("seq")).first().seq)
+        engine.delete_batch(["a"])
+        run = lambda: engine.restore(at=point)
+        before, after = (lambda: reads(a=None)), (lambda: reads(a=old_a))
+    elif verb == "optimize":
+        engine.write_batch(_rows(spark, [("c", c)]))
+
+        def parts():
+            return {t: len(engine.store.live_parts(t)) for t in _INDEX_TABLES}
+
+        many = parts()
+        run = engine.optimize
+
+        def before():
+            reads(a=old_a, c=c)
+            assert parts() == many
+
+        def after():
+            reads(a=old_a, c=c)
+            assert parts() == dict.fromkeys(_INDEX_TABLES, 1)
+    elif verb == "repair":
+        # damage recover() cannot see: a second, garbage payload row
+        # under a live chunk key of ``a`` only (dup_payload +
+        # hash_mismatch); ``a`` reads back only once it is repaired
+        keys_of = lambda k: {r.chunk_key for r in engine.get_object_map(k).collect()}
+        rot_key = sorted(keys_of("a") - keys_of("b"))[0]
+        engine.store.append(
+            "chunk_store",
+            spark.createDataFrame([(rot_key, bytearray(b"rot"))], "chunk_key string, data binary"),
+        )
+        assert _violations(engine)
+        run = engine.repair
+        before, after = reads, (lambda: reads(a=old_a))
+    else:
+        dest = str(engine.store.root) + "_clone"
+        run = lambda: engine.clone(dest)
+
+        def before():
+            reads(a=old_a)
+            assert not open_store(spark, dest).exists("config")
+
+        def after():
+            reads(a=old_a)
+            clone = DedupeEngine.open(spark, dest)
+            assert clone.get("a") == old_a and clone.get("b") == b
+
+    _crash_walk(engine, run, before, after)
+
+
+def test_crashed_restore_leaves_every_live_key_readable(engine):
+    """A restore that crashes leaves no key that exists but cannot be
+    read: all four tables and the ledger row move in one flip (when the
+    tables were re-pointed one by one, a crash after object_map left
+    ``a`` in objects with its chunks gone, and recover() saw nothing)."""
+    from watsondedupe_spark.store import SimulatedCrash
+
+    old_a, _, b = _aligned_pair()
+    engine.write_batch(_rows(engine.spark, [("a", old_a), ("b", b)]))
+    point = int(engine.checkpoints.orderBy(F.desc("seq")).first().seq)
+    engine.delete_batch(["a"])
+    with pytest.raises(SimulatedCrash), engine.store._crash_after("flip"):
+        engine.restore(at=point)
+    assert engine.recover() == _CLEAN
+    assert engine.exists("a") and engine.get("a") == old_a
+    assert engine.verify().count() == 0
+    assert _ledger_names_current(engine)
+
+
+def test_crash_never_leaves_a_committed_op_without_its_ledger_row(engine):
+    """The ledger row rides in the op's own flip: a crash right after
+    the flip leaves the op committed AND named by the newest ledger row
+    (a separate ledger write could die after the tables flipped, leaving
+    the op with no consistency point)."""
+    from watsondedupe_spark.store import SimulatedCrash
+
+    engine.write("a", rand_bytes(6000, seed=506))
+    with pytest.raises(SimulatedCrash), engine.store._crash_after("flip"):
+        engine.write("b", rand_bytes(6000, seed=507))
+    assert engine.get("b") == rand_bytes(6000, seed=507)
+    assert _ledger_names_current(engine)
+    last = engine.checkpoints.orderBy(F.desc("seq")).first()
+    assert last.op == "ingest" and engine.checkpoints.count() == 2

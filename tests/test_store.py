@@ -498,3 +498,26 @@ def test_update_meta_leaves_parts_and_stats(spark, tmp_path, store_cls):
     assert state["parts"] == old["parts"]
     assert state["stats"] == old["stats"]
     assert state["meta"] == {"max_id": 9, "note": 1}
+
+
+def test_two_table_flip_is_refused_whole(spark, tmp_path, store_cls):
+    """A two-entry flip where one table moved past its expected version
+    is refused whole: neither table flips, and both staged parts are
+    deleted."""
+    import os
+
+    st = store_cls(spark, str(tmp_path))
+    one = lambda x: spark.createDataFrame([(x,)], "x long")
+    st.commit("objects", _df(spark, 0, 5))
+    st.commit("t", one(1))
+    v_obj, v_t = st.current_version("objects"), st.current_version("t")
+    replace = st.commit_entry("objects", _df(spark, 0, 9), expected_version=v_obj)
+    append = st.append_entry("t", one(2), expected_version=v_t)
+    st.commit("t", one(3))  # another writer moves t on
+    with pytest.raises(ConcurrentWriteError):
+        st._flip([replace, append])
+    assert st.current_version("objects") == v_obj
+    assert st.current_version("t") == v_t + 1
+    assert not os.path.exists(replace[2]) and not os.path.exists(append[2])
+    assert st.read("objects").count() == 5
+    assert [r.x for r in st.read("t").collect()] == [3]

@@ -4,7 +4,7 @@ Replicates bench.bench_engine_optimize_incr at an arbitrary staged dir
 with per-phase timers inside the store commit machinery, so the
 incr/full fraction's floor components are visible (which table's fold
 dominates, and within it: read+write job vs bloom vs footer stats vs
-manifest flip).
+the one catalog flip that publishes every table's fold).
 
 Usage: python tools/profile_optincr.py [SF_DIR] [--reps N]
 """
@@ -52,7 +52,9 @@ def main() -> int:
             finally:
                 arg0 = a[0] if a else ""
                 detail = str(arg0)[:60]
-                if meth == "compact_parts" and len(a) >= 2:
+                if meth == "_flip":
+                    detail = ",".join(e[0] for e in arg0 if e)
+                if meth == "compaction_entry" and len(a) >= 2:
                     try:
                         nb = sum(
                             os.path.getsize(os.path.join(dp, f))
@@ -69,7 +71,7 @@ def main() -> int:
         setattr(cls, meth, wrap)
         return orig
 
-    for m in ("compact_parts", "_write_part", "_write_bloom", "_part_stats",
+    for m in ("compaction_entry", "_write_part", "_write_bloom", "_part_stats",
               "parts_bytes", "_flip", "vacuum"):
         timed(store_mod.IndexStore, m)
 

@@ -85,6 +85,15 @@ GC_RETURN_CAP = 10_000
 # of SHA-256 keys); a larger set shuffle-joins the payload table
 GC_BROADCAST_KEYS = 100_000
 
+# the four index tables (the ledger names one version of each), with
+# the schema their snapshots pin
+_INDEX_SCHEMAS = {
+    "objects": OBJECTS_SCHEMA,
+    "object_map": OBJECT_MAP_SCHEMA,
+    "chunks": CHUNKS_SCHEMA,
+    "chunk_store": CHUNK_STORE_SCHEMA,
+}
+
 
 def _prefix_successor(prefix: str) -> str | None:
     """Smallest string strictly greater than EVERY string that starts
@@ -160,15 +169,6 @@ class DuplicateKeyError(ValueError):
 
 class ObjectNotFoundError(KeyError):
     pass
-
-
-class SimulatedCrash(RuntimeError):
-    """Crash-injection marker for the recovery matrix: raised by
-    ``_commit_mutation`` (ingest) right after the table named in
-    ``engine._crash_after`` commits, leaving the index in exactly the
-    partial state a process kill at that point would — no cleanup, no
-    rollback. Tests and the graded crash-matrix scenario catch this,
-    then drive :meth:`DedupeEngine.recover` over the wreckage."""
 
 
 @contextmanager
@@ -427,13 +427,13 @@ class DedupeEngine:
         reference deletes and re-writes under one mutex
         (DedupeLibrary.cs:301-318); here the replace is ONE pass of
         :meth:`_commit_mutation` with the existing keys as its doomed
-        set, so every table is read and committed once: the old
-        ``objects`` rows leave first, ``object_map`` becomes survivors ∪
-        new rows, ``chunks`` takes one merge of increments − decrements
-        (a chunk the old and new versions share keeps its refcount and
-        its payload instead of being GC'd and re-inserted), ``chunk_store``
-        drops the dead payloads and adds the absent new ones, and the
-        new ``objects`` rows land last.
+        set, so every table is read and staged once and all of them
+        publish in one catalog flip: ``objects`` and ``object_map``
+        become survivors ∪ new rows, ``chunks`` takes one merge of
+        increments − decrements (a chunk the old and new versions share
+        keeps its refcount and its payload instead of being GC'd and
+        re-inserted), and ``chunk_store`` drops the dead payloads and
+        adds the absent new ones.
 
         The existing-key set stays DISTRIBUTED end to end: a pinned
         semi-join DataFrame handed straight to the commit sequence, never
@@ -444,12 +444,11 @@ class DedupeEngine:
 
         The expensive chunker pass and per-object rollup run OUTSIDE the
         composite-op lock (shared :meth:`_prepare_batch`); only the
-        existence probe and the table commits sit inside it — so a batch
+        existence probe and the commit sit inside it — so a batch
         replace is atomic against concurrent writers without serializing
-        them behind its chunking work. A crash mid-replace can leave a
-        replaced key absent (its old rows gone, its new ones not yet
-        landed) plus orphan rows that :meth:`recover` prunes; it never
-        leaves a key present but unreadable.
+        them behind its chunking work. A crash mid-replace leaves every
+        replaced key reading its old bytes or (once the flip landed) its
+        new ones.
         """
         created_utc = created_utc or datetime.now(timezone.utc)
         chunk_rows, rolled, n_keys, total_bytes = self._prepare_batch(objects_df)
@@ -523,14 +522,14 @@ class DedupeEngine:
         reject the whole batch, matching DedupeLibrary.cs:203 semantics.
         Returns the number of objects written.
 
-        The commit phase holds the per-index composite-op lock:
-        per-table CAS alone cannot make the duplicate-key check and the
-        four table commits atomic TOGETHER, so two racing write_batch
-        calls with the same key could both pass the check (TOCTOU) and
-        double-ingest. Under the lock, the (cheap, pushdown-pruned)
-        existence probe re-runs against the now-stable objects table and
-        the commits follow — the batched analogue of the reference's
-        writer mutex. The expensive chunker pass
+        The commit phase holds the per-index composite-op lock: the
+        catalog flip makes the four table commits atomic, but not the
+        duplicate-key check together with them, so two racing
+        write_batch calls with the same key could both pass the check
+        (TOCTOU) and double-ingest. Under the lock, the (cheap,
+        pushdown-pruned) existence probe re-runs against the now-stable
+        objects table and the commit follows — the batched analogue of
+        the reference's writer mutex. The expensive chunker pass
         (:meth:`_prepare_batch`) stays outside the lock.
         """
         created_utc = created_utc or datetime.now(timezone.utc)
@@ -558,54 +557,37 @@ class DedupeEngine:
     def _commit_mutation(
         self, doomed: "list[str] | DataFrame | None" = None, batch: tuple | None = None
     ) -> DataFrame | None:
-        """The one commit sequence behind every mutation: the ``doomed``
-        keys (a Python list, or a 1-column ``object_key`` DataFrame)
-        leave the index and ``batch`` — ``(chunk_rows, rolled,
-        created_utc, n_objects, total_bytes)``: the cached chunk rows and
-        per-object rollup of :meth:`_prepare_batch` — enters it. A
-        delete passes only ``doomed``, an ingest only ``batch``, a
-        replace both. Returns the pinned set of GC'd chunk keys when keys
-        were doomed, else None. Caller holds the composite-op lock.
+        """The one commit behind every mutation: the ``doomed`` keys (a
+        Python list, or a 1-column ``object_key`` DataFrame) leave the
+        index and ``batch`` — ``(chunk_rows, rolled, created_utc,
+        n_objects, total_bytes)``: the cached chunk rows and per-object
+        rollup of :meth:`_prepare_batch` — enters it. A delete passes
+        only ``doomed``, an ingest only ``batch``, a replace both.
+        Returns the pinned set of GC'd chunk keys when keys were doomed,
+        else None. Caller holds the composite-op lock.
 
-        Every table is read once and committed once, each commit a CAS
-        read-modify-write re-derived from a fresh snapshot on conflict:
+        One :meth:`_cas` attempt does three things in order:
 
-        1. ``objects`` loses the doomed rows — the LOGICAL delete — while
-           the doomed map rows' per-chunk decrements are pinned (the map
-           commit below would otherwise pull them out from under a
-           retried merge);
-        2. then, overlapped on driver threads:
+        1. snapshot the four index tables;
+        2. stage every table's new part, overlapped on driver threads:
 
+           * ``objects`` = survivors ∪ the new rows with their ingest ids
+             (a plain append for an ingest);
            * ``object_map`` = survivors ∪ new rows (a plain append for an
              ingest);
-           * ``chunks`` = ONE refcount merge of increments − decrements,
-             pinning the chunks that fall below one reference; then
-             ``chunk_store`` = (store − those payloads) ∪ the absent new
-             payloads in one commit, or a plain append when nothing died
-             (an ingest's payload append does not wait for the merge);
-           * the new ``objects`` rows are staged as a part;
-        3. the staged ``objects`` part is attached.
+           * ``chunks`` = ONE refcount merge of increments − decrements;
+           * ``chunk_store`` = (store − the payloads of chunks the merge
+             drops below one reference, pinned) ∪ the absent new
+             payloads, or a plain append when nothing died;
+        3. make ONE catalog flip of the staged parts plus the ledger row.
 
-        COMMIT-ORDER INVARIANT: the ``objects`` row is the logical commit
-        point — reads resolve keys through it — so rows leave ``objects``
-        FIRST and enter it LAST. A reader can never observe a key whose
-        map/refcounts/payloads are incomplete or already torn down, no
-        matter where a crash lands. There is still no cross-table
-        transaction: a process dying between the two ``objects`` commits
-        leaves map/chunks/payload rows that belong to no live key (a
-        replaced key then reads as absent), which is exactly the shape
-        :meth:`recover` prunes — it never needs to touch ``objects``. A
-        crash after the last ``objects`` commit loses nothing. The graded
-        crash matrix (engine_crash_matrix) drives the ingest states
-        through ``_crash_after``, which runs the commits sequentially in
-        a fixed order.
-
-        The composite-op lock is what makes the payload GC safe: without
-        it, an ingest racing this GC could see a dying payload present,
-        skip inserting it, and lose it to the GC — a cross-table anomaly
-        no per-table CAS can exclude. The GC also re-filters its dead
-        set against the live chunks table, as defense in depth for
-        writers that bypass the lock.
+        Every replaced table is CAS-checked against its snapshot version
+        in that flip and the appends rebase, so a concurrent writer that
+        bypassed the op lock — one that revived a dying chunk, say —
+        refuses the whole flip and the attempt re-derives from fresh
+        snapshots. A crash anywhere before the flip leaves only
+        invisible staged parts; after it, the op is complete. No reader
+        and no :meth:`recover` ever sees a half-applied mutation.
 
         An ingest's output files are sized by the batch's total bytes
         (~64 MB targets): a small batch writes a handful of files instead
@@ -656,52 +638,31 @@ class DedupeEngine:
                 F.count("*").alias("inc"), F.first("length").alias("new_length")
             )
             new_payloads = chunk_rows.dropDuplicates(["chunk_key"])
+        op = "ingest" if doomed is None else "delete" if batch is None else "replace"
 
-        def remove_objects():
-            def attempt():
-                v, objs, _ = self.store.snapshot("objects", OBJECTS_SCHEMA)
-                self.store.commit("objects", survivors_of(objs), expected_version=v)
+        def attempt():
+            snaps = {t: self.store.snapshot(t, s) for t, s in _INDEX_SCHEMAS.items()}
+            v_obj, objs, obj_meta = snaps["objects"]
+            v_map, omap, _ = snaps["object_map"]
+            v_ch, chunks, _ = snaps["chunks"]
+            v_cs, cs, _ = snaps["chunk_store"]
 
-            self._cas(attempt)
-
-        def pin_decrements():
-            _, omap, _ = self.store.snapshot("object_map", OBJECT_MAP_SCHEMA)
-            holder["dec"], _ = _pin(
-                doomed_of(omap).groupBy("chunk_key").agg(F.count("*").alias("dec"))
-            )
-
-        def write_map():
-            if doomed is None:
-                self.store.append("object_map", new_map)
-                return
-
-            def attempt():
-                v, omap, _ = self.store.snapshot("object_map", OBJECT_MAP_SCHEMA)
-                rows = survivors_of(omap)
-                if batch is not None:
-                    rows = rows.unionByName(new_map)
-                self.store.commit("object_map", rows, expected_version=v)
-
-            self._cas(attempt)
-
-        def write_chunks():
-            # the refcount merge (O17/O18) is a read-modify-write, so it
-            # commits under CAS: a concurrent writer's increments can
-            # never be overwritten — the loser re-merges against the
-            # fresh table and retries
-            def attempt():
-                v, merged, _ = self.store.snapshot("chunks", CHUNKS_SCHEMA)
-                if batch is not None and v == 0:
+            def merged() -> DataFrame:
+                # the refcount merge (O17/O18): derived from the chunks
+                # snapshot, so the flip's CAS on chunks makes it a
+                # serializable read-modify-write
+                out = chunks
+                if batch is not None and v_ch == 0:
                     # first-load fast path: nothing to merge with, the
                     # increments ARE the table — skips the outer join's
                     # second shuffle side entirely
-                    merged = increments.select(
+                    out = increments.select(
                         "chunk_key",
                         F.col("new_length").cast("int").alias("length"),
                         F.col("inc").cast("long").alias("ref_count"),
                     )
                 elif batch is not None:
-                    merged = merged.join(increments, "chunk_key", "full_outer").select(
+                    out = out.join(increments, "chunk_key", "full_outer").select(
                         "chunk_key",
                         F.coalesce("length", "new_length").cast("int").alias("length"),
                         (F.coalesce(F.col("ref_count"), F.lit(0)) + F.coalesce(F.col("inc"), F.lit(0)))
@@ -709,188 +670,130 @@ class DedupeEngine:
                         .alias("ref_count"),
                     )
                 if doomed is not None:
-                    merged = merged.join(holder["dec"], "chunk_key", "left").select(
+                    dec = doomed_of(omap).groupBy("chunk_key").agg(F.count("*").alias("dec"))
+                    out = out.join(dec, "chunk_key", "left").select(
                         "chunk_key",
                         "length",
                         (F.col("ref_count") - F.coalesce(F.col("dec"), F.lit(0))).alias("ref_count"),
                     )
-                    # the pin fixes the GC set before the commits flip
-                    # manifests under it AND lets the payload GC and the
-                    # caller reuse one materialization; a RETRY drops the
-                    # previous attempt's pin first so contended mutations
-                    # don't hold abandoned copies of a (possibly huge) GC
-                    # set in executor storage for the session's lifetime
+                return out
+
+            def stage_objects():
+                if batch is None:
+                    return self.store.commit_entry(
+                        "objects", survivors_of(objs), expected_version=v_obj
+                    )
+                # the ingest-sequence high-water mark rides in the manifest
+                # (Delta table-properties style), so steady-state batches
+                # skip the max(id) scan job; the CAS on objects keeps two
+                # batches from assigning COLLIDING id ranges. meta_merge,
+                # not meta: a replace would wipe clustered_parts and turn
+                # the next incremental optimize() into a full refold (r12)
+                prev_max = obj_meta.get("max_id")
+                if prev_max is None:
+                    # v == 0 <=> the table has never been written: the
+                    # max(id) fallback exists for pre-meta LEGACY indexes
+                    prev_max = 0 if v_obj == 0 else objs.agg(F.max("id")).collect()[0][0] or 0
+                # the shared per-object rollup (already checkpointed — no
+                # second shuffle over the chunk cache) + ingest-sequence
+                # ids, assigned distributed (two-phase prefix scan — no
+                # single-task global window). comp_length preserves the
+                # reference quirk: sum of chunk lengths (DedupeLibrary.cs:233)
+                new_objects = (
+                    assign_ingest_ids(
+                        rolled.select(
+                            "object_key",
+                            "original_length",
+                            F.col("original_length").alias("comp_length"),
+                            "chunk_count",
+                        ),
+                        prev_max,
+                    )
+                    .withColumn("created_utc", F.lit(created_utc))
+                    .select("id", "object_key", "original_length", "comp_length", "chunk_count", "created_utc")
+                )
+                high = {"max_id": int(prev_max) + n_objects}
+                if doomed is None:
+                    return self.store.append_entry(
+                        "objects", new_objects, expected_version=v_obj, meta_merge=high
+                    )
+                return self.store.commit_entry(
+                    "objects",
+                    survivors_of(objs).unionByName(new_objects),
+                    expected_version=v_obj,
+                    meta_merge=high,
+                )
+
+            def stage_map():
+                if doomed is None:
+                    return self.store.append_entry("object_map", new_map)
+                rows = survivors_of(omap)
+                if batch is not None:
+                    rows = rows.unionByName(new_map)
+                return self.store.commit_entry("object_map", rows, expected_version=v_map)
+
+            def stage_chunks():
+                rows = merged()
+                if doomed is not None:
+                    rows = rows.filter(F.col("ref_count") >= 1)
+                return self.store.commit_entry("chunks", _sized(rows), expected_version=v_ch)
+
+            def stage_payloads():
+                # content-addressed storage is the physical dedup (same key
+                # => stored once, DedupeLibrary.cs:628): new payloads are
+                # inserted if absent, dead ones GC'd, both derived from the
+                # chunk_store snapshot the flip CAS-checks
+                n_dead = 0
+                if doomed is not None:
+                    # the pin fixes the GC set for the payload rewrite AND
+                    # the caller's return value; a RETRY drops the previous
+                    # attempt's pin first so contended mutations don't hold
+                    # abandoned copies of a (possibly huge) GC set
                     prev = holder.pop("gc", None)
                     if prev is not None:
                         try:
                             prev.unpersist()
                         except Exception:
                             pass  # best-effort; ContextCleaner reclaims eventually
-                    holder["gc"], holder["n_dead"] = _pin(
-                        merged.filter(F.col("ref_count") < 1).select("chunk_key")
+                    holder["gc"], n_dead = _pin(
+                        merged().filter(F.col("ref_count") < 1).select("chunk_key")
                     )
-                    merged = merged.filter(F.col("ref_count") >= 1)
-                self.store.commit("chunks", _sized(merged), expected_version=v)
-
-            self._cas(attempt)
-
-        def write_payloads():
-            # content-addressed storage is the physical dedup (same key =>
-            # stored once, DedupeLibrary.cs:628): new payloads are
-            # inserted if absent, dead ones GC'd — one CAS-guarded
-            # commit, since both sets derive from a snapshot (two batches
-            # sharing a chunk key could otherwise both see it absent and
-            # store it twice)
-            n_dead = holder.get("n_dead", 0)
-            if batch is None and not n_dead:
-                return
-
-            def attempt():
-                v, cs, _ = self.store.snapshot("chunk_store", CHUNK_STORE_SCHEMA)
                 rows = None
                 if batch is not None:
                     absent = new_payloads
-                    if v > 0:  # first load: nothing absent
+                    if v_cs > 0:  # first load: nothing absent
                         absent = absent.join(cs.select("chunk_key"), "chunk_key", "left_anti")
                     rows = _sized(absent.select("chunk_key", F.col("chunk_data").alias("data")))
                 if not n_dead:
-                    self.store.append("chunk_store", rows, expected_version=v)
-                    return
+                    if rows is None:
+                        return None
+                    return self.store.append_entry("chunk_store", rows, expected_version=v_cs)
                 # anti-join, not isin(<collected list>): a mass delete can
-                # GC millions of chunks. Re-filter against the LIVE chunks
-                # table (the merge above has committed): a chunk revived
-                # by a writer that bypassed the op lock keeps its payload.
-                dead = holder["gc"].join(self.chunks.select("chunk_key"), "chunk_key", "left_anti")
+                # GC millions of chunks
+                dead = holder["gc"]
                 if n_dead <= GC_BROADCAST_KEYS:
                     # the pin's size estimate is the merge join's (a
-                    # product of both sides); its measured count says
-                    # the set is small, so the payload scan stays a
-                    # broadcast anti-join instead of shuffling the store
+                    # product of both sides); its measured count says the
+                    # set is small, so the payload scan stays a broadcast
+                    # anti-join instead of shuffling the store
                     dead = F.broadcast(dead)
                 kept = cs.join(dead, "chunk_key", "left_anti")
-                self.store.commit(
+                return self.store.commit_entry(
                     "chunk_store",
                     kept if rows is None else kept.unionByName(rows),
-                    expected_version=v,
+                    expected_version=v_cs,
                 )
 
-            self._cas(attempt)
+            # every thread is joined before any error is raised; a second
+            # failed stage rides along as a note on the first
+            with _fix_pool(4) as (pool, fixes):
+                fixes += [
+                    pool.submit(fn)
+                    for fn in (stage_objects, stage_map, stage_chunks, stage_payloads)
+                ]
+            self._publish([f.result() for f in fixes], op)
 
-        def derive_objects():
-            """Snapshot-derived objects rows: (version, rows, prev_max).
-            Shared by the staged path and the append fallback."""
-            v, objs, meta = self.store.snapshot("objects", OBJECTS_SCHEMA)
-            prev_max = meta.get("max_id")
-            if prev_max is None:
-                # v == 0 <=> the table has never been written: the
-                # max(id) fallback exists for pre-meta LEGACY indexes,
-                # and running it against a fresh store's empty frame
-                # cost one pointless Spark job on every first ingest
-                prev_max = (
-                    0 if v == 0 else objs.agg(F.max("id")).collect()[0][0] or 0
-                )
-            # the shared per-object rollup (already checkpointed — no
-            # second shuffle over the chunk cache) + ingest-sequence ids,
-            # assigned distributed (two-phase prefix scan — no
-            # single-task global window). comp_length preserves the
-            # reference quirk: sum of chunk lengths (DedupeLibrary.cs:233)
-            new_objects = (
-                assign_ingest_ids(
-                    rolled.select(
-                        "object_key",
-                        "original_length",
-                        F.col("original_length").alias("comp_length"),
-                        "chunk_count",
-                    ),
-                    prev_max,
-                )
-                .withColumn("created_utc", F.lit(created_utc))
-                .select("id", "object_key", "original_length", "comp_length", "chunk_count", "created_utc")
-            )
-            return v, new_objects, int(prev_max)
-
-        def write_objects():
-            # the ingest-sequence high-water mark rides in the manifest
-            # (Delta table-properties style), so steady-state batches skip
-            # the max(id) scan job. CAS-guarded: two concurrent batches
-            # reading the same max_id would otherwise assign COLLIDING id
-            # ranges — the loser rebases on the winner's high-water mark.
-            # meta_merge, not meta: a replace here would wipe
-            # clustered_parts and turn the next incremental optimize()
-            # into a full objects refold (r12)
-            def attempt():
-                v, new_objects, prev_max = derive_objects()
-                self.store.append(
-                    "objects",
-                    new_objects,
-                    meta_merge={"max_id": prev_max + n_objects},
-                    expected_version=v,
-                )
-
-            self._cas(attempt)
-
-        def stage_objects():
-            # the EXPENSIVE half of the objects commit (id assignment +
-            # parquet part write) overlaps the other commits; only the
-            # manifest FLIP — no Spark job — waits for them
-            v, new_objects, prev_max = derive_objects()
-            return v, prev_max, self.store.stage_part("objects", new_objects, v + 1)
-
-        if doomed is not None:
-            # 1. out of objects first; the decrement pin reads only the
-            # map, which nothing has touched yet
-            with _fix_pool() as (pool, fixes):
-                fixes += [pool.submit(remove_objects), pool.submit(pin_decrements)]
-
-        crash_after = getattr(self, "_crash_after", None)
-        if crash_after is not None and batch is not None:
-            # crash-matrix path: commits run SEQUENTIALLY in a fixed
-            # order so "died right after table X committed" is a
-            # deterministic, reproducible state (the overlapped path
-            # would leave the other tables' outcomes racy). Raises
-            # SimulatedCrash with no cleanup — exactly a process kill.
-            for name, fn in (
-                ("object_map", write_map),
-                ("chunks", write_chunks),
-                ("chunk_store", write_payloads),
-                ("objects", write_objects),
-            ):
-                fn()
-                if name == crash_after:
-                    raise SimulatedCrash(name)
-            raise ValueError(f"unknown crash point: {crash_after!r}")
-
-        def chunks_then_payloads():
-            write_chunks()
-            write_payloads()
-
-        # 2. every thread is joined before any error is raised; a second
-        # failed commit rides along as a note on the first
-        steps = [write_map] + (
-            [write_chunks, write_payloads] if doomed is None else [chunks_then_payloads]
-        )
-        with _fix_pool(4) as (pool, fixes):
-            if batch is not None:
-                staged = pool.submit(stage_objects)
-                fixes.append(staged)
-            fixes += [pool.submit(fn) for fn in steps]
-        if batch is not None:
-            # 3. into objects last (see the commit-order invariant)
-            v, prev_max, path = staged.result()
-            try:
-                self.store.attach_part(
-                    "objects",
-                    path,
-                    meta_merge={"max_id": prev_max + n_objects},
-                    expected_version=v,
-                )
-            except ConcurrentWriteError:
-                # another writer advanced objects between stage and attach
-                # (attach discarded our staged part): the staged ids are
-                # stale — re-derive and append under the ordinary CAS loop
-                write_objects()
-        op = "ingest" if doomed is None else "delete" if batch is None else "replace"
-        self._record_checkpoint(op)
+        self._cas(attempt)
         return holder.get("gc")
 
     # a restore can only reach points whose parquet parts are still in
@@ -921,39 +824,30 @@ class DedupeEngine:
     #: task reads one file
     OPTIMIZE_TARGET_FILE_BYTES = 128 << 20
 
-    def _record_checkpoint(self, op: str) -> None:
-        """Append one consistency-point row to the ``checkpoints``
-        ledger: the four table versions as of now. Called at the END of
-        a completed composite op, INSIDE its critical section — the
-        lock is what makes the tuple a true cross-table cut (no other
-        writer can advance a table between the four reads). A crash
-        mid-op leaves no ledger row, so the ledger only ever lists
-        states that were fully committed; :meth:`clone` with ``at=``
-        restores them, subject to the store's part-retention window.
+    def _checkpoint_entry(self, op: str) -> tuple:
+        """The flip entry that appends one consistency-point row to the
+        ``checkpoints`` ledger: the four table versions this flip
+        publishes. Every composite op puts it LAST in its one catalog
+        flip, so the row names the op's own after-state — a true
+        cross-table cut, and a crash mid-op leaves no row. :meth:`clone`
+        with ``at=`` and :meth:`restore` return to these points, subject
+        to the store's part-retention window.
 
         The ledger lives in the checkpoints table's manifest META, not
-        in parquet rows: one transactional manifest write, zero Spark
-        jobs — a 1-row parquet append here would land a full Spark job
-        on EVERY ingest's fixed-cost floor (measured +1.3 s on the
-        6 MB small-batch bench row, whose cost is the fixed floor by
-        design)."""
-        versions = {
-            t: self.store.current_version(t)
-            for t in ("objects", "object_map", "chunks", "chunk_store")
-        }
+        in parquet rows: zero Spark jobs — a 1-row parquet append here
+        would land a full Spark job on EVERY ingest's fixed-cost floor
+        (measured +1.3 s on the 6 MB small-batch bench row, whose cost
+        is the fixed floor by design)."""
         stamp = datetime.now(timezone.utc).isoformat()
 
-        def bump(meta: dict) -> dict:
+        def bump(meta: dict, catalog: dict) -> dict:
             seq = int(meta.get("next_seq", 1))
             rows = list(meta.get("rows") or [])
             rows.append(
                 {
                     "seq": seq,
                     "op": op,
-                    "objects_v": versions["objects"],
-                    "object_map_v": versions["object_map"],
-                    "chunks_v": versions["chunks"],
-                    "chunk_store_v": versions["chunk_store"],
+                    **{f"{t}_v": catalog.get(t, 0) for t in _INDEX_SCHEMAS},
                     "created_utc": stamp,
                 }
             )
@@ -962,7 +856,21 @@ class DedupeEngine:
                 "rows": rows[-self.CHECKPOINT_RETAIN:],
             }
 
-        self.store.update_meta("checkpoints", bump)
+        return self.store.meta_entry("checkpoints", bump)
+
+    def _publish(self, entries: list, op: str) -> dict[str, dict]:
+        """The one catalog flip of a composite op: its staged
+        ``entries`` plus its ledger row (:meth:`_checkpoint_entry`);
+        returns the published states. When nothing was staged — a clean
+        maintenance pass, an optimize with nothing to fold — there is no
+        flip and no row: the previous row still names this exact
+        state. Keyed on staged entries, not row deltas: the
+        stale-refcount fix rewrites chunks with ``deltas['chunks'] ==
+        0``, and a restore/clone to "latest" must not roll that repair
+        back by landing on the pre-repair ledger row."""
+        if not any(entries):
+            return {}
+        return self.store._flip(entries + [self._checkpoint_entry(op)])
 
     @property
     def checkpoints(self) -> DataFrame:
@@ -1115,9 +1023,9 @@ class DedupeEngine:
         addresses (dedup reuse) is fetched once and concatenated at
         each site.
 
-        Existence still gates on the ``objects`` table — it commits
-        strictly LAST (the logical commit point), so a crash that left
-        orphan map rows must read as not-found, never as data.
+        Existence gates on the ``objects`` table: map rows planted
+        outside the engine's commits (the orphans :meth:`recover`
+        prunes) must read as not-found, never as data.
         """
         if not self.exists(key):
             raise ObjectNotFoundError(key)
@@ -1263,8 +1171,8 @@ class DedupeEngine:
         The decrement MERGE aggregates per chunk_key first (the batched
         form of SqliteProvider.cs:533-556); chunks reaching ref_count < 1
         are dropped and their payloads deleted from chunk_store — the
-        anti-join GC of SURVEY §3.3. The commits are
-        :meth:`_commit_mutation`'s, with ``objects`` first.
+        anti-join GC of SURVEY §3.3 — all in :meth:`_commit_mutation`'s
+        one catalog flip.
 
         ``keys`` is either a Python list (point deletes: ``isin`` pushes
         the key filter into every table scan, and the GC'd chunk keys
@@ -1278,9 +1186,9 @@ class DedupeEngine:
         materializes on the driver, which is what a millions-of-keys
         replace at 100 TB requires).
 
-        ``localCheckpoint`` pins a DataFrame key set before the table
-        commits flip manifests under it (the store retains old parts for
-        8 versions, but a returned lazy plan must not depend on that
+        ``localCheckpoint`` pins a DataFrame key set before the commit
+        flips manifests under it (the store retains old parts for 8
+        versions, but a returned lazy plan must not depend on that
         window); the GC set is pinned the same way.
         """
         if isinstance(keys, DataFrame):
@@ -1377,7 +1285,8 @@ class DedupeEngine:
         consistency point instead of each table's current manifest.
         The default reads the four tables' manifests independently, so
         a scrub racing a live ingest can observe a TORN cross-table
-        state (e.g. object_map committed, chunks not yet) and report
+        state (e.g. object_map read before an ingest's flip, chunks
+        after it) and report
         violations that exist only in the interleaving — at 100 TB,
         where scrubs always run concurrent with ingest, that's a
         paging false-alarm per batch. The consistent mode takes no
@@ -1640,12 +1549,13 @@ class DedupeEngine:
 
         The payload GC and the canonicalization come from one per-key
         aggregate over chunk_store and land in one chunk_store rewrite;
-        :meth:`recover` is not called. So a pass that changed anything
-        records ONE ``repair`` point in the checkpoints ledger, and no
-        ``recover`` point for an intermediate post-GC state: a
-        :meth:`restore` or ``clone(at=)`` lands on the state before the
-        repair or after it, never between the GC and the
-        canonicalization. An error in any overlapped fix commit is
+        :meth:`recover` is not called. Every fix is staged (the map and
+        chunks fixes overlapped on driver threads with the chunk_store
+        scan) and a pass that changed anything publishes them all in ONE
+        catalog flip with ONE ``repair`` point in the checkpoints
+        ledger: a crash, a :meth:`restore` or a ``clone(at=)`` lands on
+        the state before the repair or after it, never between the GC
+        and the canonicalization. An error in any overlapped fix is
         raised, also when the chunk_store phase failed first.
 
         A chunk whose ONLY payload row is corrupt cannot be healed from
@@ -1661,7 +1571,7 @@ class DedupeEngine:
         # thread (and re-raises its error) before the lock releases
         with self.store.op_lock():
             with _fix_pool() as (pool, fixes):
-                deltas, rebuilt, committed_mc = self._recover_map_chunks(pool, fixes)
+                deltas, rebuilt = self._recover_map_chunks(pool, fixes)
                 # FUSED chunk_store phase (r13 session 3, guide §1.2/§2.6):
                 # repair used to run recover()'s membership scan + GC
                 # rewrite and THEN a second sha-detection scan + a second
@@ -1733,6 +1643,7 @@ class DedupeEngine:
                 # the post-rewrite delta needs no second table count; with
                 # nothing bad it equals n_rows and the delta is 0
                 deltas["chunk_store_canonicalized"] = n_good_keys - n_rows
+                cs_entry = None
                 if n_dead or n_bad:
                     good = chunk_key_col(F.col("data")).eqNullSafe(F.col("chunk_key"))
 
@@ -1787,18 +1698,15 @@ class DedupeEngine:
                         return out
 
                     if affected is not None and len(affected) < len(live_parts):
-                        self.store.compact_parts(
+                        cs_entry = self.store.compaction_entry(
                             "chunk_store", affected, layout=fused_layout
                         )
                     else:
                         dead_rows = None  # full path: distributed semi-join
-                        self.store.commit(
+                        cs_entry = self.store.commit_entry(
                             "chunk_store", fused_layout(cstore), expected_version=v_cs
                         )
-            # every overlapped fix has landed (or raised) before the
-            # ledger row claims the repaired state exists
-            if committed_mc or n_dead or n_bad:
-                self._record_checkpoint("repair")
+            self._publish([f.result() for f in fixes] + [cs_entry], "repair")
         return deltas
 
     def vacuum(self, grace_seconds: float | None = None) -> dict[str, dict]:
@@ -1855,10 +1763,15 @@ class DedupeEngine:
         already clustered are tracked in the table meta
         (``clustered_parts``) and skipped with zero IO; a full
         ``optimize()`` on rotation re-tightens the layout to one part
-        set. A completed pass records a consistency point, so a quiet
-        window of repeated compactions can never expire the newest
-        ledger point's versions out from under ``verify(consistent=
-        True)`` / ``restore()``.
+        set.
+
+        The four tables' rewrites are staged overlapped on driver
+        threads and published in ONE catalog flip together with a
+        consistency point, so a quiet window of repeated compactions can
+        never expire the newest ledger point's versions out from under
+        ``verify(consistent=True)`` / ``restore()``. A concurrent flip
+        that retired one of the inputs refuses the whole flip, and the
+        pass re-selects its inputs from fresh manifests.
         """
         import os
 
@@ -1868,92 +1781,66 @@ class DedupeEngine:
             "chunks": "chunk_key",
             "chunk_store": "chunk_key",
         }
-        out: dict[str, int] = {}
+        tables = [t for t in _INDEX_SCHEMAS if self.store.exists(t)]
 
-        def compact_one(name: str, key: str) -> int:
-            def attempt():
-                # re-derived per CAS attempt: a lost race means the part
-                # list moved and the rewrite subset must be re-selected
-                parts = self.store.live_parts(name)
-                clustered = set(
-                    self.store.table_meta(name).get("clustered_parts", [])
-                )
-                todo = (
-                    [p for p in parts if os.path.basename(p) not in clustered]
-                    if incremental
-                    else parts
-                )
-                if not todo:
-                    return 0  # already fully clustered: zero IO, no flip
-                # explicit file count from the subset's on-disk size (no
-                # data pass): AQE coalesces an implicit range repartition
-                # to one partition at small sizes, which would leave a
-                # single giant file at scale — the layout must be
-                # deterministic
-                n_files = max(
-                    1,
-                    -(-self.store.parts_bytes(todo) // self.OPTIMIZE_TARGET_FILE_BYTES),
-                )
+        def stage_one(name: str):
+            # re-derived per CAS attempt: a lost race means the part
+            # list moved and the rewrite subset must be re-selected
+            key = cluster_key[name]
+            parts = self.store.live_parts(name)
+            clustered = set(self.store.table_meta(name).get("clustered_parts", []))
+            todo = (
+                [p for p in parts if os.path.basename(p) not in clustered]
+                if incremental
+                else parts
+            )
+            if not todo:
+                return None  # already fully clustered: zero IO
+            # explicit file count from the subset's on-disk size (no
+            # data pass): AQE coalesces an implicit range repartition
+            # to one partition at small sizes, which would leave a
+            # single giant file at scale — the layout must be
+            # deterministic
+            n_files = max(
+                1,
+                -(-self.store.parts_bytes(todo) // self.OPTIMIZE_TARGET_FILE_BYTES),
+            )
 
-                def meta_fn(meta, new_parts, new_part):
-                    live = {os.path.basename(p) for p in new_parts}
-                    kept = [
-                        b for b in meta.get("clustered_parts", []) if b in live
-                    ]
-                    meta["clustered_parts"] = kept + [os.path.basename(new_part)]
-                    return meta
+            def meta_fn(meta, new_parts, new_part):
+                live = {os.path.basename(p) for p in new_parts}
+                kept = [b for b in meta.get("clustered_parts", []) if b in live]
+                meta["clustered_parts"] = kept + [os.path.basename(new_part)]
+                return meta
 
-                # single-file folds (every small-table fold, and any
-                # incremental fold under the target file size) need no
-                # range exchange: coalesce(1) + sortWithinPartitions
-                # yields the identical one sorted part with zero
-                # shuffle. Multi-file folds keep repartitionByRange —
-                # the range bounds are what make each file a narrow,
-                # prunable key span.
-                if n_files == 1:
-                    layout = lambda df, k=key: df.coalesce(1).sortWithinPartitions(k)
-                else:
-                    layout = lambda df, k=key, n=n_files: df.repartitionByRange(
-                        n, F.col(k)
-                    ).sortWithinPartitions(k)
-                return self.store.compact_parts(
-                    name,
-                    todo,
-                    layout=layout,
-                    meta_fn=meta_fn,
-                )
+            # single-file folds (every small-table fold, and any
+            # incremental fold under the target file size) need no
+            # range exchange: coalesce(1) + sortWithinPartitions
+            # yields the identical one sorted part with zero
+            # shuffle. Multi-file folds keep repartitionByRange —
+            # the range bounds are what make each file a narrow,
+            # prunable key span.
+            if n_files == 1:
+                layout = lambda df: df.coalesce(1).sortWithinPartitions(key)
+            else:
+                layout = lambda df: df.repartitionByRange(
+                    n_files, F.col(key)
+                ).sortWithinPartitions(key)
+            return self.store.compaction_entry(name, todo, layout=layout, meta_fn=meta_fn)
 
-            return self._cas(attempt)
-
-        # r12 (guide §2.6 — overlap independent jobs): the four tables'
-        # compactions are independent per-table CAS commits; running
-        # them from driver threads overlaps their Spark jobs and
-        # manifest I/O exactly like _commit_mutation's concurrent table
-        # writes. This matters most for the INCREMENTAL quiet-window
-        # pass, whose cost is dominated by four serial small-fold fixed
-        # floors — the scale gate's incr/full seconds fraction tracks
-        # O(append bytes) more honestly once the fixed floors overlap.
-        tables = [
-            (name, cluster_key[name])
-            for name in ("objects", "object_map", "chunks", "chunk_store")
-            if self.store.exists(name)
-        ]
-        if tables:
+        def attempt() -> dict[str, int]:
+            # r12 (guide §2.6 — overlap independent jobs): the four
+            # compactions are independent Spark jobs; staging them from
+            # driver threads overlaps their jobs. This matters most for
+            # the INCREMENTAL quiet-window pass, whose cost is dominated
+            # by four small-fold fixed floors.
             with _fix_pool(len(tables)) as (pool, fixes):
-                fixes += [pool.submit(compact_one, name, key) for name, key in tables]
-            out = {name: f.result() for (name, _), f in zip(tables, fixes)}
-        if any(out.values()) and all(
-            self.store.exists(t)
-            for t in ("objects", "object_map", "chunks", "chunk_store")
-        ):
-            # under the composite-op lock so the four version reads form
-            # a true cross-table cut; a checkpoint here keeps the newest
-            # ledger point's versions retained through any run of
-            # quiet-window compactions (the consistent-verify /
-            # restore() retention edge, round-11 verdict item #3)
-            with self.store.op_lock():
-                self._record_checkpoint("optimize")
-        return out
+                fixes += [pool.submit(stage_one, name) for name in tables]
+            states = self._publish([f.result() for f in fixes], "optimize")
+            return {name: state["version"] for name, state in states.items() if name in tables}
+
+        if not tables:
+            return {}
+        return {name: 0 for name in tables} | self._cas(attempt)
 
     def clone(
         self,
@@ -1974,21 +1861,23 @@ class DedupeEngine:
         the version-history window, so writers are blocked for
         milliseconds, not for the hours a 100 TB copy takes. (If the
         source advances past the retention window mid-copy the read
-        fails loudly rather than producing a torn clone.) Each table
-        lands as the destination's version-1 commit through the store
-        contract — distributed part writes, nothing driver-side — so
-        cloning ACROSS backends (file-manifest -> SQLite catalog or
-        back) works by construction: pass ``store_cls``. The objects
-        high-water mark carries over, so ingest ids in the clone
-        continue above the source's.
+        fails loudly rather than producing a torn clone.) The five
+        tables are staged overlapped at the destination — distributed
+        part writes, nothing driver-side — and land in ONE catalog flip
+        as its version-1 state, so a crashed clone leaves no index at
+        ``dest_root`` (only unreferenced part dirs). Cloning ACROSS
+        backends (file-manifest -> SQLite catalog or back) works by
+        construction: pass ``store_cls``. The objects high-water mark
+        carries over, so ingest ids in the clone continue above the
+        source's.
 
         ``at=seq`` clones a HISTORICAL state instead: the consistency
         point with that ledger sequence number (see
-        :attr:`checkpoints` / :meth:`_record_checkpoint`) — true
+        :attr:`checkpoints` / :meth:`_checkpoint_entry`) — true
         point-in-time restore on independently-versioned tables,
-        because the ledger row was written inside the op's critical
-        section and therefore names a real cross-table cut, never a
-        torn mix of two ops. Subject to the store's part-retention
+        because the ledger row was published in the op's own catalog
+        flip and therefore names a real cross-table cut, never a torn
+        mix of two ops. Subject to the store's part-retention
         window: restoring a point whose parts have been retired fails
         loudly.
         """
@@ -2054,21 +1943,33 @@ class DedupeEngine:
                 }
         if max_id is None:
             max_id = objs.agg(F.max("id")).collect()[0][0] or 0
-        dest.commit("config", snaps["config"])
-        dest.commit("objects", objs, meta={"max_id": int(max_id)})
-        for name in ("object_map", "chunks", "chunk_store"):
-            dest.commit(name, snaps[name])
+        snaps["objects"] = objs
+        with _fix_pool(len(snaps)) as (pool, fixes):
+            fixes += [
+                pool.submit(
+                    dest.commit_entry,
+                    name,
+                    df,
+                    {"max_id": int(max_id)} if name == "objects" else None,
+                )
+                for name, df in snaps.items()
+            ]
+        dest._flip([f.result() for f in fixes])
         return DedupeEngine(self.spark, dest, self.settings)
 
     def restore(self, at: int) -> dict[str, int]:
         """Roll the index BACK to consistency point ``at`` IN PLACE —
         the undo verb (:meth:`clone` with ``at=`` builds a copy; this
         re-points the live index). All four tables are re-pointed at
-        the recorded versions' part lists under one composite-op
-        critical section via :meth:`IndexStore.restore_version` —
-        metadata-only, no payload bytes move, so a 100 TB rollback is
-        four manifest writes. History is preserved and the restore
-        records its own consistency point, so a rollback is visible in
+        the recorded versions' part lists in ONE catalog flip, together
+        with the restore's own consistency point — metadata-only, no
+        payload bytes move, so a 100 TB rollback is one manifest write.
+        All or nothing: tables version at different rates and the
+        ledger retains more rows than the store retains manifest
+        versions, so a point can be listed while some of its versions
+        have expired; each table's version is looked up inside the flip
+        and an expired one raises ValueError before anything is
+        published. History is preserved, so a rollback is visible in
         the ledger and is itself undoable while retained. Returns the
         new manifest version per table.
         """
@@ -2081,40 +1982,19 @@ class DedupeEngine:
             if not point:
                 raise ValueError(f"no consistency point with seq={at}")
             p = point[0]
-            # ALL-OR-NOTHING admission: tables version at different rates
-            # (delete with an empty GC set skips chunk_store; repair bumps
-            # only chunks) and the ledger retains more rows than the store
-            # retains manifest versions, so a point can be reachable in the
-            # ledger while SOME of its four versions have expired. Failing
-            # on table three after re-pointing tables one and two would
-            # leave the live index torn — and a later recover() would then
-            # GC payloads for the torn-away objects. Validate every version
-            # is still retained BEFORE the first manifest flip.
-            expired = [
-                (name, int(p[f"{name}_v"]))
-                for name in ("objects", "object_map", "chunks", "chunk_store")
-                if int(p[f"{name}_v"]) not in self.store.versions(name)
-            ]
-            if expired:
-                raise ValueError(
-                    f"consistency point seq={at} is no longer restorable: "
-                    f"expired table versions {expired} (the store retains "
-                    "fewer manifest versions than the checkpoint ledger "
-                    "retains rows; clone from a newer point instead)"
-                )
-            out = {
-                name: self.store.restore_version(name, int(p[f"{name}_v"]))
-                for name in ("objects", "object_map", "chunks", "chunk_store")
-            }
-            self._record_checkpoint("restore")
-        return out
+            states = self._publish(
+                [self.store.restore_entry(t, int(p[f"{t}_v"])) for t in _INDEX_SCHEMAS],
+                "restore",
+            )
+        return {t: states[t]["version"] for t in _INDEX_SCHEMAS}
 
-    def _surgical_delete(self, name: str, col: str, doomed_keys) -> bool:
-        """Drop exactly the rows whose ``col`` is one of the keys in
-        ``doomed_keys`` (a 1-column DataFrame) by rewriting ONLY the
-        live parts that may contain them (span + Bloom part selection,
-        :meth:`IndexStore.parts_for_keys`) — the O(damage) form of a
-        maintenance delete. Returns False (nothing rewritten) when the
+    def _surgical_entry(self, name: str, col: str, doomed_keys) -> tuple | None:
+        """Stage the drop of exactly the rows whose ``col`` is one of the
+        keys in ``doomed_keys`` (a 1-column DataFrame) by rewriting ONLY
+        the live parts that may contain them (span + Bloom part
+        selection, :meth:`IndexStore.parts_for_keys`) — the O(damage)
+        form of a maintenance delete. Returns the compaction's flip
+        entry, or None (nothing staged) when the table is small, the
         doomed-key set exceeds :attr:`REPAIR_SURGICAL_MAX_KEYS` or part
         pruning selects every live part anyway — callers then fall back
         to their full-table rewrite, which is the honest path for
@@ -2124,39 +2004,35 @@ class DedupeEngine:
         of them and healthy parts keep their bytes untouched."""
         live = self.store.live_parts(name)
         if self.store.parts_bytes(live) < self.SURGICAL_MIN_BYTES:
-            return False  # small table: a full rewrite is cheaper
+            return None  # small table: a full rewrite is cheaper
         rows = doomed_keys.limit(self.REPAIR_SURGICAL_MAX_KEYS + 1).collect()
         if not rows or len(rows) > self.REPAIR_SURGICAL_MAX_KEYS:
-            return False
+            return None
         doomed = [r[0] for r in rows]
         affected = self.store.parts_for_keys(name, col, doomed)
         if len(affected) >= len(live):
-            return False
+            return None
         doomed_df = self.spark.createDataFrame(
             [(k,) for k in doomed], f"{col} string"
         )
-        self.store.compact_parts(
+        return self.store.compaction_entry(
             name,
             affected,
             layout=lambda df: df.join(F.broadcast(doomed_df), col, "left_anti"),
         )
-        return True
 
-    def _recover_map_chunks(
-        self, pool, fixes: list
-    ) -> tuple[dict[str, int], DataFrame, bool]:
+    def _recover_map_chunks(self, pool, fixes: list) -> tuple[dict[str, int], DataFrame]:
         """The object_map + chunks phases shared by :meth:`recover` and
         :meth:`repair`: verify/prune map rows against ``objects`` and
-        rebuild chunk ref_counts from the surviving map. Fix commits are
-        submitted to ``pool`` (appended to ``fixes``); the CALLER joins
-        them before recording any ledger row. Returns ``(deltas,
-        rebuilt, committed)`` where ``rebuilt`` is the post-rebuild
-        chunks frame — it reads only eagerly-checkpointed rows, so it is
-        safe to consume while the submitted fixes are still committing.
-        Caller must hold the composite-op lock.
+        rebuild chunk ref_counts from the surviving map. Each fix is
+        staged on ``pool`` (its future, which returns the flip entry, is
+        appended to ``fixes``); the CALLER joins them and publishes every
+        entry in one flip. Returns ``(deltas, rebuilt)`` where
+        ``rebuilt`` is the post-rebuild chunks frame — it reads only
+        eagerly-checkpointed rows, so it is safe to consume while the
+        fixes are still staging. Caller must hold the composite-op lock.
         """
         deltas: dict[str, int] = {}
-        committed = False
         keys = self.objects.select("object_key")
         v_map, omap, _ = self.store.snapshot("object_map", OBJECT_MAP_SCHEMA)
         # r13 (guide §1.2 — don't pay three jobs for two numbers):
@@ -2179,26 +2055,22 @@ class DedupeEngine:
             # 100 TB pruning them must not rewrite the whole map
             # table. Surgical part swap when the orphan key set is
             # bounded; full rewrite (the old path) otherwise.
-            # r13 (guide §2.6): each table's fix commits from a
-            # driver thread while the NEXT table's verification
-            # computes — the chunks rebuild reads only the pinned
-            # valid_map and its own immutable snapshot, never the
-            # table another thread is committing, and the ledger
-            # row records strictly after every fix has landed.
+            # r13 (guide §2.6): each table's fix stages from a driver
+            # thread while the NEXT table's verification computes — the
+            # chunks rebuild reads only the pinned valid_map and its
+            # own immutable snapshot
             def fix_map():
-                if not self._surgical_delete(
+                return self._surgical_entry(
                     "object_map",
                     "object_key",
                     ann_map.filter(F.col("_live").isNull())
                     .select("object_key")
                     .distinct(),
-                ):
-                    self.store.commit(
-                        "object_map", valid_map, expected_version=v_map
-                    )
+                ) or self.store.commit_entry(
+                    "object_map", valid_map, expected_version=v_map
+                )
 
             fixes.append(pool.submit(fix_map))
-            committed = True
 
         # chunks: rebuild refcounts from the surviving map and commit
         # whenever ANY row differs — count drift alone would miss a
@@ -2250,26 +2122,25 @@ class DedupeEngine:
         if deltas["chunks"] or stale:
             fixes.append(
                 pool.submit(
-                    self.store.commit, "chunks", rebuilt, expected_version=v_ch
+                    self.store.commit_entry, "chunks", rebuilt, expected_version=v_ch
                 )
             )
-            committed = True
-        return deltas, rebuilt, committed
+        return deltas, rebuilt
 
     def recover(self) -> dict[str, int]:
-        """Repair a partially-committed ingest, delete or replace after
-        a crash.
+        """Make object_map, chunks and chunk_store consistent with
+        ``objects`` again after damage made OUTSIDE the engine's own
+        commits — rows written by a tool that bypassed the engine, a
+        hand-edited table, a partial restore of files.
 
-        :meth:`_commit_mutation` commits the four tables with no
-        cross-table transaction, but always in one order: rows leave
-        ``objects`` (the logical commit point — an object does not EXIST
-        without its objects row) FIRST and enter it LAST. So a process
-        dying mid-ingest, mid-delete or mid-replace leaves one shape
-        only: object_map/chunks/chunk_store rows for keys that are not
-        (or no longer) in ``objects``. This maintenance scan,
-        run under the composite-op lock during a quiet window (or on
-        open-after-crash), makes the other three tables consistent with
-        ``objects`` again:
+        No crash of an engine verb leaves partial state: every
+        composite op publishes all its tables in one catalog flip, so a
+        crash shows the op's before-state or its after-state and this
+        pass then finds nothing (all-zero deltas). ``objects`` is the
+        logical commit point — an object does not EXIST without its
+        objects row — so this maintenance scan, run under the
+        composite-op lock during a quiet window, trusts it and fixes the
+        other three tables:
 
         * object_map rows whose key is absent from objects are pruned;
         * chunk ref_counts are rebuilt from the surviving map (the map
@@ -2280,22 +2151,18 @@ class DedupeEngine:
 
         O(table) like :meth:`optimize` — a repair pass, not a hot-path
         cost. Returns per-table row deltas (0 everywhere on a healthy
-        index). Each table is verified and repaired INDEPENDENTLY (no
-        early-out on a clean object_map), so a crash mid-recovery —
-        map pruned, refcounts not yet rebuilt — is finished by simply
-        running recover() again; the pass is idempotent. No reference
-        analogue: the reference's SQLite writes are single-connection
-        transactions (SqliteProvider.cs:29-30); this is the price/repair
-        of four-way concurrent batched commits. The rebuild keeps only
-        chunks rows that still exist, which is sound because of the
-        commit order: a live key's chunks rows are never dropped before
-        its objects row is.
+        index). Each table is verified INDEPENDENTLY (no early-out on a
+        clean object_map), every fix is staged, and the fixes publish in
+        one catalog flip with one ``recover`` ledger point; the pass is
+        idempotent. The rebuild keeps only chunks rows that still
+        exist: it never invents a chunk row for a map row whose chunk
+        is gone.
         """
         # lock OUTSIDE the pool: the pool's exit joins every in-flight
         # fix thread BEFORE the op lock releases, even on an exception path
         with self.store.op_lock():
             with _fix_pool() as (pool, fixes):
-                deltas, rebuilt, committed = self._recover_map_chunks(pool, fixes)
+                deltas, rebuilt = self._recover_map_chunks(pool, fixes)
                 # chunk_store: GC payloads whose chunk no longer exists.
                 # r13: dead/live counts come from one key-only aggregate
                 # over the membership join (two separate count() actions
@@ -2311,31 +2178,23 @@ class DedupeEngine:
                 )
                 n_dead = int(n_cs_total) - int(n_cs_live)
                 deltas["chunk_store"] = -n_dead
+                cs_entry = None
                 if n_dead:
                     # r12: same surgical shape for the payload GC — dead
-                    # payloads are O(one crashed batch), the table is the
+                    # payloads are O(one damaged batch), the table is the
                     # 100 TB one; rewrite only the parts holding them
-                    if not self._surgical_delete(
+                    cs_entry = self._surgical_entry(
                         "chunk_store",
                         "chunk_key",
                         cstore.select("chunk_key")
                         .distinct()
                         .join(rebuilt.select("chunk_key"), "chunk_key", "left_anti"),
-                    ):
-                        live = cstore.join(live_keys, "chunk_key", "left_semi")
-                        self.store.commit("chunk_store", live, expected_version=v_cs)
-                    committed = True
-            # every overlapped fix has landed (or raised) before the
-            # ledger row claims the repaired state exists
-            if committed:
-                # a clean pass changed nothing — the previous ledger row
-                # still describes this exact state; only a repair that
-                # actually rewrote a table is a NEW consistency point.
-                # Keyed on COMMITS, not row deltas: the stale-refcount
-                # branch rewrites chunks with deltas['chunks'] == 0, and
-                # a restore/clone to "latest" must not roll that repair
-                # back by landing on the pre-repair ledger row.
-                self._record_checkpoint("recover")
+                    ) or self.store.commit_entry(
+                        "chunk_store",
+                        cstore.join(live_keys, "chunk_key", "left_semi"),
+                        expected_version=v_cs,
+                    )
+            self._publish([f.result() for f in fixes] + [cs_entry], "recover")
         return deltas
 
 

@@ -181,7 +181,7 @@ _GRADING_PRIORITY = [
     # against the first-two-batches closed form).
     "engine_pitr_clone",
     # ... and the in-place metadata-only rollback (restore(at=seq):
-    # four manifest writes, no payload movement; same closed form as
+    # one catalog flip, no payload movement; same closed form as
     # the PITR clone because restore IS clone-onto-self minus the copy).
     "engine_restore_inplace",
     # Tier 2 — change risk (4): the quality pair gained the empty-text
@@ -296,7 +296,7 @@ _GRADING_PRIORITY = [
     # r7 window (now pads, all re-graded green in CORRECTNESS_r07):
     #
     # Tier 1 — BUILT IN ROUND 7 (3): the 4-point crash matrix on both
-    # store backends (commit-order invariant: objects last) and the
+    # store backends (one catalog flip per composite op) and the
     # cluster-repair operator (exact-Jaccard re-verify + split of
     # chain-risk clusters).
     "engine_crash_matrix", "engine_crash_matrix_sqlite",

@@ -273,8 +273,8 @@ def _engine_scenario(spark: SparkSession, sf_dir: str, store_cls, mutate) -> Dat
     _ENGINE_ROUNDTRIP_SQL,
     doc="O1-O21 in one graded loop: write_batch through the REAL engine "
     "(chunker pass, CAS refcount merge, insert-if-absent payloads, "
-    "distributed ingest-id assignment, four manifest commits under the "
-    "composite-op lock) into a throwaway file-manifest index, autodetect "
+    "distributed ingest-id assignment, one catalog flip of the four "
+    "tables under the composite-op lock) into a throwaway file-manifest index, autodetect "
     "re-open, then read every table back and verify the §5 invariants "
     "plus full byte-level reassembly (md5) — all closed forms of the "
     "source corpus (engine.py:276-497; SampleApp/Program.cs:19-35).",
@@ -361,9 +361,9 @@ def engine_replace_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     _ENGINE_ROUNDTRIP_SQL,
     doc="crash repair graded end to end (on the SQLite backend, so both "
     "backends carry a scenario beyond the plain write): after a clean "
-    "ingest, a simulated mid-crash ingest commits orphan object_map "
-    "rows, inflated refcounts, and an orphan payload WITHOUT an objects "
-    "row (the logical commit point); engine.recover() must prune all "
+    "ingest, store-level writes that bypass the engine plant orphan "
+    "object_map rows, inflated refcounts, and an orphan payload WITHOUT "
+    "an objects row (the logical commit point); engine.recover() must prune all "
     "three tables back to exactly the clean-ingest state — the oracle "
     "is the SAME closed form as engine_write_roundtrip, so any ghost "
     "row, stale refcount, or lost survivor hash-mismatches "
@@ -422,20 +422,20 @@ def engine_recover_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _crash_matrix_scenario(spark: SparkSession, sf_dir: str, store_cls) -> DataFrame:
     """The 4-point crash matrix through the REAL write path: a victim
-    batch is driven into ``write_batch`` with ``_crash_after`` set to
-    each of the four table commits in turn (the injection makes the
-    commits sequential and deterministic — exactly the partial state a
-    process kill at that point leaves). After each pre-objects crash,
-    ``recover()`` must prune the wreckage completely; after the
-    crash-past-the-objects-commit, the ingest is COMPLETE by the
-    commit-order invariant (objects last = logical commit point), so
-    recover() must report zero repairs and the victims are then removed
-    by the ordinary cascading delete. The final read-back hashes
-    against the untouched clean-ingest closed form. One victim
-    duplicates an existing object's bytes (every chunk shared —
-    refcount inflation under test), the other is unique bytes (orphan
-    chunk + payload GC under test)."""
-    from watsondedupe_spark.engine import SimulatedCrash
+    batch is driven into ``write_batch`` with the store's fault hook
+    (``IndexStore._crash_after``) armed right after the staged part of
+    object_map, of chunks and of chunk_store in turn — exactly the
+    state a process kill at that point leaves — and finally right after
+    the catalog flip. Every pre-flip crash must leave the index as it
+    was: no table version moved, the victims absent, and ``recover()``
+    finds nothing to repair. After the post-flip crash the ingest is
+    COMPLETE (one flip publishes all four tables), so recover() again
+    reports zero repairs and the victims are then removed by the
+    ordinary cascading delete. The final read-back hashes against the
+    untouched clean-ingest closed form. One victim duplicates an
+    existing object's bytes (every chunk shared), the other is unique
+    bytes (its own chunks and payloads)."""
+    from watsondedupe_spark.store import SimulatedCrash
 
     def scenario(eng):
         dup_text = (
@@ -453,30 +453,27 @@ def _crash_matrix_scenario(spark: SparkSession, sf_dir: str, store_cls) -> DataF
         )
 
         def crash_write(point):
-            eng._crash_after = point
             try:
-                eng.write_batch(victims)
+                with eng.store._crash_after(point):
+                    eng.write_batch(victims)
             except SimulatedCrash:
                 return True
-            finally:
-                eng._crash_after = None
             return False
 
+        clean = {"object_map": 0, "chunks": 0, "chunk_store": 0}
         for point in ("object_map", "chunks", "chunk_store"):
+            before = eng.store._catalog()
             assert crash_write(point), point
-            deltas = eng.recover()
-            # the victim map rows are always orphaned (objects never
-            # committed); chunks/payload deltas depend on how far the
-            # sequence got — all must land at zero wreckage
-            assert deltas["object_map"] < 0, (point, deltas)
+            assert eng.store._catalog() == before, point
             assert not eng.exists("___crash_dup"), point
             assert not eng.exists("___crash_uniq"), point
-        # crash AFTER the objects commit: the logical commit point has
-        # passed, so the batch is durably ingested and repair finds
-        # nothing to do
-        assert crash_write("objects")
+            deltas = eng.recover()
+            assert deltas == clean, (point, deltas)
+        # crash AFTER the flip: the batch is durably ingested and repair
+        # finds nothing to do
+        assert crash_write("flip")
         deltas = eng.recover()
-        assert deltas == {"object_map": 0, "chunks": 0, "chunk_store": 0}, deltas
+        assert deltas == clean, deltas
         assert eng.exists("___crash_dup") and eng.exists("___crash_uniq")
         assert eng.get("___crash_uniq") == b"crash-matrix-unique-payload/" * 512
         eng.delete_batch(victims.select("object_key"))
@@ -487,17 +484,16 @@ def _crash_matrix_scenario(spark: SparkSession, sf_dir: str, store_cls) -> DataF
 @register(
     "engine_crash_matrix",
     _ENGINE_ROUNDTRIP_SQL,
-    doc="the commit-order invariant graded as a 4-point crash matrix "
-    "(file-manifest backend): write_batch crash-injected after EACH of "
-    "the four table commits (_crash_after forces the deterministic "
-    "sequential order: object_map -> chunks -> chunk_store -> objects), "
-    "recover() after each — pre-objects crashes must prune to zero "
-    "wreckage (orphan map rows, inflated shared-chunk refcounts, orphan "
-    "unique chunk + payload all under test), and the post-objects crash "
-    "must be a COMPLETE ingest (zero repairs, victims readable) since "
-    "objects commits strictly last as the logical commit point "
-    "(engine.py _commit_mutation; the reference's non-atomic write path "
-    "DedupeLibrary.cs:237-247 is the bug class this ordering beats).",
+    doc="the one-flip commit graded as a 4-point crash matrix "
+    "(file-manifest backend): write_batch crash-injected by the store's "
+    "fault hook (IndexStore._crash_after) after the staged object_map, "
+    "chunks and chunk_store parts and after the catalog flip, recover() "
+    "after each — pre-flip crashes must leave every table version "
+    "unchanged and zero wreckage, and the post-flip crash must be a "
+    "COMPLETE ingest (zero repairs, victims readable) since one flip "
+    "publishes all four tables (engine.py _commit_mutation; the "
+    "reference's non-atomic write path DedupeLibrary.cs:237-247 is the "
+    "bug class this beats).",
 )
 def engine_crash_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from watsondedupe_spark.store import IndexStore
@@ -509,7 +505,7 @@ def engine_crash_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     "engine_crash_matrix_sqlite",
     _ENGINE_ROUNDTRIP_SQL,
     doc="the same 4-point crash matrix through the SQLite-catalog "
-    "backend — commit-order + recover() semantics must be identical "
+    "backend — one-flip atomicity + recover() semantics must be identical "
     "under both store implementations (provider pluggability, "
     "DbProvider.cs:10).",
 )
@@ -937,9 +933,9 @@ FROM r
     _PITR_CLONE_SQL,
     doc="point-in-time restore graded end-to-end: three ingest batches "
     "append consistency points to the checkpoints ledger (one row per "
-    "composite op, written INSIDE the op's critical section — a true "
+    "composite op, published in the op's own catalog flip — a true "
     "cross-table cut over four independently-versioned tables, "
-    "engine.py _record_checkpoint), the source then DELETES the whole "
+    "engine.py _checkpoint_entry), the source then DELETES the whole "
     "first batch (a fourth point), and clone(at=2) restores the "
     "second point into a fresh store — the full invariant table of "
     "the restored index must equal the first-two-batches closed form "
@@ -999,9 +995,9 @@ def engine_pitr_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     "three ingest batches record consistency points, the whole first "
     "batch is deleted (a fourth point), then restore(at=2) rolls the "
     "LIVE index back by re-pointing all four tables at the recorded "
-    "versions' part lists (store.restore_version — metadata-only, no "
-    "payload bytes move: at 100 TB a rollback is four manifest "
-    "writes, not a day-long table rewrite). The restored index must "
+    "versions' part lists (store.restore_entry — metadata-only, no "
+    "payload bytes move: at 100 TB a rollback is one catalog "
+    "flip, not a day-long table rewrite). The restored index must "
     "equal the first-two-batches closed form — the deleted batch is "
     "back, byte-identical — and the rollback records its own ledger "
     "row ('restore', asserted), so it is itself visible and undoable "
@@ -1856,7 +1852,7 @@ sp.stop()
     "a true batch-prefix state, and the planted-tear contrast shows "
     "the default scan paging on exactly the interleaving the "
     "consistent mode suppresses (engine.py verify consistent mode; "
-    "checkpoint ledger _record_checkpoint).",
+    "checkpoint ledger _checkpoint_entry).",
 )
 def engine_verify_consistent_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     from watsondedupe_spark.store import IndexStore
@@ -1869,7 +1865,7 @@ def engine_verify_consistent_live(spark: SparkSession, sf_dir: str) -> DataFrame
     _VERIFY_CONSISTENT_LIVE_SQL,
     doc="the same live-writer consistent scrub through the "
     "SQLite-catalog backend — the ledger-cut pinning must be "
-    "backend-independent (store.py update_meta/_state_version on "
+    "backend-independent (store.py meta_entry/_state_version on "
     "both backends).",
 )
 def engine_verify_consistent_live_sqlite(

@@ -75,10 +75,10 @@ CONFIG_SCHEMA = StructType(
 )
 
 # consistency-point ledger (no reference analogue): one row per
-# completed composite op, appended INSIDE the op's critical section —
+# completed composite op, published in the op's own catalog flip —
 # the four table versions form a true cross-table cut, which is what
 # makes point-in-time clone/restore possible on independently-versioned
-# tables (engine._record_checkpoint / engine.clone(at=...))
+# tables (engine._checkpoint_entry / engine.clone(at=...))
 CHECKPOINTS_SCHEMA = StructType(
     [
         StructField("seq", LongType(), False),

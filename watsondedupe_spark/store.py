@@ -9,7 +9,8 @@ container has plain parquet only, so we provide the same contract with a
 manifest-of-parts design — the same file-log idea those formats use:
 
     {root}/{table}/p00000001_ab12cd34/...     immutable data part
-    {root}/{table}/_MANIFEST                  json {version, parts}, atomic rename
+    {root}/{table}/_MANIFEST.v{N}             json {version, parts, meta}: version N
+    {root}/_CATALOG                           json {table: current version}
 
 A *commit* (full replace) writes one new part and a manifest referencing
 only it. An *append* writes a part containing ONLY the new rows and a
@@ -28,48 +29,49 @@ also protects in-flight concurrent readers: a job scanning version N's
 parts survives a writer publishing N+1 and GC-ing, because N stays in
 the retained window.
 
-Multi-writer semantics (optimistic concurrency, the Delta protocol's
-shape — the batched analogue of the reference's writer mutexes):
+The commit shape (Iceberg's multi-table commit, the batched analogue of
+the reference's single-connection SQLite transactions,
+SqliteProvider.cs:29-30):
 
-* Data parts are written OUTSIDE any lock under collision-free unique
-  names; only the manifest flip runs inside a short per-table critical
-  section (``fcntl.flock`` here, a SQLite transaction in the second
-  backend).
-* ``append`` REBASES inside the critical section — the fresh manifest's
-  part list plus the new part — so concurrent appends to one table
-  interleave without lost parts (appends commute).
-* ``commit`` (full replace) takes ``expected_version``: if another
-  writer has published since the caller read its snapshot, the flip is
-  refused with :class:`ConcurrentWriteError` and the caller re-derives
-  from the fresh snapshot and retries — which makes read-modify-write
-  merges (refcount updates) serializable. ``expected_version=None``
-  keeps unconditional last-writer-wins replace for single-writer
-  callers.
+* Data parts are STAGED outside any lock under collision-free unique
+  names; nothing references a staged part yet.
+* One *catalog flip* then publishes any number of tables at once. Every
+  write verb ends in the private ``IndexStore._flip``, which takes a list
+  of ``(name, build, staged)`` entries. Inside ONE critical section
+  (``fcntl.flock`` on ``{root}/_LOCK`` here, a ``BEGIN IMMEDIATE``
+  transaction in the SQLite backend) every ``build`` derives its table's
+  next part list and meta from the same fresh catalog — this is where a
+  verb's rule lives: an append REBASES on the fresh part list (appends
+  commute), a replace checks the table is still at the version the
+  caller read (CAS, :class:`ConcurrentWriteError` otherwise), a
+  compaction checks its inputs are still live, a restore checks its
+  version is still retained. If any build refuses, nothing is published
+  and every staged part is deleted; the caller re-derives from a fresh
+  snapshot and retries. Otherwise each table's new manifest is written
+  as history ``_MANIFEST.v{N}`` and the root ``_CATALOG`` pointer is
+  flipped with one atomic ``os.replace``.
 
-All of this is one primitive. Every write verb (``commit``, ``append``,
-``attach_part``, ``compact_parts``, ``restore_version``,
-``update_meta``) is a thin wrapper over the private ``IndexStore._flip``:
-the verb stages its part (if any) outside the lock, and the flip reads
-the part's footer stats, then inside the critical section reads the
-fresh manifest and asks the verb's ``build`` for the next part list and
-meta. ``build`` is where the verb's rule lives: append rebases, a CAS
-verb checks the version, a compaction checks its inputs are still live.
-A refusal raises :class:`ConcurrentWriteError` and deletes the staged
-part. Otherwise the flip keeps skip stats for live parts only, bumps
-the version, writes the manifest, and runs GC if it retired any parts.
+So a composite engine op — an ingest touching four tables plus the
+checkpoint ledger — is one flip: a crash at any point shows either every
+table before the op or every table after it. Each write verb of this
+contract (``commit``, ``append``, ``attach_part``, ``compact_parts``,
+``restore_version``, ``update_meta``) is a one-entry flip; the
+``*_entry`` methods stage the same entries for a caller that publishes
+several tables together.
 
 Two interchangeable backends prove the swap point (the reference's
 ``DbProvider`` pluggability, src/DedupeLibrary/Database/DbProvider.cs:10,
 proven externally against MySQL in src/Test.External/Program.cs:188):
 :class:`IndexStore` keeps manifests as JSON files; :class:`SqliteIndexStore`
-keeps them in a SQLite catalog (``{root}/_manifest.db``) with CAS as a
-``BEGIN IMMEDIATE`` transaction. The engine only calls the shared
+keeps them in a SQLite catalog (``{root}/_manifest.db``) with the flip as
+one ``BEGIN IMMEDIATE`` transaction. The engine only calls the shared
 contract (``read / snapshot / commit / append / table_meta / ...``) and
 runs unchanged on either.
 """
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import shutil
@@ -85,6 +87,15 @@ from watsondedupe_spark.schemas import TABLE_SCHEMAS
 class ConcurrentWriteError(RuntimeError):
     """A CAS commit lost the race: the table advanced past the caller's
     snapshot version. Re-read, re-derive, retry."""
+
+
+class SimulatedCrash(RuntimeError):
+    """Crash-injection marker raised by the store's fault hook
+    (:meth:`IndexStore._crash_after`) right after a staged part write or
+    a published flip, leaving exactly the state a process kill at that
+    point would — no cleanup, no rollback. Tests and the graded
+    crash-matrix scenario catch it, then check that the index shows the
+    op's before-state (any crash before the flip) or its after-state."""
 
 
 def _check_version(name: str, found: int, expected: int | None) -> None:
@@ -141,13 +152,15 @@ def _column_span(md, ci: int | None) -> list | None:
 
 
 class IndexStore:
-    """Parquet-backed table store with atomic manifest commits.
+    """Parquet-backed table store with atomic catalog commits.
 
-    File-manifest backend: the current state lives in ``_MANIFEST``
-    (atomic ``os.replace`` flip), history in ``_MANIFEST.v{N}``, and the
-    critical section is an ``fcntl.flock`` on ``_LOCK`` — which
-    serializes both threads of one process (locks attach to the open
-    file description) and separate processes on one host/NFS-with-locks.
+    File-manifest backend: each table's manifests live in
+    ``{table}/_MANIFEST.v{N}``, the current version of every table in
+    the one root pointer ``_CATALOG`` (atomic ``os.replace`` flip), and
+    the critical section is an ``fcntl.flock`` on the root ``_LOCK`` —
+    which serializes both threads of one process (locks attach to the
+    open file description) and separate processes on one
+    host/NFS-with-locks.
     """
 
     #: appends fold all live parts into one once this many accumulate
@@ -164,6 +177,8 @@ class IndexStore:
     #: Delta/Iceberg answer is the same: orphan removal only beyond a
     #: retention age). Crash orphans are collected once they age out.
     gc_grace_seconds = 3600.0
+    #: the armed fault of :meth:`_crash_after` (tests only), else None
+    _fault = None
 
     def __init__(self, spark: SparkSession, root: str):
         import threading
@@ -189,26 +204,26 @@ class IndexStore:
     def _table_dir(self, name: str) -> str:
         return os.path.join(self.root, name)
 
-    def _pointer(self, name: str) -> str:
-        return os.path.join(self._table_dir(name), "_MANIFEST")
-
     def _version_pointer(self, name: str, version: int) -> str:
-        return self._pointer(name) + f".v{version:08d}"
+        return os.path.join(self._table_dir(name), f"_MANIFEST.v{version:08d}")
+
+    def _catalog_pointer(self) -> str:
+        return os.path.join(self.root, "_CATALOG")
 
     @contextmanager
-    def _transact(self, name: str):
-        """Per-table critical section for manifest flips: an flock on
-        the table's ``_LOCK`` file."""
-        os.makedirs(self._table_dir(name), exist_ok=True)
-        with _flock(os.path.join(self._table_dir(name), "_LOCK")):
+    def _transact(self):
+        """The one critical section for catalog flips: an flock on the
+        root's ``_LOCK`` file."""
+        with _flock(os.path.join(self.root, "_LOCK")):
             yield
 
-    def _state(self, name: str) -> dict:
+    def _catalog(self) -> dict[str, int]:
+        """``{table: current version}`` for every table ever flipped."""
         try:
-            with open(self._pointer(name)) as f:
+            with open(self._catalog_pointer()) as f:
                 return json.load(f)
         except FileNotFoundError:
-            return {"version": 0, "parts": []}
+            return {}
 
     def _state_version(self, name: str, version: int) -> dict | None:
         try:
@@ -217,25 +232,32 @@ class IndexStore:
         except FileNotFoundError:
             return None
 
-    def _write_state(self, name: str, state: dict) -> None:
-        """Persist ``state`` as the current manifest + retained history;
-        MUST be called inside :meth:`_transact`."""
-        tmp = self._pointer(name) + ".tmp"
+    def _write_states(self, states: dict[str, dict], catalog: dict[str, int]) -> None:
+        """Publish ``states`` (table -> its new manifest) together with
+        ``catalog``; MUST be called inside :meth:`_transact`. The
+        history files are written first, then one ``os.replace`` flips
+        the root pointer — the commit point: a crash before it leaves
+        the old catalog authoritative and at worst history files past
+        the current version, which readers ignore and later flips
+        overwrite."""
+        for name, state in states.items():
+            os.makedirs(self._table_dir(name), exist_ok=True)
+            with open(self._version_pointer(name, state["version"]), "w") as f:
+                json.dump(state, f)
+        tmp = self._catalog_pointer() + ".tmp"
         with open(tmp, "w") as f:
-            json.dump(state, f)
-        # retained history copy first, then the atomic current-pointer
-        # flip: a crash between the two leaves the old current manifest
-        # authoritative and at worst an orphan history file
-        with open(self._version_pointer(name, state["version"]), "w") as f:
-            json.dump(state, f)
-        os.replace(tmp, self._pointer(name))  # atomic on POSIX
-        # expire history beyond the retention window
-        floor = state["version"] - self.retain_versions
-        for v in self.versions(name):
-            if v < floor:
+            json.dump(catalog, f)
+        os.replace(tmp, self._catalog_pointer())  # atomic on POSIX
+        # expire history beyond the retention window; the flip above is
+        # already published, so a failure here must not escape
+        for name, state in states.items():
+            floor = state["version"] - self.retain_versions
+            for v in self.versions(name):
+                if v >= floor:
+                    break
                 try:
                     os.remove(self._version_pointer(name, v))
-                except FileNotFoundError:
+                except OSError:
                     pass
 
     def versions(self, name: str) -> list[int]:
@@ -244,22 +266,38 @@ class IndexStore:
         if not os.path.isdir(tdir):
             return []
         prefix = "_MANIFEST.v"
-        return sorted(
-            int(e[len(prefix):])
-            for e in os.listdir(tdir)
-            if e.startswith(prefix)
-        )
+        current = self.current_version(name)
+        found = (int(e[len(prefix):]) for e in os.listdir(tdir) if e.startswith(prefix))
+        return sorted(v for v in found if v <= current)
 
     # -- shared internals ----------------------------------------------------
 
     def current_version(self, name: str) -> int:
-        return self._state(name)["version"]
+        return self._catalog().get(name, 0)
+
+    def _state_in(self, catalog: dict[str, int], name: str) -> dict | None:
+        """``name``'s manifest at its ``catalog`` version (None when that
+        version's manifest is gone)."""
+        version = catalog.get(name, 0)
+        if not version:
+            return {"version": 0, "parts": []}
+        return self._state_version(name, version)
+
+    def _state(self, name: str) -> dict:
+        """``name``'s current manifest. The catalog and the manifest are
+        two reads: a run of flips between them can expire the version
+        just read, so the catalog is then read again."""
+        for _ in range(self.cas_retries):
+            state = self._state_in(self._catalog(), name)
+            if state is not None:
+                return state
+        raise FileNotFoundError(f"{name}: the current manifest is missing")
 
     def _retained(self, name: str, version: int) -> dict:
         """Manifest state of retained ``version``; ValueError once it
         has expired."""
         state = self._state_version(name, version)
-        if state is None:
+        if state is None or version > self.current_version(name):
             raise ValueError(
                 f"version {version} of {name} is not retained "
                 f"(have {self.versions(name)})"
@@ -458,6 +496,7 @@ class IndexStore:
         )
         df.write.mode("overwrite").parquet(path)
         self._write_bloom(name, path)
+        self._tick(name)
         return path
 
     def _write_bloom(self, name: str, path: str) -> None:
@@ -714,47 +753,99 @@ class IndexStore:
             removed += 1
         return {"parts_removed": removed, "mb_reclaimed": round(freed / 1e6, 3)}
 
-    # -- the manifest flip ----------------------------------------------------
+    # -- the catalog flip ----------------------------------------------------
 
-    def _flip(self, name: str, build, staged: str | None = None) -> dict:
-        """The one manifest flip behind every write verb; returns the
-        state it wrote.
+    def _flip(self, entries: list) -> dict[str, dict]:
+        """The one catalog flip behind every write: publish a new
+        version of every entry's table, all or none. Returns ``{name:
+        state written}``.
 
-        ``staged`` is the part the verb wrote outside the lock (if any):
-        its footer stats are read here, before the lock — the part is
-        immutable once written, so the flip stays a pure pointer update.
-        Inside :meth:`_transact`, ``build(fresh)`` derives
-        ``{"parts", "meta"}`` (plus ``"stats"`` to carry instead of the
-        fresh manifest's) from the fresh state, or raises
-        :class:`ConcurrentWriteError` to refuse — the staged part is
-        then deleted. Skip stats are kept for live parts only, the
-        version is bumped and the state written. A flip that retired
-        parts runs GC (:meth:`vacuum`)."""
-        staged_stats = self._part_stats(name, staged) if staged else None
-        with self._transact(name):
-            fresh = self._state(name)
+        An entry is ``(name, build, staged)`` (``None`` entries are
+        skipped); ``staged`` is the part the caller wrote outside the
+        lock, if any. Its footer stats are read here, before the lock —
+        the part is immutable once written, so the flip stays a pure
+        pointer update. Inside :meth:`_transact` each
+        ``build(fresh, catalog)`` runs in entry order against the same
+        fresh catalog: ``fresh`` is the table's current state and
+        ``catalog`` maps every table to the version this flip leaves it
+        at (entries before it already bumped — how a ledger entry names
+        the versions it publishes). ``build`` returns ``{"parts",
+        "meta"}`` (plus ``"stats"`` to carry instead of the fresh
+        manifest's), or raises to refuse: then nothing is published and
+        every staged part is deleted. Each table keeps skip stats for
+        its live parts only and bumps its version, and all the states
+        land in one :meth:`_write_states`. Tables whose flip retired
+        parts are GC'd (:meth:`vacuum`) afterwards."""
+        entries = [e for e in entries if e is not None]
+        if not entries:
+            return {}
+        staged_stats = {
+            name: self._part_stats(name, staged) for name, _, staged in entries if staged
+        }
+        fresh_of: dict[str, dict] = {}
+        states: dict[str, dict] = {}
+        with self._transact():
+            catalog = self._catalog()
             try:
-                nxt = build(fresh)
-            except ConcurrentWriteError:
-                if staged:
-                    shutil.rmtree(staged, ignore_errors=True)
+                for name, build, staged in entries:
+                    fresh = fresh_of[name] = self._state_in(catalog, name)
+                    nxt = build(fresh, catalog)
+                    live = {os.path.basename(p) for p in nxt["parts"]}
+                    carried = nxt.get("stats", fresh.get("stats", {}))
+                    stats = {k: v for k, v in carried.items() if k in live}
+                    if staged_stats.get(name) is not None:
+                        stats[os.path.basename(staged)] = staged_stats[name]
+                    state = states[name] = {
+                        "version": fresh["version"] + 1,
+                        "parts": nxt["parts"],
+                        "meta": nxt["meta"],
+                    }
+                    if stats:
+                        state["stats"] = stats
+                    catalog[name] = state["version"]
+            except BaseException:
+                # refused: nothing is published. (A failure while
+                # writing below leaves the staged parts as orphans for
+                # vacuum() instead: past the root flip they are live.)
+                for _, _, staged in entries:
+                    if staged:
+                        shutil.rmtree(staged, ignore_errors=True)
                 raise
-            live = {os.path.basename(p) for p in nxt["parts"]}
-            carried = nxt.get("stats", fresh.get("stats", {}))
-            stats = {k: v for k, v in carried.items() if k in live}
-            if staged_stats is not None:
-                stats[os.path.basename(staged)] = staged_stats
-            state = {
-                "version": fresh["version"] + 1,
-                "parts": nxt["parts"],
-                "meta": nxt["meta"],
-            }
-            if stats:
-                state["stats"] = stats
-            self._write_state(name, state)
-        if set(fresh["parts"]) - set(nxt["parts"]):
-            self.vacuum(name)
-        return state
+            self._write_states(states, catalog)
+        self._tick("flip")
+        for name, state in states.items():
+            if set(fresh_of[name]["parts"]) - set(state["parts"]):
+                self.vacuum(name)
+        return states
+
+    @contextmanager
+    def _crash_after(self, point: str = "any", n: int = 1):
+        """Fault hook for crash tests: inside the block, raise
+        :class:`SimulatedCrash` right after the ``n``-th event at
+        ``point`` — a table name counts that table's staged part
+        writes, ``"flip"`` counts published flips, and ``"any"`` counts
+        both. A staged part is written before its op's flip, so
+        ``"any"`` with n = 1, 2, ... walks every crash point of an op in
+        order, its flip last. The fault is armed on this store's CLASS,
+        so a store the op opens itself (a clone's destination) counts
+        too."""
+        cls = type(self)
+        cls._fault = (point, n, itertools.count(1))
+        try:
+            yield
+        finally:
+            cls._fault = None
+
+    def _tick(self, event: str) -> None:
+        """Count ``event`` (a table name for a staged part, or
+        ``"flip"``) against the armed fault. ``next()`` on the counter
+        is atomic under the GIL, so of several staging threads exactly
+        one sees the n-th tick."""
+        fault = self._fault
+        if fault is None or fault[0] not in (event, "any"):
+            return
+        if next(fault[2]) == fault[1]:
+            raise SimulatedCrash(f"after {event} ({fault[0]} #{fault[1]})")
 
     @staticmethod
     def _put(name, path, meta, expected_version, meta_merge=None, *, replace=False):
@@ -764,7 +855,7 @@ class IndexStore:
         ``meta_merge`` merges keys into it, and ``expected_version`` arms
         the CAS check."""
 
-        def build(fresh):
+        def build(fresh, catalog):
             _check_version(name, fresh["version"], expected_version)
             new_meta = fresh.get("meta", {}) if meta is None else meta
             if meta_merge:
@@ -784,23 +875,104 @@ class IndexStore:
                 if i == self.cas_retries - 1:
                     raise
 
-    def _fold(self, name, df, meta=None, expected_version=None, meta_merge=None) -> int:
-        """Append ``df`` to a full part list by folding every live part
-        and ``df`` into one new part (bounded read fan-in), as a full
-        replace under CAS: a concurrent flip between the snapshot read
-        and ours must not be overwritten by the folded union, so the
-        fold re-derives from the fresh snapshot and retries — unless the
-        caller armed ``expected_version``, which makes any lost race
-        its error."""
+    # -- flip entries: stage a table's change, publish it with others ---------
 
-        def attempt():
-            v, cur, _ = self.snapshot(name, df.schema)
-            _check_version(name, v, expected_version)
-            path = self._write_part(name, cur.unionByName(df), v + 1)
-            build = self._put(name, path, meta, v, meta_merge, replace=True)
-            return self._flip(name, build, staged=path)["version"]
+    def commit_entry(
+        self,
+        name: str,
+        df: DataFrame,
+        meta: dict | None = None,
+        expected_version: int | None = None,
+        meta_merge: dict | None = None,
+    ) -> tuple:
+        """Stage ``df`` as ``name``'s full new state: the part is written
+        now, and the returned entry publishes it in a :meth:`_flip`,
+        retiring every previous part. ``meta``/``expected_version`` as
+        in :meth:`commit`, ``meta_merge`` as in :meth:`append`."""
+        hint = (expected_version if expected_version is not None
+                else self.current_version(name)) + 1
+        path = self._write_part(name, df, hint)
+        return name, self._put(name, path, meta, expected_version, meta_merge, replace=True), path
 
-        return attempt() if expected_version is not None else self._retry(attempt)
+    def append_entry(
+        self,
+        name: str,
+        df: DataFrame,
+        meta: dict | None = None,
+        expected_version: int | None = None,
+        meta_merge: dict | None = None,
+    ) -> tuple:
+        """Stage ``df`` as an append to ``name`` (see :meth:`append`).
+        When the table already holds :attr:`max_parts` live parts, the
+        staged part is instead the fold of every live part and ``df``,
+        published as a replace under CAS on the version it read — a
+        concurrent flip in between refuses it rather than being
+        overwritten by the folded union."""
+        state = self._state(name)
+        v = state["version"]
+        if len(state["parts"]) < self.max_parts:
+            path = self._write_part(name, df, v + 1)
+            return name, self._put(name, path, meta, expected_version, meta_merge), path
+        _check_version(name, v, expected_version)
+        folded = self._df_for(name, state["parts"], df.schema).unionByName(df)
+        path = self._write_part(name, folded, v + 1)
+        return name, self._put(name, path, meta, v, meta_merge, replace=True), path
+
+    def compaction_entry(
+        self, name: str, parts: list[str], layout=None, meta_fn=None
+    ) -> tuple | None:
+        """Stage the rewrite of ``parts`` (see :meth:`compact_parts`);
+        None when the table is absent or ``parts`` is empty."""
+        if not self.exists(name) or not parts:
+            return None
+        todo = set(parts)
+        df = self._df_for(name, parts)
+        if layout is not None:
+            df = layout(df)
+        path = self._write_part(name, df, self.current_version(name) + 1)
+
+        def build(fresh, catalog):
+            missing = sorted(todo - set(fresh["parts"]))
+            if missing:
+                raise ConcurrentWriteError(
+                    f"{name}: parts retired under compaction "
+                    f"(another writer committed first): {missing}"
+                )
+            new_parts = [p for p in fresh["parts"] if p not in todo] + [path]
+            meta = dict(fresh.get("meta", {}))
+            if meta_fn is not None:
+                meta = meta_fn(meta, new_parts, path)
+            return {"parts": new_parts, "meta": meta}
+
+        return name, build, path
+
+    def restore_entry(self, name: str, version: int) -> tuple:
+        """The entry that re-points ``name`` at retained ``version``
+        (see :meth:`restore_version`). The version is looked up inside
+        the flip, so one that has expired refuses the whole flip with
+        ValueError."""
+
+        def build(fresh, catalog):
+            hist = self._retained(name, version)
+            return {
+                "parts": hist["parts"],
+                "meta": hist.get("meta", {}),
+                "stats": hist.get("stats", {}),
+            }
+
+        return name, build, None
+
+    def meta_entry(self, name: str, fn) -> tuple:
+        """The entry that sets ``name``'s meta to ``fn(meta, catalog)``
+        and leaves its parts alone (see :meth:`update_meta`)."""
+
+        def build(fresh, catalog):
+            return {
+                "parts": fresh["parts"],
+                "meta": fn(dict(fresh.get("meta") or {}), catalog),
+            }
+
+        return name, build, None
 
     # -- contract -----------------------------------------------------------
 
@@ -810,18 +982,18 @@ class IndexStore:
         (``{root}/_OPLOCK.{name}``, flock — cross-process and
         cross-thread on one host; both backends share it).
 
-        The per-table CAS above guarantees no table-level lost updates,
-        but a composite operation (an ingest, delete or replace is one
-        commit per table) has no cross-table transaction, so two
-        composite ops interleaving can produce cross-table anomalies
-        (double-ingest of one key passing both pre-checks; a payload GC
-        racing a revival). Engine write/delete paths therefore hold
-        this lock for their commit phase — the batched analogue of the
-        reference's writer mutex (SqliteProvider.cs:29-30) — while the
-        expensive chunking/scan work stays outside it. CAS remains as
-        defense in depth for writers that bypass the lock. On a real
-        Delta deployment this is replaced by commit-conflict retries
-        within one transaction log.
+        A composite operation publishes all its tables in ONE catalog
+        flip, so no reader or crash ever sees it half done. What the
+        flip cannot exclude is a check-then-act across ops: two ingests
+        of one key could both pass the duplicate-key pre-check before
+        either flips. Engine write, delete, restore, repair and recover
+        paths therefore hold this lock from their pre-checks through
+        their flip — the batched analogue of the reference's writer
+        mutex (SqliteProvider.cs:29-30) — while the expensive chunking
+        work stays outside it. The flip's CAS checks remain as defense
+        in depth for writers that bypass the lock. On a real Delta
+        deployment this is replaced by commit-conflict retries within
+        one transaction log.
 
         REENTRANT per thread (per store instance): a thread already
         holding the lock re-enters immediately instead of deadlocking on
@@ -882,32 +1054,14 @@ class IndexStore:
         parts stay GC-protected because :meth:`vacuum` spares anything
         reachable from ANY retained manifest. Returns the new version.
         """
-        hist = self._retained(name, version)
-        return self._flip(
-            name,
-            lambda fresh: {
-                "parts": hist["parts"],
-                "meta": hist.get("meta", {}),
-                "stats": hist.get("stats", {}),
-            },
-        )["version"]
+        return self._flip([self.restore_entry(name, version)])[name]["version"]
 
     def update_meta(self, name: str, fn) -> dict:
         """Transactional METADATA-ONLY update: ``meta = fn(meta)``
         inside the critical section, version bumped, parts untouched.
-        O(one manifest write) — no Spark job, no parquet I/O. This is
-        what makes a per-composite-op ledger (engine checkpoints)
-        affordable: a 1-row parquet append would put a full Spark
-        job on every ingest's fixed-cost floor, and the engine's
-        small-batch path is fixed-cost-dominated by design. Works on
+        O(one manifest write) — no Spark job, no parquet I/O. Works on
         both backends (one :meth:`_flip`)."""
-        return self._flip(
-            name,
-            lambda fresh: {
-                "parts": fresh["parts"],
-                "meta": fn(dict(fresh.get("meta") or {})),
-            },
-        )["meta"]
+        return self._flip([self.meta_entry(name, lambda meta, _: fn(meta))])[name]["meta"]
 
     def commit(
         self,
@@ -926,11 +1080,8 @@ class IndexStore:
         re-derives from a fresh :meth:`snapshot` and retries. ``None``
         keeps unconditional last-writer-wins replace.
         """
-        hint = (expected_version if expected_version is not None
-                else self.current_version(name)) + 1
-        path = self._write_part(name, df, hint)
-        build = self._put(name, path, meta, expected_version, replace=True)
-        return self._flip(name, build, staged=path)["version"]
+        entry = self.commit_entry(name, df, meta, expected_version)
+        return self._flip([entry])[name]["version"]
 
     def append(
         self,
@@ -949,8 +1100,10 @@ class IndexStore:
         instead — for appends whose ROWS were derived from a snapshot
         (insert-if-absent, sequence-id assignment) and must be re-derived
         if another writer landed first. Every ``max_parts`` appends the
-        parts fold into one (bounded read fan-in), itself CAS-retried so
-        a fold can never swallow a concurrent writer's commit.
+        parts fold into one (bounded read fan-in); a fold that lost a
+        race is re-derived and retried, so it can never swallow a
+        concurrent writer's commit — unless the caller armed
+        ``expected_version``, which makes any lost race its error.
         ``meta`` as in :meth:`commit`; ``meta_merge`` instead MERGES the
         given keys into the carried meta inside the critical section —
         an append that only advances its own watermark (e.g. the objects
@@ -958,12 +1111,12 @@ class IndexStore:
         (``clustered_parts``: wiping it silently degrades the next
         incremental ``optimize()`` into a full-table refold).
         """
-        state = self._state(name)
-        if len(state["parts"]) >= self.max_parts:
-            return self._fold(name, df, meta, expected_version, meta_merge)
-        path = self._write_part(name, df, state["version"] + 1)
-        build = self._put(name, path, meta, expected_version, meta_merge)
-        return self._flip(name, build, staged=path)["version"]
+
+        def attempt():
+            entry = self.append_entry(name, df, meta, expected_version, meta_merge)
+            return self._flip([entry])[name]["version"]
+
+        return attempt() if expected_version is not None else self._retry(attempt)
 
     def stage_part(self, name: str, df: DataFrame, version_hint: int) -> str:
         """Write ``df`` as an UNPUBLISHED part dir and return its path —
@@ -972,9 +1125,7 @@ class IndexStore:
         :meth:`attach_part` flips it into the manifest. A crash between
         stage and attach leaves an invisible orphan dir that GC
         (:meth:`vacuum`) ages out (the same guarantee in-flight
-        concurrent appends already rely on). This is the Delta/Iceberg
-        commit shape: optimistic data-file write, serialized metadata
-        flip."""
+        concurrent appends already rely on)."""
         return self._write_part(name, df, version_hint)
 
     def attach_part(
@@ -989,13 +1140,11 @@ class IndexStore:
         bounded fold of :meth:`append` when the part list is full, which
         reads the staged rows and then deletes the staged dir). CAS
         semantics match :meth:`append`: on conflict the staged part is
-        discarded and :class:`ConcurrentWriteError` raised — the caller
-        re-derives its rows from a fresh snapshot (staged ids/absence
-        sets are snapshot-derived and stale after a conflicting commit).
+        discarded and :class:`ConcurrentWriteError` raised.
         ``meta_merge`` as in :meth:`append`."""
         if len(self.live_parts(name)) >= self.max_parts:
             try:
-                return self._fold(
+                return self.append(
                     name,
                     self._df_for(name, [path]),
                     expected_version=expected_version,
@@ -1004,7 +1153,7 @@ class IndexStore:
             finally:
                 shutil.rmtree(path, ignore_errors=True)
         build = self._put(name, path, None, expected_version, meta_merge)
-        return self._flip(name, build, staged=path)["version"]
+        return self._flip([(name, build, path)])[name]["version"]
 
     def compact(self, name: str) -> int:
         """Fold all live parts into one (the OPTIMIZE analogue); no-op on
@@ -1059,28 +1208,8 @@ class IndexStore:
         clustered-parts watermark) in the SAME manifest flip — no extra
         version churn. Returns the new manifest version (0 when the
         table is absent or ``parts`` is empty)."""
-        if not self.exists(name) or not parts:
-            return 0
-        todo = set(parts)
-        df = self._df_for(name, parts)
-        if layout is not None:
-            df = layout(df)
-        path = self._write_part(name, df, self.current_version(name) + 1)
-
-        def build(fresh):
-            missing = sorted(todo - set(fresh["parts"]))
-            if missing:
-                raise ConcurrentWriteError(
-                    f"{name}: parts retired under compaction "
-                    f"(another writer committed first): {missing}"
-                )
-            new_parts = [p for p in fresh["parts"] if p not in todo] + [path]
-            meta = dict(fresh.get("meta", {}))
-            if meta_fn is not None:
-                meta = meta_fn(meta, new_parts, path)
-            return {"parts": new_parts, "meta": meta}
-
-        return self._flip(name, build, staged=path)["version"]
+        entry = self.compaction_entry(name, parts, layout, meta_fn)
+        return self._flip([entry])[name]["version"] if entry else 0
 
 
 class SqliteIndexStore(IndexStore):
@@ -1095,12 +1224,9 @@ class SqliteIndexStore(IndexStore):
     STATE primitives differ — current/history manifests are rows in
     ``{root}/_manifest.db`` and the critical section is a
     ``BEGIN IMMEDIATE`` transaction, which also serializes writers
-    across processes. Honesty note on granularity: SQLite's write lock
-    is DATABASE-wide, so manifest flips on *different* tables of one
-    index serialize here, where the file backend's flock is per-table.
-    Flips are millisecond file-ops (the parquet writes happen outside
-    the critical section), so the four concurrent engine commits lose
-    only flip-interleaving, not write overlap. Detection:
+    across processes; its write lock is database-wide, so one
+    transaction publishes every entry of a catalog flip at once (the
+    ``current`` table is the catalog). Detection:
     :func:`open_store` picks this backend when the catalog file exists.
     """
 
@@ -1112,9 +1238,8 @@ class SqliteIndexStore(IndexStore):
 
         super().__init__(spark, root)
         self._db_path = os.path.join(root, self.CATALOG)
-        # the active transaction connection is THREAD-local: the engine
-        # commits four tables concurrently from driver threads, each in
-        # its own critical section
+        # the active transaction connection is THREAD-local: a flip on
+        # one driver thread must not hand its connection to another
         self._tls = threading.local()
         with closing(self._conn()) as con:
             con.execute(
@@ -1137,8 +1262,7 @@ class SqliteIndexStore(IndexStore):
     # -- overridden state primitives ----------------------------------------
 
     @contextmanager
-    def _transact(self, name: str):
-        os.makedirs(self._table_dir(name), exist_ok=True)
+    def _transact(self):
         con = self._conn()
         try:
             # IMMEDIATE takes the write lock up front: the read-check-
@@ -1165,6 +1289,9 @@ class SqliteIndexStore(IndexStore):
         with closing(self._conn()) as con:
             return con.execute(sql, args).fetchall()
 
+    def _catalog(self) -> dict[str, int]:
+        return dict(self._q("SELECT name, version FROM current"))
+
     def _state(self, name: str) -> dict:
         rows = self._q(
             "SELECT m.state FROM current c JOIN manifests m"
@@ -1180,20 +1307,21 @@ class SqliteIndexStore(IndexStore):
         )
         return json.loads(rows[0][0]) if rows else None
 
-    def _write_state(self, name: str, state: dict) -> None:
-        # inside _transact: all three statements commit atomically
-        self._q(
-            "INSERT OR REPLACE INTO manifests (name, version, state) VALUES (?,?,?)",
-            (name, state["version"], json.dumps(state)),
-        )
-        self._q(
-            "INSERT OR REPLACE INTO current (name, version) VALUES (?,?)",
-            (name, state["version"]),
-        )
-        self._q(
-            "DELETE FROM manifests WHERE name = ? AND version < ?",
-            (name, state["version"] - self.retain_versions),
-        )
+    def _write_states(self, states: dict[str, dict], catalog: dict[str, int]) -> None:
+        # inside _transact: every statement commits atomically
+        for name, state in states.items():
+            self._q(
+                "INSERT OR REPLACE INTO manifests (name, version, state) VALUES (?,?,?)",
+                (name, state["version"], json.dumps(state)),
+            )
+            self._q(
+                "INSERT OR REPLACE INTO current (name, version) VALUES (?,?)",
+                (name, state["version"]),
+            )
+            self._q(
+                "DELETE FROM manifests WHERE name = ? AND version < ?",
+                (name, state["version"] - self.retain_versions),
+            )
 
     def versions(self, name: str) -> list[int]:
         return [
