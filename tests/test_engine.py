@@ -1725,6 +1725,47 @@ def test_point_verbs_run_no_spark_job(engine):
         sc.setLocalProperty("spark.job.description", None)
 
 
+def test_mutations_run_a_pinned_number_of_spark_jobs(spark, tmp_path):
+    """Spark jobs per mutation on a small store. A replace or delete
+    runs its refcount merge once, pinned with its dead count; a delete
+    whose chunks all stay referenced returns [] without a post-flip
+    take; the key sort of every part write adds no job. Jobs are read
+    from ``statusTracker``: the stage threads run ungrouped, so every
+    ungrouped job above the previous highest id is the verb's."""
+    engine = DedupeEngine.create(spark, str(tmp_path / "idx"), SMALL)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs(fn):
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+        before = max(tracker.getJobIdsForGroup(None), default=-1)
+        out = fn()
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+        return len([j for j in tracker.getJobIdsForGroup(None) if j > before]), out
+
+    def batch(rows):
+        return spark.createDataFrame(
+            [(k, bytearray(v)) for k, v in rows.items()], "object_key string, data binary"
+        )
+
+    shared = rand_bytes(12_000, seed=999)
+    twin = rand_bytes(20_000, seed=5)
+    engine.write_batch(
+        batch({**{f"o/{i}": shared + rand_bytes(15_000, seed=i) for i in range(3)},
+               "twin/a": twin, "twin/b": twin})
+    )
+    n_write, _ = jobs(lambda: engine.write_batch(
+        batch({f"new/{i}": shared + rand_bytes(9_000, seed=50 + i) for i in range(2)})
+    ))
+    n_replace, _ = jobs(lambda: engine.write_or_replace_batch(
+        batch({f"o/{i}": rand_bytes(9_000, seed=70 + i) for i in range(2)})
+    ))
+    n_delete, gc = jobs(lambda: engine.delete_batch(["o/2", "new/0"]))
+    n_delete_nogc, gc_none = jobs(lambda: engine.delete_batch(["twin/a"]))
+    assert len(gc) > 0 and gc_none == []
+    assert (n_write, n_replace, n_delete, n_delete_nogc) == (22, 29, 9, 6)
+    assert engine.get("twin/b") == twin
+
 @pytest.mark.parametrize("verb", ["repair", "recover"])
 def test_maintenance_raises_fix_thread_error_beside_commit_error(engine, monkeypatch, verb):
     """A chunks fix stages from a pool thread while the chunk_store

@@ -33,6 +33,51 @@ def _df(spark, lo, hi):
     ).select("id", "object_key", "original_length", "comp_length", "chunk_count", "created_utc")
 
 
+def _payloads_df(spark, n, words=64, parts=2, lo=0):
+    """``n`` chunk_store-shaped rows (ids from ``lo``): hex keys in hash
+    (unsorted) order and ``words`` x 32 B of incompressible payload,
+    over ``parts`` shuffled partitions."""
+    return spark.range(lo, lo + n).selectExpr(
+        "sha2(cast(id as string), 256) as chunk_key",
+        f"unhex(concat_ws('', transform(sequence(1, {words}), "
+        "i -> sha2(concat(cast(id as string), '-', cast(i as string)), 256)))) as data",
+    ).repartition(parts)
+
+
+def _spy_reads(monkeypatch):
+    """``[(file, row groups or None for a whole-file read), ...]`` of
+    every parquet read the store makes from now on."""
+    import pyarrow.parquet as pq
+
+    reads = []
+
+    class Spy(pq.ParquetFile):
+        def __init__(self, source, **kw):
+            super().__init__(source, **kw)
+            self._src = source
+
+        def read_row_groups(self, row_groups, **kw):
+            reads.append((self._src, list(row_groups)))
+            return super().read_row_groups(row_groups, **kw)
+
+        def read(self, **kw):
+            reads.append((self._src, None))
+            return super().read(**kw)
+
+    monkeypatch.setattr(pq, "ParquetFile", Spy)
+    return reads
+
+
+def _group_spans(fpath, col):
+    """Per-row-group ``(min, max)`` of ``col``, read independently of the
+    store's footer cache."""
+    import pyarrow.parquet as pq
+
+    md = pq.ParquetFile(fpath).metadata
+    ci = [md.schema.column(i).path for i in range(md.num_columns)].index(col)
+    stats = [md.row_group(g).column(ci).statistics for g in range(md.num_row_groups)]
+    return [(st.min, st.max) for st in stats]
+
 def test_time_travel_reads_each_version(spark, tmp_path, store_cls):
     st = store_cls(spark, str(tmp_path))
     st.commit("objects", _df(spark, 0, 10))      # v1: 10 rows
@@ -256,35 +301,28 @@ def test_read_arrow_reads_only_kept_parts(spark, tmp_path, store_cls, monkeypatc
     the INT96 timestamps at the microsecond precision Spark wrote."""
     import pyarrow as pa
     import pyarrow.compute as pc
-    import pyarrow.dataset as pads
 
     st = store_cls(spark, str(tmp_path))
     st.commit("objects", _df(spark, 0, 10))
     st.append("objects", _df(spark, 10, 20))
     st.append("objects", _df(spark, 20, 30))
     third = st._state("objects")["parts"][2]
-    opened = []
-    real = pads.dataset
-
-    def spy(files, **kw):
-        opened.extend(files)
-        return real(files, **kw)
-
-    monkeypatch.setattr(pads, "dataset", spy)
+    reads = _spy_reads(monkeypatch)
     got = st.read_arrow(
         "objects", ["id", "object_key", "created_utc"], pc.field("id") == 25, col="id", values=[25]
     )
+    opened = [f for f, _ in reads]
     assert opened and all(f.startswith(third + "/") for f in opened)
     assert got.column_names == ["id", "object_key", "created_utc"]
     assert got.column("id").to_pylist() == [25] and got.column("object_key").to_pylist() == ["25"]
     assert got.schema.field("created_utc").type.unit == "us"
     # a miss outside every span and an empty probe keep no part: nothing
     # is read and the result is an empty table typed like the schema
-    opened.clear()
+    reads.clear()
     miss = st.read_arrow("objects", ["id"], col="id", values=[99])
     assert miss.num_rows == 0 and miss.schema.field("id").type == pa.int64()
     assert st.read_arrow("objects", col="id", values=[]).num_rows == 0
-    assert opened == []
+    assert reads == []
 
 
 def test_read_arrow_string_ranges(spark, tmp_path, store_cls):
@@ -306,6 +344,190 @@ def test_read_arrow_string_ranges(spark, tmp_path, store_cls):
     # a range no span overlaps keeps no part: nothing is read
     assert st.read_arrow("objects", ranges={"object_key": [("5", "6")]}).num_rows == 0
 
+
+# -- row-group selection inside kept parts -----------------------------------
+
+
+def _sorted_payload_store(spark, tmp_path, store_cls, files=2):
+    """A chunk_store of 300 2 KiB payload rows in one part of ``files``
+    files, with 32 KiB row groups."""
+    st = store_cls(spark, str(tmp_path))
+    st.ROW_GROUP_BYTES = 32 << 10
+    st.commit("chunk_store", _payloads_df(spark, 300, parts=files))
+    return st
+
+
+def _pick(st, spark, probe):
+    """``sorted([(chunk_key, data)])`` of ``probe`` by read_arrow and by
+    a Spark filter of the same snapshot."""
+    import pyarrow.compute as pc
+    from pyspark.sql import functions as F
+
+    got = st.read_arrow(
+        "chunk_store", None, pc.field("chunk_key").isin(probe), col="chunk_key", values=probe
+    )
+    arrow = sorted(zip(got.column("chunk_key").to_pylist(), got.column("data").to_pylist()))
+    want = st.read("chunk_store").filter(F.col("chunk_key").isin(probe)).collect()
+    return arrow, sorted((r.chunk_key, bytes(r.data)) for r in want)
+
+
+def test_write_part_sorts_by_key_and_bounds_row_groups(spark, tmp_path, store_cls):
+    import pyarrow.parquet as pq
+
+    st = _sorted_payload_store(spark, tmp_path, store_cls)
+    st.commit("objects", _df(spark, 0, 40).repartition(2))
+    for name, col in (("chunk_store", "chunk_key"), ("objects", "object_key")):
+        files = [f for p in st.live_parts(name) for f in st._part_files(p)]
+        assert len(files) == 2
+        for f in files:
+            keys = pq.read_table(f, columns=[col]).column(col).to_pylist()
+            assert keys == sorted(keys)
+    for f in st._part_files(st.live_parts("chunk_store")[0]):
+        spans = _group_spans(f, "chunk_key")
+        assert len(spans) > 1
+        # sorted: consecutive groups hold disjoint, ascending key spans
+        assert all(a[1] < b[0] for a, b in zip(spans, spans[1:]))
+
+
+def test_read_arrow_reads_only_groups_holding_probe_keys(spark, tmp_path, store_cls, monkeypatch):
+    """A k-key probe decodes only the groups whose span holds a probe
+    key; an all-miss probe decodes none. The miss keys sort between two
+    groups' spans, and the Bloom sidecar is removed so the part itself
+    is kept and the group test alone must skip them."""
+    import os
+    import random
+
+    st = _sorted_payload_store(spark, tmp_path, store_cls, files=1)
+    (part,) = st.live_parts("chunk_store")
+    os.remove(os.path.join(part, "_BLOOM.chunk_key"))
+    st._bloom_cache.clear()
+    (f,) = st._part_files(part)
+    spans = _group_spans(f, "chunk_key")
+    rng = random.Random(7)
+    groups = sorted(rng.sample(range(len(spans)), 3))
+    probe = [spans[g][rng.randrange(2)] for g in groups]
+    reads = _spy_reads(monkeypatch)
+    arrow, spark_rows = _pick(st, spark, probe)
+    assert arrow == spark_rows and len(arrow) == 3
+    assert reads == [(f, groups)]
+    # between two groups' spans and above every span: no group holds them
+    reads.clear()
+    misses = [spans[0][1] + "!", spans[-1][1] + "!"]
+    arrow, spark_rows = _pick(st, spark, misses)
+    assert arrow == spark_rows == []
+    assert reads == []
+
+
+def test_read_arrow_matches_spark_filter_on_random_probes(spark, tmp_path, store_cls):
+    """Random probes mixing hits, misses, duplicates and group-boundary
+    keys return exactly what a Spark filter of the snapshot returns."""
+    import random
+
+    st = _sorted_payload_store(spark, tmp_path, store_cls)
+    keys = [r.chunk_key for r in st.read("chunk_store").select("chunk_key").collect()]
+    bounds = [
+        k
+        for f in st._part_files(st.live_parts("chunk_store")[0])
+        for span in _group_spans(f, "chunk_key")
+        for k in span
+    ]
+    rng = random.Random(11)
+    for _ in range(4):
+        probe = rng.sample(keys, 5) + rng.sample(bounds, 4)
+        probe += [probe[0], "%064x" % rng.getrandbits(256), "0", "g"]
+        rng.shuffle(probe)
+        arrow, spark_rows = _pick(st, spark, probe)
+        assert arrow == spark_rows and len(arrow) == 9
+
+
+def test_read_arrow_matches_spark_filter_on_legacy_and_statless_parts(
+    spark, tmp_path, store_cls, monkeypatch
+):
+    """Parts written before key sorting — one unsorted group — and files
+    without footer statistics stay correct: the first is read as its
+    one group, the second whole (every group), and both match a Spark
+    filter of the snapshot."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    st = store_cls(spark, str(tmp_path))
+    legacy = os.path.join(st._table_dir("chunk_store"), "p00000001_legacy")
+    _payloads_df(spark, 60, parts=1).write.parquet(legacy)
+    st.attach_part("chunk_store", legacy)
+    statless = os.path.join(st._table_dir("chunk_store"), "p00000002_nostats")
+    os.makedirs(statless)
+    tbl = _payloads_df(spark, 60, parts=1, lo=1000).toArrow()
+    pq.write_table(
+        tbl, os.path.join(statless, "part-0.parquet"), row_group_size=8, write_statistics=False
+    )
+    st.attach_part("chunk_store", statless)
+    keys = sorted(r.chunk_key for r in st.read("chunk_store").select("chunk_key").collect())
+    (lf,) = st._part_files(legacy)
+    (sf,) = st._part_files(statless)
+    assert len(_group_spans(lf, "chunk_key")) == 1
+    n_groups = pq.ParquetFile(sf).metadata.num_row_groups
+    assert n_groups > 1
+    reads = _spy_reads(monkeypatch)
+    probe = keys[::23] + [keys[0], "0", "g"]
+    arrow, spark_rows = _pick(st, spark, probe)
+    assert arrow == spark_rows and len(arrow) == len(keys[::23])
+    got = dict(reads)
+    assert got.get(lf) in (None, [0]) and got[sf] == list(range(n_groups))
+
+
+def test_read_arrow_ranges_prune_groups_and_match_spark(spark, tmp_path, store_cls, monkeypatch):
+    """A list_objects-shaped read (key prefix plus id floor) keeps only
+    the groups whose spans overlap both ranges, and returns what a
+    Spark filter of the snapshot returns."""
+    import pyarrow.compute as pc
+    from pyspark.sql import functions as F
+
+    st = store_cls(spark, str(tmp_path))
+    st.ROW_GROUP_BYTES = 1 << 10
+    st.commit("objects", _df(spark, 0, 600).repartition(1))
+    (f,) = st._part_files(st.live_parts("objects")[0])
+    n_groups = len(_group_spans(f, "object_key"))
+    assert n_groups > 4
+    reads = _spy_reads(monkeypatch)
+    got = st.read_arrow(
+        "objects",
+        ["id", "object_key"],
+        pc.starts_with(pc.field("object_key"), pattern="3") & (pc.field("id") > 320),
+        ranges={"object_key": [("3", "4")], "id": [(321, None)]},
+    )
+    want = (
+        st.read("objects")
+        .filter(F.col("object_key").startswith("3") & (F.col("id") > 320))
+        .select("id", "object_key")
+        .collect()
+    )
+    assert sorted(got.column("id").to_pylist()) == sorted(r.id for r in want)
+    assert len(want) > 0
+    ((_, groups),) = reads
+    assert 0 < len(groups) < n_groups
+
+
+def test_three_key_probe_of_a_full_size_payload_part_reads_three_groups(
+    spark, tmp_path, store_cls, monkeypatch
+):
+    """At the shipped row-group bound, a 3-key probe of a >= 14 MB
+    chunk_store part decodes at most three row groups."""
+    import os
+
+    st = store_cls(spark, str(tmp_path))
+    st.commit("chunk_store", _payloads_df(spark, 900, words=512, parts=1))
+    (part,) = st.live_parts("chunk_store")
+    assert st.parts_bytes([part]) >= 14 << 20
+    (f,) = st._part_files(part)
+    keys = [r.chunk_key for r in st.read("chunk_store").select("chunk_key").collect()]
+    probe = [keys[5], keys[400], keys[-3]]
+    reads = _spy_reads(monkeypatch)
+    arrow, spark_rows = _pick(st, spark, probe)
+    assert arrow == spark_rows and len(arrow) == 3
+    ((_, groups),) = reads
+    assert 1 <= len(groups) <= 3 < len(_group_spans(f, "chunk_key"))
+    assert os.path.getsize(f) >= 14 << 20
 
 def test_parts_without_stats_are_never_pruned(spark, tmp_path, store_cls):
     st = store_cls(spark, str(tmp_path))

@@ -201,14 +201,16 @@ def _fix_pool(workers: int = 2):
                 raise failure
 
 
-def _pin(df: DataFrame) -> tuple[DataFrame, int]:
-    """``(df eagerly local-checkpointed, its row count)``. The count is
-    an :class:`~pyspark.sql.Observation` of the checkpoint job itself,
-    so learning whether a pinned key set is empty costs no second job.
-    Callers only compare it with zero: a re-run task can re-report its
-    rows, but no finished task's rows go unreported."""
+def _pin(df: DataFrame, where=None) -> tuple[DataFrame, int]:
+    """``(df eagerly local-checkpointed, its row count)`` — the count of
+    rows satisfying the Column ``where`` when one is given. The count
+    is an :class:`~pyspark.sql.Observation` of the checkpoint job
+    itself, so learning whether a pinned set is empty costs no second
+    job. Callers only compare it with zero: a re-run task can re-report
+    its rows, but no finished task's rows go unreported."""
     obs = Observation()
-    pinned = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+    counted = F.lit(1) if where is None else F.when(where, 1)
+    pinned = df.observe(obs, F.count(counted).alias("n")).localCheckpoint(eager=True)
     return pinned, int(obs.get["n"])
 
 
@@ -563,8 +565,9 @@ class DedupeEngine:
         n_objects, total_bytes)``: the cached chunk rows and per-object
         rollup of :meth:`_prepare_batch` — enters it. A delete passes
         only ``doomed``, an ingest only ``batch``, a replace both.
-        Returns the pinned set of GC'd chunk keys when keys were doomed,
-        else None. Caller holds the composite-op lock.
+        Returns ``(GC'd chunk keys, their count)``: a DataFrame over the
+        pinned merge when keys were doomed, else ``(None, 0)``. Caller
+        holds the composite-op lock.
 
         One :meth:`_cas` attempt does three things in order:
 
@@ -575,10 +578,13 @@ class DedupeEngine:
              (a plain append for an ingest);
            * ``object_map`` = survivors ∪ new rows (a plain append for an
              ingest);
-           * ``chunks`` = ONE refcount merge of increments − decrements;
-           * ``chunk_store`` = (store − the payloads of chunks the merge
-             drops below one reference, pinned) ∪ the absent new
-             payloads, or a plain append when nothing died;
+           * ``chunks`` = ONE refcount merge of increments − decrements.
+             When keys are doomed the merge is pinned once, with its
+             dead count, before this stage and the next are submitted;
+             the chunks rewrite keeps its rows with a reference left;
+           * ``chunk_store`` = (store − the payloads of the pinned
+             merge's dead chunks) ∪ the absent new payloads, or a plain
+             append when nothing died;
         3. make ONE catalog flip of the staged parts plus the ledger row.
 
         Every replaced table is CAS-checked against its snapshot version
@@ -733,9 +739,7 @@ class DedupeEngine:
                 return self.store.commit_entry("object_map", rows, expected_version=v_map)
 
             def stage_chunks():
-                rows = merged()
-                if doomed is not None:
-                    rows = rows.filter(F.col("ref_count") >= 1)
+                rows = merged() if doomed is None else merge.filter(F.col("ref_count") >= 1)
                 return self.store.commit_entry("chunks", _sized(rows), expected_version=v_ch)
 
             def stage_payloads():
@@ -743,21 +747,6 @@ class DedupeEngine:
                 # => stored once, DedupeLibrary.cs:628): new payloads are
                 # inserted if absent, dead ones GC'd, both derived from the
                 # chunk_store snapshot the flip CAS-checks
-                n_dead = 0
-                if doomed is not None:
-                    # the pin fixes the GC set for the payload rewrite AND
-                    # the caller's return value; a RETRY drops the previous
-                    # attempt's pin first so contended mutations don't hold
-                    # abandoned copies of a (possibly huge) GC set
-                    prev = holder.pop("gc", None)
-                    if prev is not None:
-                        try:
-                            prev.unpersist()
-                        except Exception:
-                            pass  # best-effort; ContextCleaner reclaims eventually
-                    holder["gc"], n_dead = _pin(
-                        merged().filter(F.col("ref_count") < 1).select("chunk_key")
-                    )
                 rows = None
                 if batch is not None:
                     absent = new_payloads
@@ -787,14 +776,28 @@ class DedupeEngine:
             # every thread is joined before any error is raised; a second
             # failed stage rides along as a note on the first
             with _fix_pool(4) as (pool, fixes):
-                fixes += [
-                    pool.submit(fn)
-                    for fn in (stage_objects, stage_map, stage_chunks, stage_payloads)
-                ]
+                fixes += [pool.submit(fn) for fn in (stage_objects, stage_map)]
+                merge = n_dead = None
+                if doomed is not None:
+                    # the merge runs ONCE, pinned with its dead count: the
+                    # chunks rewrite keeps its live rows, the payload GC
+                    # and the caller's return value its dead keys. A RETRY
+                    # drops the previous attempt's pin first so contended
+                    # mutations don't hold abandoned copies of it
+                    prev = holder.pop("merge", None)
+                    if prev is not None:
+                        try:
+                            prev.unpersist()
+                        except Exception:
+                            pass  # best-effort; ContextCleaner reclaims eventually
+                    merge, n_dead = _pin(merged(), F.col("ref_count") < 1)
+                    holder["merge"], holder["n_dead"] = merge, n_dead
+                    holder["gc"] = merge.filter(F.col("ref_count") < 1).select("chunk_key")
+                fixes += [pool.submit(fn) for fn in (stage_chunks, stage_payloads)]
             self._publish([f.result() for f in fixes], op)
 
         self._cas(attempt)
-        return holder.get("gc")
+        return holder.get("gc"), holder.get("n_dead", 0)
 
     # a restore can only reach points whose parquet parts are still in
     # the per-table retention window (~8 versions), so the ledger keeps
@@ -821,7 +824,10 @@ class DedupeEngine:
 
     #: target parquet file size for :meth:`optimize`'s range-clustered
     #: rewrite — matches spark.sql.files.maxPartitionBytes so one scan
-    #: task reads one file
+    #: task reads one file. Point reads do not pay for the file size:
+    #: every file is cut into key-sorted row groups of
+    #: ``IndexStore.ROW_GROUP_BYTES``, and a probe decodes only the
+    #: groups that can hold its keys
     OPTIMIZE_TARGET_FILE_BYTES = 128 << 20
 
     def _checkpoint_entry(self, op: str) -> tuple:
@@ -907,9 +913,10 @@ class DedupeEngine:
     # get/try_get, get_range, get_metadata, get_chunk_metadata,
     # list_objects and the read stream) then read the kept parts with
     # ONE driver-side pyarrow read (IndexStore.read_arrow) and run no
-    # Spark job: their cost is footer and row-group I/O on the parts
-    # that can hold the key, not the per-job scheduling floor, and a
-    # pruned miss reads nothing at all. The APIs that return a
+    # Spark job: parts are key-sorted with bounded row groups, so their
+    # cost is footer and row-group I/O on the groups that can hold the
+    # key, not the per-job scheduling floor, and a pruned miss reads
+    # nothing at all. The APIs that return a
     # DataFrame (get_object_map, get_chunks, map_for_position,
     # get_batch) stay on Spark, because callers compose them; they plan
     # a scan over the same pruned part list (IndexStore.read_point).
@@ -1194,9 +1201,11 @@ class DedupeEngine:
         if isinstance(keys, DataFrame):
             keys = keys.select("object_key").distinct().localCheckpoint(eager=True)
         with self.store.op_lock():
-            gc_set = self._commit_mutation(keys)
+            gc_set, n_dead = self._commit_mutation(keys)
         if isinstance(keys, DataFrame):
             return gc_set
+        if not n_dead:
+            return []
         head = gc_set.take(GC_RETURN_CAP + 1)
         if len(head) > GC_RETURN_CAP:
             return gc_set
@@ -1740,8 +1749,9 @@ class DedupeEngine:
         manifest version per table (0 = skipped, already clustered).
 
         Compaction RANGE-CLUSTERS each table by its key
-        (repartitionByRange + sortWithinPartitions — the Z-order
-        analogue for a single key): every rewritten file covers a
+        (repartitionByRange, and every part write sorts its files by
+        the same key — the Z-order analogue for a single key): every
+        rewritten file covers a
         narrow key span, so key-range predicates — point/batch reads,
         prefix listings, and above all the rolling scrub's
         :func:`shard_predicate` — prune at the parquet row-group level
@@ -1775,18 +1785,12 @@ class DedupeEngine:
         """
         import os
 
-        cluster_key = {
-            "objects": "object_key",
-            "object_map": "object_key",
-            "chunks": "chunk_key",
-            "chunk_store": "chunk_key",
-        }
         tables = [t for t in _INDEX_SCHEMAS if self.store.exists(t)]
 
         def stage_one(name: str):
             # re-derived per CAS attempt: a lost race means the part
             # list moved and the rewrite subset must be re-selected
-            key = cluster_key[name]
+            key = self.store.BLOOM_COLS[name]
             parts = self.store.live_parts(name)
             clustered = set(self.store.table_meta(name).get("clustered_parts", []))
             todo = (
@@ -1812,19 +1816,17 @@ class DedupeEngine:
                 meta["clustered_parts"] = kept + [os.path.basename(new_part)]
                 return meta
 
-            # single-file folds (every small-table fold, and any
-            # incremental fold under the target file size) need no
-            # range exchange: coalesce(1) + sortWithinPartitions
-            # yields the identical one sorted part with zero
-            # shuffle. Multi-file folds keep repartitionByRange —
+            # the part write sorts each file by the key. Single-file
+            # folds (every small-table fold, and any incremental fold
+            # under the target file size) need no range exchange:
+            # coalesce(1) yields the identical one sorted part with
+            # zero shuffle. Multi-file folds keep repartitionByRange —
             # the range bounds are what make each file a narrow,
             # prunable key span.
             if n_files == 1:
-                layout = lambda df: df.coalesce(1).sortWithinPartitions(key)
+                layout = lambda df: df.coalesce(1)
             else:
-                layout = lambda df: df.repartitionByRange(
-                    n_files, F.col(key)
-                ).sortWithinPartitions(key)
+                layout = lambda df: df.repartitionByRange(n_files, F.col(key))
             return self.store.compaction_entry(name, todo, layout=layout, meta_fn=meta_fn)
 
         def attempt() -> dict[str, int]:

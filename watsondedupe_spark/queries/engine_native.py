@@ -758,7 +758,7 @@ def engine_integrity_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from watsondedupe_spark.chunking import ChunkSettings, SMALL_FILE_PROFILE
-    from watsondedupe_spark.engine import DedupeEngine
+    from watsondedupe_spark.engine import DedupeEngine, _fix_pool
     from watsondedupe_spark.keys import chunk_key
 
     objs = _docs(spark, sf_dir).select(
@@ -786,8 +786,6 @@ def engine_integrity_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         def counts() -> dict[str, int]:
             return collect_counts(counts_frame())
-
-        from concurrent.futures import ThreadPoolExecutor
 
         # r13 (guide §2.6): the clean-scan count is a READ-ONLY job over
         # the pinned pre-plant snapshot, so its collect can span the
@@ -817,24 +815,24 @@ def engine_integrity_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             )
 
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_before = pool.submit(collect_counts, before_df)
+        # _fix_pool joins every thread and raises the first failure, so
+        # no thread's error is dropped on exit
+        with _fix_pool(3) as (pool, fixes):
+            fixes.append(pool.submit(collect_counts, before_df))
             # deterministic victim: the smallest chunk_key in the index
             victim = eng.chunks.agg(F.min("chunk_key")).collect()[0][0]
-            with ThreadPoolExecutor(max_workers=2) as p2:
-                for f in [p2.submit(plant_payloads), p2.submit(plant_ghost_map)]:
-                    f.result()
-            before = f_before.result()
+            fixes += [pool.submit(plant_payloads), pool.submit(plant_ghost_map)]
+        before = fixes[0].result()
         # r13 (guide §2.6): the post-plant verify reads the pinned
         # FAULTED snapshot (frame built after the plants land, before
         # repair starts), so its collect overlaps repair()'s detection
         # and rewrite — the serial form paid a full verify pass of
         # wall-clock between the plants and the heal.
         after_df = counts_frame()
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_after = pool.submit(collect_counts, after_df)
+        with _fix_pool(1) as (pool, fixes):
+            fixes.append(pool.submit(collect_counts, after_df))
             eng.repair()
-            after = f_after.result()
+        after = fixes[0].result()
         healed = counts()
     finally:
         shutil.rmtree(root, ignore_errors=True)

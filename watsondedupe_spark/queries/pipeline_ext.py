@@ -3039,7 +3039,7 @@ def emb_opq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # collects run from two driver threads and the sample is permuted
     # on the driver (16 x 64 floats), producing byte-identical
     # codebooks (permute-then-slice == slice of driver-permuted row).
-    from concurrent.futures import ThreadPoolExecutor
+    from watsondedupe_spark.engine import _fix_pool
 
     skey = F.conv(
         F.substring(F.md5(F.col("vec_id").cast("string")), 1, 15), 16, 10
@@ -3061,9 +3061,9 @@ def emb_opq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
             .collect()
         )
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_e, f_s = pool.submit(_energy), pool.submit(_sample)
-        e_row, sample_rows = f_e.result(), f_s.result()
+    with _fix_pool(2) as (pool, fixes):
+        fixes += [pool.submit(_energy), pool.submit(_sample)]
+    e_row, sample_rows = (f.result() for f in fixes)
     order = sorted(range(1, 65), key=lambda d: (-e_row[f"e{d}"], d))
     assign = [(r % 8, r // 8, d) for r, d in enumerate(order)]
     pi = [d for _s, _p, d in sorted(assign)]  # permuted position -> source dim

@@ -59,6 +59,18 @@ contract (``commit``, ``append``, ``attach_part``, ``compact_parts``,
 ``*_entry`` methods stage the same entries for a caller that publishes
 several tables together.
 
+Every part file is sorted by its table's key column and cut into row
+groups of about ``ROW_GROUP_BYTES`` (``_write_part``), so its groups
+hold disjoint, ascending key spans. A driver-side point read
+(``read_arrow``) first picks parts (manifest span stats and Bloom
+sidecars), then picks row groups inside each kept file from its cached
+footer, and decodes only those: a k-key probe costs about k row groups,
+not k whole parts. Arrow's own dataset filter cannot do this — on
+pyarrow 16.1 an ``isin`` filter prunes no row group, and an OR of
+equalities, which does, costs ~100 ms to plan at 64 keys. Parts written
+before the sort (one unsorted group) stay readable, just unpruned, and
+stay plain parquet to Spark either way.
+
 Two interchangeable backends prove the swap point (the reference's
 ``DbProvider`` pluggability, src/DedupeLibrary/Database/DbProvider.cs:10,
 proven externally against MySQL in src/Test.External/Program.cs:188):
@@ -124,31 +136,65 @@ def _flock(path: str):
         os.close(fd)
 
 
-def _column_span(md, ci: int | None) -> list | None:
-    """``[lo, hi]`` of column ``ci`` over every row group of one parquet
-    footer ``md``, or None when any row group's stats can't be trusted
-    (or the column is absent, or there is no row group)."""
-    if ci is None:
+def _group_span(md, rg: int, ci: int) -> list | None:
+    """``[lo, hi]`` of column ``ci`` in row group ``rg`` of one parquet
+    footer ``md``, or None when that group's stats can't be trusted."""
+    st = md.row_group(rg).column(ci).statistics
+    if st is None or not st.has_min_max:
         return None
-    span = None
-    for rg in range(md.num_row_groups):
-        st = md.row_group(rg).column(ci).statistics
-        if st is None or not st.has_min_max:
+    lo, hi = st.min, st.max
+    if isinstance(lo, bytes):
+        # strict decode only: a lossy ("replace") decode of
+        # truncated/invalid UTF-8 stats is NOT order-preserving
+        # (U+FFFD can sort a truncated max BELOW real values), so
+        # an undecodable bound makes the span untrusted
+        try:
+            lo, hi = lo.decode("utf-8"), hi.decode("utf-8")
+        except UnicodeDecodeError:
             return None
-        lo, hi = st.min, st.max
-        if isinstance(lo, bytes):
-            # strict decode only: a lossy ("replace") decode of
-            # truncated/invalid UTF-8 stats is NOT order-preserving
-            # (U+FFFD can sort a truncated max BELOW real values), so
-            # an undecodable bound makes the span untrusted
-            try:
-                lo, hi = lo.decode("utf-8"), hi.decode("utf-8")
-            except UnicodeDecodeError:
-                return None
-        if not isinstance(lo, (str, int, float)):
-            return None
-        span = [lo, hi] if span is None else [min(span[0], lo), max(span[1], hi)]
-    return span
+    if not isinstance(lo, (str, int, float)):
+        return None
+    return [lo, hi]
+
+
+def _union_span(groups: list | None) -> list | None:
+    """The file-wide ``[lo, hi]`` of per-group spans, or None when the
+    column is absent, there is no row group, or any group's span is
+    untrusted."""
+    if not groups or any(g is None for g in groups):
+        return None
+    return [min(g[0] for g in groups), max(g[1] for g in groups)]
+
+
+def _overlaps(span: list | None, ranges: list[tuple]) -> bool:
+    """Whether ANY ``(lo, hi)`` range (``None`` bounds open) can meet
+    ``span``; a missing span (no trusted stats) always can."""
+    if span is None:
+        return True
+    plo, phi = span
+    return any((lo is None or lo <= phi) and (hi is None or hi >= plo) for lo, hi in ranges)
+
+
+def _sorted_probe(values: list) -> list | None:
+    """``values`` sorted once for :func:`_holds_probe`'s bisects, or None
+    when they are mixed/unorderable types (no span pruning then)."""
+    try:
+        return sorted(values)
+    except TypeError:
+        return None
+
+
+def _holds_probe(span: list | None, probe: list | None) -> bool:
+    """Whether ``span`` can hold a value of the SORTED ``probe`` list:
+    the smallest probe at or above the low bound is a hit iff it also
+    sits at or below the high bound (one bisect). A missing span or an
+    unorderable (None) probe always can."""
+    if span is None or probe is None:
+        return True
+    import bisect
+
+    i = bisect.bisect_left(probe, span[0])
+    return i < len(probe) and probe[i] <= span[1]
 
 
 class IndexStore:
@@ -194,9 +240,11 @@ class IndexStore:
         # parsed Bloom sidecars keyed by (part basename, col): parts
         # are immutable once published, so the cache never invalidates
         self._bloom_cache: dict = {}
-        # per-file footer spans by column (:meth:`_file_spans`): files
-        # are immutable too
+        # per-file parsed footer plus per-row-group spans by column
+        # (:meth:`_footer`): files are immutable too
         self._footer_cache: dict = {}
+        self._footer_bytes = 0
+        self._footer_lock = threading.Lock()
         os.makedirs(root, exist_ok=True)
 
     # -- backend primitives (the only parts a new backend overrides) --------
@@ -345,33 +393,61 @@ class IndexStore:
             os.path.join(part, f) for f in os.listdir(part) if f.endswith(".parquet")
         )
 
-    def _file_spans(self, fpath: str, cols: list[str]) -> dict:
-        """``{col: [lo, hi]}`` of ``cols`` across one parquet FILE's row
-        groups, read from its footer on the driver (no Spark job —
-        pyarrow reads only metadata). A column maps to None when its
-        stats can't be trusted (missing footer stats, unexpected types,
-        no row group): a file is then never pruned on it. Cached per
+    #: serialized footer bytes :meth:`_footer` keeps parsed before it
+    #: starts over — a 128 MB file of 256 KiB row groups has a ~100 KB
+    #: footer, so the cache holds hundreds of such files, not every
+    #: file of a 100 TB table
+    FOOTER_CACHE_BYTES = 32 << 20
+
+    def _footer(self, fpath: str, cols: list[str]) -> tuple | None:
+        """``(footer, {col: [group span, ...]})`` of one parquet FILE,
+        read on the driver (no Spark job — pyarrow reads only metadata):
+        the parsed ``FileMetaData`` and, per column of ``cols``, one
+        ``[lo, hi]`` per row group, None for a group whose stats can't
+        be trusted (missing stats, unexpected types, undecodable
+        UTF-8). A column absent from the file maps to None. Cached per
         file and column, since files are immutable; a cached None for
         the whole file means its footer could not be read. Parquet's
         truncated string statistics stay safe here — a truncated min is
-        a lower bound and a truncated max an upper bound, so the span
-        can only widen."""
+        a lower bound and a truncated max an upper bound, so a span can
+        only widen."""
         cache = self._footer_cache
-        spans = cache.get(fpath, {})
-        todo = [c for c in cols if spans is not None and c not in spans]
+        entry = cache.get(fpath, (None, {}))
+        todo = [c for c in cols if entry is not None and c not in entry[1]]
         if todo:
+            fresh = 0  # serialized bytes of a footer parsed by this call
             try:
                 import pyarrow.parquet as pq
 
-                md = pq.ParquetFile(fpath).metadata
+                md = entry[0]
+                if md is None:
+                    md = pq.ParquetFile(fpath).metadata
                 index = {md.schema.column(i).path: i for i in range(md.num_columns)}
-                spans = {**spans, **{c: _column_span(md, index.get(c)) for c in todo}}
+                groups = {
+                    c: None
+                    if index.get(c) is None
+                    else [_group_span(md, rg, index[c]) for rg in range(md.num_row_groups)]
+                    for c in todo
+                }
+                fresh = 0 if entry[0] is not None else md.serialized_size
+                entry = (md, {**entry[1], **groups})
             except Exception:  # noqa: BLE001 — stats are an optimization only
-                spans = None
-            if len(cache) >= 65536:
-                cache.clear()
-            cache[fpath] = spans
-        return {c: None if spans is None else spans[c] for c in cols}
+                entry = None
+            with self._footer_lock:
+                self._footer_bytes += fresh
+                if self._footer_bytes > self.FOOTER_CACHE_BYTES:
+                    cache.clear()
+                    self._footer_bytes = fresh
+                cache[fpath] = entry
+        return entry
+
+    def _file_spans(self, fpath: str, cols: list[str]) -> dict:
+        """``{col: [lo, hi]}`` of ``cols`` across one parquet FILE's row
+        groups (the union of :meth:`_footer`'s group spans). A column
+        maps to None when any group's stats can't be trusted or the
+        file has no row group: a file is then never pruned on it."""
+        entry = self._footer(fpath, cols)
+        return {c: None if entry is None else _union_span(entry[1][c]) for c in cols}
 
     def _part_stats(self, name: str, path: str) -> dict | None:
         """Min/max of the table's skip columns across one part dir's
@@ -403,24 +479,14 @@ class IndexStore:
         overlaps its span). Parts without recorded stats are always
         kept — skipping is an optimization, never a correctness gate."""
         stats = state.get("stats", {})
-        kept = []
-        for p in state["parts"]:
-            spans = stats.get(os.path.basename(p))
-            keep = True
-            for col, ranges in col_ranges.items():
-                span = (spans or {}).get(col)
-                if span is None:
-                    continue  # no stats for this column: cannot prune
-                plo, phi = span
-                if not any(
-                    (lo is None or lo <= phi) and (hi is None or hi >= plo)
-                    for lo, hi in ranges
-                ):
-                    keep = False
-                    break
-            if keep:
-                kept.append(p)
-        return kept
+        return [
+            p
+            for p in state["parts"]
+            if all(
+                _overlaps((stats.get(os.path.basename(p)) or {}).get(col), ranges)
+                for col, ranges in col_ranges.items()
+            )
+        ]
 
     def read_key_range(
         self,
@@ -483,18 +549,46 @@ class IndexStore:
         "chunk_store": "chunk_key",
     }
 
+    #: row-group bound of every part file :meth:`_write_part` writes.
+    #: A point read (:meth:`read_arrow`) decodes only the row groups
+    #: whose key span can hold a probe, so this is the unit a point
+    #: read pays per probed key: a 16 MB ``chunk_store`` part becomes
+    #: ~70 groups instead of one, and a 128 MB ``optimize()`` file
+    #: ~500. Smaller groups read faster but write slower (more
+    #: flushes, a larger footer); the value was chosen by measuring
+    #: both (CHANGES.md).
+    ROW_GROUP_BYTES = 256 << 10
+
     def _write_part(self, name: str, df: DataFrame, version_hint: int) -> str:
         """Write ``df`` as an immutable part dir plus its Bloom sidecar
         and return its path — the single choke point every
         part-creating write path goes through, so no part can miss its
         sidecar by omission. The dir name is collision-free: the
         version hint for operator legibility plus a uuid suffix, so
-        racing writers never share a path."""
+        racing writers never share a path.
+
+        Each output file is sorted by the table's key column
+        (:attr:`BLOOM_COLS`) — a per-partition sort, so no exchange and
+        no extra Spark job — and cut into row groups of about
+        :attr:`ROW_GROUP_BYTES`, so consecutive groups hold disjoint
+        key spans that :meth:`read_arrow` picks from the footer. The
+        bound goes to parquet-mr as ``parquet.block.size`` plus
+        ``parquet.page.size.row.check.min``: parquet-mr otherwise
+        measures its buffered size only every 100+ rows, which at
+        16 KiB payload rows would still give groups of 1.6 MB and up."""
         os.makedirs(self._table_dir(name), exist_ok=True)
         path = os.path.join(
             self._table_dir(name), f"p{version_hint:08d}_{uuid.uuid4().hex[:8]}"
         )
-        df.write.mode("overwrite").parquet(path)
+        key = self.BLOOM_COLS.get(name)
+        if key in df.columns:
+            df = df.sortWithinPartitions(key)
+        (
+            df.write.mode("overwrite")
+            .option("parquet.block.size", self.ROW_GROUP_BYTES)
+            .option("parquet.page.size.row.check.min", 1)
+            .parquet(path)
+        )
         self._write_bloom(name, path)
         self._tick(name)
         return path
@@ -612,28 +706,14 @@ class IndexStore:
         parts = list(state.get("parts", []))
         if not parts or not values:
             return parts
-        vals: list | None
-        try:
-            vals = sorted(values)
-        except TypeError:  # mixed/unorderable probe types: no span pruning
-            vals = None
+        vals = _sorted_probe(values)
         if vals and (name, col) not in self.HASH_KEYED:
-            import bisect
-
             stats = state.get("stats", {})
-            kept = []
-            for p in parts:
-                span = (stats.get(os.path.basename(p)) or {}).get(col)
-                if span is None:
-                    kept.append(p)  # no stats: cannot prune
-                    continue
-                plo, phi = span
-                # smallest probe >= the part's low bound; a hit iff it
-                # also sits at or below the part's high bound
-                i = bisect.bisect_left(vals, plo)
-                if i < len(vals) and vals[i] <= phi:
-                    kept.append(p)
-            parts = kept
+            parts = [
+                p
+                for p in parts
+                if _holds_probe((stats.get(os.path.basename(p)) or {}).get(col), vals)
+            ]
         if parts and self.BLOOM_COLS.get(name) == col:
             parts = self._bloom_prune(name, col, parts, list(values))
         return parts
@@ -654,41 +734,85 @@ class IndexStore:
         :meth:`parts_for_keys`; an empty ``values`` reads nothing) or by
         span ranges (``ranges`` through :meth:`_prune_parts`: a part is
         kept when, for each column, any ``(lo, hi)`` range overlaps its
-        span; ``None`` bounds are open). One ``pyarrow.dataset`` read
-        over the kept parts' ``*.parquet`` files (the dataset takes
-        files, not part dirs, and the dirs also hold Spark's marker
-        files and the Bloom sidecars) then projects ``columns``
-        (default: every column, in file order) and applies the Arrow
-        ``filter`` expression, which parquet row-group statistics also
-        push down. When no part is kept, nothing is read and the result
-        is an empty table typed from :data:`TABLE_SCHEMAS`. INT96
-        timestamps come back as ``timestamp[us]``, the precision Spark
-        wrote them at.
+        span; ``None`` bounds are open).
+
+        Inside each kept file the same test picks ROW GROUPS from the
+        cached footer (:meth:`_footer`) before any data is read: a key
+        probe keeps a group iff a sorted probe value falls inside its
+        ``col`` span (one bisect per group), a ``ranges`` read keeps a
+        group iff its spans overlap every column's ranges, and a group
+        without trusted stats is always read. Parts are key-sorted with
+        bounded groups (:meth:`_write_part`), so a k-key probe decodes
+        at most ~k groups of :attr:`ROW_GROUP_BYTES`, not whole parts.
+        An Arrow dataset ``isin`` filter cannot do this: on pyarrow
+        16.1 it prunes no row group at all, and an OR of equalities,
+        which does prune, costs ~100 ms to plan at 64 keys. Parts
+        written as one unsorted group are read whole but stay correct.
+
+        The kept groups are read with the cached footer (every column
+        when a ``filter`` is given, since it may reference any of them;
+        a group is at most :attr:`ROW_GROUP_BYTES`), concatenated,
+        filtered by the Arrow ``filter`` expression and projected to
+        ``columns`` (default: every column, in file order). When no
+        group is kept, the result is an empty table typed from
+        :data:`TABLE_SCHEMAS`. INT96 timestamps come back as
+        ``timestamp[us]``, the precision Spark wrote them at.
 
         This is the reference's single indexed SQLite query
-        (SqliteProvider.cs:203-270) as file skipping plus one columnar
-        read: a point verb pays footer and row-group I/O on the parts
-        that can hold its key, not the per-job scheduling floor of a
-        Spark action."""
-        import pyarrow.dataset as pads
+        (SqliteProvider.cs:203-270) as file and row-group skipping plus
+        one columnar read: a point verb pays footer and row-group I/O
+        on the groups that can hold its key, not the per-job scheduling
+        floor of a Spark action."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
 
         if col is not None:
             parts = self.parts_for_keys(name, col, values) if values else []
+            probe = _sorted_probe(values or [])
+
+            def keep(spans: dict, rg: int) -> bool:
+                return spans[col] is None or _holds_probe(spans[col][rg], probe)
+
+            cols = [col]
         else:
+            ranges = ranges or {}
             parts = self._prune_parts(self._state(name), ranges)
-        files = [f for p in parts for f in self._part_files(p)]
-        if not files:
-            import pyarrow as pa
+
+            def keep(spans: dict, rg: int) -> bool:
+                return all(
+                    spans[c] is None or _overlaps(spans[c][rg], r) for c, r in ranges.items()
+                )
+
+            cols = list(ranges)
+        read_cols = columns if filter is None else None
+        pieces = []
+        for fpath in (f for p in parts for f in self._part_files(p)):
+            entry = self._footer(fpath, cols)
+            md, groups = None, None  # an unreadable footer: read the whole file
+            if entry is not None:
+                md = entry[0]
+                groups = [rg for rg in range(md.num_row_groups) if keep(entry[1], rg)]
+                if not groups:
+                    continue
+            pf = pq.ParquetFile(fpath, metadata=md, coerce_int96_timestamp_unit="us")
+            pieces.append(
+                pf.read(columns=read_cols)
+                if groups is None
+                else pf.read_row_groups(groups, columns=read_cols)
+            )
+        if not pieces:
             from pyspark.sql.pandas.types import to_arrow_schema
 
             schema = to_arrow_schema(TABLE_SCHEMAS[name])
             if columns is not None:
                 schema = pa.schema([schema.field(c) for c in columns])
             return schema.empty_table()
-        fmt = pads.ParquetFileFormat(
-            read_options=pads.ParquetReadOptions(coerce_int96_timestamp_unit="us")
-        )
-        return pads.dataset(files, format=fmt).to_table(columns=columns, filter=filter)
+        # parts may differ in field nullability; the default promotion
+        # unifies it
+        tbl = pa.concat_tables(pieces, promote_options="default")
+        if filter is not None:
+            tbl = tbl.filter(filter)
+        return tbl if columns is None else tbl.select(columns)
 
     def read_version(self, name: str, version: int) -> DataFrame:
         """Snapshot of ``name`` as of ``version`` — Delta-style time
