@@ -500,7 +500,7 @@ def bench_substrate_builds(spark, sf_dir: str) -> dict[str, list[float]]:
     substrates (build-once/probe-many is the deployment shape), which
     means they no longer guard the build stage — the expensive part of
     the dedup/ANN story at 100 TB. These rows time the real build:
-    every run clears the module-level substrate cache AND the Spark
+    every run clears the substrate registry AND the Spark
     CacheManager (so a rebuilt identical plan cannot silently serve
     from the old persisted copy), then materializes from scratch.
     Runs AFTER the headline loop so clearing never poisons a timed
@@ -509,11 +509,12 @@ def bench_substrate_builds(spark, sf_dir: str) -> dict[str, list[float]]:
     import watsondedupe_spark.queries.curation_ext as cur
     import watsondedupe_spark.queries.engine_native as en
     import watsondedupe_spark.queries.llm_pipeline as llm
+    from watsondedupe_spark import substrates
 
-    def timed(clear, build) -> list[float]:
+    def timed(build) -> list[float]:
         samples = []
         for _ in range(2):
-            clear()
+            substrates.clear()
             spark.catalog.clearCache()
             t0 = time.time()
             build()
@@ -523,25 +524,14 @@ def bench_substrate_builds(spark, sf_dir: str) -> dict[str, list[float]]:
     return {
         # 60-bit portable SimHash fingerprints: the 60-vote bit-majority
         # aggregation, materialized via eager localCheckpoint
-        "simhash_fp_build": timed(
-            en._SIMHASH_CACHE.clear, lambda: en._simhash_fp(spark, sf_dir)
-        ),
+        "simhash_fp_build": timed(lambda: en._simhash_fp(spark, sf_dir)),
         # MinHash signatures: shingle explode + 6-way MIN aggregation
-        "minhash_sig_build": timed(
-            llm._SIG_CACHE.clear,
-            lambda: llm.minhash_sig_df(spark, sf_dir).count(),
-        ),
+        "minhash_sig_build": timed(lambda: llm.minhash_sig_df(spark, sf_dir).count()),
         # exact-Jaccard pair stats: inverted index + bounded pair explode
-        "jaccard_pairs_build": timed(
-            llm._PAIR_CACHE.clear,
-            lambda: llm.jaccard_pair_stats_df(spark, sf_dir).count(),
-        ),
+        "jaccard_pairs_build": timed(lambda: llm.jaccard_pair_stats_df(spark, sf_dir).count()),
         # PQ/IVF-PQ index: centroid sample + routing pass + codebook
         # sample + encode pass (codes is the cached artifact — force it)
-        "ann_index_build": timed(
-            cur._ANN_INDEX_CACHE.clear,
-            lambda: cur._ann_index(spark, sf_dir)[3].count(),
-        ),
+        "ann_index_build": timed(lambda: cur._ann_index(spark, sf_dir)[3].count()),
     }
 
 
@@ -955,18 +945,9 @@ DEEP_QUERIES = [
 
 
 def _clear_substrates(spark) -> None:
-    import watsondedupe_spark.queries.curation_ext as cur
-    import watsondedupe_spark.queries.engine_native as en
-    import watsondedupe_spark.queries.llm_pipeline as llm
+    from watsondedupe_spark import substrates
 
-    import watsondedupe_spark.queries.pipeline_ext as pext
-
-    en._SIMHASH_CACHE.clear()
-    llm._SIG_CACHE.clear()
-    llm._PAIR_CACHE.clear()
-    cur._ANN_INDEX_CACHE.clear()
-    pext._SRC_OVL_CACHE.clear()
-    pext._CENTROID_SIG_CACHE.clear()
+    substrates.clear()
     spark.catalog.clearCache()
 
 

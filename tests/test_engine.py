@@ -332,16 +332,19 @@ def test_write_or_replace_batch_replaces_and_preserves_shared_chunks(spark, tmp_
 
 
 def test_replace_batch_10k_keys_stays_distributed(spark, tmp_path, monkeypatch):
-    """A bulk replace must never materialize the existing-key set on the
-    driver: write_or_replace_batch hands the commit sequence a DataFrame
-    of doomed keys (the join path), and the GC set comes back as a
-    DataFrame too. Refcount and GC semantics must match the list path
-    exactly."""
+    """A bulk replace above the driver key cap must never materialize
+    the existing-key set on the driver: write_or_replace_batch hands the
+    commit sequence a DataFrame of doomed keys (the join path), and the
+    GC set comes back as a DataFrame too. Refcount and GC semantics must
+    match the list path exactly."""
     from pyspark.sql import DataFrame as SparkDataFrame
     from pyspark.sql import functions as F
 
+    import watsondedupe_spark.engine as engine_mod
     from watsondedupe_spark.chunking import ChunkSettings
     from watsondedupe_spark.engine import DedupeEngine
+
+    monkeypatch.setattr(engine_mod, "GC_BROADCAST_KEYS", 1_000)  # 10k keys: above it
 
     eng = DedupeEngine.create(spark, str(tmp_path / "ix"), ChunkSettings(2048, 16384, 128, 2))
     n = 10_000
@@ -438,6 +441,54 @@ def test_delete_list_form_caps_gc_return(spark, tmp_path, monkeypatch):
     eng.write("small", b"tiny")
     assert eng.delete("small") != []  # one chunk -> list form
     assert isinstance(eng.delete_batch([]), list)
+
+
+def test_row_drops_above_the_driver_key_cap(spark, tmp_path, monkeypatch):
+    """Above GC_BROADCAST_KEYS a row drop selects every part and
+    anti-joins a distributed key set: a delete returns its GC set as a
+    DataFrame, a replace lands, repair() heals an orphan payload, a
+    NULL-key row and a garbage duplicate, and recover() prunes orphan
+    map rows — as the bounded path does."""
+    from pyspark.sql import DataFrame
+
+    import watsondedupe_spark.engine as engine_mod
+    from watsondedupe_spark.keys import chunk_key
+
+    monkeypatch.setattr(engine_mod, "GC_BROADCAST_KEYS", 1)
+    engine = DedupeEngine.create(spark, str(tmp_path / "idx"), SMALL)
+    old_a, new_a, b = _aligned_pair()
+    c = rand_bytes(9000, seed=7)
+    engine.write_batch(_rows(spark, [("a", old_a), ("b", b), ("c", c)]))
+    keys_of = lambda k: {r.chunk_key for r in engine.get_object_map(k).collect()}
+    dying = (keys_of("a") | keys_of("c")) - keys_of("b")
+
+    gc = engine.delete_batch(["a", "c"])
+    assert isinstance(gc, DataFrame)
+    assert {r.chunk_key for r in gc.collect()} == dying
+    engine.write_or_replace_batch(_rows(spark, [("b", new_a), ("d", old_a)]))
+    assert engine.get("b") == new_a and engine.get("d") == old_a
+
+    victim = sorted(keys_of("b"))[0]
+    orphan = b"above-cap-orphan"
+    engine.store.append(
+        "chunk_store",
+        spark.createDataFrame(
+            [(victim, bytearray(b"x")), (chunk_key(orphan), bytearray(orphan)), (None, bytearray(b"n"))],
+            "chunk_key string, data binary",
+        ),
+    )
+    deltas = engine.repair()
+    assert deltas["chunk_store"] == -2 and deltas["chunk_store_canonicalized"] == -1
+    engine.store.append(
+        "object_map",
+        spark.createDataFrame(
+            [("ghost1", victim, 1, 0, 0), ("ghost2", victim, 1, 0, 0)],
+            "object_key string, chunk_key string, length int, position int, address long",
+        ),
+    )
+    assert engine.recover()["object_map"] == -2
+    assert engine.verify().count() == 0
+    assert engine.get("b") == new_a and engine.get("d") == old_a
 
 
 def test_store_append_is_incremental_and_compaction_folds(spark, tmp_path):
@@ -1525,15 +1576,13 @@ def test_cli_vacuum_verb(spark, tmp_path, capsys):
 
 
 def test_surgical_repair_rewrites_only_affected_parts(engine, spark):
-    """r12 optimization witness: when the store is past the surgical
-    byte gate, repair()/recover() canonicalization and GC rewrite ONLY
-    the parts that may contain a bad key — healthy parts survive BY
-    PATH — and the healed state is byte-identical to the full-rewrite
-    path's answer (verify() clean, payloads intact)."""
+    """repair()/recover() canonicalization and GC rewrite ONLY the parts
+    that may contain a bad key, on a store of any size — healthy parts
+    survive BY PATH — and the healed state is byte-identical to the
+    full-rewrite answer (verify() clean, payloads intact)."""
     from watsondedupe_spark.keys import chunk_key
 
     eng = engine
-    eng.SURGICAL_MIN_BYTES = 0  # force the surgical path on a tiny store
     # three separate batches -> three chunk_store PART DIRS, each with
     # its own Bloom sidecar (pruning is per part; hash keys need the
     # membership witness, spans cover the whole keyspace)
@@ -1578,13 +1627,12 @@ def test_surgical_repair_rewrites_only_affected_parts(engine, spark):
     assert got == rand_bytes(40_000, seed=3)
 
 
-def test_surgical_delete_falls_back_below_byte_gate(engine, spark):
-    """Below SURGICAL_MIN_BYTES the full-rewrite path runs (single
-    part afterwards) and heals identically."""
+def test_repair_gcs_orphan_payload_on_a_one_batch_store(engine, spark):
+    """On a one-batch store the part-local rewrite covers the whole
+    payload table and heals an orphan payload like any other."""
     from watsondedupe_spark.keys import chunk_key
 
     eng = engine
-    assert eng.SURGICAL_MIN_BYTES > 0  # class default: tiny stores full-rewrite
     objs = spark.createDataFrame(
         [(f"k{i:03d}", rand_bytes(30_000, seed=100 + i)) for i in range(4)],
         "object_key string, data binary",
@@ -1725,23 +1773,41 @@ def test_point_verbs_run_no_spark_job(engine):
         sc.setLocalProperty("spark.job.description", None)
 
 
+def _jobs_in_group(spark, fn):
+    """``(jobs of ``fn`` in a fresh job group, jobs started outside it,
+    fn())``, read from ``statusTracker`` once the listener bus drains."""
+    import uuid
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+    group = f"verb-{uuid.uuid4().hex}"
+    bus.waitUntilEmpty(30_000)
+    before = max(tracker.getJobIdsForGroup(None), default=-1)
+    sc.setJobGroup(group, "one engine verb")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    bus.waitUntilEmpty(30_000)
+    outside = [j for j in tracker.getJobIdsForGroup(None) if j > before]
+    return len(tracker.getJobIdsForGroup(group)), len(outside), out
+
+
 def test_mutations_run_a_pinned_number_of_spark_jobs(spark, tmp_path):
     """Spark jobs per mutation on a small store. A replace or delete
     runs its refcount merge once, pinned with its dead count; a delete
     whose chunks all stay referenced returns [] without a post-flip
-    take; the key sort of every part write adds no job. Jobs are read
-    from ``statusTracker``: the stage threads run ungrouped, so every
-    ungrouped job above the previous highest id is the verb's."""
+    take; the key sort of every part write adds no job. Each verb runs
+    under a job group and starts no job outside it: its stage threads
+    inherit the group, so ``cancelJobGroup`` reaches every job."""
     engine = DedupeEngine.create(spark, str(tmp_path / "idx"), SMALL)
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
 
     def jobs(fn):
-        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
-        before = max(tracker.getJobIdsForGroup(None), default=-1)
-        out = fn()
-        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
-        return len([j for j in tracker.getJobIdsForGroup(None) if j > before]), out
+        n, outside, out = _jobs_in_group(spark, fn)
+        assert outside == 0
+        return n, out
 
     def batch(rows):
         return spark.createDataFrame(
@@ -1763,8 +1829,51 @@ def test_mutations_run_a_pinned_number_of_spark_jobs(spark, tmp_path):
     n_delete, gc = jobs(lambda: engine.delete_batch(["o/2", "new/0"]))
     n_delete_nogc, gc_none = jobs(lambda: engine.delete_batch(["twin/a"]))
     assert len(gc) > 0 and gc_none == []
-    assert (n_write, n_replace, n_delete, n_delete_nogc) == (22, 29, 9, 6)
+    assert (n_write, n_replace, n_delete, n_delete_nogc) == (22, 25, 8, 6)
     assert engine.get("twin/b") == twin
+
+
+@pytest.mark.parametrize("backend", ["file", "sqlite"])
+def test_key_drops_stage_bytes_of_the_batch_not_the_store(spark, tmp_path, monkeypatch, backend):
+    """A 2-key delete_batch and write_or_replace_batch stage (write as
+    new parts) about the same bytes of ``objects``, ``object_map`` and
+    ``chunk_store`` on a 10-batch store as on a 1-batch store: each
+    rewrites only the parts that may hold its keys, not the table."""
+    from watsondedupe_spark.store import IndexStore, SqliteIndexStore
+
+    store_cls = IndexStore if backend == "file" else SqliteIndexStore
+    staged: dict[str, int] = {}
+    write_part = IndexStore._write_part
+
+    def spy(self, name, df, version_hint):
+        path = write_part(self, name, df, version_hint)
+        staged[name] = staged.get(name, 0) + self.parts_bytes([path])
+        return path
+
+    def staged_bytes(n_batches: int) -> dict[str, int]:
+        engine = DedupeEngine.create(
+            spark, str(tmp_path / f"idx{n_batches}"), SMALL, store_cls=store_cls
+        )
+        for b in range(n_batches):
+            engine.write_batch(
+                _rows(spark, [(f"b{b}/{i}", rand_bytes(40_000, seed=100 * b + i)) for i in range(4)])
+            )
+        last = n_batches - 1
+        staged.clear()
+        with monkeypatch.context() as m:
+            m.setattr(IndexStore, "_write_part", spy)
+            engine.delete_batch([f"b{last}/0", f"b{last}/1"])
+            engine.write_or_replace_batch(
+                _rows(spark, [(f"b{last}/{i}", rand_bytes(40_000, seed=7_000 + i)) for i in (2, 3)])
+            )
+        assert engine.get(f"b{last}/2") == rand_bytes(40_000, seed=7_002)
+        assert n_batches == 1 or engine.verify().count() == 0
+        return dict(staged)
+
+    small, large = staged_bytes(1), staged_bytes(10)
+    for table in ("objects", "object_map", "chunk_store"):
+        assert large[table] <= 1.5 * small[table], (table, small, large)
+
 
 @pytest.mark.parametrize("verb", ["repair", "recover"])
 def test_maintenance_raises_fix_thread_error_beside_commit_error(engine, monkeypatch, verb):
@@ -1794,6 +1903,7 @@ def test_maintenance_raises_fix_thread_error_beside_commit_error(engine, monkeyp
 
     with monkeypatch.context() as m:
         m.setattr(engine.store, "commit_entry", failing_commit)
+        m.setattr(engine.store, "rewrite_entry", failing_commit)
         with pytest.raises(RuntimeError) as info:
             getattr(engine, verb)()
     chain, e = [], info.value
@@ -1838,7 +1948,7 @@ def test_optimize_surfaces_every_failed_table_compaction(engine, monkeypatch):
             raise RuntimeError(f"{name} compaction failed")
         return None
 
-    monkeypatch.setattr(engine.store, "compaction_entry", failing_compact)
+    monkeypatch.setattr(engine.store, "rewrite_entry", failing_compact)
     with pytest.raises(RuntimeError) as info:
         engine.optimize()
     text = _raised_texts(info.value)
@@ -1847,10 +1957,10 @@ def test_optimize_surfaces_every_failed_table_compaction(engine, monkeypatch):
 
 def test_repair_drops_null_chunk_key_row_on_surgical_gate(engine):
     """A planted chunk_store row with a NULL chunk_key is dead (no chunk
-    can reference it). With the surgical gate open, repair() removes it
-    and its chunk_store delta equals the change in row count."""
+    can reference it). A NULL key selects every part for the rewrite:
+    repair() removes the row and its chunk_store delta equals the change
+    in row count."""
     spark = engine.spark
-    engine.SURGICAL_MIN_BYTES = 0
     engine.write("k", rand_bytes(6000, seed=412))
     engine.store.append(
         "chunk_store",

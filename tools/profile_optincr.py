@@ -54,15 +54,16 @@ def main() -> int:
                 detail = str(arg0)[:60]
                 if meth == "_flip":
                     detail = ",".join(e[0] for e in arg0 if e)
-                if meth == "compaction_entry" and len(a) >= 2:
+                parts = (a[6] if len(a) > 6 else kw.get("parts")) or []
+                if meth == "rewrite_entry" and parts:
                     try:
                         nb = sum(
                             os.path.getsize(os.path.join(dp, f))
-                            for p in a[1]
+                            for p in parts
                             for dp, _, fs in os.walk(p)
                             for f in fs
                         )
-                        detail = f"{arg0} n_parts={len(a[1])} mb={nb/1e6:.1f}"
+                        detail = f"{arg0} n_parts={len(parts)} mb={nb/1e6:.1f}"
                     except Exception:
                         pass
                 with lock:
@@ -71,7 +72,7 @@ def main() -> int:
         setattr(cls, meth, wrap)
         return orig
 
-    for m in ("compaction_entry", "_write_part", "_write_bloom", "_part_stats",
+    for m in ("rewrite_entry", "_write_part", "_write_bloom", "_part_stats",
               "parts_bytes", "_flip", "vacuum"):
         timed(store_mod.IndexStore, m)
 

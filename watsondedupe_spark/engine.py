@@ -65,15 +65,9 @@ from watsondedupe_spark.schemas import (
     OBJECT_MAP_SCHEMA,
     OBJECTS_SCHEMA,
 )
-from watsondedupe_spark.store import ConcurrentWriteError, IndexStore, open_store
+from watsondedupe_spark.store import IndexStore, open_store
 
 MAX_LIST_RESULTS = 100  # EnumerationResult.cs:60
-
-# bounded optimistic-concurrency retries for table read-modify-writes;
-# each retry re-derives the merge from a fresh snapshot (the Delta
-# commit-conflict shape — the batched analogue of the reference's
-# writer mutexes, SqliteProvider.cs:29-30)
-CAS_RETRIES = 6
 
 # list-form delete_batch returns GC'd chunk keys as a Python list only up
 # to this many keys; above it the GC set comes back as a DataFrame (same
@@ -81,8 +75,10 @@ CAS_RETRIES = 6
 # can never be abused into a driver-side million-key materialization
 GC_RETURN_CAP = 10_000
 
-# a payload GC broadcasts its dead-key set up to this many keys (~6 MB
-# of SHA-256 keys); a larger set shuffle-joins the payload table
+# the most keys a driver holds for one row drop (~6 MB of SHA-256
+# keys): up to it the rewrite selects only the parts that may hold the
+# keys and drops them with an IN-set filter; above it the rewrite
+# selects every part and drops them with a distributed anti-join
 GC_BROADCAST_KEYS = 100_000
 
 # the four index tables (the ledger names one version of each), with
@@ -173,20 +169,33 @@ class ObjectNotFoundError(KeyError):
 
 @contextmanager
 def _fix_pool(workers: int = 2):
-    """``(pool, fixes)``: the engine's one driver-thread pool, for
-    commits that overlap each other or the caller's next phase. On
-    exit EVERY future appended to ``fixes`` is joined and the first
-    failure (in submission order) re-raised — also when the body itself
-    raised, in which case the fix's error carries the body's as
-    ``__context__`` and neither is lost (a bare pool exit joins the
-    threads but drops their exceptions). Further fix failures ride
-    along as notes."""
+    """``(submit, fixes)``: the engine's one driver-thread pool, for
+    commits that overlap each other or the caller's next phase.
+    ``submit(fn, *args)`` runs ``fn`` on a pool thread that inherits the
+    caller's Spark local properties as they are at submission
+    (``pyspark.util.inheritable_thread_target``), so its jobs land in
+    the caller's job group and ``cancelJobGroup`` reaches them; the
+    future is appended to ``fixes`` and returned. On exit EVERY future
+    in ``fixes`` is joined and the first failure (in submission order)
+    re-raised — also when the body itself raised, in which case the
+    fix's error carries the body's as ``__context__`` and neither is
+    lost (a bare pool exit joins the threads but drops their
+    exceptions). Further fix failures ride along as notes."""
     from concurrent import futures
 
+    from pyspark.util import inheritable_thread_target
+
+    session = SparkSession.active()
     fixes: list = []
     with futures.ThreadPoolExecutor(max_workers=workers) as pool:
+
+        def submit(fn, *args, **kwargs):
+            target = inheritable_thread_target(session)(fn)
+            fixes.append(pool.submit(target, *args, **kwargs))
+            return fixes[-1]
+
         try:
-            yield pool, fixes
+            yield submit, fixes
         finally:
             failure = None
             for f in fixes:
@@ -212,6 +221,26 @@ def _pin(df: DataFrame, where=None) -> tuple[DataFrame, int]:
     counted = F.lit(1) if where is None else F.when(where, 1)
     pinned = df.observe(obs, F.count(counted).alias("n")).localCheckpoint(eager=True)
     return pinned, int(obs.get["n"])
+
+
+def _bounded_rows(df: DataFrame) -> list | None:
+    """``df``'s rows collected, or None when it holds more than
+    :data:`GC_BROADCAST_KEYS` of them (one job either way)."""
+    rows = df.limit(GC_BROADCAST_KEYS + 1).collect()
+    return None if len(rows) > GC_BROADCAST_KEYS else rows
+
+
+def _without(df: DataFrame, col: str, keys: list | None, keys_df=None) -> DataFrame:
+    """``df`` minus the rows whose ``col`` is one of ``keys``, a NULL key
+    matching NULL rows. ``keys=None`` (above the driver cap) anti-joins
+    the 1-column DataFrame ``keys_df`` instead, NULL-safe as well."""
+    if keys is None:
+        other = keys_df.select(F.col(keys_df.columns[0]).alias("_drop"))
+        return df.join(other, df[col].eqNullSafe(other["_drop"]), "left_anti")
+    hit = F.col(col).isin([k for k in keys if k is not None])
+    if None in keys:
+        hit = hit | F.col(col).isNull()
+    return df.filter(~F.coalesce(hit, F.lit(False)))
 
 
 @dataclass(frozen=True)
@@ -325,23 +354,6 @@ class DedupeEngine:
         self.store = store
         self.settings = settings
 
-    def _cas(self, attempt):
-        """Bounded optimistic-concurrency loop: ``attempt`` must derive
-        its merge from a fresh ``store.snapshot`` on every call and
-        commit with that snapshot's ``expected_version``. Lost races
-        re-derive and retry (linear backoff), so concurrent writers'
-        read-modify-writes serialize per table — no lost updates."""
-        import time
-
-        last: ConcurrentWriteError | None = None
-        for i in range(CAS_RETRIES):
-            try:
-                return attempt()
-            except ConcurrentWriteError as e:
-                last = e
-                time.sleep(0.05 * (i + 1))
-        raise last
-
     # -- lifecycle -----------------------------------------------------------
 
     @classmethod
@@ -437,12 +449,14 @@ class DedupeEngine:
         re-inserted), and ``chunk_store`` drops the dead payloads and
         adds the absent new ones.
 
-        The existing-key set stays DISTRIBUTED end to end: a pinned
-        semi-join DataFrame handed straight to the commit sequence, never
-        a collected Python list — a 100x-scale re-ingest where most of
-        the batch already exists would otherwise materialize millions of
-        keys on the driver. Whether it is empty is read off the pin's
-        own job.
+        The batch's keys are collected once, up to
+        :data:`GC_BROADCAST_KEYS`, and the existing ones read off the
+        ``objects`` parts that may hold them on the driver (no Spark
+        job); they select the parts the replace rewrites. A larger batch
+        stays DISTRIBUTED end to end: its keys go to the commit as a
+        DataFrame and every table is rewritten through an anti-join — a
+        100x-scale re-ingest would otherwise materialize millions of
+        keys on the driver.
 
         The expensive chunker pass and per-object rollup run OUTSIDE the
         composite-op lock (shared :meth:`_prepare_batch`); only the
@@ -456,14 +470,18 @@ class DedupeEngine:
         chunk_rows, rolled, n_keys, total_bytes = self._prepare_batch(objects_df)
         try:
             with self.store.op_lock():
-                existing, n_existing = _pin(
-                    rolled.select("object_key").join(
-                        self.objects, "object_key", "left_semi"
-                    )
-                )
+                doomed = rolled.select("object_key")
+                if n_keys <= GC_BROADCAST_KEYS:
+                    keys = [r[0] for r in doomed.collect()]
+                    doomed = self.store.read_arrow(
+                        "objects",
+                        ["object_key"],
+                        pc.field("object_key").isin(keys),
+                        col="object_key",
+                        values=keys,
+                    ).column("object_key").to_pylist() or None
                 self._commit_mutation(
-                    existing if n_existing else None,
-                    (chunk_rows, rolled, created_utc, n_keys, total_bytes),
+                    doomed, (chunk_rows, rolled, created_utc, n_keys, total_bytes)
                 )
         finally:
             chunk_rows.unpersist()
@@ -558,42 +576,45 @@ class DedupeEngine:
 
     def _commit_mutation(
         self, doomed: "list[str] | DataFrame | None" = None, batch: tuple | None = None
-    ) -> DataFrame | None:
-        """The one commit behind every mutation: the ``doomed`` keys (a
-        Python list, or a 1-column ``object_key`` DataFrame) leave the
-        index and ``batch`` — ``(chunk_rows, rolled, created_utc,
+    ) -> tuple:
+        """The one commit behind every mutation: the ``doomed`` keys leave
+        the index and ``batch`` — ``(chunk_rows, rolled, created_utc,
         n_objects, total_bytes)``: the cached chunk rows and per-object
         rollup of :meth:`_prepare_batch` — enters it. A delete passes
         only ``doomed``, an ingest only ``batch``, a replace both.
-        Returns ``(GC'd chunk keys, their count)``: a DataFrame over the
-        pinned merge when keys were doomed, else ``(None, 0)``. Caller
-        holds the composite-op lock.
+        ``doomed`` is a Python list of at most :data:`GC_BROADCAST_KEYS`
+        keys, or a 1-column ``object_key`` DataFrame above that cap.
+        Returns ``(GC'd chunk keys as a DataFrame over the pinned merge,
+        the same keys as a list — None above the cap)``; an ingest
+        returns ``(None, [])``. Caller holds the composite-op lock.
 
-        One :meth:`_cas` attempt does three things in order:
+        One attempt, retried by ``IndexStore._retry`` when a flip loses
+        its CAS, does three things in order:
 
         1. snapshot the four index tables;
-        2. stage every table's new part, overlapped on driver threads:
+        2. stage every table's new part, overlapped on driver threads.
+           Rows leave a table through :meth:`IndexStore.rewrite_entry`,
+           which rewrites only the parts that may hold the keys (all of
+           them above the cap):
 
-           * ``objects`` = survivors ∪ the new rows with their ingest ids
-             (a plain append for an ingest);
-           * ``object_map`` = survivors ∪ new rows (a plain append for an
-             ingest);
-           * ``chunks`` = ONE refcount merge of increments − decrements.
-             When keys are doomed the merge is pinned once, with its
-             dead count, before this stage and the next are submitted;
-             the chunks rewrite keeps its rows with a reference left;
-           * ``chunk_store`` = (store − the payloads of the pinned
-             merge's dead chunks) ∪ the absent new payloads, or a plain
-             append when nothing died;
+           * ``objects`` and ``object_map`` drop the doomed keys and take
+             the new rows (a plain append for an ingest);
+           * ``chunks`` = ONE refcount merge of increments − decrements,
+             a full rewrite. When keys are doomed the merge is pinned
+             once, with its dead count, and its dead keys are collected
+             before this stage and the next are submitted; the chunks
+             rewrite keeps its rows with a reference left;
+           * ``chunk_store`` drops the dead keys' payloads and takes the
+             absent new ones, or is a plain append when nothing died;
         3. make ONE catalog flip of the staged parts plus the ledger row.
 
-        Every replaced table is CAS-checked against its snapshot version
-        in that flip and the appends rebase, so a concurrent writer that
-        bypassed the op lock — one that revived a dying chunk, say —
-        refuses the whole flip and the attempt re-derives from fresh
-        snapshots. A crash anywhere before the flip leaves only
-        invisible staged parts; after it, the op is complete. No reader
-        and no :meth:`recover` ever sees a half-applied mutation.
+        Every rewritten table is CAS-checked against its snapshot
+        version in that flip and the appends rebase, so a concurrent
+        writer that bypassed the op lock — one that revived a dying
+        chunk, say — refuses the whole flip and the attempt re-derives
+        from fresh snapshots. A crash anywhere before the flip leaves
+        only invisible staged parts; after it, the op is complete. No
+        reader and no :meth:`recover` ever sees a half-applied mutation.
 
         An ingest's output files are sized by the batch's total bytes
         (~64 MB targets): a small batch writes a handful of files instead
@@ -602,24 +623,10 @@ class DedupeEngine:
         (the coalesce target caps at the cache's partition count).
         """
         holder: dict = {}
-        if doomed is None:
-            doomed_of = survivors_of = None
-        elif isinstance(doomed, DataFrame):
-            # bulk form: every key-set operation is a semi/anti JOIN
-            def doomed_of(df):
-                return df.join(doomed, "object_key", "left_semi")
+        keys = doomed if isinstance(doomed, list) else None
 
-            def survivors_of(df):
-                return df.join(doomed, "object_key", "left_anti")
-        else:
-            # point form: ``isin`` pushes the key filter into every scan
-            key_col = F.col("object_key").isin(doomed)
-
-            def doomed_of(df):
-                return df.filter(key_col)
-
-            def survivors_of(df):
-                return df.filter(~key_col)
+        def survivors_of(df):
+            return _without(df, "object_key", keys, doomed)
 
         def _sized(df: DataFrame) -> DataFrame:
             return df.coalesce(target) if target < nparts else df
@@ -676,7 +683,16 @@ class DedupeEngine:
                         .alias("ref_count"),
                     )
                 if doomed is not None:
-                    dec = doomed_of(omap).groupBy("chunk_key").agg(F.count("*").alias("dec"))
+                    # the doomed map rows: read from the parts that may
+                    # hold the keys, or a semi-join above the cap
+                    gone = (
+                        omap.join(doomed, "object_key", "left_semi")
+                        if keys is None
+                        else self.store.read_point(
+                            "object_map", "object_key", keys, OBJECT_MAP_SCHEMA
+                        ).filter(F.col("object_key").isin(keys))
+                    )
+                    dec = gone.groupBy("chunk_key").agg(F.count("*").alias("dec"))
                     out = out.join(dec, "chunk_key", "left").select(
                         "chunk_key",
                         "length",
@@ -686,15 +702,16 @@ class DedupeEngine:
 
             def stage_objects():
                 if batch is None:
-                    return self.store.commit_entry(
-                        "objects", survivors_of(objs), expected_version=v_obj
+                    return self.store.rewrite_entry(
+                        "objects", "object_key", keys, survivors_of, v_obj
                     )
                 # the ingest-sequence high-water mark rides in the manifest
                 # (Delta table-properties style), so steady-state batches
                 # skip the max(id) scan job; the CAS on objects keeps two
-                # batches from assigning COLLIDING id ranges. meta_merge,
-                # not meta: a replace would wipe clustered_parts and turn
-                # the next incremental optimize() into a full refold (r12)
+                # batches from assigning COLLIDING id ranges. Merged into
+                # the meta, not replacing it: a replace would wipe
+                # clustered_parts and turn the next incremental optimize()
+                # into a full refold (r12)
                 prev_max = obj_meta.get("max_id")
                 if prev_max is None:
                     # v == 0 <=> the table has never been written: the
@@ -723,20 +740,22 @@ class DedupeEngine:
                     return self.store.append_entry(
                         "objects", new_objects, expected_version=v_obj, meta_merge=high
                     )
-                return self.store.commit_entry(
+                return self.store.rewrite_entry(
                     "objects",
-                    survivors_of(objs).unionByName(new_objects),
-                    expected_version=v_obj,
-                    meta_merge=high,
+                    "object_key",
+                    keys,
+                    lambda rows: survivors_of(rows).unionByName(new_objects),
+                    v_obj,
+                    lambda meta, *_: {**meta, **high},
                 )
 
             def stage_map():
                 if doomed is None:
                     return self.store.append_entry("object_map", new_map)
-                rows = survivors_of(omap)
+                fn = survivors_of
                 if batch is not None:
-                    rows = rows.unionByName(new_map)
-                return self.store.commit_entry("object_map", rows, expected_version=v_map)
+                    fn = lambda rows: survivors_of(rows).unionByName(new_map)  # noqa: E731
+                return self.store.rewrite_entry("object_map", "object_key", keys, fn, v_map)
 
             def stage_chunks():
                 rows = merged() if doomed is None else merge.filter(F.col("ref_count") >= 1)
@@ -757,26 +776,19 @@ class DedupeEngine:
                     if rows is None:
                         return None
                     return self.store.append_entry("chunk_store", rows, expected_version=v_cs)
-                # anti-join, not isin(<collected list>): a mass delete can
-                # GC millions of chunks
-                dead = holder["gc"]
-                if n_dead <= GC_BROADCAST_KEYS:
-                    # the pin's size estimate is the merge join's (a
-                    # product of both sides); its measured count says the
-                    # set is small, so the payload scan stays a broadcast
-                    # anti-join instead of shuffling the store
-                    dead = F.broadcast(dead)
-                kept = cs.join(dead, "chunk_key", "left_anti")
-                return self.store.commit_entry(
-                    "chunk_store",
-                    kept if rows is None else kept.unionByName(rows),
-                    expected_version=v_cs,
-                )
+                dead = holder["dead"]
+
+                def gc(df):
+                    kept = _without(df, "chunk_key", dead, holder["gc"])
+                    return kept if rows is None else kept.unionByName(rows)
+
+                return self.store.rewrite_entry("chunk_store", "chunk_key", dead, gc, v_cs)
 
             # every thread is joined before any error is raised; a second
             # failed stage rides along as a note on the first
-            with _fix_pool(4) as (pool, fixes):
-                fixes += [pool.submit(fn) for fn in (stage_objects, stage_map)]
+            with _fix_pool(4) as (submit, fixes):
+                submit(stage_objects)
+                submit(stage_map)
                 merge = n_dead = None
                 if doomed is not None:
                     # the merge runs ONCE, pinned with its dead count: the
@@ -791,36 +803,22 @@ class DedupeEngine:
                         except Exception:
                             pass  # best-effort; ContextCleaner reclaims eventually
                     merge, n_dead = _pin(merged(), F.col("ref_count") < 1)
-                    holder["merge"], holder["n_dead"] = merge, n_dead
+                    holder["merge"] = merge
                     holder["gc"] = merge.filter(F.col("ref_count") < 1).select("chunk_key")
-                fixes += [pool.submit(fn) for fn in (stage_chunks, stage_payloads)]
+                    rows = _bounded_rows(holder["gc"]) if n_dead else []
+                    holder["dead"] = None if rows is None else [r[0] for r in rows]
+                submit(stage_chunks)
+                submit(stage_payloads)
             self._publish([f.result() for f in fixes], op)
 
-        self._cas(attempt)
-        return holder.get("gc"), holder.get("n_dead", 0)
+        self.store._retry(attempt)
+        return holder.get("gc"), holder.get("dead", [])
 
     # a restore can only reach points whose parquet parts are still in
     # the per-table retention window (~8 versions), so the ledger keeps
     # a comfortable multiple of that and forgets older rows — bounding
     # the manifest-meta size at O(1) forever
     CHECKPOINT_RETAIN = 64
-
-    #: :meth:`repair` canonicalization rewrites only the payload parts
-    #: that may contain a corrupt chunk key, as long as the bad-key set
-    #: fits a bounded driver collect (~100k keys x ~50 B = a few MB);
-    #: past that, corruption is systemic and the full rewrite is the
-    #: honest path anyway
-    REPAIR_SURGICAL_MAX_KEYS = 100_000
-
-    #: below this live-table size the surgical part swap is pure
-    #: overhead (the extra key-collect + part-pruned rewrite jobs cost
-    #: more than just rewriting a small table) — measured at sf0.1,
-    #: where the full rewrite of a few-MB table is ~0.1 s and the
-    #: surgical path ~0.5 s of fixed job latency. At 100 TB the same
-    #: comparison is a handful of part files versus the whole store,
-    #: which is the entire point of the surgical path. Class attribute,
-    #: overridable per deployment.
-    SURGICAL_MIN_BYTES = 256 << 20
 
     #: target parquet file size for :meth:`optimize`'s range-clustered
     #: rewrite — matches spark.sql.files.maxPartitionBytes so one scan
@@ -877,6 +875,14 @@ class DedupeEngine:
         if not any(entries):
             return {}
         return self.store._flip(entries + [self._checkpoint_entry(op)])
+
+    def _point(self, at: int) -> dict:
+        """The ledger row with sequence number ``at``; ValueError when
+        there is none."""
+        for r in self.store.table_meta("checkpoints").get("rows", []):
+            if int(r["seq"]) == at:
+                return r
+        raise ValueError(f"no consistency point with seq={at}")
 
     @property
     def checkpoints(self) -> DataFrame:
@@ -1178,38 +1184,40 @@ class DedupeEngine:
         The decrement MERGE aggregates per chunk_key first (the batched
         form of SqliteProvider.cs:533-556); chunks reaching ref_count < 1
         are dropped and their payloads deleted from chunk_store — the
-        anti-join GC of SURVEY §3.3 — all in :meth:`_commit_mutation`'s
-        one catalog flip.
+        GC of SURVEY §3.3 — all in :meth:`_commit_mutation`'s one
+        catalog flip. Like the reference's delete, the work follows the
+        object, not the store: every table drops its rows by rewriting
+        only the parts that may hold the doomed (or dead chunk) keys.
 
-        ``keys`` is either a Python list (point deletes: ``isin`` pushes
-        the key filter into every table scan, and the GC'd chunk keys
-        come back as a list, reference-faithful — but only up to
-        ``GC_RETURN_CAP`` keys; a larger GC set comes back as a
-        DataFrame, matching the distributed form's contract, so a
-        point delete of a huge object never materializes a million-key
-        list on the driver) or a single-column ``object_key`` DataFrame
-        (bulk deletes: every key-set operation is a semi/anti JOIN and
-        the GC set comes back as a DataFrame — nothing key-shaped ever
-        materializes on the driver, which is what a millions-of-keys
-        replace at 100 TB requires).
+        ``keys`` is a Python list or a single-column ``object_key``
+        DataFrame; the DataFrame's distinct keys are collected up to
+        :data:`GC_BROADCAST_KEYS`. Above that cap (either form) the keys
+        stay distributed: every key-set operation is an anti/semi JOIN,
+        which is what a millions-of-keys delete at 100 TB requires.
 
-        ``localCheckpoint`` pins a DataFrame key set before the commit
-        flips manifests under it (the store retains old parts for 8
-        versions, but a returned lazy plan must not depend on that
-        window); the GC set is pinned the same way.
+        The GC'd chunk keys come back as a list for a list ``keys``,
+        reference-faithful, read off the same bounded collect that
+        selected the payload parts — but only up to ``GC_RETURN_CAP``
+        keys; a larger GC set, and the GC set of a DataFrame ``keys``,
+        comes back as a DataFrame over the merge pinned before the flip
+        (the store retains old parts for 8 versions, but a returned lazy
+        plan must not depend on that window).
         """
-        if isinstance(keys, DataFrame):
-            keys = keys.select("object_key").distinct().localCheckpoint(eager=True)
+        as_frame = isinstance(keys, DataFrame)
+        if as_frame:
+            keys = keys.select("object_key").distinct()
+            rows = _bounded_rows(keys)
+            keys = keys.localCheckpoint(eager=True) if rows is None else [r[0] for r in rows]
+        elif len(keys) > GC_BROADCAST_KEYS:
+            keys = self.spark.createDataFrame([(k,) for k in keys], "object_key string")
+        if isinstance(keys, list) and not keys:
+            empty = self.spark.createDataFrame([], "chunk_key string")
+            return empty if as_frame else []
         with self.store.op_lock():
-            gc_set, n_dead = self._commit_mutation(keys)
-        if isinstance(keys, DataFrame):
+            gc_set, dead = self._commit_mutation(keys)
+        if as_frame or dead is None or len(dead) > GC_RETURN_CAP:
             return gc_set
-        if not n_dead:
-            return []
-        head = gc_set.take(GC_RETURN_CAP + 1)
-        if len(head) > GC_RETURN_CAP:
-            return gc_set
-        return [r.chunk_key for r in head]
+        return dead
 
     # -- stats (O20/O21) ----------------------------------------------------------
 
@@ -1557,8 +1565,9 @@ class DedupeEngine:
           are byte-identical, so the pick is content-deterministic).
 
         The payload GC and the canonicalization come from one per-key
-        aggregate over chunk_store and land in one chunk_store rewrite;
-        :meth:`recover` is not called. Every fix is staged (the map and
+        aggregate over chunk_store and land in one rewrite of the parts
+        that may hold a dead or bad key (:meth:`IndexStore.rewrite_entry`);
+        healthy parts keep their bytes. :meth:`recover` is not called. Every fix is staged (the map and
         chunks fixes overlapped on driver threads with the chunk_store
         scan) and a pass that changed anything publishes them all in ONE
         catalog flip with ONE ``repair`` point in the checkpoints
@@ -1579,8 +1588,8 @@ class DedupeEngine:
         # lock OUTSIDE the pool: the pool exit joins every in-flight fix
         # thread (and re-raises its error) before the lock releases
         with self.store.op_lock():
-            with _fix_pool() as (pool, fixes):
-                deltas, rebuilt = self._recover_map_chunks(pool, fixes)
+            with _fix_pool() as (submit, fixes):
+                deltas, rebuilt = self._recover_map_chunks(submit)
                 # FUSED chunk_store phase (r13 session 3, guide §1.2/§2.6):
                 # repair used to run recover()'s membership scan + GC
                 # rewrite and THEN a second sha-detection scan + a second
@@ -1618,10 +1627,9 @@ class DedupeEngine:
                     )
                     .join(live_keys.withColumn("_live", F.lit(1)), "chunk_key", "left")
                     # lazy checkpoint, materialized by the aggregate below —
-                    # the damaged-path key collects then read per-key ROWS
+                    # the damaged-path key collect then reads per-key ROWS
                     # (O(keys), no payload bytes) instead of re-running the
-                    # whole sha scan per action (the pre-fusion surgical
-                    # path re-hashed the entire table once per key collect)
+                    # whole sha scan
                     .localCheckpoint(eager=False)
                 )
                 # detection numbers are scoped to LIVE keys — identical to
@@ -1632,18 +1640,15 @@ class DedupeEngine:
                     F.sum(F.when(is_live, F.col("_n")).otherwise(0)),
                     F.sum(F.when(is_live, F.col("_n_mismatch")).otherwise(0)),
                     F.sum(F.when(is_live, 1).otherwise(0)),
-                    F.sum(F.when(dead_pred, 1).otherwise(0)),
-                    F.sum(F.when(bad_pred, 1).otherwise(0)),
                     F.sum(
                         F.when(
                             is_live & (F.col("_n") > F.col("_n_mismatch")), 1
                         ).otherwise(0)
                     ),
                 ).collect()[0]
-                (
-                    n_rows_all, n_rows, n_mismatch, n_keys,
-                    n_dead_keys, n_bad_keys, n_good_keys,
-                ) = (int(x or 0) for x in agg_row)
+                n_rows_all, n_rows, n_mismatch, n_keys, n_good_keys = (
+                    int(x or 0) for x in agg_row
+                )
                 n_dead = n_rows_all - n_rows
                 n_bad = n_mismatch + n_rows - n_keys
                 deltas["chunk_store"] = -n_dead
@@ -1655,34 +1660,17 @@ class DedupeEngine:
                 cs_entry = None
                 if n_dead or n_bad:
                     good = chunk_key_col(F.col("data")).eqNullSafe(F.col("chunk_key"))
-
-                    # r12 (guide §6): bounded damage must not rewrite the
-                    # whole payload table at 100 TB. Select ONLY the live
-                    # parts that may contain a doomed key (span + Bloom —
-                    # no false negatives, so every row of every dead OR bad
-                    # key lives in the selected subset, cross-part
-                    # duplicates included) and fold just those through the
-                    # combined GC+canonicalization layout. Healthy parts
-                    # keep their bytes untouched. Widespread damage falls
-                    # back to one full rewrite (still one, not two).
-                    affected = dead_rows = None
-                    live_parts = self.store.live_parts("chunk_store")
-                    if (
-                        n_dead_keys + n_bad_keys <= self.REPAIR_SURGICAL_MAX_KEYS
-                        and self.store.parts_bytes(live_parts)
-                        >= self.SURGICAL_MIN_BYTES
-                    ):
-                        doomed_rows = (
-                            per_key.filter(dead_pred | bad_pred)
-                            .select("chunk_key", dead_pred.alias("_dead"))
-                            .collect()
+                    # the dead and bad keys, collected up to the driver
+                    # cap: the rewrite selects only the parts that may
+                    # hold one of them (every part above the cap), so
+                    # healthy parts keep their bytes untouched
+                    rows = _bounded_rows(
+                        per_key.filter(dead_pred | bad_pred).select(
+                            "chunk_key", dead_pred.alias("_dead")
                         )
-                        dead_rows = [r.chunk_key for r in doomed_rows if r._dead]
-                        affected = self.store.parts_for_keys(
-                            "chunk_store",
-                            "chunk_key",
-                            [r.chunk_key for r in doomed_rows],
-                        )
+                    )
+                    doomed = None if rows is None else [r.chunk_key for r in rows]
+                    dead = None if rows is None else [r.chunk_key for r in rows if r._dead]
 
                     def fused_layout(df: DataFrame) -> DataFrame:
                         # dead keys: hash-consistent rows whose chunk is
@@ -1693,28 +1681,16 @@ class DedupeEngine:
                         # both filters untouched.
                         out = df
                         if n_dead:
-                            if dead_rows is not None:
-                                dead_df = self.spark.createDataFrame(
-                                    [(k,) for k in dead_rows], "chunk_key string"
-                                )
-                                out = out.join(
-                                    F.broadcast(dead_df), "chunk_key", "left_anti"
-                                )
-                            else:
-                                out = out.join(live_keys, "chunk_key", "left_semi")
+                            out = _without(
+                                out, "chunk_key", dead, per_key.filter(dead_pred).select("chunk_key")
+                            )
                         if n_bad:
                             out = out.filter(good).dropDuplicates(["chunk_key"])
                         return out
 
-                    if affected is not None and len(affected) < len(live_parts):
-                        cs_entry = self.store.compaction_entry(
-                            "chunk_store", affected, layout=fused_layout
-                        )
-                    else:
-                        dead_rows = None  # full path: distributed semi-join
-                        cs_entry = self.store.commit_entry(
-                            "chunk_store", fused_layout(cstore), expected_version=v_cs
-                        )
+                    cs_entry = self.store.rewrite_entry(
+                        "chunk_store", "chunk_key", doomed, fused_layout, v_cs
+                    )
             self._publish([f.result() for f in fixes] + [cs_entry], "repair")
         return deltas
 
@@ -1827,7 +1803,7 @@ class DedupeEngine:
                 layout = lambda df: df.coalesce(1)
             else:
                 layout = lambda df: df.repartitionByRange(n_files, F.col(key))
-            return self.store.compaction_entry(name, todo, layout=layout, meta_fn=meta_fn)
+            return self.store.rewrite_entry(name, key, None, layout, None, meta_fn, todo)
 
         def attempt() -> dict[str, int]:
             # r12 (guide §2.6 — overlap independent jobs): the four
@@ -1835,14 +1811,15 @@ class DedupeEngine:
             # driver threads overlaps their jobs. This matters most for
             # the INCREMENTAL quiet-window pass, whose cost is dominated
             # by four small-fold fixed floors.
-            with _fix_pool(len(tables)) as (pool, fixes):
-                fixes += [pool.submit(stage_one, name) for name in tables]
+            with _fix_pool(len(tables)) as (submit, fixes):
+                for name in tables:
+                    submit(stage_one, name)
             states = self._publish([f.result() for f in fixes], "optimize")
             return {name: state["version"] for name, state in states.items() if name in tables}
 
         if not tables:
             return {}
-        return {name: 0 for name in tables} | self._cas(attempt)
+        return {name: 0 for name in tables} | self.store._retry(attempt)
 
     def clone(
         self,
@@ -1893,14 +1870,7 @@ class DedupeEngine:
             raise ValueError(f"index already exists at {dest_root}; refusing clone")
         dest = store_cls(self.spark, dest_root)
         if at is not None:
-            point = [
-                r
-                for r in self.store.table_meta("checkpoints").get("rows", [])
-                if int(r["seq"]) == at
-            ]
-            if not point:
-                raise ValueError(f"no consistency point with seq={at}")
-            p = point[0]
+            p = self._point(at)
             objs = self.store.read_version("objects", int(p["objects_v"]))
             snaps = {
                 "config": self.store.read("config", CONFIG_SCHEMA),
@@ -1946,16 +1916,14 @@ class DedupeEngine:
         if max_id is None:
             max_id = objs.agg(F.max("id")).collect()[0][0] or 0
         snaps["objects"] = objs
-        with _fix_pool(len(snaps)) as (pool, fixes):
-            fixes += [
-                pool.submit(
+        with _fix_pool(len(snaps)) as (submit, fixes):
+            for name, df in snaps.items():
+                submit(
                     dest.commit_entry,
                     name,
                     df,
                     {"max_id": int(max_id)} if name == "objects" else None,
                 )
-                for name, df in snaps.items()
-            ]
         dest._flip([f.result() for f in fixes])
         return DedupeEngine(self.spark, dest, self.settings)
 
@@ -1976,60 +1944,20 @@ class DedupeEngine:
         new manifest version per table.
         """
         with self.store.op_lock():
-            point = [
-                r
-                for r in self.store.table_meta("checkpoints").get("rows", [])
-                if int(r["seq"]) == at
-            ]
-            if not point:
-                raise ValueError(f"no consistency point with seq={at}")
-            p = point[0]
+            p = self._point(at)
             states = self._publish(
                 [self.store.restore_entry(t, int(p[f"{t}_v"])) for t in _INDEX_SCHEMAS],
                 "restore",
             )
         return {t: states[t]["version"] for t in _INDEX_SCHEMAS}
 
-    def _surgical_entry(self, name: str, col: str, doomed_keys) -> tuple | None:
-        """Stage the drop of exactly the rows whose ``col`` is one of the
-        keys in ``doomed_keys`` (a 1-column DataFrame) by rewriting ONLY
-        the live parts that may contain them (span + Bloom part
-        selection, :meth:`IndexStore.parts_for_keys`) — the O(damage)
-        form of a maintenance delete. Returns the compaction's flip
-        entry, or None (nothing staged) when the table is small, the
-        doomed-key set exceeds :attr:`REPAIR_SURGICAL_MAX_KEYS` or part
-        pruning selects every live part anyway — callers then fall back
-        to their full-table rewrite, which is the honest path for
-        systemic damage. Correctness leans on Bloom having no false
-        negatives: every row of every doomed key lives inside the
-        selected parts, so the bounded broadcast anti-join removes all
-        of them and healthy parts keep their bytes untouched."""
-        live = self.store.live_parts(name)
-        if self.store.parts_bytes(live) < self.SURGICAL_MIN_BYTES:
-            return None  # small table: a full rewrite is cheaper
-        rows = doomed_keys.limit(self.REPAIR_SURGICAL_MAX_KEYS + 1).collect()
-        if not rows or len(rows) > self.REPAIR_SURGICAL_MAX_KEYS:
-            return None
-        doomed = [r[0] for r in rows]
-        affected = self.store.parts_for_keys(name, col, doomed)
-        if len(affected) >= len(live):
-            return None
-        doomed_df = self.spark.createDataFrame(
-            [(k,) for k in doomed], f"{col} string"
-        )
-        return self.store.compaction_entry(
-            name,
-            affected,
-            layout=lambda df: df.join(F.broadcast(doomed_df), col, "left_anti"),
-        )
-
-    def _recover_map_chunks(self, pool, fixes: list) -> tuple[dict[str, int], DataFrame]:
+    def _recover_map_chunks(self, submit) -> tuple[dict[str, int], DataFrame]:
         """The object_map + chunks phases shared by :meth:`recover` and
         :meth:`repair`: verify/prune map rows against ``objects`` and
         rebuild chunk ref_counts from the surviving map. Each fix is
-        staged on ``pool`` (its future, which returns the flip entry, is
-        appended to ``fixes``); the CALLER joins them and publishes every
-        entry in one flip. Returns ``(deltas, rebuilt)`` where
+        staged through :func:`_fix_pool`'s ``submit`` (its future returns
+        the flip entry); the CALLER joins them and publishes every entry
+        in one flip. Returns ``(deltas, rebuilt)`` where
         ``rebuilt`` is the post-rebuild chunks frame — it reads only
         eagerly-checkpointed rows, so it is safe to consume while the
         fixes are still staging. Caller must hold the composite-op lock.
@@ -2053,26 +1981,26 @@ class DedupeEngine:
         n_orphans = int(n_map_total) - int(n_map_live)
         deltas["object_map"] = -n_orphans
         if n_orphans:
-            # r12: a typical crash strands ONE batch's map rows — at
-            # 100 TB pruning them must not rewrite the whole map
-            # table. Surgical part swap when the orphan key set is
-            # bounded; full rewrite (the old path) otherwise.
+            # a typical crash strands ONE batch's map rows — at 100 TB
+            # pruning them must not rewrite the whole map table, so the
+            # rewrite keeps every part that cannot hold an orphan key.
             # r13 (guide §2.6): each table's fix stages from a driver
             # thread while the NEXT table's verification computes — the
             # chunks rebuild reads only the pinned valid_map and its
             # own immutable snapshot
             def fix_map():
-                return self._surgical_entry(
+                orphans = ann_map.filter(F.col("_live").isNull()).select("object_key").distinct()
+                rows = _bounded_rows(orphans)
+                keys = None if rows is None else [r[0] for r in rows]
+                return self.store.rewrite_entry(
                     "object_map",
                     "object_key",
-                    ann_map.filter(F.col("_live").isNull())
-                    .select("object_key")
-                    .distinct(),
-                ) or self.store.commit_entry(
-                    "object_map", valid_map, expected_version=v_map
+                    keys,
+                    lambda df: _without(df, "object_key", keys, orphans),
+                    v_map,
                 )
 
-            fixes.append(pool.submit(fix_map))
+            submit(fix_map)
 
         # chunks: rebuild refcounts from the surviving map and commit
         # whenever ANY row differs — count drift alone would miss a
@@ -2122,11 +2050,7 @@ class DedupeEngine:
         deltas["chunks"] = int(n_rebuilt) - int(n_ch_total)
         stale = bool(n_stale)
         if deltas["chunks"] or stale:
-            fixes.append(
-                pool.submit(
-                    self.store.commit_entry, "chunks", rebuilt, expected_version=v_ch
-                )
-            )
+            submit(self.store.commit_entry, "chunks", rebuilt, expected_version=v_ch)
         return deltas, rebuilt
 
     def recover(self) -> dict[str, int]:
@@ -2151,8 +2075,9 @@ class DedupeEngine:
           reaching zero references drop;
         * chunk_store payloads for dropped chunks GC.
 
-        O(table) like :meth:`optimize` — a repair pass, not a hot-path
-        cost. Returns per-table row deltas (0 everywhere on a healthy
+        The scans are O(table), a repair pass, not a hot-path cost; the
+        fixes rewrite only the parts that may hold an orphan or dead key
+        (:meth:`IndexStore.rewrite_entry`). Returns per-table row deltas (0 everywhere on a healthy
         index). Each table is verified INDEPENDENTLY (no early-out on a
         clean object_map), every fix is staged, and the fixes publish in
         one catalog flip with one ``recover`` ledger point; the pass is
@@ -2163,8 +2088,8 @@ class DedupeEngine:
         # lock OUTSIDE the pool: the pool's exit joins every in-flight
         # fix thread BEFORE the op lock releases, even on an exception path
         with self.store.op_lock():
-            with _fix_pool() as (pool, fixes):
-                deltas, rebuilt = self._recover_map_chunks(pool, fixes)
+            with _fix_pool() as (submit, fixes):
+                deltas, rebuilt = self._recover_map_chunks(submit)
                 # chunk_store: GC payloads whose chunk no longer exists.
                 # r13: dead/live counts come from one key-only aggregate
                 # over the membership join (two separate count() actions
@@ -2182,19 +2107,22 @@ class DedupeEngine:
                 deltas["chunk_store"] = -n_dead
                 cs_entry = None
                 if n_dead:
-                    # r12: same surgical shape for the payload GC — dead
+                    # same part-local shape for the payload GC — dead
                     # payloads are O(one damaged batch), the table is the
                     # 100 TB one; rewrite only the parts holding them
-                    cs_entry = self._surgical_entry(
-                        "chunk_store",
-                        "chunk_key",
+                    dead_df = (
                         cstore.select("chunk_key")
                         .distinct()
-                        .join(rebuilt.select("chunk_key"), "chunk_key", "left_anti"),
-                    ) or self.store.commit_entry(
+                        .join(live_keys, "chunk_key", "left_anti")
+                    )
+                    rows = _bounded_rows(dead_df)
+                    dead = None if rows is None else [r[0] for r in rows]
+                    cs_entry = self.store.rewrite_entry(
                         "chunk_store",
-                        cstore.join(live_keys, "chunk_key", "left_semi"),
-                        expected_version=v_cs,
+                        "chunk_key",
+                        dead,
+                        lambda df: _without(df, "chunk_key", dead, dead_df),
+                        v_cs,
                     )
             self._publish([f.result() for f in fixes] + [cs_entry], "recover")
         return deltas

@@ -47,6 +47,7 @@ from watsondedupe_spark.queries.llm_pipeline import (
     _emb,
     _quant_vec,
 )
+from watsondedupe_spark.substrates import substrate
 
 # ---------------------------------------------------------------------------
 # exact duplicate-span detection (substring dedup)
@@ -776,9 +777,6 @@ def emb_ann_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ann_topk_pq(emb, q, k=10, quantize=1000, codebooks=cbs, codes=codes)
 
 
-_ANN_INDEX_CACHE: dict[str, tuple] = {}
-
-
 def _ann_index(spark: SparkSession, sf_dir: str):
     """The shared PQ / IVF-PQ index build, cached per (session, sf_dir).
 
@@ -793,6 +791,10 @@ def _ann_index(spark: SparkSession, sf_dir: str):
     scorer ignores it). The cached code table is ~32x smaller than the
     float corpus by construction.
     """
+    return substrate(spark, sf_dir, "ann_index", lambda: _build_ann_index(spark, sf_dir))
+
+
+def _build_ann_index(spark: SparkSession, sf_dir: str):
     from watsondedupe_spark.operators.similarity import (
         ivf_assign_np,
         ivf_centroids,
@@ -800,10 +802,6 @@ def _ann_index(spark: SparkSession, sf_dir: str):
         pq_encode,
     )
 
-    ck = f"{spark.sparkContext.applicationId}:{sf_dir}"
-    hit = _ANN_INDEX_CACHE.get(ck)
-    if hit is not None:
-        return hit
     emb = _emb(spark, sf_dir)
     want = spark.sparkContext.defaultParallelism
     if emb.rdd.getNumPartitions() < want:
@@ -814,9 +812,7 @@ def _ann_index(spark: SparkSession, sf_dir: str):
     codes = pq_encode(
         assigned, cbs, quantize=1000, keep_cols=("centroid_id",)
     ).cache()
-    out = (emb, cents, cbs, codes)
-    _ANN_INDEX_CACHE[ck] = out
-    return out
+    return emb, cents, cbs, codes
 
 
 def _ivfpq_sims_cte() -> str:

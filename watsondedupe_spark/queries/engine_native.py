@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from watsondedupe_spark.queries import register
+from watsondedupe_spark.substrates import substrate
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -817,11 +818,12 @@ def engine_integrity_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         # _fix_pool joins every thread and raises the first failure, so
         # no thread's error is dropped on exit
-        with _fix_pool(3) as (pool, fixes):
-            fixes.append(pool.submit(collect_counts, before_df))
+        with _fix_pool(3) as (submit, fixes):
+            submit(collect_counts, before_df)
             # deterministic victim: the smallest chunk_key in the index
             victim = eng.chunks.agg(F.min("chunk_key")).collect()[0][0]
-            fixes += [pool.submit(plant_payloads), pool.submit(plant_ghost_map)]
+            submit(plant_payloads)
+            submit(plant_ghost_map)
         before = fixes[0].result()
         # r13 (guide §2.6): the post-plant verify reads the pinned
         # FAULTED snapshot (frame built after the plants land, before
@@ -829,8 +831,8 @@ def engine_integrity_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         # and rewrite — the serial form paid a full verify pass of
         # wall-clock between the plants and the heal.
         after_df = counts_frame()
-        with _fix_pool(1) as (pool, fixes):
-            fixes.append(pool.submit(collect_counts, after_df))
+        with _fix_pool(1) as (submit, fixes):
+            submit(collect_counts, after_df)
             eng.repair()
         after = fixes[0].result()
         healed = counts()
@@ -2235,9 +2237,6 @@ def docs_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _simhash_fp(spark, sf_dir)
 
 
-_SIMHASH_CACHE: dict[str, "DataFrame"] = {}
-
-
 def _simhash_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 60-bit portable SimHash fingerprint table, cached per
     (session, sf_dir): the 60-vote bit-majority aggregation is the
@@ -2247,13 +2246,12 @@ def _simhash_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same sharing ``minhash_sig_df`` gives the MinHash suite."""
     from watsondedupe_spark.operators.dedupe import simhash60_md5
 
-    ck = f"{spark.sparkContext.applicationId}:{sf_dir}"
-    hit = _SIMHASH_CACHE.get(ck)
-    if hit is not None:
-        return hit
-    fp = simhash60_md5(_docs(spark, sf_dir), "text", "doc_id").localCheckpoint(eager=True)
-    _SIMHASH_CACHE[ck] = fp
-    return fp
+    return substrate(
+        spark,
+        sf_dir,
+        "simhash_fp",
+        lambda: simhash60_md5(_docs(spark, sf_dir), "text", "doc_id").localCheckpoint(eager=True),
+    )
 
 
 @register(

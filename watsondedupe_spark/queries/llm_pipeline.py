@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from watsondedupe_spark.queries import register
+from watsondedupe_spark.substrates import substrate
 
 # ---------------------------------------------------------------------------
 # shared pieces
@@ -122,9 +123,6 @@ _SIG_SQL = (
 )
 
 
-_SIG_CACHE: dict[str, DataFrame] = {}
-
-
 def minhash_sig_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signature (k=6) + two LSH band keys per document.
 
@@ -144,23 +142,21 @@ def minhash_sig_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     every downstream dedup/verify pass. Exchange reuse already shares
     the aggregation WITHIN a query; the cache shares it ACROSS queries.
     """
-    ck = f"{spark.sparkContext.applicationId}:{sf_dir}"
-    hit = _SIG_CACHE.get(ck)
-    if hit is not None:
-        return hit
+    return substrate(spark, sf_dir, "minhash_sig", lambda: _build_minhash_sig(spark, sf_dir))
+
+
+def _build_minhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = shingles_df(spark, sf_dir, distinct=False)
     aggs = [
         F.min(F.md5(F.concat(F.lit(seed), F.col("shingle")))).alias(f"m{j+1}")
         for j, seed in enumerate(_SEEDS)
     ]
     sig = sh.groupBy("doc_id").agg(*aggs)
-    sig = sig.select(
+    return sig.select(
         "*",
         F.md5(F.concat("m1", "m2", "m3")).alias("b1"),
         F.md5(F.concat("m4", "m5", "m6")).alias("b2"),
     ).cache()
-    _SIG_CACHE[ck] = sig
-    return sig
 
 
 # ---------------------------------------------------------------------------
@@ -360,9 +356,6 @@ def docs_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PAIR_CACHE: dict[str, DataFrame] = {}
-
-
 def jaccard_pair_stats_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 3-gram co-occurrence stats per candidate doc pair:
     ``(doc_a, doc_b, n_common, un, sz_a, sz_b)`` with ``un`` the union
@@ -386,10 +379,10 @@ def jaccard_pair_stats_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold/tuning/verify pass instead of re-shuffling the shingle
     stream per consumer.
     """
-    ck = f"{spark.sparkContext.applicationId}:{sf_dir}"
-    hit = _PAIR_CACHE.get(ck)
-    if hit is not None:
-        return hit
+    return substrate(spark, sf_dir, "jaccard_pairs", lambda: _build_pair_stats(spark, sf_dir))
+
+
+def _build_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = shingles_df(spark, sf_dir, distinct=False)
     buckets = (
         sh.groupBy("shingle")
@@ -426,7 +419,7 @@ def jaccard_pair_stats_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     # linearly; neither should ever broadcast at corpus scale.
     sa = sizes.alias("sa").hint("shuffle_hash")
     sb = sizes.alias("sb").hint("shuffle_hash")
-    out = (
+    return (
         inter.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
         .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
         .select(
@@ -439,8 +432,6 @@ def jaccard_pair_stats_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cache()
     )
-    _PAIR_CACHE[ck] = out
-    return out
 
 
 # ---------------------------------------------------------------------------

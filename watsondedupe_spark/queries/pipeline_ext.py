@@ -40,6 +40,7 @@ from watsondedupe_spark.queries.llm_pipeline import (
     minhash_sig_df,
 )
 from watsondedupe_spark.sources import read_table
+from watsondedupe_spark.substrates import substrate
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1037,7 +1038,6 @@ def docs_observed_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _SRC_MH_K = 24
-_SRC_OVL_CACHE: dict[str, DataFrame] = {}
 
 
 def _src_overlap_oracle() -> str:
@@ -1106,18 +1106,16 @@ def docs_source_overlap_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the (source, shingle) distinct set feeds BOTH arms (minhash sig
     # agg + exact intersection join); cache it so the corpus-side work
     # runs once — the standing substrate pattern (minhash_sig_df etc.)
-    src = _SRC_OVL_CACHE.get(sf_dir)
-    if src is None:
-        src = (
-            shingles_df(spark, sf_dir)
-            .join(
-                F.broadcast(_docs(spark, sf_dir).select("doc_id", "source")), "doc_id"
-            )
-            .select("source", "shingle")
-            .distinct()
-            .cache()
-        )
-        _SRC_OVL_CACHE[sf_dir] = src
+    src = substrate(
+        spark,
+        sf_dir,
+        "source_shingles",
+        lambda: shingles_df(spark, sf_dir)
+        .join(F.broadcast(_docs(spark, sf_dir).select("doc_id", "source")), "doc_id")
+        .select("source", "shingle")
+        .distinct()
+        .cache(),
+    )
     mins = [
         F.min(F.md5(F.concat(F.lit(f"o{j}:"), F.col("shingle")))).alias(f"m{j}")
         for j in range(_SRC_MH_K)
@@ -1162,7 +1160,6 @@ def docs_source_overlap_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _EMB_DIM = 64
-_CENTROID_SIG_CACHE: dict[str, DataFrame] = {}
 
 
 def _centroid_sim_oracle() -> str:
@@ -1212,8 +1209,7 @@ JOIN norms nb ON nb.label = d.label_b
 def emb_label_centroid_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one corpus pass: the labels-row sig table is cached so the a/b
     # sides of the pair join don't each re-aggregate the embeddings
-    sig = _CENTROID_SIG_CACHE.get(sf_dir)
-    if sig is None:
+    def build() -> DataFrame:
         sums = [
             F.sum(F.element_at("qv", d + 1)).alias(f"s{d}") for d in range(_EMB_DIM)
         ]
@@ -1224,10 +1220,11 @@ def emb_label_centroid_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count("*").cast("long").alias("n"), *sums)
         )
         nrm = sum(F.col(f"s{d}") * F.col(f"s{d}") for d in range(_EMB_DIM))
-        sig = sig.select(
+        return sig.select(
             "label", "n", nrm.alias("nrm"), *[f"s{d}" for d in range(_EMB_DIM)]
         ).cache()
-        _CENTROID_SIG_CACHE[sf_dir] = sig
+
+    sig = substrate(spark, sf_dir, "label_centroid_sig", build)
     a, b = sig.alias("a"), sig.alias("b")
     dot = sum(F.col(f"a.s{d}") * F.col(f"b.s{d}") for d in range(_EMB_DIM))
     cos = (
@@ -1543,27 +1540,20 @@ def emb_top_pc_power(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: greatest(run_in, prev_max) prefix semantics are unchanged.
 _LATE_BLOCKS = 4096
 
-#: max(event_id)+1 per sf_dir — one column-pruned 1-row aggregate,
-#: collected once per session (the same pattern as the mutual-kNN
-#: plane-rule corpus count). Any true upper bound keeps the block
-#: mapping monotone and < _LATE_BLOCKS; embedding it as a literal
-#: avoids a per-run crossJoin/broadcast stage for a static corpus.
-_LATE_MAXID_CACHE: dict[str, int] = {}
-
-
 def _late_block_bound(spark: SparkSession, sf_dir: str) -> int:
-    m = _LATE_MAXID_CACHE.get(sf_dir)
-    if m is None:
-        m = (
-            _events(spark, sf_dir)
-            .agg((F.max("event_id") + 1).alias("m"))
-            .collect()[0]["m"]
-        )
+    """max(event_id)+1 of ``sf_dir`` — one column-pruned 1-row
+    aggregate, collected once per session (the same pattern as the
+    mutual-kNN plane-rule corpus count). Any true upper bound keeps the
+    block mapping monotone and < _LATE_BLOCKS; embedding it as a literal
+    avoids a per-run crossJoin/broadcast stage for a static corpus."""
+
+    def build() -> int:
+        m = _events(spark, sf_dir).agg((F.max("event_id") + 1).alias("m")).collect()[0]["m"]
         # empty table -> None; any positive bound is correct (the least()
         # clamp in the block expression keeps block monotone regardless)
-        m = max(int(m or 1), 1)
-        _LATE_MAXID_CACHE[sf_dir] = m
-    return m
+        return max(int(m or 1), 1)
+
+    return substrate(spark, sf_dir, "late_block_bound", build)
 
 
 @register(
@@ -1964,9 +1954,6 @@ def docs_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Partition-pruned ANN probe: the IVF lists as a partitioned parquet store
 # ---------------------------------------------------------------------------
 
-_IVF_STORE_CACHE: dict[str, str] = {}
-
-
 def _stage_ivf_store(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the IVF inverted lists as a parquet store PARTITIONED
     BY centroid_id — the on-disk layout a 100 TB ANN deployment uses so a
@@ -1975,6 +1962,10 @@ def _stage_ivf_store(spark: SparkSession, sf_dir: str) -> str:
     (the events staging recipe: a crash leaves only an orphan scratch
     dir; concurrent stagers race harmlessly; a stale incomplete occupant
     is evicted under a flock)."""
+    return substrate(spark, sf_dir, "ivf_store", lambda: _build_ivf_store(spark, sf_dir))
+
+
+def _build_ivf_store(spark: SparkSession, sf_dir: str) -> str:
     import hashlib
     import os
     import tempfile
@@ -1982,8 +1973,6 @@ def _stage_ivf_store(spark: SparkSession, sf_dir: str) -> str:
     from watsondedupe_spark.operators.similarity import ivf_assign_np, ivf_centroids
 
     key = os.path.abspath(sf_dir)
-    if key in _IVF_STORE_CACHE:
-        return _IVF_STORE_CACHE[key]
     tag = hashlib.md5(f"{key}:ivf16".encode()).hexdigest()[:8]
     stage = os.path.join(tempfile.gettempdir(), f"wds_ivf_store_{tag}")
     done = os.path.join(stage, "_STAGED")
@@ -2021,7 +2010,6 @@ def _stage_ivf_store(spark: SparkSession, sf_dir: str) -> str:
                 os.close(fdl)
     if not os.path.exists(done):
         raise RuntimeError(f"IVF store staging at {stage} is incomplete")
-    _IVF_STORE_CACHE[key] = stage
     return stage
 
 
@@ -3061,8 +3049,9 @@ def emb_opq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
             .collect()
         )
 
-    with _fix_pool(2) as (pool, fixes):
-        fixes += [pool.submit(_energy), pool.submit(_sample)]
+    with _fix_pool(2) as (submit, fixes):
+        submit(_energy)
+        submit(_sample)
     e_row, sample_rows = (f.result() for f in fixes)
     order = sorted(range(1, 65), key=lambda d: (-e_row[f"e{d}"], d))
     assign = [(r % 8, r // 8, d) for r, d in enumerate(order)]
@@ -3694,7 +3683,6 @@ _MUTUAL_K = 5
 _MUTUAL_PLANES = 4  # floor; the graded SFs (50/500 vectors) stay at 4
 _MUTUAL_MAX_PLANES = 16  # ceiling shared by plan and oracle (mask width)
 _MUTUAL_TARGET_BUCKET = 32  # expected rows per bucket the plane count targets
-_MUTUAL_COUNT_CACHE: dict = {}  # sf_dir -> corpus row count (avoid re-scan)
 
 
 def _mutual_planes(n_rows: int) -> int:
@@ -3777,10 +3765,7 @@ WHERE a.src < a.dst
 def emb_mutual_knn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from watsondedupe_spark.operators.similarity import sign_lsh_bucket
 
-    n_rows = _MUTUAL_COUNT_CACHE.get(sf_dir)
-    if n_rows is None:
-        n_rows = _emb(spark, sf_dir).count()
-        _MUTUAL_COUNT_CACHE[sf_dir] = n_rows
+    n_rows = substrate(spark, sf_dir, "emb_rows", lambda: _emb(spark, sf_dir).count())
     emb = _emb(spark, sf_dir).select(
         "vec_id",
         _quant_vec().alias("v"),

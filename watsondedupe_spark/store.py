@@ -16,10 +16,16 @@ A *commit* (full replace) writes one new part and a manifest referencing
 only it. An *append* writes a part containing ONLY the new rows and a
 manifest referencing old parts + the new one — O(batch), not O(table),
 which is the difference between linear and quadratic total ingest cost
-over many batches. Readers resolve the manifest once and scan the listed
-parts as one multi-path parquet read. When a table accumulates more than
-``max_parts`` parts, the next append folds them into one (bounded read
-fan-in — the OPTIMIZE/compaction analogue).
+over many batches. A *rewrite* (:meth:`IndexStore.rewrite_entry`) reads
+only the parts that may hold some keys (or a named set of parts),
+writes what a function makes of their rows as one part, and retires
+exactly those parts: every row drop by key — a delete, a replace, a
+payload GC, a repair — and every compaction is one, so a 2-key delete
+costs the parts its keys live in, not the table (Delta's file-pruned
+copy-on-write MERGE). Readers resolve the manifest once and scan the
+listed parts as one multi-path parquet read. When a table accumulates
+more than ``max_parts`` parts, the next append folds them into one
+(bounded read fan-in — the OPTIMIZE/compaction analogue).
 
 Every manifest version is also retained for the last ``retain_versions``
 commits, so ``read_version`` gives Delta-style time travel: part files
@@ -177,7 +183,10 @@ def _overlaps(span: list | None, ranges: list[tuple]) -> bool:
 
 def _sorted_probe(values: list) -> list | None:
     """``values`` sorted once for :func:`_holds_probe`'s bisects, or None
-    when they are mixed/unorderable types (no span pruning then)."""
+    when they hold a NULL or mixed/unorderable types (no span pruning
+    then)."""
+    if None in values:
+        return None
     try:
         return sorted(values)
     except TypeError:
@@ -213,8 +222,7 @@ class IndexStore:
     max_parts = 16
     #: how many historical manifest versions stay readable (time travel)
     retain_versions = 8
-    #: bounded optimistic retries for internal read-modify-writes
-    #: (the append fold, compact)
+    #: bounded optimistic retries for read-modify-writes (:meth:`_retry`)
     cas_retries = 6
     #: GC spares unreferenced part dirs younger than this: a concurrent
     #: writer's part is WRITTEN before its manifest flip, so for a
@@ -690,19 +698,21 @@ class IndexStore:
     def parts_for_keys(self, name: str, col: str, values: list) -> list[str]:
         """Live parts that MAY contain any of ``values`` in ``col`` —
         the one part-selection primitive behind :meth:`read_point`,
-        :meth:`read_arrow` and surgical part rewrites (``repair()``
-        canonicalization). Two independent witnesses apply: min/max
-        SPANS (the probe set is sorted once and each part span is
-        tested with a bisect: O(parts x log |values|), so a 100k-key
-        batch probe against a many-part store stays driver-cheap),
-        skipped on the :attr:`HASH_KEYED` tables whose spans cover the
-        whole keyspace, then Bloom sidecars (:meth:`_bloom_prune`),
-        which prune on MEMBERSHIP. Parts without stats/sidecars are
-        always kept and false positives only widen the read — never a
-        correctness gate. An empty ``values`` keeps every part (the
-        caller is asking about nothing; the safe answer is
-        "anywhere")."""
-        state = self._state(name)
+        :meth:`read_arrow` and :meth:`rewrite_entry`. Two independent
+        witnesses apply: min/max SPANS (the probe set is sorted once and
+        each part span is tested with a bisect: O(parts x log |values|),
+        so a 100k-key batch probe against a many-part store stays
+        driver-cheap), skipped on the :attr:`HASH_KEYED` tables whose
+        spans cover the whole keyspace, then Bloom sidecars
+        (:meth:`_bloom_prune`), which prune on MEMBERSHIP. Parts without
+        stats/sidecars are always kept and false positives only widen
+        the read — never a correctness gate. An empty ``values``, or one
+        holding a NULL or unorderable key, keeps every part (the safe
+        answer is "anywhere")."""
+        return self._keyed_parts(name, self._state(name), col, values)
+
+    def _keyed_parts(self, name: str, state: dict, col: str, values: list) -> list[str]:
+        """:meth:`parts_for_keys` against the manifest ``state``."""
         parts = list(state.get("parts", []))
         if not parts or not values:
             return parts
@@ -991,13 +1001,20 @@ class IndexStore:
 
     def _retry(self, attempt):
         """``attempt()`` until its flip wins, at most :attr:`cas_retries`
-        times; the last lost race is raised."""
+        times with a linear backoff; the last lost race is raised. Each
+        attempt re-derives its rows from fresh snapshots, so concurrent
+        read-modify-writes serialize per table with no lost update (the
+        Delta commit-conflict shape — the batched analogue of the
+        reference's writer mutexes, SqliteProvider.cs:29-30)."""
+        import time
+
         for i in range(self.cas_retries):
             try:
                 return attempt()
             except ConcurrentWriteError:
                 if i == self.cas_retries - 1:
                     raise
+                time.sleep(0.05 * (i + 1))
 
     # -- flip entries: stage a table's change, publish it with others ---------
 
@@ -1042,24 +1059,39 @@ class IndexStore:
         path = self._write_part(name, folded, v + 1)
         return name, self._put(name, path, meta, v, meta_merge, replace=True), path
 
-    def compaction_entry(
-        self, name: str, parts: list[str], layout=None, meta_fn=None
-    ) -> tuple | None:
-        """Stage the rewrite of ``parts`` (see :meth:`compact_parts`);
-        None when the table is absent or ``parts`` is empty."""
-        if not self.exists(name) or not parts:
-            return None
+    def rewrite_entry(
+        self, name, col, keys, fn, expected_version=None, meta_fn=None, parts=None
+    ) -> tuple:
+        """Stage ``fn(rows of the selected parts)`` as one part whose flip
+        retires exactly those parts and keeps every other one: the one
+        part-rewrite routine behind every row drop by key and every
+        compaction. From ONE manifest read it selects the parts
+        :meth:`parts_for_keys` keeps for ``keys`` in ``col`` (no false
+        negatives: every row of every key is in the selection); every
+        part for ``keys=None``, none for an empty ``keys`` (``fn``'s rows
+        are then a pure addition), or exactly ``parts`` when given.
+
+        ``expected_version`` arms the table-version CAS, checked before
+        the part is written and again in the flip. Without it the flip
+        rebases: it keeps parts appended since and refuses only when a
+        selected part was retired meanwhile (rewriting retired rows
+        would resurrect them). ``meta_fn(meta, new_parts, new_part)``
+        updates the carried meta in the same flip."""
+        state = self._state(name)
+        _check_version(name, state["version"], expected_version)
+        if parts is None:
+            parts = list(state["parts"])
+            if keys is not None:
+                parts = self._keyed_parts(name, state, col, keys) if keys else []
         todo = set(parts)
-        df = self._df_for(name, parts)
-        if layout is not None:
-            df = layout(df)
-        path = self._write_part(name, df, self.current_version(name) + 1)
+        path = self._write_part(name, fn(self._df_for(name, parts)), state["version"] + 1)
 
         def build(fresh, catalog):
+            _check_version(name, fresh["version"], expected_version)
             missing = sorted(todo - set(fresh["parts"]))
             if missing:
                 raise ConcurrentWriteError(
-                    f"{name}: parts retired under compaction "
+                    f"{name}: parts retired under a rewrite "
                     f"(another writer committed first): {missing}"
                 )
             new_parts = [p for p in fresh["parts"] if p not in todo] + [path]
@@ -1310,30 +1342,18 @@ class IndexStore:
     def compact_parts(self, name: str, parts: list[str], layout=None, meta_fn=None) -> int:
         """Rewrite ONLY ``parts`` into one new part, leaving every other
         live part's bytes untouched — the Delta/Iceberg OPTIMIZE-binpack
-        commit shape, and the primitive behind the engine's INCREMENTAL
-        ``optimize()``: a follow-on compaction after a small append
-        rewrites O(append bytes), not O(table).
-
-        Commutes with concurrent APPENDS (the flip rebases on the fresh
-        manifest, so parts landed mid-rewrite survive untouched). A
-        concurrent full COMMIT / competing compaction that retired one
-        of ``parts`` aborts with :class:`ConcurrentWriteError` — the new
-        part is discarded and the caller re-derives its subset from a
-        fresh manifest (rewriting retired rows would resurrect them).
-
-        ``layout`` is an optional DataFrame->DataFrame reshaping applied
-        before the rewrite (e.g. range-clustering by key so key-range
-        predicates prune row groups afterwards). It MAY drop rows when
-        the caller's contract is a rewrite-with-cleanup
-        (``engine.repair()`` canonicalizes corrupt payload rows out of
-        exactly the affected parts this way).
-        ``meta_fn(meta, new_parts,
-        new_part)`` lets the caller update carried table meta (e.g. the
-        clustered-parts watermark) in the SAME manifest flip — no extra
-        version churn. Returns the new manifest version (0 when the
-        table is absent or ``parts`` is empty)."""
-        entry = self.compaction_entry(name, parts, layout, meta_fn)
-        return self._flip([entry])[name]["version"] if entry else 0
+        commit shape, as a one-entry flip of :meth:`rewrite_entry`:
+        commutes with concurrent APPENDS, refuses with
+        :class:`ConcurrentWriteError` when one of ``parts`` was retired
+        meanwhile. ``layout`` is an optional DataFrame->DataFrame
+        reshaping applied before the rewrite (e.g. range-clustering by
+        key); ``meta_fn(meta, new_parts, new_part)`` updates the carried
+        meta in the same flip. Returns the new manifest version (0 when
+        the table is absent or ``parts`` is empty)."""
+        if not self.exists(name) or not parts:
+            return 0
+        entry = self.rewrite_entry(name, None, None, layout or (lambda df: df), None, meta_fn, parts)
+        return self._flip([entry])[name]["version"]
 
 
 class SqliteIndexStore(IndexStore):
