@@ -131,6 +131,26 @@ def test_delete_gc_semantics(engine):
         engine.delete("x")
 
 
+def test_delete_of_absent_keys_stages_nothing(engine):
+    """A delete naming only keys the index does not hold returns [] and
+    publishes nothing: every table keeps its version and its parts, and
+    no ledger row is added."""
+    engine.write("x", rand_bytes(6000, seed=6))
+    tables = ("objects", "object_map", "chunks", "chunk_store", "checkpoints")
+
+    def state():
+        return {t: (engine.store.current_version(t), engine.store.live_parts(t)) for t in tables}
+
+    before, n_points = state(), engine.checkpoints.count()
+    assert engine.delete_batch(["missing", "also-missing"]) == []
+    assert state() == before
+    assert engine.checkpoints.count() == n_points
+    frame = engine.spark.createDataFrame([("missing",)], "object_key string")
+    assert engine.delete_batch(frame).count() == 0
+    assert state() == before
+    assert engine.get("x") == rand_bytes(6000, seed=6)
+
+
 def test_metadata_and_coverage_invariants(engine):
     """FIXTURES §4.2/4.5: comp_length = sum(map.length), chunk_count =
     count(map rows), positions are 0..n-1 by address, addresses tile."""
@@ -1902,7 +1922,6 @@ def test_maintenance_raises_fix_thread_error_beside_commit_error(engine, monkeyp
         raise RuntimeError(f"{name} commit failed")
 
     with monkeypatch.context() as m:
-        m.setattr(engine.store, "commit_entry", failing_commit)
         m.setattr(engine.store, "rewrite_entry", failing_commit)
         with pytest.raises(RuntimeError) as info:
             getattr(engine, verb)()
@@ -1924,14 +1943,14 @@ def _raised_texts(exc) -> str:
 def test_write_batch_surfaces_every_failed_table_commit(engine, monkeypatch):
     """Two of an ingest's overlapped table stages fail: the raised error
     carries the other one in its notes instead of dropping it."""
-    orig = engine.store.append_entry
+    orig = engine.store.rewrite_entry
 
     def failing_append(name, *args, **kwargs):
         if name in ("object_map", "chunk_store"):
             raise RuntimeError(f"{name} append failed")
         return orig(name, *args, **kwargs)
 
-    monkeypatch.setattr(engine.store, "append_entry", failing_append)
+    monkeypatch.setattr(engine.store, "rewrite_entry", failing_append)
     with pytest.raises(RuntimeError) as info:
         engine.write("k", rand_bytes(6000, seed=410))
     text = _raised_texts(info.value)

@@ -113,13 +113,38 @@ def test_commit_gc_preserves_time_travel_parts(spark, tmp_path, store_cls):
 
 
 def test_compaction_keeps_current_snapshot(spark, tmp_path, store_cls):
+    """The max_parts bound holds for every kind of write: appends, key
+    rewrites that select a part, and key rewrites that select none (at
+    the bound they fold every part). The rows follow a dict model."""
+    from pyspark.sql import functions as F
+
     st = store_cls(spark, str(tmp_path))
     st.max_parts = 3
+    model = {}
+
+    def check(before, selects_none=True):
+        live = len(st.live_parts("objects"))
+        assert live <= st.max_parts
+        if selects_none and before >= st.max_parts:
+            assert live == 1  # a write at the bound folds every part
+        assert {r.id: r.object_key for r in st.read("objects").collect()} == model
+
+    def drop(ids, selects_none):
+        before = len(st.live_parts("objects"))
+        fn = lambda rows: rows.filter(~F.col("id").isin(ids))
+        st._flip([st.rewrite_entry("objects", "id", ids, fn)])
+        for i in ids:
+            model.pop(i, None)
+        check(before, selects_none)
+
     for i in range(5):
+        before = len(st.live_parts("objects"))
         st.append("objects", _df(spark, i * 3, i * 3 + 3))
-    assert st.read("objects").count() == 15
-    state = st._state("objects")
-    assert len(state["parts"]) <= st.max_parts
+        model.update({k: str(k) for k in range(i * 3, i * 3 + 3)})
+        check(before)
+        drop([i * 3], False)  # selects the parts that may hold the key
+        drop([1000 + i], True)  # beyond every id span: selects no part
+    assert st.read("objects").count() == 10
 
 
 def test_manifest_meta_carries_forward_and_replaces(spark, tmp_path, store_cls):
@@ -139,6 +164,28 @@ def test_manifest_meta_carries_forward_and_replaces(spark, tmp_path, store_cls):
     for _ in range(IndexStore.max_parts + 1):
         store.append("t", df)
     assert store.table_meta("t") == {"max_id": 9}
+
+
+def test_traced_store_methods_exist_on_both_backends():
+    """The traced benchmark run wraps the store methods its
+    ``STORE_METHODS`` names by ``getattr``: each must stay a callable
+    attribute of both backends, or every traced run fails."""
+    import ast
+    import pathlib
+
+    src = pathlib.Path(__file__).parents[1] / "perfbench" / "spans.py"
+    names: dict = {}
+    for node in ast.parse(src.read_text()).body:
+        if isinstance(node, ast.Assign) and getattr(node.targets[0], "id", None) in (
+            "FLIPS",
+            "STORE_METHODS",
+        ):
+            expr = ast.Expression(node.value)
+            names[node.targets[0].id] = eval(compile(expr, str(src), "eval"), {}, names)
+    assert names["STORE_METHODS"]
+    for cls in (IndexStore, SqliteIndexStore):
+        for meth in names["STORE_METHODS"]:
+            assert callable(getattr(cls, meth, None)), (cls.__name__, meth)
 
 
 # -- optimistic concurrency (CAS) -------------------------------------------
@@ -733,8 +780,10 @@ def test_two_table_flip_is_refused_whole(spark, tmp_path, store_cls):
     st.commit("objects", _df(spark, 0, 5))
     st.commit("t", one(1))
     v_obj, v_t = st.current_version("objects"), st.current_version("t")
-    replace = st.commit_entry("objects", _df(spark, 0, 9), expected_version=v_obj)
-    append = st.append_entry("t", one(2), expected_version=v_t)
+    replace = st.rewrite_entry("objects", None, None, lambda _: _df(spark, 0, 9), v_obj)
+    append = st.rewrite_entry(
+        "t", None, [], lambda rows: rows.unionByName(one(2), allowMissingColumns=True), v_t
+    )
     st.commit("t", one(3))  # another writer moves t on
     with pytest.raises(ConcurrentWriteError):
         st._flip([replace, append])

@@ -45,7 +45,6 @@ from __future__ import annotations
 
 import io
 from bisect import bisect_right
-from contextlib import contextmanager
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
@@ -57,6 +56,7 @@ from pyspark.sql.types import TimestampType
 
 from watsondedupe_spark.chunking import ChunkSettings, chunk_objects
 from watsondedupe_spark.keys import validate_object_key
+from watsondedupe_spark.pool import fix_pool
 from watsondedupe_spark.schemas import (
     CHECKPOINTS_SCHEMA,
     CHUNK_STORE_SCHEMA,
@@ -167,49 +167,6 @@ class ObjectNotFoundError(KeyError):
     pass
 
 
-@contextmanager
-def _fix_pool(workers: int = 2):
-    """``(submit, fixes)``: the engine's one driver-thread pool, for
-    commits that overlap each other or the caller's next phase.
-    ``submit(fn, *args)`` runs ``fn`` on a pool thread that inherits the
-    caller's Spark local properties as they are at submission
-    (``pyspark.util.inheritable_thread_target``), so its jobs land in
-    the caller's job group and ``cancelJobGroup`` reaches them; the
-    future is appended to ``fixes`` and returned. On exit EVERY future
-    in ``fixes`` is joined and the first failure (in submission order)
-    re-raised — also when the body itself raised, in which case the
-    fix's error carries the body's as ``__context__`` and neither is
-    lost (a bare pool exit joins the threads but drops their
-    exceptions). Further fix failures ride along as notes."""
-    from concurrent import futures
-
-    from pyspark.util import inheritable_thread_target
-
-    session = SparkSession.active()
-    fixes: list = []
-    with futures.ThreadPoolExecutor(max_workers=workers) as pool:
-
-        def submit(fn, *args, **kwargs):
-            target = inheritable_thread_target(session)(fn)
-            fixes.append(pool.submit(target, *args, **kwargs))
-            return fixes[-1]
-
-        try:
-            yield submit, fixes
-        finally:
-            failure = None
-            for f in fixes:
-                try:
-                    f.result()
-                except Exception as e:  # noqa: BLE001 — re-raised below
-                    if failure is None:
-                        failure = e
-                    else:
-                        failure.add_note(f"another overlapped fix also failed: {e!r}")
-            if failure is not None:
-                raise failure
-
-
 def _pin(df: DataFrame, where=None) -> tuple[DataFrame, int]:
     """``(df eagerly local-checkpointed, its row count)`` — the count of
     rows satisfying the Column ``where`` when one is given. The count
@@ -237,6 +194,8 @@ def _without(df: DataFrame, col: str, keys: list | None, keys_df=None) -> DataFr
     if keys is None:
         other = keys_df.select(F.col(keys_df.columns[0]).alias("_drop"))
         return df.join(other, df[col].eqNullSafe(other["_drop"]), "left_anti")
+    if not keys:
+        return df
     hit = F.col(col).isin([k for k in keys if k is not None])
     if None in keys:
         hit = hit | F.col(col).isNull()
@@ -382,7 +341,7 @@ class DedupeEngine:
         if store.exists("config"):
             raise ValueError(f"index already exists at {root}; use open()")
         cfg = spark.createDataFrame(list(settings.to_config().items()), CONFIG_SCHEMA)
-        store.commit("config", cfg)
+        store._flip([store.rewrite_entry("config", None, None, lambda _: cfg)])
         return cls(spark, store, settings)
 
     @classmethod
@@ -450,13 +409,12 @@ class DedupeEngine:
         adds the absent new ones.
 
         The batch's keys are collected once, up to
-        :data:`GC_BROADCAST_KEYS`, and the existing ones read off the
-        ``objects`` parts that may hold them on the driver (no Spark
-        job); they select the parts the replace rewrites. A larger batch
-        stays DISTRIBUTED end to end: its keys go to the commit as a
-        DataFrame and every table is rewritten through an anti-join — a
-        100x-scale re-ingest would otherwise materialize millions of
-        keys on the driver.
+        :data:`GC_BROADCAST_KEYS`, and narrowed to the existing ones
+        (:meth:`_present`, no Spark job); they select the parts the
+        replace rewrites. A larger batch stays DISTRIBUTED end to end:
+        its keys go to the commit as a DataFrame and every table is
+        rewritten through an anti-join — a 100x-scale re-ingest would
+        otherwise materialize millions of keys on the driver.
 
         The expensive chunker pass and per-object rollup run OUTSIDE the
         composite-op lock (shared :meth:`_prepare_batch`); only the
@@ -472,20 +430,24 @@ class DedupeEngine:
             with self.store.op_lock():
                 doomed = rolled.select("object_key")
                 if n_keys <= GC_BROADCAST_KEYS:
-                    keys = [r[0] for r in doomed.collect()]
-                    doomed = self.store.read_arrow(
-                        "objects",
-                        ["object_key"],
-                        pc.field("object_key").isin(keys),
-                        col="object_key",
-                        values=keys,
-                    ).column("object_key").to_pylist() or None
+                    doomed = self._present([r[0] for r in doomed.collect()]) or None
                 self._commit_mutation(
                     doomed, (chunk_rows, rolled, created_utc, n_keys, total_bytes)
                 )
         finally:
             chunk_rows.unpersist()
         return n_keys
+
+    def _present(self, keys: list) -> list:
+        """The ``keys`` that have an ``objects`` row, read on the driver
+        from only the parts that may hold them (no Spark job)."""
+        return self.store.read_arrow(
+            "objects",
+            ["object_key"],
+            pc.field("object_key").isin(keys),
+            col="object_key",
+            values=keys,
+        ).column("object_key").to_pylist()
 
     def _prepare_batch(self, objects_df: DataFrame):
         """The lock-free front half of every batch ingest: chunk, roll
@@ -592,29 +554,31 @@ class DedupeEngine:
         its CAS, does three things in order:
 
         1. snapshot the four index tables;
-        2. stage every table's new part, overlapped on driver threads.
-           Rows leave a table through :meth:`IndexStore.rewrite_entry`,
-           which rewrites only the parts that may hold the keys (all of
-           them above the cap):
+        2. stage every table's new part, overlapped on driver threads,
+           each from ONE :meth:`IndexStore.rewrite_entry` call whose keys
+           are ``[]`` for an ingest (no part is read: the rewrite is an
+           append), the doomed list for a delete or replace (only the
+           parts that may hold them), and ``None`` above the cap (every
+           part):
 
            * ``objects`` and ``object_map`` drop the doomed keys and take
-             the new rows (a plain append for an ingest);
+             the new rows;
            * ``chunks`` = ONE refcount merge of increments − decrements,
-             a full rewrite. When keys are doomed the merge is pinned
-             once, with its dead count, and its dead keys are collected
-             before this stage and the next are submitted; the chunks
-             rewrite keeps its rows with a reference left;
-           * ``chunk_store`` drops the dead keys' payloads and takes the
-             absent new ones, or is a plain append when nothing died;
+             a rewrite of every part. When keys are doomed the merge is
+             pinned once, with its dead count, and its dead keys are
+             collected before this stage and the next are submitted;
+             the chunks rewrite keeps its rows with a reference left;
+           * ``chunk_store`` drops the dead keys' payloads (its rewrite
+             keys) and takes the absent new ones;
         3. make ONE catalog flip of the staged parts plus the ledger row.
 
-        Every rewritten table is CAS-checked against its snapshot
-        version in that flip and the appends rebase, so a concurrent
-        writer that bypassed the op lock — one that revived a dying
-        chunk, say — refuses the whole flip and the attempt re-derives
-        from fresh snapshots. A crash anywhere before the flip leaves
-        only invisible staged parts; after it, the op is complete. No
-        reader and no :meth:`recover` ever sees a half-applied mutation.
+        Every table is CAS-checked against its snapshot version in that
+        flip, so a concurrent writer that bypassed the op lock — one
+        that revived a dying chunk, say — refuses the whole flip and the
+        attempt re-derives from fresh snapshots. A crash anywhere before
+        the flip leaves only invisible staged parts; after it, the op is
+        complete. No reader and no :meth:`recover` ever sees a
+        half-applied mutation.
 
         An ingest's output files are sized by the batch's total bytes
         (~64 MB targets): a small batch writes a handful of files instead
@@ -623,7 +587,7 @@ class DedupeEngine:
         (the coalesce target caps at the cache's partition count).
         """
         holder: dict = {}
-        keys = doomed if isinstance(doomed, list) else None
+        keys = [] if doomed is None else doomed if isinstance(doomed, list) else None
 
         def survivors_of(df):
             return _without(df, "object_key", keys, doomed)
@@ -701,57 +665,46 @@ class DedupeEngine:
                 return out
 
             def stage_objects():
-                if batch is None:
-                    return self.store.rewrite_entry(
-                        "objects", "object_key", keys, survivors_of, v_obj
+                fn, meta_fn = survivors_of, None
+                if batch is not None:
+                    # the ingest-sequence high-water mark rides in the
+                    # manifest (Delta table-properties style), so
+                    # steady-state batches skip the max(id) scan job; the
+                    # CAS on objects keeps two batches from assigning
+                    # COLLIDING id ranges. Merged into the meta, not
+                    # replacing it: a replace would wipe clustered_parts
+                    # and turn the next incremental optimize() into a full
+                    # refold (r12)
+                    prev_max = obj_meta.get("max_id")
+                    if prev_max is None:
+                        # v == 0 <=> the table has never been written: the
+                        # max(id) fallback exists for pre-meta LEGACY indexes
+                        prev_max = 0 if v_obj == 0 else objs.agg(F.max("id")).collect()[0][0] or 0
+                    # the shared per-object rollup (already checkpointed —
+                    # no second shuffle over the chunk cache) +
+                    # ingest-sequence ids, assigned distributed (two-phase
+                    # prefix scan — no single-task global window).
+                    # comp_length preserves the reference quirk: sum of
+                    # chunk lengths (DedupeLibrary.cs:233)
+                    new_objects = (
+                        assign_ingest_ids(
+                            rolled.select(
+                                "object_key",
+                                "original_length",
+                                F.col("original_length").alias("comp_length"),
+                                "chunk_count",
+                            ),
+                            prev_max,
+                        )
+                        .withColumn("created_utc", F.lit(created_utc))
+                        .select("id", "object_key", "original_length", "comp_length", "chunk_count", "created_utc")
                     )
-                # the ingest-sequence high-water mark rides in the manifest
-                # (Delta table-properties style), so steady-state batches
-                # skip the max(id) scan job; the CAS on objects keeps two
-                # batches from assigning COLLIDING id ranges. Merged into
-                # the meta, not replacing it: a replace would wipe
-                # clustered_parts and turn the next incremental optimize()
-                # into a full refold (r12)
-                prev_max = obj_meta.get("max_id")
-                if prev_max is None:
-                    # v == 0 <=> the table has never been written: the
-                    # max(id) fallback exists for pre-meta LEGACY indexes
-                    prev_max = 0 if v_obj == 0 else objs.agg(F.max("id")).collect()[0][0] or 0
-                # the shared per-object rollup (already checkpointed — no
-                # second shuffle over the chunk cache) + ingest-sequence
-                # ids, assigned distributed (two-phase prefix scan — no
-                # single-task global window). comp_length preserves the
-                # reference quirk: sum of chunk lengths (DedupeLibrary.cs:233)
-                new_objects = (
-                    assign_ingest_ids(
-                        rolled.select(
-                            "object_key",
-                            "original_length",
-                            F.col("original_length").alias("comp_length"),
-                            "chunk_count",
-                        ),
-                        prev_max,
-                    )
-                    .withColumn("created_utc", F.lit(created_utc))
-                    .select("id", "object_key", "original_length", "comp_length", "chunk_count", "created_utc")
-                )
-                high = {"max_id": int(prev_max) + n_objects}
-                if doomed is None:
-                    return self.store.append_entry(
-                        "objects", new_objects, expected_version=v_obj, meta_merge=high
-                    )
-                return self.store.rewrite_entry(
-                    "objects",
-                    "object_key",
-                    keys,
-                    lambda rows: survivors_of(rows).unionByName(new_objects),
-                    v_obj,
-                    lambda meta, *_: {**meta, **high},
-                )
+                    high = {"max_id": int(prev_max) + n_objects}
+                    fn = lambda rows: survivors_of(rows).unionByName(new_objects)  # noqa: E731
+                    meta_fn = lambda meta, *_: {**meta, **high}  # noqa: E731
+                return self.store.rewrite_entry("objects", "object_key", keys, fn, v_obj, meta_fn)
 
             def stage_map():
-                if doomed is None:
-                    return self.store.append_entry("object_map", new_map)
                 fn = survivors_of
                 if batch is not None:
                     fn = lambda rows: survivors_of(rows).unionByName(new_map)  # noqa: E731
@@ -759,7 +712,9 @@ class DedupeEngine:
 
             def stage_chunks():
                 rows = merged() if doomed is None else merge.filter(F.col("ref_count") >= 1)
-                return self.store.commit_entry("chunks", _sized(rows), expected_version=v_ch)
+                return self.store.rewrite_entry(
+                    "chunks", "chunk_key", None, lambda _: _sized(rows), v_ch
+                )
 
             def stage_payloads():
                 # content-addressed storage is the physical dedup (same key
@@ -772,21 +727,19 @@ class DedupeEngine:
                     if v_cs > 0:  # first load: nothing absent
                         absent = absent.join(cs.select("chunk_key"), "chunk_key", "left_anti")
                     rows = _sized(absent.select("chunk_key", F.col("chunk_data").alias("data")))
-                if not n_dead:
-                    if rows is None:
-                        return None
-                    return self.store.append_entry("chunk_store", rows, expected_version=v_cs)
-                dead = holder["dead"]
+                if rows is None and not n_dead:
+                    return None
+                dead = holder.get("dead", [])
 
                 def gc(df):
-                    kept = _without(df, "chunk_key", dead, holder["gc"])
+                    kept = _without(df, "chunk_key", dead, holder.get("gc"))
                     return kept if rows is None else kept.unionByName(rows)
 
                 return self.store.rewrite_entry("chunk_store", "chunk_key", dead, gc, v_cs)
 
             # every thread is joined before any error is raised; a second
             # failed stage rides along as a note on the first
-            with _fix_pool(4) as (submit, fixes):
+            with fix_pool(4) as (submit, fixes):
                 submit(stage_objects)
                 submit(stage_map)
                 merge = n_dead = None
@@ -1191,9 +1144,12 @@ class DedupeEngine:
 
         ``keys`` is a Python list or a single-column ``object_key``
         DataFrame; the DataFrame's distinct keys are collected up to
-        :data:`GC_BROADCAST_KEYS`. Above that cap (either form) the keys
-        stay distributed: every key-set operation is an anti/semi JOIN,
-        which is what a millions-of-keys delete at 100 TB requires.
+        :data:`GC_BROADCAST_KEYS`. Up to that cap the keys are narrowed
+        to the existing ones (:meth:`_present`, no Spark job), and when
+        none exists nothing is staged or flipped. Above it (either form)
+        the keys stay distributed: every key-set operation is an
+        anti/semi JOIN, which is what a millions-of-keys delete at
+        100 TB requires.
 
         The GC'd chunk keys come back as a list for a list ``keys``,
         reference-faithful, read off the same bounded collect that
@@ -1210,10 +1166,12 @@ class DedupeEngine:
             keys = keys.localCheckpoint(eager=True) if rows is None else [r[0] for r in rows]
         elif len(keys) > GC_BROADCAST_KEYS:
             keys = self.spark.createDataFrame([(k,) for k in keys], "object_key string")
-        if isinstance(keys, list) and not keys:
-            empty = self.spark.createDataFrame([], "chunk_key string")
-            return empty if as_frame else []
         with self.store.op_lock():
+            if isinstance(keys, list):
+                keys = self._present(keys)
+                if not keys:
+                    empty = self.spark.createDataFrame([], "chunk_key string")
+                    return empty if as_frame else []
             gc_set, dead = self._commit_mutation(keys)
         if as_frame or dead is None or len(dead) > GC_RETURN_CAP:
             return gc_set
@@ -1588,7 +1546,7 @@ class DedupeEngine:
         # lock OUTSIDE the pool: the pool exit joins every in-flight fix
         # thread (and re-raises its error) before the lock releases
         with self.store.op_lock():
-            with _fix_pool() as (submit, fixes):
+            with fix_pool() as (submit, fixes):
                 deltas, rebuilt = self._recover_map_chunks(submit)
                 # FUSED chunk_store phase (r13 session 3, guide §1.2/§2.6):
                 # repair used to run recover()'s membership scan + GC
@@ -1811,7 +1769,7 @@ class DedupeEngine:
             # driver threads overlaps their jobs. This matters most for
             # the INCREMENTAL quiet-window pass, whose cost is dominated
             # by four small-fold fixed floors.
-            with _fix_pool(len(tables)) as (submit, fixes):
+            with fix_pool(len(tables)) as (submit, fixes):
                 for name in tables:
                     submit(stage_one, name)
             states = self._publish([f.result() for f in fixes], "optimize")
@@ -1916,14 +1874,14 @@ class DedupeEngine:
         if max_id is None:
             max_id = objs.agg(F.max("id")).collect()[0][0] or 0
         snaps["objects"] = objs
-        with _fix_pool(len(snaps)) as (submit, fixes):
+
+        def stage(name: str, df: DataFrame):
+            high = (lambda meta, *_: {"max_id": int(max_id)}) if name == "objects" else None
+            return dest.rewrite_entry(name, None, None, lambda _: df, None, high)
+
+        with fix_pool(len(snaps)) as (submit, fixes):
             for name, df in snaps.items():
-                submit(
-                    dest.commit_entry,
-                    name,
-                    df,
-                    {"max_id": int(max_id)} if name == "objects" else None,
-                )
+                submit(stage, name, df)
         dest._flip([f.result() for f in fixes])
         return DedupeEngine(self.spark, dest, self.settings)
 
@@ -1955,9 +1913,9 @@ class DedupeEngine:
         """The object_map + chunks phases shared by :meth:`recover` and
         :meth:`repair`: verify/prune map rows against ``objects`` and
         rebuild chunk ref_counts from the surviving map. Each fix is
-        staged through :func:`_fix_pool`'s ``submit`` (its future returns
-        the flip entry); the CALLER joins them and publishes every entry
-        in one flip. Returns ``(deltas, rebuilt)`` where
+        staged through :func:`~watsondedupe_spark.pool.fix_pool`'s
+        ``submit`` (its future returns the flip entry); the CALLER joins
+        them and publishes every entry in one flip. Returns ``(deltas, rebuilt)`` where
         ``rebuilt`` is the post-rebuild chunks frame — it reads only
         eagerly-checkpointed rows, so it is safe to consume while the
         fixes are still staging. Caller must hold the composite-op lock.
@@ -2002,26 +1960,14 @@ class DedupeEngine:
 
             submit(fix_map)
 
-        # chunks: rebuild refcounts from the surviving map and commit
+        # chunks: rebuild refcounts from the surviving map and rewrite
         # whenever ANY row differs — count drift alone would miss a
-        # same-size table with inflated counts (the state a crash
-        # between the map and chunks commits leaves behind).
-        # r12 (guide §2.4): the old-vs-new comparison rides the
-        # rebuild join itself (_stale flag on the checkpointed rows)
-        # instead of a separate chunks-vs-rebuilt anti-join, which
-        # re-scanned the chunks table and paid a second two-sided
-        # shuffle. Equivalence: rebuilt keys are always a subset of
-        # chunks keys and `length` is carried from chunks verbatim,
-        # so with equal row counts the key sets are equal and the
-        # only possible difference is a per-key ref_count change —
-        # exactly what _stale records; with unequal counts the
-        # deltas branch commits regardless, as before.
-        # r13 (guide §1.2): LEFT join so the dropped-chunk rows ride
-        # the same checkpoint, and total/rebuilt/stale all read off
-        # ONE aggregate — the old inner-join form paid three
-        # separate jobs (rebuilt.count, a second chunks scan for
-        # chunks.count, and a stale head()) for numbers the rebuild
-        # join already knew.
+        # same-size table with inflated counts. The comparison rides the
+        # rebuild's LEFT join: rebuilt keys are a subset of chunks keys
+        # and `length` is carried verbatim, so with equal row counts the
+        # only possible difference is a per-key ref_count change, which
+        # _stale records; total, rebuilt and stale counts come from ONE
+        # aggregate over the checkpointed rows.
         refs = valid_map.groupBy("chunk_key").agg(F.count("*").alias("_n_refs"))
         v_ch, chunks, _ = self.store.snapshot("chunks", CHUNKS_SCHEMA)
         ann_ch = (
@@ -2050,7 +1996,7 @@ class DedupeEngine:
         deltas["chunks"] = int(n_rebuilt) - int(n_ch_total)
         stale = bool(n_stale)
         if deltas["chunks"] or stale:
-            submit(self.store.commit_entry, "chunks", rebuilt, expected_version=v_ch)
+            submit(self.store.rewrite_entry, "chunks", "chunk_key", None, lambda _: rebuilt, v_ch)
         return deltas, rebuilt
 
     def recover(self) -> dict[str, int]:
@@ -2088,7 +2034,7 @@ class DedupeEngine:
         # lock OUTSIDE the pool: the pool's exit joins every in-flight
         # fix thread BEFORE the op lock releases, even on an exception path
         with self.store.op_lock():
-            with _fix_pool() as (submit, fixes):
+            with fix_pool() as (submit, fixes):
                 deltas, rebuilt = self._recover_map_chunks(submit)
                 # chunk_store: GC payloads whose chunk no longer exists.
                 # r13: dead/live counts come from one key-only aggregate

@@ -759,7 +759,8 @@ def engine_integrity_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from watsondedupe_spark.chunking import ChunkSettings, SMALL_FILE_PROFILE
-    from watsondedupe_spark.engine import DedupeEngine, _fix_pool
+    from watsondedupe_spark.engine import DedupeEngine
+    from watsondedupe_spark.pool import fix_pool
     from watsondedupe_spark.keys import chunk_key
 
     objs = _docs(spark, sf_dir).select(
@@ -816,9 +817,9 @@ def engine_integrity_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             )
 
-        # _fix_pool joins every thread and raises the first failure, so
+        # fix_pool joins every thread and raises the first failure, so
         # no thread's error is dropped on exit
-        with _fix_pool(3) as (submit, fixes):
+        with fix_pool(3) as (submit, fixes):
             submit(collect_counts, before_df)
             # deterministic victim: the smallest chunk_key in the index
             victim = eng.chunks.agg(F.min("chunk_key")).collect()[0][0]
@@ -831,7 +832,7 @@ def engine_integrity_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         # and rewrite — the serial form paid a full verify pass of
         # wall-clock between the plants and the heal.
         after_df = counts_frame()
-        with _fix_pool(1) as (submit, fixes):
+        with fix_pool(1) as (submit, fixes):
             submit(collect_counts, after_df)
             eng.repair()
         after = fixes[0].result()

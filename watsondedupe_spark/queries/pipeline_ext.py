@@ -3027,7 +3027,7 @@ def emb_opq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # collects run from two driver threads and the sample is permuted
     # on the driver (16 x 64 floats), producing byte-identical
     # codebooks (permute-then-slice == slice of driver-permuted row).
-    from watsondedupe_spark.engine import _fix_pool
+    from watsondedupe_spark.pool import fix_pool
 
     skey = F.conv(
         F.substring(F.md5(F.col("vec_id").cast("string")), 1, 15), 16, 10
@@ -3049,7 +3049,7 @@ def emb_opq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
             .collect()
         )
 
-    with _fix_pool(2) as (submit, fixes):
+    with fix_pool(2) as (submit, fixes):
         submit(_energy)
         submit(_sample)
     e_row, sample_rows = (f.result() for f in fixes)

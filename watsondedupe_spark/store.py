@@ -12,20 +12,22 @@ manifest-of-parts design — the same file-log idea those formats use:
     {root}/{table}/_MANIFEST.v{N}             json {version, parts, meta}: version N
     {root}/_CATALOG                           json {table: current version}
 
-A *commit* (full replace) writes one new part and a manifest referencing
-only it. An *append* writes a part containing ONLY the new rows and a
-manifest referencing old parts + the new one — O(batch), not O(table),
-which is the difference between linear and quadratic total ingest cost
-over many batches. A *rewrite* (:meth:`IndexStore.rewrite_entry`) reads
-only the parts that may hold some keys (or a named set of parts),
-writes what a function makes of their rows as one part, and retires
-exactly those parts: every row drop by key — a delete, a replace, a
-payload GC, a repair — and every compaction is one, so a 2-key delete
+Every part is staged by ONE routine, :meth:`IndexStore.rewrite_entry`:
+it reads only the parts that may hold some keys (or a named set of
+parts), writes what a function makes of their rows as one part, and
+retires exactly those parts. A *commit* (full replace) is a rewrite of
+every part. An *append* is a rewrite of no part whose function unions
+the new rows: its part holds ONLY the new rows and the manifest keeps
+the old parts beside it — O(batch), not O(table), which is the
+difference between linear and quadratic total ingest cost over many
+batches. Every row drop by key — a delete, a replace, a payload GC, a
+repair — and every compaction is a rewrite too, so a 2-key delete
 costs the parts its keys live in, not the table (Delta's file-pruned
 copy-on-write MERGE). Readers resolve the manifest once and scan the
-listed parts as one multi-path parquet read. When a table accumulates
-more than ``max_parts`` parts, the next append folds them into one
-(bounded read fan-in — the OPTIMIZE/compaction analogue).
+listed parts as one multi-path parquet read. A rewrite that would
+leave more than ``max_parts`` live parts selects every part instead, so
+the read fan-in stays bounded for every kind of write (the
+OPTIMIZE/compaction analogue).
 
 Every manifest version is also retained for the last ``retain_versions``
 commits, so ``read_version`` gives Delta-style time travel: part files
@@ -59,11 +61,12 @@ SqliteProvider.cs:29-30):
 
 So a composite engine op — an ingest touching four tables plus the
 checkpoint ledger — is one flip: a crash at any point shows either every
-table before the op or every table after it. Each write verb of this
-contract (``commit``, ``append``, ``attach_part``, ``compact_parts``,
-``restore_version``, ``update_meta``) is a one-entry flip; the
-``*_entry`` methods stage the same entries for a caller that publishes
-several tables together.
+table before the op or every table after it. The ``*_entry`` methods
+(``rewrite_entry``, ``restore_entry``, ``meta_entry``) build the entries;
+a caller that publishes several tables together passes them to one
+flip. Each single-table write verb (``commit``, ``append``,
+``attach_part``, ``compact``, ``compact_parts``, ``restore_version``,
+``update_meta``) is a one-entry flip of the same entries.
 
 Every part file is sorted by its table's key column and cut into row
 groups of about ``ROW_GROUP_BYTES`` (``_write_part``), so its groups
@@ -83,8 +86,8 @@ proven externally against MySQL in src/Test.External/Program.cs:188):
 :class:`IndexStore` keeps manifests as JSON files; :class:`SqliteIndexStore`
 keeps them in a SQLite catalog (``{root}/_manifest.db``) with the flip as
 one ``BEGIN IMMEDIATE`` transaction. The engine only calls the shared
-contract (``read / snapshot / commit / append / table_meta / ...``) and
-runs unchanged on either.
+contract (``read / snapshot / read_arrow / rewrite_entry / _flip /
+table_meta / ...``) and runs unchanged on either.
 """
 
 from __future__ import annotations
@@ -124,6 +127,13 @@ def _check_version(name: str, found: int, expected: int | None) -> None:
             f"{name}: expected version {expected}, "
             f"found {found} — another writer committed first"
         )
+
+
+def _set_meta(meta: dict | None = None, merge: dict | None = None):
+    """The ``meta_fn`` of a write verb's ``meta=`` and ``meta_merge=``:
+    ``meta`` replaces the carried meta (None keeps it), then ``merge``'s
+    keys are merged in."""
+    return lambda old, *_: {**(old if meta is None else meta), **(merge or {})}
 
 
 @contextmanager
@@ -218,7 +228,7 @@ class IndexStore:
     host/NFS-with-locks.
     """
 
-    #: appends fold all live parts into one once this many accumulate
+    #: a rewrite that would leave more live parts than this folds them all
     max_parts = 16
     #: how many historical manifest versions stay readable (time travel)
     retain_versions = 8
@@ -364,14 +374,18 @@ class IndexStore:
         self, name: str, paths: list[str], schema: StructType | None = None
     ) -> DataFrame:
         """One parquet read over ``paths`` (part dirs or files), or an
-        empty frame typed ``schema`` (default: the table schema) when
-        there is nothing to read. A table with a registered schema
-        (:data:`TABLE_SCHEMAS`) is read with it pinned: an inferring
-        read plans a Spark job over a footer just to learn the schema
-        the engine already declares, and every snapshot would pay it.
-        Any other table infers."""
+        empty frame typed ``schema`` (default: the table schema, or no
+        column for a table without one) when there is nothing to read.
+        A table with a registered schema (:data:`TABLE_SCHEMAS`) is read
+        with it pinned: an inferring read plans a Spark job over a
+        footer just to learn the schema the engine already declares, and
+        every snapshot would pay it. Any other table infers. The empty
+        frame carries ``limit(0)`` so the optimizer knows it is empty: a
+        union with it (an append's rewrite) plans as the other side
+        alone, with no extra tasks."""
         if not paths:
-            return self.spark.createDataFrame([], schema or TABLE_SCHEMAS[name])
+            empty = schema or TABLE_SCHEMAS.get(name, StructType())
+            return self.spark.createDataFrame([], empty).limit(0)
         pinned = TABLE_SCHEMAS.get(name)
         reader = self.spark.read if pinned is None else self.spark.read.schema(pinned)
         return reader.parquet(*paths)
@@ -981,24 +995,6 @@ class IndexStore:
         if next(fault[2]) == fault[1]:
             raise SimulatedCrash(f"after {event} ({fault[0]} #{fault[1]})")
 
-    @staticmethod
-    def _put(name, path, meta, expected_version, meta_merge=None, *, replace=False):
-        """``build`` for a flip that publishes ``path``: after the live
-        parts (append — a rebase on the fresh manifest) or instead of
-        them (``replace``). ``meta=None`` carries the fresh meta,
-        ``meta_merge`` merges keys into it, and ``expected_version`` arms
-        the CAS check."""
-
-        def build(fresh, catalog):
-            _check_version(name, fresh["version"], expected_version)
-            new_meta = fresh.get("meta", {}) if meta is None else meta
-            if meta_merge:
-                new_meta = {**new_meta, **meta_merge}
-            parts = [] if replace else fresh["parts"]
-            return {"parts": parts + [path], "meta": new_meta}
-
-        return build
-
     def _retry(self, attempt):
         """``attempt()`` until its flip wins, at most :attr:`cas_retries`
         times with a linear backoff; the last lost race is raised. Each
@@ -1018,58 +1014,21 @@ class IndexStore:
 
     # -- flip entries: stage a table's change, publish it with others ---------
 
-    def commit_entry(
-        self,
-        name: str,
-        df: DataFrame,
-        meta: dict | None = None,
-        expected_version: int | None = None,
-        meta_merge: dict | None = None,
-    ) -> tuple:
-        """Stage ``df`` as ``name``'s full new state: the part is written
-        now, and the returned entry publishes it in a :meth:`_flip`,
-        retiring every previous part. ``meta``/``expected_version`` as
-        in :meth:`commit`, ``meta_merge`` as in :meth:`append`."""
-        hint = (expected_version if expected_version is not None
-                else self.current_version(name)) + 1
-        path = self._write_part(name, df, hint)
-        return name, self._put(name, path, meta, expected_version, meta_merge, replace=True), path
-
-    def append_entry(
-        self,
-        name: str,
-        df: DataFrame,
-        meta: dict | None = None,
-        expected_version: int | None = None,
-        meta_merge: dict | None = None,
-    ) -> tuple:
-        """Stage ``df`` as an append to ``name`` (see :meth:`append`).
-        When the table already holds :attr:`max_parts` live parts, the
-        staged part is instead the fold of every live part and ``df``,
-        published as a replace under CAS on the version it read — a
-        concurrent flip in between refuses it rather than being
-        overwritten by the folded union."""
-        state = self._state(name)
-        v = state["version"]
-        if len(state["parts"]) < self.max_parts:
-            path = self._write_part(name, df, v + 1)
-            return name, self._put(name, path, meta, expected_version, meta_merge), path
-        _check_version(name, v, expected_version)
-        folded = self._df_for(name, state["parts"], df.schema).unionByName(df)
-        path = self._write_part(name, folded, v + 1)
-        return name, self._put(name, path, meta, v, meta_merge, replace=True), path
-
     def rewrite_entry(
         self, name, col, keys, fn, expected_version=None, meta_fn=None, parts=None
     ) -> tuple:
         """Stage ``fn(rows of the selected parts)`` as one part whose flip
         retires exactly those parts and keeps every other one: the one
-        part-rewrite routine behind every row drop by key and every
-        compaction. From ONE manifest read it selects the parts
-        :meth:`parts_for_keys` keeps for ``keys`` in ``col`` (no false
-        negatives: every row of every key is in the selection); every
-        part for ``keys=None``, none for an empty ``keys`` (``fn``'s rows
-        are then a pure addition), or exactly ``parts`` when given.
+        routine that stages a part for a flip. From ONE manifest read it
+        selects the parts :meth:`parts_for_keys` keeps for ``keys`` in
+        ``col`` (no false negatives: every row of every key is in the
+        selection); every part for ``keys=None`` (a full replace), none
+        for an empty ``keys`` (an append: ``fn`` unions the new rows into
+        an empty frame), or exactly ``parts`` when given. One rule bounds
+        the read fan-in (the OPTIMIZE analogue): a rewrite that would
+        leave more than :attr:`max_parts` live parts selects every part,
+        so ``fn`` must hold for any superset of its selection, as a key
+        filter or a union does.
 
         ``expected_version`` arms the table-version CAS, checked before
         the part is written and again in the flip. Without it the flip
@@ -1079,10 +1038,11 @@ class IndexStore:
         updates the carried meta in the same flip."""
         state = self._state(name)
         _check_version(name, state["version"], expected_version)
+        live = list(state["parts"])
         if parts is None:
-            parts = list(state["parts"])
-            if keys is not None:
-                parts = self._keyed_parts(name, state, col, keys) if keys else []
+            parts = live if keys is None else self._keyed_parts(name, state, col, keys) if keys else []
+        if len(set(live) - set(parts)) >= self.max_parts:
+            parts = live
         todo = set(parts)
         path = self._write_part(name, fn(self._df_for(name, parts)), state["version"] + 1)
 
@@ -1219,6 +1179,18 @@ class IndexStore:
         both backends (one :meth:`_flip`)."""
         return self._flip([self.meta_entry(name, lambda meta, _: fn(meta))])[name]["meta"]
 
+    def _flip_one(self, expected_version: int | None, stage) -> int:
+        """Publish the one entry ``stage()`` builds and return the new
+        version. An armed ``expected_version`` makes a lost race the
+        caller's error; without it the entry is re-staged from a fresh
+        manifest and retried (:meth:`_retry`)."""
+
+        def attempt():
+            entry = stage()
+            return self._flip([entry])[entry[0]]["version"]
+
+        return attempt() if expected_version is not None else self._retry(attempt)
+
     def commit(
         self,
         name: str,
@@ -1226,18 +1198,24 @@ class IndexStore:
         meta: dict | None = None,
         expected_version: int | None = None,
     ) -> int:
-        """Write ``df`` as the full new table state; flip the manifest
-        atomically; retire every previous part.
+        """Write ``df`` as the full new table state: a one-entry flip of
+        :meth:`rewrite_entry` over every part, each of which it retires.
 
         ``meta=None`` carries the previous manifest's meta forward; pass
         a dict to replace it. ``expected_version`` arms the CAS check:
-        if the table has advanced past it by flip time the new part is
-        discarded and :class:`ConcurrentWriteError` raised — the caller
-        re-derives from a fresh :meth:`snapshot` and retries. ``None``
-        keeps unconditional last-writer-wins replace.
+        if the table has advanced past it the new part is discarded and
+        :class:`ConcurrentWriteError` raised — the caller re-derives
+        from a fresh :meth:`snapshot` and retries. Without it the commit
+        rebases like :meth:`append`: it retires only the parts it read,
+        keeps parts appended meanwhile, and is retried when one of its
+        parts was retired under it.
         """
-        entry = self.commit_entry(name, df, meta, expected_version)
-        return self._flip([entry])[name]["version"]
+        return self._flip_one(
+            expected_version,
+            lambda: self.rewrite_entry(
+                name, None, None, lambda _: df, expected_version, _set_meta(meta)
+            ),
+        )
 
     def append(
         self,
@@ -1247,7 +1225,9 @@ class IndexStore:
         expected_version: int | None = None,
         meta_merge: dict | None = None,
     ) -> int:
-        """Append ONLY the new rows as a fresh part — O(batch) I/O.
+        """Append ONLY the new rows as a fresh part — O(batch) I/O: a
+        one-entry flip of :meth:`rewrite_entry` that selects no part and
+        unions ``df`` in.
 
         (With Delta this is a metadata-only append commit; the manifest
         gives plain parquet the same cost shape.) The part list REBASES
@@ -1256,10 +1236,10 @@ class IndexStore:
         instead — for appends whose ROWS were derived from a snapshot
         (insert-if-absent, sequence-id assignment) and must be re-derived
         if another writer landed first. Every ``max_parts`` appends the
-        parts fold into one (bounded read fan-in); a fold that lost a
-        race is re-derived and retried, so it can never swallow a
-        concurrent writer's commit — unless the caller armed
-        ``expected_version``, which makes any lost race its error.
+        parts fold into one (the fan-in bound of :meth:`rewrite_entry`);
+        a fold that lost a race is re-derived and retried, so it can
+        never swallow a concurrent writer's commit — unless the caller
+        armed ``expected_version``, which makes any lost race its error.
         ``meta`` as in :meth:`commit`; ``meta_merge`` instead MERGES the
         given keys into the carried meta inside the critical section —
         an append that only advances its own watermark (e.g. the objects
@@ -1267,12 +1247,17 @@ class IndexStore:
         (``clustered_parts``: wiping it silently degrades the next
         incremental ``optimize()`` into a full-table refold).
         """
-
-        def attempt():
-            entry = self.append_entry(name, df, meta, expected_version, meta_merge)
-            return self._flip([entry])[name]["version"]
-
-        return attempt() if expected_version is not None else self._retry(attempt)
+        return self._flip_one(
+            expected_version,
+            lambda: self.rewrite_entry(
+                name,
+                None,
+                [],
+                lambda rows: rows.unionByName(df, allowMissingColumns=True),
+                expected_version,
+                _set_meta(meta, meta_merge),
+            ),
+        )
 
     def stage_part(self, name: str, df: DataFrame, version_hint: int) -> str:
         """Write ``df`` as an UNPUBLISHED part dir and return its path —
@@ -1308,7 +1293,12 @@ class IndexStore:
                 )
             finally:
                 shutil.rmtree(path, ignore_errors=True)
-        build = self._put(name, path, None, expected_version, meta_merge)
+
+        def build(fresh, catalog):
+            _check_version(name, fresh["version"], expected_version)
+            meta = {**fresh.get("meta", {}), **(meta_merge or {})}
+            return {"parts": fresh["parts"] + [path], "meta": meta}
+
         return self._flip([(name, build, path)])[name]["version"]
 
     def compact(self, name: str) -> int:
@@ -1363,7 +1353,7 @@ class SqliteIndexStore(IndexStore):
     Mirrors the reference's ``DbProvider`` pluggability
     (src/DedupeLibrary/Database/DbProvider.cs:10 — SQLite built in, the
     external test proves MySQL): the engine calls the same
-    ``read/snapshot/commit/append/table_meta`` contract and cannot tell
+    ``read/snapshot/rewrite_entry/_flip/table_meta`` contract and cannot tell
     the backends apart. Data parts stay immutable parquet dirs; only the
     STATE primitives differ — current/history manifests are rows in
     ``{root}/_manifest.db`` and the critical section is a
