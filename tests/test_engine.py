@@ -1815,13 +1815,37 @@ def _jobs_in_group(spark, fn):
     return len(tracker.getJobIdsForGroup(group)), len(outside), out
 
 
+def _commit_path(monkeypatch, path: str) -> None:
+    """Send every mutation down ``path``: the driver path as shipped,
+    the Spark path by a budget of 0 bytes, which nothing fits."""
+    if path == "spark":
+        monkeypatch.setattr(DedupeEngine, "OPTIMIZE_TARGET_FILE_BYTES", 0)
+
+
 def test_mutations_run_a_pinned_number_of_spark_jobs(spark, tmp_path):
-    """Spark jobs per mutation on a small store. A replace or delete
-    runs its refcount merge once, pinned with its dead count; a delete
-    whose chunks all stay referenced returns [] without a post-flip
-    take; the key sort of every part write adds no job. Each verb runs
-    under a job group and starts no job outside it: its stage threads
-    inherit the group, so ``cancelJobGroup`` reaches every job."""
+    """Spark jobs per mutation on a small store, on the driver path: an
+    ingest runs the chunker's one job plus the ``toArrow()`` of its
+    rows, and a delete runs none."""
+    assert _mutation_jobs(spark, tmp_path) == (2, 2, 0, 0)
+
+
+def test_mutations_on_the_spark_path_run_a_pinned_number_of_spark_jobs(
+    spark, tmp_path, monkeypatch
+):
+    """Spark jobs per mutation on a small store, on the Spark path: a
+    replace or delete runs its refcount merge once, pinned with its
+    dead count, and the key sort of every part write adds no job."""
+    _commit_path(monkeypatch, "spark")
+    assert _mutation_jobs(spark, tmp_path) == (20, 23, 8, 6)
+
+
+def _mutation_jobs(spark, tmp_path) -> tuple:
+    """Spark jobs of (write_batch, write_or_replace_batch, delete_batch,
+    delete_batch with nothing to GC) on a small store. A delete whose
+    chunks all stay referenced returns [] without a post-flip take.
+    Each verb runs under a job group and starts no job outside it: its
+    stage threads inherit the group, so ``cancelJobGroup`` reaches
+    every job."""
     engine = DedupeEngine.create(spark, str(tmp_path / "idx"), SMALL)
 
     def jobs(fn):
@@ -1849,16 +1873,89 @@ def test_mutations_run_a_pinned_number_of_spark_jobs(spark, tmp_path):
     n_delete, gc = jobs(lambda: engine.delete_batch(["o/2", "new/0"]))
     n_delete_nogc, gc_none = jobs(lambda: engine.delete_batch(["twin/a"]))
     assert len(gc) > 0 and gc_none == []
-    assert (n_write, n_replace, n_delete, n_delete_nogc) == (22, 25, 8, 6)
     assert engine.get("twin/b") == twin
+    return n_write, n_replace, n_delete, n_delete_nogc
+
+
+@pytest.mark.parametrize("path", ["driver", "spark"])
+def test_batch_writes_validate_every_key(engine, monkeypatch, path):
+    """write_batch and write_or_replace_batch reject an empty, a NULL
+    and an over-long key, as write() does, before anything is staged:
+    no table version moves and no part dir appears."""
+    import os
+
+    _commit_path(monkeypatch, path)
+    engine.write("ok", rand_bytes(3000, seed=1))
+
+    def layout():
+        root = engine.store.root
+        return engine.store._catalog(), {
+            t: sorted(os.listdir(os.path.join(root, t))) for t in _INDEX_TABLES
+        }
+
+    before = layout()
+    for verb in ("write_batch", "write_or_replace_batch"):
+        for bad in ("", None, "k" * 5_000):
+            rows = engine.spark.createDataFrame(
+                [("fine", bytearray(rand_bytes(3000, seed=2))), (bad, bytearray(b"payload"))],
+                "object_key string, data binary",
+            )
+            with pytest.raises(ValueError, match="object key"):
+                getattr(engine, verb)(rows)
+    assert layout() == before
+    assert not engine.exists("fine")
+    assert engine.verify().count() == 0
+
+
+def test_index_with_parts_of_both_writers_reads_and_verifies_alike(engine, monkeypatch):
+    """An index whose tables hold parts from both writers — Spark's and
+    the driver's pyarrow writer — reads, verifies and keeps its
+    ``created_utc`` instants like one writer's. The replace prepares
+    its batch for the driver, finds its rewrites over the budget and
+    commits through Spark instead."""
+    from datetime import datetime, timezone
+
+    spark = engine.spark
+    stamp = datetime(2024, 5, 6, 7, 8, 9, 123456, tzinfo=timezone.utc)
+    old_a, new_a, b = _aligned_pair()
+    c = rand_bytes(9000, seed=506)
+    prepare = DedupeEngine._prepare_batch
+
+    def over_budget(self, *args):
+        batch = prepare(self, *args)
+        assert batch.rows is not None
+        m.setattr(DedupeEngine, "OPTIMIZE_TARGET_FILE_BYTES", 0)
+        return batch
+
+    with monkeypatch.context() as m:
+        _commit_path(m, "spark")
+        engine.write_batch(_rows(spark, [("a", old_a), ("b", b)]), created_utc=stamp)
+    with monkeypatch.context() as m:
+        m.setattr(DedupeEngine, "_prepare_batch", over_budget)
+        engine.write_or_replace_batch(_rows(spark, [("a", new_a)]), created_utc=stamp)
+    engine.write_batch(_rows(spark, [("c", c)]), created_utc=stamp)
+    for table in _INDEX_TABLES:
+        assert len(engine.store.live_parts(table)) == 2, table
+    assert engine.verify().count() == 0
+    assert (engine.get("a"), engine.get("b"), engine.get("c")) == (new_a, b, c)
+    micros = int(stamp.timestamp()) * 1_000_000 + stamp.microsecond
+    spark_rows = engine.objects.select("object_key", F.unix_micros("created_utc")).collect()
+    assert sorted(tuple(r) for r in spark_rows) == [("a", micros), ("b", micros), ("c", micros)]
+    arrow = engine.store.read_arrow("objects", ["created_utc"]).column("created_utc")
+    assert arrow.cast("int64").to_pylist() == [micros] * 3
+    want = engine.objects.filter("object_key = 'c'").first().created_utc
+    assert engine.get_metadata("c").created_utc == want
+    assert engine.delete_batch(["c"])
+    assert engine.verify().count() == 0 and engine.try_get("c") is None
 
 
 @pytest.mark.parametrize("backend", ["file", "sqlite"])
 def test_key_drops_stage_bytes_of_the_batch_not_the_store(spark, tmp_path, monkeypatch, backend):
     """A 2-key delete_batch and write_or_replace_batch stage (write as
-    new parts) about the same bytes of ``objects``, ``object_map`` and
-    ``chunk_store`` on a 10-batch store as on a 1-batch store: each
-    rewrites only the parts that may hold its keys, not the table."""
+    new parts) about the same bytes of ``objects``, ``object_map``,
+    ``chunks`` and ``chunk_store`` on a 10-batch store as on a 1-batch
+    store: each rewrites only the parts that may hold its keys, not the
+    table — the ``chunks`` refcount merge included."""
     from watsondedupe_spark.store import IndexStore, SqliteIndexStore
 
     store_cls = IndexStore if backend == "file" else SqliteIndexStore
@@ -1891,7 +1988,7 @@ def test_key_drops_stage_bytes_of_the_batch_not_the_store(spark, tmp_path, monke
         return dict(staged)
 
     small, large = staged_bytes(1), staged_bytes(10)
-    for table in ("objects", "object_map", "chunk_store"):
+    for table in _INDEX_TABLES:
         assert large[table] <= 1.5 * small[table], (table, small, large)
 
 
@@ -2164,16 +2261,24 @@ def _crash_walk(engine, run, check_before, check_after) -> int:
 
 
 @pytest.mark.parametrize(
-    "verb",
-    ["write_batch", "write_or_replace_batch", "delete_batch", "restore", "optimize", "repair", "clone"],
+    "verb,path",
+    [
+        pytest.param(v, "driver", id=v)
+        for v in ("write_batch", "write_or_replace_batch", "delete_batch", "restore", "optimize", "repair", "clone")
+    ]
+    + [
+        pytest.param(v, "spark", id=f"{v}-spark")
+        for v in ("write_batch", "write_or_replace_batch", "delete_batch")
+    ],
 )
-def test_composite_verb_crash_shows_before_or_after_state(engine, verb):
+def test_composite_verb_crash_shows_before_or_after_state(engine, monkeypatch, verb, path):
     """Every composite verb, crashed at every fault point on both
     backends, leaves its before-state or its after-state: no torn
     tables, nothing for recover() to repair, the untouched key ``b``
-    byte-identical."""
+    byte-identical. The mutations are walked on both commit paths."""
     from watsondedupe_spark.store import open_store
 
+    _commit_path(monkeypatch, path)
     spark = engine.spark
     old_a, new_a, b = _aligned_pair()
     c = rand_bytes(9000, seed=505)

@@ -22,6 +22,19 @@ def store_cls(request):
     return IndexStore if request.param == "file" else SqliteIndexStore
 
 
+#: the store's two part writers: Spark, and pyarrow on the driver
+WRITERS = ("spark", "arrow")
+
+
+def _commit(st, name, df, writer):
+    """Commit ``df`` as ``name``'s one part, written by Spark or, for
+    ``writer="arrow"``, by pyarrow on the driver (one file)."""
+    if writer == "spark":
+        return st.commit(name, df)
+    tbl = df.toArrow()
+    st._flip([st.rewrite_entry(name, None, None, lambda _: tbl, arrow=True)])
+
+
 def _df(spark, lo, hi):
     return spark.range(lo, hi).selectExpr(
         "cast(id as string) as object_key",
@@ -395,12 +408,12 @@ def test_read_arrow_string_ranges(spark, tmp_path, store_cls):
 # -- row-group selection inside kept parts -----------------------------------
 
 
-def _sorted_payload_store(spark, tmp_path, store_cls, files=2):
+def _sorted_payload_store(spark, tmp_path, store_cls, files=2, writer="spark"):
     """A chunk_store of 300 2 KiB payload rows in one part of ``files``
-    files, with 32 KiB row groups."""
+    files (one file from the pyarrow writer), with 32 KiB row groups."""
     st = store_cls(spark, str(tmp_path))
     st.ROW_GROUP_BYTES = 32 << 10
-    st.commit("chunk_store", _payloads_df(spark, 300, parts=files))
+    _commit(st, "chunk_store", _payloads_df(spark, 300, parts=files), writer)
     return st
 
 
@@ -419,72 +432,88 @@ def _pick(st, spark, probe):
 
 
 def test_write_part_sorts_by_key_and_bounds_row_groups(spark, tmp_path, store_cls):
+    """Each writer's parts are key-sorted, cut into row groups of about
+    ROW_GROUP_BYTES, and carry a Bloom sidecar."""
+    import os
+
     import pyarrow.parquet as pq
 
-    st = _sorted_payload_store(spark, tmp_path, store_cls)
-    st.commit("objects", _df(spark, 0, 40).repartition(2))
-    for name, col in (("chunk_store", "chunk_key"), ("objects", "object_key")):
-        files = [f for p in st.live_parts(name) for f in st._part_files(p)]
-        assert len(files) == 2
-        for f in files:
-            keys = pq.read_table(f, columns=[col]).column(col).to_pylist()
-            assert keys == sorted(keys)
-    for f in st._part_files(st.live_parts("chunk_store")[0]):
-        spans = _group_spans(f, "chunk_key")
-        assert len(spans) > 1
-        # sorted: consecutive groups hold disjoint, ascending key spans
-        assert all(a[1] < b[0] for a, b in zip(spans, spans[1:]))
+    for writer in WRITERS:
+        st = _sorted_payload_store(spark, tmp_path / writer, store_cls, writer=writer)
+        _commit(st, "objects", _df(spark, 0, 40).repartition(2), writer)
+        for name, col in (("chunk_store", "chunk_key"), ("objects", "object_key")):
+            (part,) = st.live_parts(name)
+            assert os.path.exists(os.path.join(part, f"_BLOOM.{col}"))
+            files = st._part_files(part)
+            assert len(files) == (2 if writer == "spark" else 1)
+            for f in files:
+                keys = pq.read_table(f, columns=[col]).column(col).to_pylist()
+                assert keys == sorted(keys)
+        for f in st._part_files(st.live_parts("chunk_store")[0]):
+            spans = _group_spans(f, "chunk_key")
+            assert len(spans) > 1
+            # sorted: consecutive groups hold disjoint, ascending key spans
+            assert all(a[1] < b[0] for a, b in zip(spans, spans[1:]))
+            md = pq.ParquetFile(f).metadata
+            sizes = [md.row_group(g).total_byte_size for g in range(md.num_row_groups)]
+            # at most one 2 KiB row past the bound
+            assert max(sizes) <= st.ROW_GROUP_BYTES + (4 << 10), (writer, sizes)
 
 
 def test_read_arrow_reads_only_groups_holding_probe_keys(spark, tmp_path, store_cls, monkeypatch):
     """A k-key probe decodes only the groups whose span holds a probe
-    key; an all-miss probe decodes none. The miss keys sort between two
-    groups' spans, and the Bloom sidecar is removed so the part itself
-    is kept and the group test alone must skip them."""
+    key; an all-miss probe decodes none, for either writer's part. The
+    miss keys sort between two groups' spans, and the Bloom sidecar is
+    removed so the part itself is kept and the group test alone must
+    skip them."""
     import os
     import random
 
-    st = _sorted_payload_store(spark, tmp_path, store_cls, files=1)
-    (part,) = st.live_parts("chunk_store")
-    os.remove(os.path.join(part, "_BLOOM.chunk_key"))
-    st._bloom_cache.clear()
-    (f,) = st._part_files(part)
-    spans = _group_spans(f, "chunk_key")
-    rng = random.Random(7)
-    groups = sorted(rng.sample(range(len(spans)), 3))
-    probe = [spans[g][rng.randrange(2)] for g in groups]
-    reads = _spy_reads(monkeypatch)
-    arrow, spark_rows = _pick(st, spark, probe)
-    assert arrow == spark_rows and len(arrow) == 3
-    assert reads == [(f, groups)]
-    # between two groups' spans and above every span: no group holds them
-    reads.clear()
-    misses = [spans[0][1] + "!", spans[-1][1] + "!"]
-    arrow, spark_rows = _pick(st, spark, misses)
-    assert arrow == spark_rows == []
-    assert reads == []
+    for writer in WRITERS:
+        st = _sorted_payload_store(spark, tmp_path / writer, store_cls, files=1, writer=writer)
+        (part,) = st.live_parts("chunk_store")
+        os.remove(os.path.join(part, "_BLOOM.chunk_key"))
+        st._bloom_cache.clear()
+        (f,) = st._part_files(part)
+        spans = _group_spans(f, "chunk_key")
+        rng = random.Random(7)
+        groups = sorted(rng.sample(range(len(spans)), 3))
+        probe = [spans[g][rng.randrange(2)] for g in groups]
+        with monkeypatch.context() as m:
+            reads = _spy_reads(m)
+            arrow, spark_rows = _pick(st, spark, probe)
+            assert arrow == spark_rows and len(arrow) == 3
+            assert reads == [(f, groups)]
+            # between two groups' spans and above every span: no group holds them
+            reads.clear()
+            misses = [spans[0][1] + "!", spans[-1][1] + "!"]
+            arrow, spark_rows = _pick(st, spark, misses)
+            assert arrow == spark_rows == []
+            assert reads == []
 
 
 def test_read_arrow_matches_spark_filter_on_random_probes(spark, tmp_path, store_cls):
     """Random probes mixing hits, misses, duplicates and group-boundary
-    keys return exactly what a Spark filter of the snapshot returns."""
+    keys return exactly what a Spark filter of the snapshot returns,
+    from either writer's part."""
     import random
 
-    st = _sorted_payload_store(spark, tmp_path, store_cls)
-    keys = [r.chunk_key for r in st.read("chunk_store").select("chunk_key").collect()]
-    bounds = [
-        k
-        for f in st._part_files(st.live_parts("chunk_store")[0])
-        for span in _group_spans(f, "chunk_key")
-        for k in span
-    ]
-    rng = random.Random(11)
-    for _ in range(4):
-        probe = rng.sample(keys, 5) + rng.sample(bounds, 4)
-        probe += [probe[0], "%064x" % rng.getrandbits(256), "0", "g"]
-        rng.shuffle(probe)
-        arrow, spark_rows = _pick(st, spark, probe)
-        assert arrow == spark_rows and len(arrow) == 9
+    for writer in WRITERS:
+        st = _sorted_payload_store(spark, tmp_path / writer, store_cls, writer=writer)
+        keys = [r.chunk_key for r in st.read("chunk_store").select("chunk_key").collect()]
+        bounds = [
+            k
+            for f in st._part_files(st.live_parts("chunk_store")[0])
+            for span in _group_spans(f, "chunk_key")
+            for k in span
+        ]
+        rng = random.Random(11)
+        for _ in range(4):
+            probe = rng.sample(keys, 5) + rng.sample(bounds, 4)
+            probe += [probe[0], "%064x" % rng.getrandbits(256), "0", "g"]
+            rng.shuffle(probe)
+            arrow, spark_rows = _pick(st, spark, probe)
+            assert arrow == spark_rows and len(arrow) == len(set(probe) & set(keys)) >= 5
 
 
 def test_read_arrow_matches_spark_filter_on_legacy_and_statless_parts(
@@ -526,55 +555,129 @@ def test_read_arrow_matches_spark_filter_on_legacy_and_statless_parts(
 def test_read_arrow_ranges_prune_groups_and_match_spark(spark, tmp_path, store_cls, monkeypatch):
     """A list_objects-shaped read (key prefix plus id floor) keeps only
     the groups whose spans overlap both ranges, and returns what a
-    Spark filter of the snapshot returns."""
+    Spark filter of the snapshot returns, from either writer's part."""
     import pyarrow.compute as pc
     from pyspark.sql import functions as F
 
-    st = store_cls(spark, str(tmp_path))
-    st.ROW_GROUP_BYTES = 1 << 10
-    st.commit("objects", _df(spark, 0, 600).repartition(1))
-    (f,) = st._part_files(st.live_parts("objects")[0])
-    n_groups = len(_group_spans(f, "object_key"))
-    assert n_groups > 4
-    reads = _spy_reads(monkeypatch)
-    got = st.read_arrow(
-        "objects",
-        ["id", "object_key"],
-        pc.starts_with(pc.field("object_key"), pattern="3") & (pc.field("id") > 320),
-        ranges={"object_key": [("3", "4")], "id": [(321, None)]},
-    )
-    want = (
-        st.read("objects")
-        .filter(F.col("object_key").startswith("3") & (F.col("id") > 320))
-        .select("id", "object_key")
-        .collect()
-    )
-    assert sorted(got.column("id").to_pylist()) == sorted(r.id for r in want)
-    assert len(want) > 0
-    ((_, groups),) = reads
-    assert 0 < len(groups) < n_groups
+    for writer in WRITERS:
+        st = store_cls(spark, str(tmp_path / writer))
+        st.ROW_GROUP_BYTES = 1 << 10
+        _commit(st, "objects", _df(spark, 0, 600).repartition(1), writer)
+        (f,) = st._part_files(st.live_parts("objects")[0])
+        n_groups = len(_group_spans(f, "object_key"))
+        assert n_groups > 4
+        with monkeypatch.context() as m:
+            reads = _spy_reads(m)
+            got = st.read_arrow(
+                "objects",
+                ["id", "object_key"],
+                pc.starts_with(pc.field("object_key"), pattern="3") & (pc.field("id") > 320),
+                ranges={"object_key": [("3", "4")], "id": [(321, None)]},
+            )
+        want = (
+            st.read("objects")
+            .filter(F.col("object_key").startswith("3") & (F.col("id") > 320))
+            .select("id", "object_key")
+            .collect()
+        )
+        assert sorted(got.column("id").to_pylist()) == sorted(r.id for r in want)
+        assert len(want) > 0
+        ((_, groups),) = reads
+        assert 0 < len(groups) < n_groups
 
 
 def test_three_key_probe_of_a_full_size_payload_part_reads_three_groups(
     spark, tmp_path, store_cls, monkeypatch
 ):
     """At the shipped row-group bound, a 3-key probe of a >= 14 MB
-    chunk_store part decodes at most three row groups."""
+    chunk_store part, from either writer, decodes at most three row
+    groups."""
     import os
 
+    payloads = _payloads_df(spark, 900, words=512, parts=1)
+    for writer in WRITERS:
+        st = store_cls(spark, str(tmp_path / writer))
+        _commit(st, "chunk_store", payloads, writer)
+        (part,) = st.live_parts("chunk_store")
+        assert st.parts_bytes([part]) >= 14 << 20
+        (f,) = st._part_files(part)
+        keys = [r.chunk_key for r in st.read("chunk_store").select("chunk_key").collect()]
+        probe = [keys[5], keys[400], keys[-3]]
+        with monkeypatch.context() as m:
+            reads = _spy_reads(m)
+            arrow, spark_rows = _pick(st, spark, probe)
+        assert arrow == spark_rows and len(arrow) == 3
+        ((_, groups),) = reads
+        assert 1 <= len(groups) <= 3 < len(_group_spans(f, "chunk_key"))
+        assert os.path.getsize(f) >= 14 << 20
+
+
+def test_parts_of_both_writers_read_alike(spark, tmp_path, store_cls):
+    """A table holding a Spark part and a pyarrow part reads the same
+    rows through the Spark snapshot (``_df_for``), ``read_arrow`` and
+    ``read_point``: the same ``created_utc`` instants, and one
+    all-nullable Arrow schema."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql import functions as F
+
+    from watsondedupe_spark.store import arrow_schema
+
     st = store_cls(spark, str(tmp_path))
-    st.commit("chunk_store", _payloads_df(spark, 900, words=512, parts=1))
-    (part,) = st.live_parts("chunk_store")
-    assert st.parts_bytes([part]) >= 14 << 20
-    (f,) = st._part_files(part)
-    keys = [r.chunk_key for r in st.read("chunk_store").select("chunk_key").collect()]
-    probe = [keys[5], keys[400], keys[-3]]
-    reads = _spy_reads(monkeypatch)
-    arrow, spark_rows = _pick(st, spark, probe)
-    assert arrow == spark_rows and len(arrow) == 3
-    ((_, groups),) = reads
-    assert 1 <= len(groups) <= 3 < len(_group_spans(f, "chunk_key"))
-    assert os.path.getsize(f) >= 14 << 20
+    st.commit("objects", _df(spark, 0, 40))
+    new = _df(spark, 40, 80).toArrow()
+    st._flip(
+        [
+            st.rewrite_entry(
+                "objects", None, [], lambda rows: pa.concat_tables([rows, new.cast(rows.schema)]), arrow=True
+            )
+        ]
+    )
+    assert len(st.live_parts("objects")) == 2
+    micros = F.unix_micros("created_utc").alias("t")
+    by_spark = sorted(tuple(r) for r in st.read("objects").select("object_key", "id", micros).collect())
+    assert len(by_spark) == 80 and len({r[2] for r in by_spark}) == 1
+    tbl = st.read_arrow("objects")
+    assert tbl.schema == arrow_schema("objects")
+    by_arrow = zip(
+        tbl.column("object_key").to_pylist(),
+        tbl.column("id").to_pylist(),
+        tbl.column("created_utc").cast("int64").to_pylist(),
+    )
+    assert sorted(by_arrow) == by_spark
+    keys = ["3", "39", "40", "77", "missing"]
+    point = st.read_point("objects", "object_key", keys).filter(F.col("object_key").isin(keys))
+    probe = st.read_arrow("objects", None, pc.field("object_key").isin(keys), col="object_key", values=keys)
+    assert sorted(tuple(r) for r in point.select("object_key", "id", micros).collect()) == sorted(
+        zip(
+            probe.column("object_key").to_pylist(),
+            probe.column("id").to_pylist(),
+            probe.column("created_utc").cast("int64").to_pylist(),
+        )
+    )
+    assert probe.num_rows == 4
+
+
+def test_a_zero_row_file_keeps_its_part_prunable(spark, tmp_path, store_cls):
+    """A part holding a zero-row file beside its rows — Spark writes one
+    for an empty partition — keeps its skip stats, so a key probe
+    outside its spans skips it and a rewrite of that key selects no
+    part."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    st = store_cls(spark, str(tmp_path))
+    part = os.path.join(st._table_dir("objects"), "p00000001_zerorow")
+    os.makedirs(part)
+    tbl = _df(spark, 0, 3).toArrow()
+    pq.write_table(tbl, os.path.join(part, "part-00000.parquet"))
+    pq.write_table(tbl.slice(0, 0), os.path.join(part, "part-00001.parquet"))
+    st.attach_part("objects", part)
+    assert st._state("objects")["stats"][os.path.basename(part)]["id"] == [0, 2]
+    assert st.parts_for_keys("objects", "id", [1000]) == []
+    assert st.parts_for_keys("objects", "id", [1]) == [part]
+
 
 def test_parts_without_stats_are_never_pruned(spark, tmp_path, store_cls):
     st = store_cls(spark, str(tmp_path))

@@ -25,7 +25,9 @@ Operator map (SURVEY.md §2.1):
   stats                    O20/O21 (SqliteProvider.cs:155-190; IndexStatistics.cs:81-108)
   config                   O22 (SqliteProvider.cs:105-149)
 
-Scale posture (100 TB): the only shuffles in the write path are the
+Scale posture (100 TB): a mutation that fits one scan split commits on
+the driver with pyarrow (``DedupeEngine._commit_mutation``); a larger
+one commits through Spark, whose only shuffles in the write path are the
 groupBy(chunk_key) refcount aggregation and groupBy(object_key) object
 rollup — both keyed exactly on their join keys. Point verbs read the
 manifest-pruned parts on the driver and run no Spark job; the batched
@@ -45,6 +47,7 @@ from __future__ import annotations
 
 import io
 from bisect import bisect_right
+from collections import Counter
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
@@ -55,7 +58,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampType
 
 from watsondedupe_spark.chunking import ChunkSettings, chunk_objects
-from watsondedupe_spark.keys import validate_object_key
+from watsondedupe_spark.keys import MAX_OBJECT_KEY_LEN, validate_object_key
 from watsondedupe_spark.pool import fix_pool
 from watsondedupe_spark.schemas import (
     CHECKPOINTS_SCHEMA,
@@ -200,6 +203,22 @@ def _without(df: DataFrame, col: str, keys: list | None, keys_df=None) -> DataFr
     if None in keys:
         hit = hit | F.col(col).isNull()
     return df.filter(~F.coalesce(hit, F.lit(False)))
+
+
+@dataclass
+class _Batch:
+    """A chunked batch ready to commit (:meth:`DedupeEngine._prepare_batch`):
+    the chunker's rows, persisted, and either the same rows on the
+    driver with the batch's object keys (a batch that fits one scan
+    split) or its per-object rollup (the Spark commit path)."""
+
+    chunk_rows: DataFrame
+    created_utc: datetime
+    n_objects: int
+    total_bytes: int
+    rows: pa.Table | None = None
+    keys: list | None = None
+    rolled: DataFrame | None = None
 
 
 @dataclass(frozen=True)
@@ -408,35 +427,36 @@ class DedupeEngine:
         re-inserted), and ``chunk_store`` drops the dead payloads and
         adds the absent new ones.
 
-        The batch's keys are collected once, up to
-        :data:`GC_BROADCAST_KEYS`, and narrowed to the existing ones
-        (:meth:`_present`, no Spark job); they select the parts the
-        replace rewrites. A larger batch stays DISTRIBUTED end to end:
-        its keys go to the commit as a DataFrame and every table is
-        rewritten through an anti-join — a 100x-scale re-ingest would
-        otherwise materialize millions of keys on the driver.
+        Every key is validated like :meth:`write` validates its key
+        before anything is staged (:meth:`_prepare_batch`). The batch's
+        keys, up to :data:`GC_BROADCAST_KEYS` of them, are narrowed to
+        the existing ones (:meth:`_present`, no Spark job); they select
+        the parts the replace rewrites. A larger batch stays
+        DISTRIBUTED end to end: its keys go to the commit as a
+        DataFrame and every table is rewritten through an anti-join — a
+        100x-scale re-ingest would otherwise materialize millions of
+        keys on the driver.
 
-        The expensive chunker pass and per-object rollup run OUTSIDE the
-        composite-op lock (shared :meth:`_prepare_batch`); only the
-        existence probe and the commit sit inside it — so a batch
-        replace is atomic against concurrent writers without serializing
-        them behind its chunking work. A crash mid-replace leaves every
-        replaced key reading its old bytes or (once the flip landed) its
-        new ones.
+        The expensive chunker pass runs OUTSIDE the composite-op lock
+        (shared :meth:`_prepare_batch`); only the existence probe and
+        the commit sit inside it — so a batch replace is atomic against
+        concurrent writers without serializing them behind its chunking
+        work. A crash mid-replace leaves every replaced key reading its
+        old bytes or (once the flip landed) its new ones.
         """
-        created_utc = created_utc or datetime.now(timezone.utc)
-        chunk_rows, rolled, n_keys, total_bytes = self._prepare_batch(objects_df)
+        batch = self._prepare_batch(objects_df, created_utc)
         try:
             with self.store.op_lock():
-                doomed = rolled.select("object_key")
-                if n_keys <= GC_BROADCAST_KEYS:
-                    doomed = self._present([r[0] for r in doomed.collect()]) or None
-                self._commit_mutation(
-                    doomed, (chunk_rows, rolled, created_utc, n_keys, total_bytes)
+                keys = batch.keys
+                if keys is None and batch.n_objects <= GC_BROADCAST_KEYS:
+                    keys = [r[0] for r in batch.rolled.select("object_key").collect()]
+                doomed = (
+                    batch.rolled.select("object_key") if keys is None else self._present(keys) or None
                 )
+                self._commit_mutation(doomed, batch)
         finally:
-            chunk_rows.unpersist()
-        return n_keys
+            batch.chunk_rows.unpersist()
+        return batch.n_objects
 
     def _present(self, keys: list) -> list:
         """The ``keys`` that have an ``objects`` row, read on the driver
@@ -449,136 +469,411 @@ class DedupeEngine:
             values=keys,
         ).column("object_key").to_pylist()
 
-    def _prepare_batch(self, objects_df: DataFrame):
-        """The lock-free front half of every batch ingest: chunk, roll
-        up per-object stats, reject intra-batch duplicate keys.
+    def _prepare_batch(self, objects_df: DataFrame, created_utc: datetime | None) -> _Batch:
+        """The lock-free front half of every batch ingest: chunk,
+        validate every key (:func:`validate_object_key`), reject
+        intra-batch duplicate keys. The caller must ``unpersist`` the
+        returned batch's ``chunk_rows``.
 
-        Returns ``(chunk_rows persisted, rolled checkpointed, n_keys,
-        total_bytes)``; the caller must ``unpersist`` chunk_rows. The
-        chunker UDF is the expensive stage; persisting it and forcing
-        the cache via the rollup's eager checkpoint gives ONE pass over
-        the payloads shared by the pre-write checks and the four
-        downstream table writes (round-6 clawback: previously the chunk
-        cache was re-shuffled on object_key twice and the existence
-        probe paid a distinct over chunk rows under the composite-op
-        lock). A key appearing twice in the batch has two position-0
-        chunk rows, so the rollup's multiplicity column doubles as the
-        intra-batch dup check — a rejected batch costs one chunker
-        pass, the price of single-scan ingest on the happy path.
+        One Spark job runs the chunker (the expensive stage) into a
+        persisted cache and observes the batch's object count (its
+        position-0 rows) and payload bytes. A batch that fits one scan
+        split — at most :data:`GC_BROADCAST_KEYS` objects and
+        :attr:`OPTIMIZE_TARGET_FILE_BYTES` payload bytes — comes to the
+        driver with one ``toArrow()`` and is checked there, with no
+        further job: a key appearing twice has two position-0 rows. A
+        larger batch stays in Spark: its per-object rollup is
+        checkpointed (:meth:`_rollup`), and the checks ride on that job.
+        A rejected batch costs one chunker pass, the price of
+        single-scan ingest on the happy path.
         """
         chunk_rows = chunk_objects(objects_df, self.settings)
         chunk_rows.persist()
         ok = False
         try:
-            first_rows = F.sum(F.when(F.col("position") == 0, 1).otherwise(0))
-            rolled = (
-                chunk_rows.groupBy("object_key")
-                .agg(
-                    first_rows.alias("_mult"),
-                    F.sum("length").cast("long").alias("original_length"),
-                    F.count("*").cast("long").alias("chunk_count"),
+            obs = Observation()
+            (
+                chunk_rows.observe(
+                    obs,
+                    F.count(F.when(F.col("position") == 0, 1)).alias("n"),
+                    F.coalesce(F.sum("length"), F.lit(0)).alias("b"),
                 )
-                .localCheckpoint(eager=True)
+                .write.format("noop")
+                .mode("overwrite")
+                .save()
             )
-            n_keys, max_mult, total_bytes = rolled.agg(
-                F.count("*"), F.max("_mult"), F.sum("original_length")
-            ).collect()[0]
-            if n_keys and max_mult > 1:
-                dup_in_batch = rolled.filter(F.col("_mult") > 1).limit(5).collect()
-                raise DuplicateKeyError(
-                    f"duplicate keys within batch: {[r.object_key for r in dup_in_batch]}"
-                )
+            batch = _Batch(
+                chunk_rows,
+                created_utc or datetime.now(timezone.utc),
+                int(obs.get["n"]),
+                int(obs.get["b"]),
+            )
+            if (
+                batch.n_objects <= GC_BROADCAST_KEYS
+                and batch.total_bytes <= self.OPTIMIZE_TARGET_FILE_BYTES
+            ):
+                batch.rows = chunk_rows.toArrow()
+                firsts = batch.rows.filter(pc.equal(batch.rows["position"], 0))
+                keys = firsts.column("object_key").to_pylist()
+                for key in keys:
+                    validate_object_key(key)
+                dups = [k for k, n in Counter(keys).items() if n > 1]
+                if dups:
+                    raise DuplicateKeyError(f"duplicate keys within batch: {dups[:5]}")
+                batch.keys = keys
+            else:
+                batch.rolled = self._rollup(chunk_rows)
             ok = True
-            return chunk_rows, rolled, int(n_keys or 0), int(total_bytes or 0)
+            return batch
         finally:
             if not ok:
                 chunk_rows.unpersist()
 
+    def _rollup(self, chunk_rows: DataFrame) -> DataFrame:
+        """The per-object rollup the Spark commit path builds its
+        ``objects`` rows from, eagerly checkpointed. The same job
+        observes the largest key multiplicity and the count of invalid
+        keys (NULL, empty or over-long), so the duplicate-key and
+        key-validity checks cost no extra job on a clean batch; a
+        rejected one pays one more to name a key."""
+        key = F.col("object_key")
+        bad = key.isNull() | (F.length(key) == 0) | (F.length(key) > MAX_OBJECT_KEY_LEN)
+        obs = Observation()
+        rolled = (
+            chunk_rows.groupBy("object_key")
+            .agg(
+                F.sum(F.when(F.col("position") == 0, 1).otherwise(0)).alias("_mult"),
+                F.sum("length").cast("long").alias("original_length"),
+                F.count("*").cast("long").alias("chunk_count"),
+            )
+            .observe(obs, F.max("_mult").alias("mult"), F.count(F.when(bad, 1)).alias("bad"))
+            .localCheckpoint(eager=True)
+        )
+        if obs.get["bad"]:
+            validate_object_key(rolled.filter(bad).first().object_key)
+        if (obs.get["mult"] or 0) > 1:
+            dup_in_batch = rolled.filter(F.col("_mult") > 1).limit(5).collect()
+            raise DuplicateKeyError(
+                f"duplicate keys within batch: {[r.object_key for r in dup_in_batch]}"
+            )
+        return rolled
+
     def write_batch(self, objects_df: DataFrame, created_utc: datetime | None = None) -> int:
         """Ingest a DataFrame of ``(object_key string, data binary)``.
 
-        One distributed pass (reference lifecycle §3.1, made atomic):
-        chunk -> [object_map append] -> groupBy(chunk_key) refcount merge
-        -> chunk_store insert-if-absent -> objects append with ingest-
-        sequence ids. Duplicate keys (in the index OR within the batch)
-        reject the whole batch, matching DedupeLibrary.cs:203 semantics.
+        One pass (reference lifecycle §3.1, made atomic): chunk ->
+        [object_map append] -> refcount merge per chunk_key -> chunk_store
+        insert-if-absent -> objects append with ingest-sequence ids.
+        Every key is validated like :meth:`write` validates its key, and
+        duplicate keys (in the index OR within the batch) reject the
+        whole batch (DedupeLibrary.cs:203), before anything is staged.
         Returns the number of objects written.
 
         The commit phase holds the per-index composite-op lock: the
         catalog flip makes the four table commits atomic, but not the
         duplicate-key check together with them, so two racing
         write_batch calls with the same key could both pass the check
-        (TOCTOU) and double-ingest. Under the lock, the (cheap,
-        pushdown-pruned) existence probe re-runs against the now-stable
-        objects table and the commit follows — the batched analogue of
-        the reference's writer mutex. The expensive chunker pass
-        (:meth:`_prepare_batch`) stays outside the lock.
+        (TOCTOU) and double-ingest. Under the lock the existence check
+        re-runs against the now-stable objects table — on the driver
+        (:meth:`_present`, no Spark job) for a batch that fits one scan
+        split, a semi-join otherwise — and the commit follows: the
+        batched analogue of the reference's writer mutex. The expensive
+        chunker pass (:meth:`_prepare_batch`) stays outside the lock.
         """
-        created_utc = created_utc or datetime.now(timezone.utc)
-        chunk_rows, rolled, n_keys, total_bytes = self._prepare_batch(objects_df)
+        batch = self._prepare_batch(objects_df, created_utc)
         try:
             with self.store.op_lock():
-                if self.store.exists("objects"):
-                    existing = (
-                        rolled.select("object_key")
+                if batch.keys is not None:
+                    existing = self._present(batch.keys)
+                elif self.store.exists("objects"):
+                    existing = [
+                        r.object_key
+                        for r in batch.rolled.select("object_key")
                         .join(self.objects, "object_key", "left_semi")
                         .limit(5)
                         .collect()
-                    )
-                    if existing:
-                        raise DuplicateKeyError(
-                            f"keys already exist: {[r.object_key for r in existing]}"
-                        )
-                self._commit_mutation(
-                    batch=(chunk_rows, rolled, created_utc, n_keys, total_bytes)
-                )
+                    ]
+                else:
+                    existing = []
+                if existing:
+                    raise DuplicateKeyError(f"keys already exist: {existing[:5]}")
+                self._commit_mutation(batch=batch)
         finally:
-            chunk_rows.unpersist()
-        return n_keys
+            batch.chunk_rows.unpersist()
+        return batch.n_objects
 
     def _commit_mutation(
-        self, doomed: "list[str] | DataFrame | None" = None, batch: tuple | None = None
+        self, doomed: "list[str] | DataFrame | None" = None, batch: _Batch | None = None
     ) -> tuple:
         """The one commit behind every mutation: the ``doomed`` keys leave
-        the index and ``batch`` — ``(chunk_rows, rolled, created_utc,
-        n_objects, total_bytes)``: the cached chunk rows and per-object
-        rollup of :meth:`_prepare_batch` — enters it. A delete passes
-        only ``doomed``, an ingest only ``batch``, a replace both.
-        ``doomed`` is a Python list of at most :data:`GC_BROADCAST_KEYS`
-        keys, or a 1-column ``object_key`` DataFrame above that cap.
-        Returns ``(GC'd chunk keys as a DataFrame over the pinned merge,
-        the same keys as a list — None above the cap)``; an ingest
-        returns ``(None, [])``. Caller holds the composite-op lock.
+        the index and ``batch`` (:meth:`_prepare_batch`) enters it. A
+        delete passes only ``doomed``, an ingest only ``batch``, a
+        replace both. ``doomed`` is a Python list of at most
+        :data:`GC_BROADCAST_KEYS` keys, or a 1-column ``object_key``
+        DataFrame above that cap. Returns ``(GC'd chunk keys as a
+        DataFrame, or None when only the list was built, the same keys
+        as a list — None above the cap)``; an ingest returns
+        ``(None, [])``. Caller holds the composite-op lock.
 
         One attempt, retried by ``IndexStore._retry`` when a flip loses
-        its CAS, does three things in order:
+        its CAS, reads the four tables' versions, stages every table's
+        new part through ONE :meth:`IndexStore.rewrite_entry` call each,
+        and makes ONE catalog flip of the staged parts plus the ledger
+        row:
 
-        1. snapshot the four index tables;
-        2. stage every table's new part, overlapped on driver threads,
-           each from ONE :meth:`IndexStore.rewrite_entry` call whose keys
-           are ``[]`` for an ingest (no part is read: the rewrite is an
-           append), the doomed list for a delete or replace (only the
-           parts that may hold them), and ``None`` above the cap (every
-           part):
+        * ``objects`` and ``object_map`` drop the doomed keys and take
+          the new rows;
+        * ``chunks`` takes ONE refcount merge of increments −
+          decrements and keeps its rows with a reference left;
+        * ``chunk_store`` drops the dead keys' payloads and takes the
+          absent new ones.
 
-           * ``objects`` and ``object_map`` drop the doomed keys and take
-             the new rows;
-           * ``chunks`` = ONE refcount merge of increments − decrements,
-             a rewrite of every part. When keys are doomed the merge is
-             pinned once, with its dead count, and its dead keys are
-             collected before this stage and the next are submitted;
-             the chunks rewrite keeps its rows with a reference left;
-           * ``chunk_store`` drops the dead keys' payloads (its rewrite
-             keys) and takes the absent new ones;
-        3. make ONE catalog flip of the staged parts plus the ledger row.
-
-        Every table is CAS-checked against its snapshot version in that
-        flip, so a concurrent writer that bypassed the op lock — one
-        that revived a dying chunk, say — refuses the whole flip and the
-        attempt re-derives from fresh snapshots. A crash anywhere before
+        Every table is CAS-checked against the version the attempt read
+        in that flip, so a concurrent writer that bypassed the op lock —
+        one that revived a dying chunk, say — refuses the whole flip and
+        the attempt re-derives from fresh reads. A crash anywhere before
         the flip leaves only invisible staged parts; after it, the op is
         complete. No reader and no :meth:`recover` ever sees a
         half-applied mutation.
+
+        The rows are computed in one of two places, chosen from sizes
+        the commit observes, never from an option. A mutation that fits
+        one scan split — its keys within the driver cap, and its payload
+        bytes plus the on-disk bytes of the parts its four rewrites
+        select at most :attr:`OPTIMIZE_TARGET_FILE_BYTES` — commits on
+        the driver (:meth:`_commit_on_driver`): pyarrow reads and writes
+        the parts, with no Spark job. Any other mutation commits through
+        Spark (:meth:`_commit_on_spark`), the path that can commit a
+        batch no driver can hold.
+        """
+        if not isinstance(doomed, DataFrame) and (batch is None or batch.rows is not None):
+            done = self._commit_on_driver(doomed or [], batch)
+            if done is not None:
+                return done
+        if batch is not None and batch.rolled is None:
+            batch.rolled = self._rollup(batch.chunk_rows)
+        return self._commit_on_spark(doomed, batch)
+
+    def _commit_on_driver(self, doomed: list, batch: _Batch | None) -> tuple | None:
+        """:meth:`_commit_mutation` on the driver, or None (nothing
+        staged) when the mutation does not fit one scan split.
+
+        Everything is computed on Arrow tables: the batch rows came with
+        the chunk rows' one ``toArrow()``; the doomed ``object_map`` rows
+        (the decrements) come from a key probe of only the parts that
+        may hold them (:meth:`IndexStore.read_arrow`); the increments,
+        ingest ids (the previous ``max_id`` plus the key's rank in key
+        order, as :func:`assign_ingest_ids` assigns them) and the
+        payloads absent from ``chunk_store`` (a probe of its key column
+        only, so an ingest heals a payload lost outside the engine) are
+        computed on the driver. Each table's rewrite reads its selected
+        parts as one ``pyarrow.Table`` and pyarrow writes its part
+        (``rewrite_entry(..., arrow=True)``): ``objects`` and
+        ``object_map`` select the parts that may hold a doomed key,
+        ``chunks`` those that may hold a batch or decremented chunk key
+        (the merge is part-local: new keys land in the rewritten part),
+        and ``chunk_store`` those that may hold a dead chunk key.
+        ``chunk_store`` is staged after ``chunks``, whose merge names
+        the dead keys; the other two tables stage beside them on pool
+        threads."""
+        store = self.store
+        doomed_keys = pa.array(doomed, pa.string())
+        inc = pa.table(
+            {
+                "chunk_key": pa.array([], pa.string()),
+                "inc": pa.array([], pa.int64()),
+                "new_length": pa.array([], pa.int32()),
+            }
+        )
+        if batch is not None:
+            rows = batch.rows
+            per_chunk = rows.group_by("chunk_key").aggregate(
+                [([], "count_all"), ("length", "max")]
+            )
+            inc = pa.table(
+                {
+                    "chunk_key": per_chunk.column("chunk_key"),
+                    "inc": per_chunk.column("count_all"),
+                    "new_length": per_chunk.column("length_max"),
+                }
+            )
+            batch_chunk_keys = inc.column("chunk_key").to_pylist()
+            # one payload per chunk key: the row of its first occurrence
+            first = (
+                rows.select(["chunk_key"])
+                .append_column("_i", pa.array(range(rows.num_rows), pa.int64()))
+                .group_by("chunk_key")
+                .aggregate([("_i", "min")])
+                .column("_i_min")
+            )
+            payloads = pa.table(
+                {
+                    "chunk_key": rows.column("chunk_key").take(first),
+                    "data": rows.column("chunk_data").take(first),
+                }
+            )
+            per_object = (
+                rows.group_by("object_key")
+                .aggregate([("length", "sum"), ([], "count_all")])
+                .sort_by("object_key")
+            )
+            new_map = rows.select(["object_key", "chunk_key", "length", "position", "address"])
+        op = "ingest" if not doomed else "delete" if batch is None else "replace"
+
+        def without(tbl: pa.Table, col: str, keys) -> pa.Table:
+            if not len(keys):
+                return tbl
+            return tbl.filter(pc.invert(pc.is_in(tbl.column(col), value_set=keys)))
+
+        def union(tbl: pa.Table, new: pa.Table) -> pa.Table:
+            return pa.concat_tables([tbl, new.select(tbl.column_names).cast(tbl.schema)])
+
+        def attempt():
+            # versions first, rows after: a row read here is at least as
+            # new as the version the flip CAS-checks
+            states = {t: store._state(t) for t in _INDEX_SCHEMAS}
+            gone = store.read_arrow(
+                "object_map",
+                ["chunk_key"],
+                pc.field("object_key").isin(doomed_keys),
+                col="object_key",
+                values=doomed,
+            )
+            dec = gone.group_by("chunk_key").aggregate([([], "count_all")])
+            dec = pa.table({"chunk_key": dec.column("chunk_key"), "dec": dec.column("count_all")})
+            dec_keys = dec.column("chunk_key").to_pylist()
+            touched = pc.unique(
+                pa.chunked_array(inc.column("chunk_key").chunks + dec.column("chunk_key").chunks, pa.string())
+            ).to_pylist()
+            # the budget, before anything is staged: a lost race stages
+            # nothing either, so a retry may still hand over to Spark
+            selected = [
+                part
+                for t, col, keys in (
+                    ("objects", "object_key", doomed),
+                    ("object_map", "object_key", doomed),
+                    ("chunks", "chunk_key", touched),
+                    # the dead keys are among the decremented ones
+                    ("chunk_store", "chunk_key", dec_keys),
+                )
+                for part in store._selection(t, states[t], col, keys)
+            ]
+            payload = batch.total_bytes if batch is not None else 0
+            if payload + store.parts_bytes(selected) > self.OPTIMIZE_TARGET_FILE_BYTES:
+                return None
+            versions = {t: s["version"] for t, s in states.items()}
+            dead: list = []
+
+            def stage_objects():
+                fn, meta_fn = (lambda tbl: without(tbl, "object_key", doomed_keys)), None
+                if batch is not None:
+                    meta = states["objects"].get("meta", {})
+                    prev_max = meta.get("max_id")
+                    if prev_max is None:
+                        # a pre-meta LEGACY index: the high-water mark is max(id)
+                        ids = store.read_arrow("objects", ["id"]).column("id")
+                        prev_max = pc.max(ids).as_py() or 0
+                    n = per_object.num_rows
+                    stamp = _TIMESTAMP.toInternal(batch.created_utc)
+                    lengths = per_object.column("length_sum")
+                    new_objects = pa.table(
+                        {
+                            "id": pa.array(range(prev_max + 1, prev_max + 1 + n), pa.int64()),
+                            "object_key": per_object.column("object_key"),
+                            "original_length": lengths,
+                            "comp_length": lengths,
+                            "chunk_count": per_object.column("count_all"),
+                            "created_utc": pa.array([stamp] * n, pa.timestamp("us")),
+                        }
+                    )
+                    high = {"max_id": int(prev_max) + n}
+                    fn = lambda tbl: union(without(tbl, "object_key", doomed_keys), new_objects)  # noqa: E731
+                    meta_fn = lambda meta, *_: {**meta, **high}  # noqa: E731
+                return store.rewrite_entry(
+                    "objects", "object_key", doomed, fn, versions["objects"], meta_fn, arrow=True
+                )
+
+            def stage_map():
+                def fn(tbl):
+                    kept = without(tbl, "object_key", doomed_keys)
+                    return kept if batch is None else union(kept, new_map)
+
+                return store.rewrite_entry(
+                    "object_map", "object_key", doomed, fn, versions["object_map"], arrow=True
+                )
+
+            def merge(tbl: pa.Table) -> pa.Table:
+                # the refcount merge (O17/O18) over only the selected
+                # parts: every row of a touched key is in them. A
+                # decremented key without a chunks row is ignored, as
+                # the Spark path's left join ignores it
+                delta = inc.join(dec, "chunk_key", join_type="full outer")
+                both = tbl.join(delta, "chunk_key", join_type="full outer")
+                both = both.filter(
+                    pc.invert(pc.and_(pc.is_null(both["ref_count"]), pc.is_null(both["inc"])))
+                )
+                zero = pa.scalar(0, pa.int64())
+                ref = pc.subtract(
+                    pc.add(pc.coalesce(both["ref_count"], zero), pc.coalesce(both["inc"], zero)),
+                    pc.coalesce(both["dec"], zero),
+                )
+                length = pc.coalesce(both["length"], both["new_length"])
+                live = pc.greater_equal(ref, 1)
+                dead.extend(both["chunk_key"].filter(pc.invert(live)).to_pylist())
+                merged = pa.table({"chunk_key": both["chunk_key"], "length": length, "ref_count": ref})
+                return merged.filter(live)
+
+            def stage_chunks_then_payloads():
+                # content-addressed storage is the physical dedup (same
+                # key => stored once, DedupeLibrary.cs:628): new payloads
+                # are inserted if absent, dead ones GC'd
+                chunks = store.rewrite_entry(
+                    "chunks", "chunk_key", touched, merge, versions["chunks"], arrow=True
+                )
+                absent = None
+                if batch is not None:
+                    have = store.read_arrow(
+                        "chunk_store", ["chunk_key"], col="chunk_key", values=batch_chunk_keys
+                    ).column("chunk_key")
+                    absent = payloads.filter(
+                        pc.invert(pc.is_in(payloads["chunk_key"], value_set=have.combine_chunks()))
+                    )
+                if not dead and (absent is None or not absent.num_rows):
+                    return chunks, None
+
+                def gc(tbl):
+                    kept = without(tbl, "chunk_key", pa.array(dead, pa.string()))
+                    return kept if absent is None else union(kept, absent)
+
+                return chunks, store.rewrite_entry(
+                    "chunk_store", "chunk_key", dead, gc, versions["chunk_store"], arrow=True
+                )
+
+            # every thread is joined before any error is raised; a second
+            # failed stage rides along as a note on the first
+            with fix_pool(3) as (submit, fixes):
+                submit(stage_objects)
+                submit(stage_map)
+                submit(stage_chunks_then_payloads)
+            objects, omap, (chunks, payload_part) = (f.result() for f in fixes)
+            self._publish([objects, omap, chunks, payload_part], op)
+            return None, dead
+
+        return store._retry(attempt)
+
+    def _commit_on_spark(
+        self, doomed: "list[str] | DataFrame | None", batch: _Batch | None
+    ) -> tuple:
+        """:meth:`_commit_mutation` through Spark jobs, for a mutation
+        that does not fit one scan split. Each rewrite's keys are ``[]``
+        for an ingest (no part is read: the rewrite is an append), the
+        doomed list for a delete or replace (only the parts that may
+        hold them), and ``None`` above the cap (every part, with an
+        anti-join). The ``chunks`` merge is a rewrite of every part.
+        When keys are doomed the merge is pinned once, with its dead
+        count, and its dead keys are collected before the ``chunks`` and
+        ``chunk_store`` stages are submitted; the GC'd keys come back as
+        a DataFrame over that pinned merge.
 
         An ingest's output files are sized by the batch's total bytes
         (~64 MB targets): a small batch writes a handful of files instead
@@ -597,11 +892,11 @@ class DedupeEngine:
 
         nparts = target = 0  # a delete's table rewrites keep their layout
         if batch is not None:
-            chunk_rows, rolled, created_utc, n_objects, total_bytes = batch
+            chunk_rows, rolled = batch.chunk_rows, batch.rolled
             nparts = chunk_rows.rdd.getNumPartitions()
             target = (
-                max(1, min(nparts, -(-total_bytes // (64 << 20))))
-                if total_bytes
+                max(1, min(nparts, -(-batch.total_bytes // (64 << 20))))
+                if batch.total_bytes
                 else nparts
             )
             # object_map rows are exactly the chunker output minus payload
@@ -696,10 +991,10 @@ class DedupeEngine:
                             ),
                             prev_max,
                         )
-                        .withColumn("created_utc", F.lit(created_utc))
+                        .withColumn("created_utc", F.lit(batch.created_utc))
                         .select("id", "object_key", "original_length", "comp_length", "chunk_count", "created_utc")
                     )
-                    high = {"max_id": int(prev_max) + n_objects}
+                    high = {"max_id": int(prev_max) + batch.n_objects}
                     fn = lambda rows: survivors_of(rows).unionByName(new_objects)  # noqa: E731
                     meta_fn = lambda meta, *_: {**meta, **high}  # noqa: E731
                 return self.store.rewrite_entry("objects", "object_key", keys, fn, v_obj, meta_fn)
@@ -1152,12 +1447,13 @@ class DedupeEngine:
         100 TB requires.
 
         The GC'd chunk keys come back as a list for a list ``keys``,
-        reference-faithful, read off the same bounded collect that
-        selected the payload parts — but only up to ``GC_RETURN_CAP``
-        keys; a larger GC set, and the GC set of a DataFrame ``keys``,
-        comes back as a DataFrame over the merge pinned before the flip
-        (the store retains old parts for 8 versions, but a returned lazy
-        plan must not depend on that window).
+        reference-faithful — the list that selected the payload parts —
+        but only up to ``GC_RETURN_CAP`` keys; a larger GC set, and the
+        GC set of a DataFrame ``keys``, comes back as a DataFrame: over
+        that list on the driver commit path, over the merge pinned
+        before the flip on the Spark one (the store retains old parts
+        for 8 versions, but a returned lazy plan must not depend on that
+        window).
         """
         as_frame = isinstance(keys, DataFrame)
         if as_frame:
@@ -1174,6 +1470,8 @@ class DedupeEngine:
                     return empty if as_frame else []
             gc_set, dead = self._commit_mutation(keys)
         if as_frame or dead is None or len(dead) > GC_RETURN_CAP:
+            if gc_set is None:
+                gc_set = self.spark.createDataFrame([(k,) for k in dead], "chunk_key string")
             return gc_set
         return dead
 

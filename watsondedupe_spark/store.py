@@ -68,9 +68,17 @@ flip. Each single-table write verb (``commit``, ``append``,
 ``attach_part``, ``compact``, ``compact_parts``, ``restore_version``,
 ``update_meta``) is a one-entry flip of the same entries.
 
-Every part file is sorted by its table's key column and cut into row
-groups of about ``ROW_GROUP_BYTES`` (``_write_part``), so its groups
-hold disjoint, ascending key spans. A driver-side point read
+Parts have two writers behind the one ``_write_part``: Spark writes a
+DataFrame, and pyarrow writes a ``pyarrow.Table`` on the driver with no
+Spark job. The engine takes the second for a mutation whose payload and
+selected parts fit one scan split (``rewrite_entry(..., arrow=True)``
+hands ``fn`` its parts as a table), the first for everything else; the
+selection, fold, CAS and flip are the same for both. Every part file,
+whichever wrote it, is sorted by its table's key column and cut into
+row groups of about ``ROW_GROUP_BYTES``, so its groups hold disjoint,
+ascending key spans, and carries INT96 timestamps and all-optional
+columns, so Spark and the driver read both writers' parts alike. A
+driver-side point read
 (``read_arrow``) first picks parts (manifest span stats and Bloom
 sidecars), then picks row groups inside each kept file from its cached
 footer, and decodes only those: a k-key probe costs about k row groups,
@@ -99,6 +107,7 @@ import shutil
 import uuid
 from contextlib import contextmanager
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -127,6 +136,18 @@ def _check_version(name: str, found: int, expected: int | None) -> None:
             f"{name}: expected version {expected}, "
             f"found {found} — another writer committed first"
         )
+
+
+def arrow_schema(name: str) -> pa.Schema:
+    """``name``'s rows as Arrow holds them on the driver: the fields of
+    :data:`TABLE_SCHEMAS`, every one nullable (Spark writes every parquet
+    column optional) and timestamps as naive ``timestamp[us]`` holding
+    UTC instants (how an INT96 column reads back). Both part writers
+    write this schema and :meth:`IndexStore.read_arrow` returns it."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = to_arrow_schema(TABLE_SCHEMAS[name], timestamp_utc=False)
+    return pa.schema([f.with_nullable(True) for f in schema])
 
 
 def _set_meta(meta: dict | None = None, merge: dict | None = None):
@@ -474,7 +495,9 @@ class IndexStore:
     def _part_stats(self, name: str, path: str) -> dict | None:
         """Min/max of the table's skip columns across one part dir's
         parquet files, or None when stats can't be trusted for every
-        file: the part is then never pruned."""
+        file: the part is then never pruned. A zero-row file (Spark
+        writes one for an empty partition) holds no key, so it bounds
+        nothing and is skipped."""
         cols = self.SKIP_STATS_COLS.get(name)
         if not cols:
             return None
@@ -484,6 +507,9 @@ class IndexStore:
             return None
         stats: dict[str, list] = {}
         for fpath in files:
+            entry = self._footer(fpath, cols)
+            if entry is not None and entry[0].num_rows == 0:
+                continue
             for col, span in self._file_spans(fpath, cols).items():
                 # every skip column must be covered, else a probe on the
                 # missing column would wrongly prune this part
@@ -581,64 +607,99 @@ class IndexStore:
     #: both (CHANGES.md).
     ROW_GROUP_BYTES = 256 << 10
 
-    def _write_part(self, name: str, df: DataFrame, version_hint: int) -> str:
-        """Write ``df`` as an immutable part dir plus its Bloom sidecar
+    def _write_part(self, name: str, rows, version_hint: int) -> str:
+        """Write ``rows`` as an immutable part dir plus its Bloom sidecar
         and return its path — the single choke point every
         part-creating write path goes through, so no part can miss its
         sidecar by omission. The dir name is collision-free: the
         version hint for operator legibility plus a uuid suffix, so
         racing writers never share a path.
 
-        Each output file is sorted by the table's key column
-        (:attr:`BLOOM_COLS`) — a per-partition sort, so no exchange and
-        no extra Spark job — and cut into row groups of about
+        Two writers lay out the same part. A DataFrame is written by
+        Spark, one file per partition; a ``pyarrow.Table`` is written
+        on the driver with pyarrow as one file, with no Spark job (the
+        engine's small mutations, :meth:`rewrite_entry` with
+        ``arrow=True``). Either way each file is sorted by the table's
+        key column (:attr:`BLOOM_COLS`; Spark sorts per partition, so
+        no exchange and no extra job) and cut into row groups of about
         :attr:`ROW_GROUP_BYTES`, so consecutive groups hold disjoint
-        key spans that :meth:`read_arrow` picks from the footer. The
-        bound goes to parquet-mr as ``parquet.block.size`` plus
+        key spans that :meth:`read_arrow` picks from the footer. Spark
+        gets the bound as ``parquet.block.size`` plus
         ``parquet.page.size.row.check.min``: parquet-mr otherwise
         measures its buffered size only every 100+ rows, which at
-        16 KiB payload rows would still give groups of 1.6 MB and up."""
+        16 KiB payload rows would still give groups of 1.6 MB and up.
+        pyarrow gets it as rows per group from the table's Arrow bytes
+        per row."""
         os.makedirs(self._table_dir(name), exist_ok=True)
         path = os.path.join(
             self._table_dir(name), f"p{version_hint:08d}_{uuid.uuid4().hex[:8]}"
         )
         key = self.BLOOM_COLS.get(name)
-        if key in df.columns:
-            df = df.sortWithinPartitions(key)
-        (
-            df.write.mode("overwrite")
-            .option("parquet.block.size", self.ROW_GROUP_BYTES)
-            .option("parquet.page.size.row.check.min", 1)
-            .parquet(path)
-        )
-        self._write_bloom(name, path)
+        if isinstance(rows, DataFrame):
+            if key in rows.columns:
+                rows = rows.sortWithinPartitions(key)
+            (
+                rows.write.mode("overwrite")
+                .option("parquet.block.size", self.ROW_GROUP_BYTES)
+                .option("parquet.page.size.row.check.min", 1)
+                .parquet(path)
+            )
+            self._write_bloom(name, path)
+        else:
+            self._write_arrow_part(name, rows, path)
         self._tick(name)
         return path
 
-    def _write_bloom(self, name: str, path: str) -> None:
-        """Build ``{path}/_BLOOM.{col}`` from the part's key column — a
-        driver-side columnar read-back of ONLY that column (no Spark
-        job; the part was just written and is OS-cache-hot). Written
-        atomically; any failure leaves no sidecar, which readers treat
-        as "never prune this part"."""
+    def _write_arrow_part(self, name: str, rows: pa.Table, path: str) -> None:
+        """The pyarrow writer of :meth:`_write_part`: ``rows`` cast to
+        :func:`arrow_schema`, key-sorted, written as one snappy file whose
+        timestamps are INT96 like Spark's writer, so Spark and
+        :meth:`read_arrow` read its parts and Spark's alike."""
+        import pyarrow.parquet as pq
+
+        schema = arrow_schema(name)
+        tbl = rows.select(schema.names).cast(schema)
+        key = self.BLOOM_COLS.get(name)
+        if key:
+            tbl = tbl.sort_by(key)
+        per_group = self.ROW_GROUP_BYTES * tbl.num_rows // max(1, tbl.nbytes)
+        os.makedirs(path)
+        pq.write_table(
+            tbl,
+            os.path.join(path, f"part-00000-{uuid.uuid4()}.snappy.parquet"),
+            row_group_size=max(1, per_group),
+            compression="snappy",
+            use_deprecated_int96_timestamps=True,
+        )
+        self._write_bloom(name, path, tbl.column(key) if key else None)
+
+    def _write_bloom(self, name: str, path: str, keys=None) -> None:
+        """Build ``{path}/_BLOOM.{col}`` from the part's key column:
+        ``keys`` when the writer holds them, else a driver-side columnar
+        read-back of ONLY that column (no Spark job; the part was just
+        written and is OS-cache-hot). Written atomically; any failure
+        leaves no sidecar, which readers treat as "never prune this
+        part"."""
         col = self.BLOOM_COLS.get(name)
         if not col:
             return
         try:
-            import pyarrow.dataset as pads
-
             from watsondedupe_spark import bloom
 
-            ds = pads.dataset(path, format="parquet")
+            if keys is None:
+                import pyarrow.dataset as pads
+
+                part = pads.dataset(path, format="parquet")
+                n, read = part.count_rows(), lambda: part.to_table(columns=[col]).column(col)
+            else:
+                n, read = len(keys), lambda: keys
             # safety valve: past ~16M keys the capped bitmap's FP rate
             # degrades toward useless while the build cost grows linear
             # on the driver — skip the sidecar (part is simply never
             # pruned) instead of stalling the commit
-            if ds.count_rows() > 16_000_000:
+            if n > 16_000_000:
                 return
-            raw = bloom.build_arrow(
-                ds.to_table(columns=[col]).column(col).drop_null()
-            )
+            raw = bloom.build_arrow(read().drop_null())
             tmp = os.path.join(path, f"_BLOOM.{col}.tmp")
             with open(tmp, "wb") as f:
                 f.write(raw)
@@ -787,7 +848,6 @@ class IndexStore:
         one columnar read: a point verb pays footer and row-group I/O
         on the groups that can hold its key, not the per-job scheduling
         floor of a Spark action."""
-        import pyarrow as pa
         import pyarrow.parquet as pq
 
         if col is not None:
@@ -825,9 +885,7 @@ class IndexStore:
                 else pf.read_row_groups(groups, columns=read_cols)
             )
         if not pieces:
-            from pyspark.sql.pandas.types import to_arrow_schema
-
-            schema = to_arrow_schema(TABLE_SCHEMAS[name])
+            schema = arrow_schema(name)
             if columns is not None:
                 schema = pa.schema([schema.field(c) for c in columns])
             return schema.empty_table()
@@ -837,6 +895,22 @@ class IndexStore:
         if filter is not None:
             tbl = tbl.filter(filter)
         return tbl if columns is None else tbl.select(columns)
+
+    def _arrow_for(self, name: str, parts: list[str]) -> pa.Table:
+        """Every row of ``parts`` as one ``pyarrow.Table`` in
+        :func:`arrow_schema` — the driver counterpart of :meth:`_df_for`
+        that :meth:`rewrite_entry` hands ``fn`` when ``arrow=True``."""
+        import pyarrow.parquet as pq
+
+        schema = arrow_schema(name)
+        pieces = [
+            pq.ParquetFile(f, coerce_int96_timestamp_unit="us").read()
+            for p in parts
+            for f in self._part_files(p)
+        ]
+        if not pieces:
+            return schema.empty_table()
+        return pa.concat_tables(pieces, promote_options="default").select(schema.names).cast(schema)
 
     def read_version(self, name: str, version: int) -> DataFrame:
         """Snapshot of ``name`` as of ``version`` — Delta-style time
@@ -1015,20 +1089,27 @@ class IndexStore:
     # -- flip entries: stage a table's change, publish it with others ---------
 
     def rewrite_entry(
-        self, name, col, keys, fn, expected_version=None, meta_fn=None, parts=None
+        self, name, col, keys, fn, expected_version=None, meta_fn=None, parts=None, arrow=False
     ) -> tuple:
         """Stage ``fn(rows of the selected parts)`` as one part whose flip
         retires exactly those parts and keeps every other one: the one
         routine that stages a part for a flip. From ONE manifest read it
-        selects the parts :meth:`parts_for_keys` keeps for ``keys`` in
-        ``col`` (no false negatives: every row of every key is in the
-        selection); every part for ``keys=None`` (a full replace), none
-        for an empty ``keys`` (an append: ``fn`` unions the new rows into
-        an empty frame), or exactly ``parts`` when given. One rule bounds
-        the read fan-in (the OPTIMIZE analogue): a rewrite that would
-        leave more than :attr:`max_parts` live parts selects every part,
-        so ``fn`` must hold for any superset of its selection, as a key
-        filter or a union does.
+        selects (:meth:`_selection`) the parts :meth:`parts_for_keys`
+        keeps for ``keys`` in ``col`` (no false negatives: every row of
+        every key is in the selection); every part for ``keys=None`` (a
+        full replace), none for an empty ``keys`` (an append: ``fn``
+        unions the new rows into an empty frame), or exactly ``parts``
+        when given. One rule bounds the read fan-in (the OPTIMIZE
+        analogue): a rewrite that would leave more than
+        :attr:`max_parts` live parts selects every part, so ``fn`` must
+        hold for any superset of its selection, as a key filter or a
+        union does.
+
+        The rows reach ``fn`` as a DataFrame, and Spark writes what it
+        returns; with ``arrow=True`` they reach it as a
+        ``pyarrow.Table`` read on the driver, and pyarrow writes what it
+        returns (:meth:`_write_part`) — no Spark job, for a selection
+        the caller knows to be small.
 
         ``expected_version`` arms the table-version CAS, checked before
         the part is written and again in the flip. Without it the flip
@@ -1038,13 +1119,10 @@ class IndexStore:
         updates the carried meta in the same flip."""
         state = self._state(name)
         _check_version(name, state["version"], expected_version)
-        live = list(state["parts"])
-        if parts is None:
-            parts = live if keys is None else self._keyed_parts(name, state, col, keys) if keys else []
-        if len(set(live) - set(parts)) >= self.max_parts:
-            parts = live
+        parts = self._selection(name, state, col, keys, parts)
+        rows = self._arrow_for(name, parts) if arrow else self._df_for(name, parts)
+        path = self._write_part(name, fn(rows), state["version"] + 1)
         todo = set(parts)
-        path = self._write_part(name, fn(self._df_for(name, parts)), state["version"] + 1)
 
         def build(fresh, catalog):
             _check_version(name, fresh["version"], expected_version)
@@ -1061,6 +1139,19 @@ class IndexStore:
             return {"parts": new_parts, "meta": meta}
 
         return name, build, path
+
+    def _selection(self, name, state, col, keys, parts=None) -> list[str]:
+        """The parts a rewrite of ``keys`` in ``col`` reads and retires,
+        against the manifest ``state`` (see :meth:`rewrite_entry`):
+        read from the manifest and the Bloom sidecars, no Spark job, so
+        a caller can size a rewrite (:meth:`parts_bytes`) before
+        staging it."""
+        live = list(state["parts"])
+        if parts is None:
+            parts = live if keys is None else self._keyed_parts(name, state, col, keys) if keys else []
+        if len(set(live) - set(parts)) >= self.max_parts:
+            parts = live
+        return parts
 
     def restore_entry(self, name: str, version: int) -> tuple:
         """The entry that re-points ``name`` at retained ``version``
